@@ -79,9 +79,11 @@ def _make_score_cell(k: int):
       so y can never enter the rounded top-k under any (cos desc, id asc)
       tie-break, and every threshold tie IS kept. The downstream window sees
       every contender it saw before the cut, with identical values.
-    - rows containing a non-finite score (zero-norm vector -> 0/0) fall back
-      to emitting all their candidates: NaN crosses the Arrow boundary as
-      NULL (sorts last in the desc window), exactly the r15 behaviour.
+    - non-finite scores (a zero-norm vector gives 0/0 = NaN) are handled per
+      entry: every valid non-finite candidate is kept (NaN crosses the Arrow
+      boundary as NULL and sorts last in the desc window), and the k-th
+      largest raw cosine is taken over the row's finite scores only — -inf
+      when fewer than k are finite, so every finite candidate is kept.
     """
     import numpy as np
     import pandas as pd
@@ -118,18 +120,13 @@ def _make_score_cell(k: int):
             R = D / (nn[lo:hi, None] * nn[None, :])
             valid = np.arange(lo, hi)[:, None] != col_idx  # exclude self
             if c - 1 > k:
-                rv = np.where(valid, R, -np.inf)
-                finite = np.isfinite(R) | ~valid
-                # k-th largest per row (ascending index c-k; the single
-                # -inf self entry never lands there while c-1 >= k+1)
+                finite = np.isfinite(R)
+                # k-th largest FINITE score per row (ascending index c-k);
+                # -inf when the row has fewer than k finite scores, which
+                # keeps every finite candidate
+                rv = np.where(valid & finite, R, -np.inf)
                 thr = np.partition(rv, c - k, axis=1)[:, c - k]
-                keep = valid & (R >= thr[:, None] - 2e-6)
-                # rows with non-finite scores (zero-norm vectors -> ±inf/NaN
-                # whose ordering the threshold cut can't reason about) fall
-                # back to emitting every candidate, exactly as before
-                bad = ~finite.all(axis=1)
-                if bad.any():
-                    keep[bad] = valid[bad]
+                keep = valid & (~finite | (R >= thr[:, None] - 2e-6))
             else:
                 keep = valid
             rows, cols = np.nonzero(keep)

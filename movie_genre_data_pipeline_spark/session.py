@@ -16,8 +16,27 @@ scale-relevant knobs explicit so the same code runs on local[32] for tests and o
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def _env_cpus() -> str:
+    """SPARK_GRAFT_CPUS: ``*`` (every core, the default) or a positive integer."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    if raw != "*" and not (re.fullmatch(r"[0-9]+", raw) and int(raw) > 0):
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be '*' or a positive integer, got {raw!r}"
+        )
+    return raw
+
+
+def _env_bool(name: str, default: str) -> str:
+    """A true/false env var (any case), normalized to Spark's lower case."""
+    raw = os.environ.get(name, default)
+    if raw.lower() not in ("true", "false"):
+        raise ValueError(f"{name} must be true or false, got {raw!r}")
+    return raw.lower()
 
 
 def build_session(
@@ -32,12 +51,12 @@ def build_session(
     one entry point; on a real cluster pass ``master=None`` with ``--master`` given
     to spark-submit instead.
     """
+    cpus = _env_cpus()
+    prefer_smj = _env_bool("SPARK_GRAFT_PREFER_SMJ", "false")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus and cpus.isdigit() else 32
+        shuffle_partitions = 32 if cpus == "*" else int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -59,10 +78,7 @@ def build_session(
         # misestimate, flip SPARK_GRAFT_PREFER_SMJ=true (restores the Spark
         # default planner-wide) or shrink SPARK_GRAFT_SHJ_LOCALMAP — no code
         # change needed.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", prefer_smj)
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),

@@ -1,10 +1,11 @@
-"""Per-query implementation fingerprints — the re-seating contract.
+"""Per-query implementation fingerprints — the verify-then-record contract.
 
-VERDICT r9 #5: a query whose IMPLEMENTATION changed since its last green
-driver record must be re-seated in the current DRIVER_WINDOW (a changed plan
-needs a fresh driver check even when the oracle is unchanged; r9 re-seated
-the rewritten ANN queries by hand and the class of "edited but never
-re-checked" was otherwise unguarded).
+VERDICT r9 #5: a query whose IMPLEMENTATION changed since its last exact
+oracle check needs a fresh check (a changed plan can change results even
+when the oracle is unchanged), and the class of "edited but never
+re-checked" is otherwise unguarded. A query is STALE when its live
+fingerprint differs from its `seating_manifest.json` entry, or it has no
+entry (a new query).
 
 The fingerprint of a query is a sha256 over:
 - the source text of its query function, plus TRANSITIVELY every function
@@ -29,21 +30,19 @@ transitively every helper-sharing) query without any behavioral change,
 forcing a blanket amnesty that hides nothing. Content keys make "same set of
 reachable source texts + same oracle" the invariant: a verbatim move cannot
 flip a fingerprint, while editing one character of any reachable function,
-constant, or oracle still does. (The one-time rebaseline for the key-scheme
-change itself was `update_seating.py --all`, immediately followed by a
-committed before/after live-fingerprint diff proving the split preserved
-every query's content set.)
+constant, or oracle still does.
 
 Name resolution is by bare name across ALL package modules (suite style is
 function-local imports, which never appear in __globals__), which is
 deliberately OVER-inclusive: a name collision can only pull in extra source
-text and force a spurious re-seat — never miss a real change.
+text and force a spurious re-check — never miss a real change.
 
 `seating_manifest.json` records each query's fingerprint as of its last
-seating. tests/test_registry.py compares live fingerprints against it and
-fails when a changed query is absent from DRIVER_WINDOW + NEXT_ROUND_POOL;
-tools/update_seating.py rewrites manifest entries for currently-seated
-queries after a rotation.
+passing exact check. tests/test_registry.py runs every stale query against
+its DuckDB oracle with zero float tolerance on the sf0.001 fixtures
+(tools/verify_local.py --exact) and fails on any mismatch;
+tools/update_seating.py runs the same check and records the live
+fingerprint only for the stale queries that pass it.
 """
 
 from __future__ import annotations

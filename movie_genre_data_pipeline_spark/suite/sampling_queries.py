@@ -1913,8 +1913,7 @@ QUERIES["sample_pack_efficiency"] = QuerySpec(
 
 # r15 (VERDICT r14 #6): the r11+ waves moved VERBATIM into per-family
 # submodules (sampling_eval_queries, sampling_audit_queries);
-# suite/__init__.all_queries registers them immediately after this module,
-# preserving the registry's declaration order exactly.
+# suite/__init__.all_queries registers them immediately after this module.
 
 
 # r15 (VERDICT r14 #6): names moved VERBATIM into the split submodules stay

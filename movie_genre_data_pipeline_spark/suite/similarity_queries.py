@@ -668,8 +668,10 @@ def _train_panel_prefix(
     measurement to two invariants of `_collect_train` — lowest-vid sort order
     and IVF_TRAIN >= PQ_NQ (r15 ADVICE). Both are asserted here so a future
     change to either helper fails loudly instead of skewing recall: the
-    PQ_NQ lowest vids of a vid-ascending collect ARE _pq_query_panel's rows."""
-    assert len(train_rows) >= PQ_NQ, (
+    PQ_NQ lowest vids of a vid-ascending collect ARE _pq_query_panel's rows.
+    A collect shorter than IVF_TRAIN is the whole corpus, so on a corpus
+    smaller than the panel the prefix is still exactly the panel."""
+    assert len(train_rows) >= PQ_NQ or len(train_rows) < IVF_TRAIN, (
         f"training collect ({len(train_rows)} rows) no longer covers the "
         f"query panel (PQ_NQ={PQ_NQ}); collect the panel separately"
     )

@@ -1512,8 +1512,7 @@ QUERIES["stream_ab_report"] = QuerySpec(q_stream_ab_report, _stream_ab_oracle())
 
 # r15 (VERDICT r14 #6): the r11+ waves moved VERBATIM into per-family
 # submodules (streaming_ledger_queries, streaming_eval_queries);
-# suite/__init__.all_queries registers them immediately after this module,
-# preserving the registry's declaration order exactly.
+# suite/__init__.all_queries registers them immediately after this module.
 
 
 # r15 (VERDICT r14 #6): names moved VERBATIM into the split submodules stay

@@ -1,4 +1,5 @@
-"""Fixture-drift gate (VERDICT r03 #4): every DRIVER_WINDOW query runs end-to-end
+"""Fixture-drift gate (VERDICT r03 #4): every query in the driver's window (the
+first 50 entries of the registry) runs end-to-end
 against the real driver fixtures AND matches its DuckDB oracle, so a regenerated
 parquet fixture (schema drift, timestamp encoding change, value refresh) fails CI
 before a snapshot ships — round 3 shipped 6 red driver rows that one local run
@@ -26,19 +27,21 @@ import sys
 from pathlib import Path
 
 import pytest
+from conftest import SF_DIR
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 from verify_local import verify_queries  # noqa: E402
 
-from movie_genre_data_pipeline_spark.suite import DRIVER_WINDOW  # noqa: E402
+from movie_genre_data_pipeline_spark.suite import all_queries  # noqa: E402
+
+WINDOW = list(all_queries())[:50]
 
 
 def _family_subset() -> frozenset[str]:
-    """One window seat per family prefix (rotation-proof: derived from
-    whatever DRIVER_WINDOW currently holds, in seating order)."""
+    """The first window entry of each family prefix, in registry order."""
     seen: dict[str, str] = {}
-    for name in DRIVER_WINDOW:
+    for name in WINDOW:
         fam = name.split("_", 1)[0]
         seen.setdefault(fam, name)
     return frozenset(seen.values())
@@ -47,12 +50,12 @@ def _family_subset() -> frozenset[str]:
 @pytest.mark.parametrize(
     "sf_dir,names",
     [
-        ("/root/testdata/sf0.001", _family_subset()),
+        (SF_DIR, _family_subset()),
+        pytest.param(SF_DIR, frozenset(WINDOW), marks=pytest.mark.slow),
         pytest.param(
-            "/root/testdata/sf0.001", frozenset(DRIVER_WINDOW), marks=pytest.mark.slow
-        ),
-        pytest.param(
-            "/root/testdata/sf0.01", frozenset(DRIVER_WINDOW), marks=pytest.mark.slow
+            str(Path(SF_DIR).with_name("sf0.01")),
+            frozenset(WINDOW),
+            marks=pytest.mark.slow,
         ),
     ],
     ids=["family-subset-sf0.001", "full-window-sf0.001", "full-window-sf0.01"],

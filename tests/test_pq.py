@@ -183,3 +183,24 @@ def test_ivfadc_recall_law(spark):
             miss_rate,
         )
         q.unpersist()
+
+
+def test_panel_prefix_on_a_corpus_smaller_than_the_panel():
+    """A training collect shorter than IVF_TRAIN is the whole corpus, so a
+    40-row corpus (below PQ_NQ) yields all 40 rows as the panel — exactly
+    what `_pq_query_panel`'s ORDER BY vid LIMIT PQ_NQ selects."""
+    from movie_genre_data_pipeline_spark.suite import similarity_queries as sq
+
+    train_rows = [(vid, [float(vid)] * 4) for vid in range(40)]
+    assert len(train_rows) < sq.PQ_NQ
+    assert sq._train_panel_prefix(train_rows) == train_rows
+
+
+def test_panel_prefix_rejects_a_truncated_collect(monkeypatch):
+    """A full-size (IVF_TRAIN-row) collect that no longer covers the panel
+    still fails loudly."""
+    from movie_genre_data_pipeline_spark.suite import similarity_queries as sq
+
+    monkeypatch.setattr(sq, "IVF_TRAIN", 50)
+    with pytest.raises(AssertionError, match="query panel"):
+        sq._train_panel_prefix([(vid, [0.0]) for vid in range(50)])

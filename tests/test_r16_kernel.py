@@ -98,8 +98,10 @@ def test_kernel_cut_preserves_final_topk_exactly():
 
 
 def test_kernel_nonfinite_rows_fall_back_to_full_emission():
-    """Zero-norm vectors make 0/0 = NaN scores; those rows emit every
-    candidate (NaN crosses Arrow as NULL and sorts last — r15 behaviour)."""
+    """Zero-norm vectors make 0/0 = NaN scores. Non-finite candidates are
+    always kept (NaN crosses Arrow as NULL and sorts last); the top-k cut
+    runs over each row's finite scores only, and a row with fewer than k
+    finite scores keeps every finite candidate."""
     pdf = pd.DataFrame(
         {
             "vid": [0, 1, 2, 3],
@@ -108,8 +110,9 @@ def test_kernel_nonfinite_rows_fall_back_to_full_emission():
     )
     out = _make_score_cell(1)(pdf)
     by_vid = out.groupby("vid").size()
-    # every query row sees the NaN candidate -> non-finite -> keeps all 3
-    assert (by_vid == 3).all(), by_vid.to_dict()
+    # vids 0, 2, 3: the NaN candidate (vid 1) plus their finite top-1;
+    # vid 1: no finite score at all, so all 3 NaN candidates
+    assert by_vid.to_dict() == {0: 2, 1: 3, 2: 2, 3: 2}, by_vid.to_dict()
 
 
 def test_null_partition_cells_produce_no_pairs(spark):

@@ -1,27 +1,54 @@
-"""Registry-order contract: the driver's correctness gate samples the first 50
-entries of ``queries()``, so declaration order is load-bearing (VERDICT r01 #1).
+"""Registry contracts.
 
-No SparkSession needed — these pin pure-Python registry invariants.
+Order: the driver's correctness gate samples the first 50 entries of
+``queries()``, so declaration order is load-bearing (VERDICT r01 #1). It is
+derived, not curated: ``all_queries()`` round-robins oracled queries across
+the suite modules, then appends rows-only queries. The tests below pin that
+rule's consequences.
+
+Verify-then-record: ``seating_manifest.json`` holds each query's
+implementation fingerprint (suite/_seating.py) as of its last exact oracle
+check. A query whose live fingerprint differs from its entry, or that has
+none, is stale; `test_changed_queries_pass_exact_oracle_check` runs every
+stale query against its DuckDB oracle with zero float tolerance, and
+tools/update_seating.py records a fingerprint only after that same check
+passes.
 """
 
-import pytest
+import sys
+from pathlib import Path
 
-from movie_genre_data_pipeline_spark.suite import (
-    DRIVER_WINDOW,
-    NEXT_ROUND_POOL,
-    all_queries,
-)
+import pytest
+from conftest import SF_DIR
+
+from movie_genre_data_pipeline_spark.suite import all_queries
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+from verify_local import verify_queries  # noqa: E402
 
 
 def test_driver_window_is_first_50():
-    names = list(all_queries())
-    assert len(DRIVER_WINDOW) == 50
-    assert names[:50] == list(DRIVER_WINDOW)
+    """Every suite module that holds an oracled query has one in the first
+    50 — the round-robin rule, whatever the modules hold."""
+    import importlib
+    import pkgutil
+
+    from movie_genre_data_pipeline_spark import suite
+
+    first_50 = set(list(all_queries())[:50])
+    unsampled = []
+    for info in pkgutil.iter_modules(suite.__path__):
+        mod = importlib.import_module(f"{suite.__name__}.{info.name}")
+        oracled = {n for n, s in getattr(mod, "QUERIES", {}).items() if s.oracle}
+        if oracled and not oracled & first_50:
+            unsampled.append(info.name)
+    assert unsampled == []
 
 
 def test_driver_window_all_oracled():
     q = all_queries()
-    unoracled = [n for n in DRIVER_WINDOW if q[n].oracle is None]
+    unoracled = [n for n in list(q)[:50] if q[n].oracle is None]
     assert unoracled == []
 
 
@@ -33,6 +60,7 @@ def test_rows_only_queries_sorted_last():
     )
     # every entry after the first rows-only query is also rows-only
     assert all(q[n].oracle is None for n in names[first_rows_only:])
+    # so the 50 driver-sampled entries all carry an oracle
     assert first_rows_only >= 50
 
 
@@ -62,46 +90,6 @@ def test_documented_query_counts_match_registry():
     )
 
 
-def test_rotation_pool_matches_computed_debt():
-    """The r8 window comment said '23 r8 additions have no driver record' when
-    the truth was 24 (it dropped sample_split_audit) — a hand-maintained count
-    that drifted from the registry. Pin the rotation bookkeeping to the
-    COMPUTED debt instead: every registry query that has never appeared in any
-    CORRECTNESS_r0N.json must be seated in DRIVER_WINDOW now, or explicitly
-    queued in NEXT_ROUND_POOL — and NEXT_ROUND_POOL must contain exactly that
-    leftover, nothing stale (VERDICT r08 #8)."""
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    recorded: set[str] = set()
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        recorded.update(json.loads(f.read_text()).keys())
-    assert recorded, "no CORRECTNESS_r0N.json found next to the repo root"
-
-    never_checked = {n for n in all_queries() if n not in recorded}
-    leftover = never_checked - set(DRIVER_WINDOW)
-    assert leftover == set(NEXT_ROUND_POOL), (
-        f"never-driver-checked queries not seated in DRIVER_WINDOW and not "
-        f"(exactly) queued in NEXT_ROUND_POOL: missing={sorted(leftover - set(NEXT_ROUND_POOL))}, "
-        f"stale_pool_entries={sorted(set(NEXT_ROUND_POOL) - leftover)}"
-    )
-
-
-def test_rotation_pool_is_bounded():
-    """VERDICT r13 #2: the r13 pool grew to 36 of 50 window slots — one more
-    round at that velocity and never-driver-checked debt compounds across
-    rounds for the first time. Cap the pool at 14 (the window slack left
-    after the r14 pool-drain + rule-(b) seats): new queries must be seated
-    in DRIVER_WINDOW immediately, and a wave bigger than the slack has to
-    wait for the next round's additions instead of queueing unchecked."""
-    assert len(NEXT_ROUND_POOL) <= 14, (
-        f"NEXT_ROUND_POOL holds {len(NEXT_ROUND_POOL)} queries (> 14): "
-        "throttle new-query velocity — seat additions in DRIVER_WINDOW "
-        "immediately or defer them to the next round"
-    )
-
-
 def test_driver_window_samples_every_family():
     # r8: floor relaxed from >=2 to >=1 — the debt-clearing rotation packs 45
     # of 50 slots with fixed-reds + never-driver-checked entries (VERDICT r7
@@ -114,43 +102,50 @@ def test_driver_window_samples_every_family():
         "stream_": 0,
         "tpch_": 0,
     }
-    for name in DRIVER_WINDOW:
+    for name in list(all_queries())[:50]:
         for p in prefixes:
             if name.startswith(p):
                 prefixes[p] += 1
     assert all(v >= 1 for v in prefixes.values()), prefixes
 
 
-def test_changed_queries_are_reseated():
+def test_changed_queries_pass_exact_oracle_check(spark):
     """VERDICT r9 #5: a query whose implementation fingerprint (transitive
     function sources + reachable constants + oracle SQL, suite/_seating.py)
-    differs from its last-seated manifest entry must hold a slot in the
-    current DRIVER_WINDOW (or be queued in NEXT_ROUND_POOL) — a changed plan
-    needs a fresh driver record even when the oracle is unchanged."""
+    differs from its manifest entry — or a new query with no entry — must
+    match its DuckDB oracle exactly (zero float tolerance) on the fixtures:
+    a changed plan needs a fresh check even when the oracle is unchanged."""
     from movie_genre_data_pipeline_spark.suite import _seating
 
-    stale = _seating.stale_queries()
-    seated = set(DRIVER_WINDOW) | set(NEXT_ROUND_POOL)
-    unseated = sorted(set(stale) - seated)
-    assert unseated == [], (
-        f"edited since their last seating but not re-seated: {unseated} "
-        f"(rotate them into DRIVER_WINDOW, then run tools/update_seating.py)"
+    if not Path(SF_DIR).is_dir():
+        pytest.skip("driver fixtures not present")
+    failures = verify_queries(
+        spark, SF_DIR, names=set(_seating.stale_queries()), exact=True
+    )
+    assert not failures, "\n".join(
+        f"{name}: {'; '.join(errs)}" for name, errs in sorted(failures.items())
     )
 
 
 def test_seating_detects_a_synthetic_edit(monkeypatch):
-    """The contract must actually fire: perturb one un-seated query's manifest
-    fingerprint (equivalent to editing its implementation without re-seating)
-    and assert the checker reports exactly that query as stale."""
+    """The contract must actually fire: perturb one manifest fingerprint
+    (equivalent to editing that query's implementation) and assert the
+    checker reports that query as stale."""
     from movie_genre_data_pipeline_spark.suite import _seating
 
     manifest = _seating.load_manifest()
-    seated = set(DRIVER_WINDOW) | set(NEXT_ROUND_POOL)
-    victim = next(n for n in sorted(manifest) if n not in seated)
+    victim = min(manifest)
     forged = dict(manifest)
     forged[victim] = "0" * 64
     monkeypatch.setattr(_seating, "load_manifest", lambda: forged)
     assert victim in _seating.stale_queries()
+
+
+def test_verify_queries_rejects_unknown_names():
+    """A misspelled name must fail loudly, not check nothing and report 0
+    failures (no Spark session or fixture needed: names are checked first)."""
+    with pytest.raises(ValueError, match="sim_topk_ivff"):
+        verify_queries(None, "unused", names={"sim_topk_ivf", "sim_topk_ivff"})
 
 
 def test_bench_headline_set_is_pinned_to_detail():

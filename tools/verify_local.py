@@ -138,12 +138,17 @@ def verify_queries(
     spark, sf_dir: str, names=None, verbose: bool = False, exact: bool = False
 ) -> dict[str, list[str]]:
     """Run the given suite queries (default: all) against their oracles.
-    Returns {name: [failure, ...]} for failing queries only."""
+    Returns {name: [failure, ...]} for failing queries only. Raises
+    ValueError for names not in the registry."""
     from movie_genre_data_pipeline_spark.suite import all_queries
 
+    queries = all_queries()
+    unknown = sorted(set(names or ()) - queries.keys())
+    if unknown:
+        raise ValueError(f"unknown query names: {unknown}")
     con = make_duckdb(sf_dir)
     failures: dict[str, list[str]] = {}
-    for name, spec in all_queries().items():
+    for name, spec in queries.items():
         if names is not None and name not in names:
             continue
         t0 = time.time()
