@@ -106,7 +106,7 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from movie_genre_data_pipeline_spark.session import build_session
+    from movie_genre_data_pipeline_spark.session import build_session, codegen_compiles
     from movie_genre_data_pipeline_spark.suite import all_queries
 
     spark = build_session(app_name="mgdp-bench")
@@ -121,19 +121,25 @@ def main() -> None:
     # environmental skew can't masquerade as a regression (VERDICT r05 #8:
     # r5's "1.31x slowdown" turned out to be host drift, proven by re-running
     # the r4 commit verbatim in the r6 environment at the same 1.3x).
+    # Per sample, the generated classes Spark compiled afresh (codegen cache
+    # misses): a second sample that still compiles is paying for eviction.
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
     for name in HEADLINE:
         if name not in specs:
             continue
         runs = []
+        compiles[name] = []
         for _ in range(2):
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             df = specs[name].fn(spark, sf_dir)
             # noop sink: computes every row/column of the result (a bare
             # count() would let Catalyst prune projections and under-measure)
             df.write.format("noop").mode("overwrite").save()
             runs.append(round(time.time() - t0, 3))
+            compiles[name].append(codegen_compiles(spark) - c0)
         samples[name] = runs
         timings[name] = min(runs)
     total = round(sum(timings.values()), 3)
@@ -200,6 +206,7 @@ def main() -> None:
         "sf": sf_val,
         "queries": timings,
         "samples": samples,
+        "codegen_compiles": compiles,
         "drift_control": {
             "workload": "range20M-mod1000-hashagg",
             "runs": drift_runs,

@@ -20,6 +20,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.readwriter import DataFrameWriter
+from pyspark.sql.types import StructType
 
 
 def batch_writer(
@@ -80,6 +81,7 @@ def register_external_table(
     spark,
     table: str,
     path: str,
+    schema: StructType,
     database: str | None = None,
     fmt: str = "parquet",
 ) -> str:
@@ -88,15 +90,19 @@ def register_external_table(
     (Batch_notebook/bronzeToSilver.py:145-157 saveAsTable at an abfss
     location; config/configuration.py:23-24 CREATE DATABASE). Registration is
     METADATA-ONLY: the layer parquet already on disk becomes queryable as
-    `spark.table("db.table")` / SQL with zero data movement, schema inferred
-    from the footers. Re-registering after each refresh keeps the catalog
-    pointing at the current generation. Returns the qualified table name."""
+    `spark.table("db.table")` / SQL with zero data movement. The caller
+    passes the schema it just wrote, so the DDL declares it and Spark runs
+    no footer-inference job. Re-registering after each refresh keeps the
+    catalog pointing at the current generation. Returns the qualified table
+    name."""
     qualified = table
     if database:
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
         qualified = f"{database}.{table}"
     spark.sql(f"DROP TABLE IF EXISTS {qualified}")
-    spark.sql(f"CREATE TABLE {qualified} USING {fmt} LOCATION '{path}'")
+    spark.sql(
+        f"CREATE TABLE {qualified} ({schema.toDDL()}) USING {fmt} LOCATION '{path}'"
+    )
     return qualified
 
 

@@ -26,8 +26,12 @@ Semantics notes (documented, pinned by tests):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from movie_genre_data_pipeline_spark.config import PipelineConfig
+from movie_genre_data_pipeline_spark.operators.observe import write_with_metrics
+from movie_genre_data_pipeline_spark.operators.writers import register_external_table
 
 # Additive per-genre state for incremental maintenance. Money is kept in
 # INTEGER CENTS (bigint) so applying signed deltas is EXACT — float sums would
@@ -391,3 +395,39 @@ def build_language_revenue_mart(
         )
         .orderBy("language_id", "language")
     )
+
+
+def publish_marts(spark: SparkSession, config: PipelineConfig) -> int:
+    """Silver → Gold, the stage both medallion variants end with: rebuild the
+    genre and language marts from the silver zone, overwrite them in the gold
+    zone and register each as `<db>.<mart>_gold`. The reference's README
+    sketches Bronze/Silver/Gold but its pipeline stops at Silver (reference
+    README.md:10-15). Overwrite is correct: gold is derived and silver is its
+    source of truth (churn-sized refreshes use the IVM path,
+    apply_genre_revenue_delta). One derivation for both variants keeps
+    batch ≡ incremental true through gold. The language mart is the §8.3
+    parity form, since the silver language dim is the reference's degenerate
+    one (language_projection(degenerate=False) upstream makes it real).
+    Returns the genre mart's row count, observed by its write job."""
+    # resolved per call, so a wrapper on sources.batch.read_parquet (the
+    # layered benchmark's tracing) also sees the gold stage's reads
+    from movie_genre_data_pipeline_spark.sources.batch import read_parquet
+
+    movie = read_parquet(spark, config.silver_path("movie"))
+    marts = {
+        "genre_revenue": build_genre_revenue_mart(
+            movie, read_parquet(spark, config.silver_path("genres"))
+        ),
+        "language_revenue": build_language_revenue_mart(
+            movie, read_parquet(spark, config.silver_path("language"))
+        ),
+    }
+    rows = {}
+    for name, mart in marts.items():
+        path = config.gold_path(name)
+        observed = write_with_metrics(mart, path, [F.count(F.lit(1)).alias("rows")])
+        rows[name] = observed["rows"]
+        register_external_table(
+            spark, f"{name}_gold", path, mart.schema, database=config.database
+        )
+    return rows["genre_revenue"]

@@ -38,6 +38,7 @@ from movie_genre_data_pipeline_spark.operators.upsert import (
     upsert_update,
 )
 from movie_genre_data_pipeline_spark.operators.writers import write_partitioned
+from movie_genre_data_pipeline_spark.plans.gold import publish_marts
 from movie_genre_data_pipeline_spark.plans.movie_transforms import (
     genres_projection,
     language_projection,
@@ -191,55 +192,13 @@ class MedallionPipeline:
             touched_values=touched,
         )
 
-    # -- convenience --------------------------------------------------------
     # -- stage 4 (r6): the layer the reference describes but never builds ----
     def silver_to_gold(self) -> int:
-        """Silver → Gold: materialize the genre-revenue star mart
-        (plans/gold.build_genre_revenue_mart) from the movie and genres
-        silver tables to the gold zone. The reference's README sketches
-        Bronze/Silver/Gold but its pipeline stops at Silver
-        (/root/reference/README.md:10-15) — this completes the medallion.
-        Returns the mart row count. Overwrite is correct here: gold is a
-        derived mart, silver is its source of truth (for churn-sized
-        refreshes use the IVM path — apply_genre_revenue_delta)."""
-        from movie_genre_data_pipeline_spark.plans.gold import (
-            build_genre_revenue_mart,
-            build_language_revenue_mart,
-        )
+        """Silver → Gold: both star marts (plans/gold.publish_marts). Returns
+        the genre mart's row count."""
+        return publish_marts(self.spark, self.config)
 
-        from movie_genre_data_pipeline_spark.operators.writers import (
-            register_external_table,
-        )
-
-        movie = read_parquet(self.spark, self.config.silver_path("movie"))
-        genres = read_parquet(self.spark, self.config.silver_path("genres"))
-        mart = build_genre_revenue_mart(movie, genres)
-        mart.write.mode("overwrite").parquet(self.config.gold_path("genre_revenue"))
-        # the reference registers every layer as a catalog table; the gold
-        # mart is queryable as `spark.table("<db>.genre_revenue_gold")`
-        qualified = register_external_table(
-            self.spark,
-            "genre_revenue_gold",
-            self.config.gold_path("genre_revenue"),
-            database=self.config.database,
-        )
-        # r8: the star sketch's OTHER FK — the language mart. The silver
-        # tables are the reference's, so this is the §8.3 PARITY form (every
-        # language row Id=1 aggregates every movie); flipping
-        # language_projection(degenerate=False) upstream makes it real.
-        language = read_parquet(self.spark, self.config.silver_path("language"))
-        lang_mart = build_language_revenue_mart(movie, language)
-        lang_mart.write.mode("overwrite").parquet(
-            self.config.gold_path("language_revenue")
-        )
-        register_external_table(
-            self.spark,
-            "language_revenue_gold",
-            self.config.gold_path("language_revenue"),
-            database=self.config.database,
-        )
-        return self.spark.table(qualified).count()
-
+    # -- convenience --------------------------------------------------------
     def run(self, raw_path: str | None = None) -> dict[str, int]:
         """Full pipeline (Batch_notebook/main.py:63-65 + the gold stage)."""
         self.raw_to_bronze(raw_path)

@@ -40,6 +40,7 @@ from movie_genre_data_pipeline_spark.operators.enrich import (
 from movie_genre_data_pipeline_spark.operators.nested import expand_struct, explode_array
 from movie_genre_data_pipeline_spark.operators.upsert import upsert_insert_missing
 from movie_genre_data_pipeline_spark.operators.writers import write_partitioned
+from movie_genre_data_pipeline_spark.plans.gold import publish_marts
 from movie_genre_data_pipeline_spark.plans.movie_transforms import (
     genres_projection,
     language_projection,
@@ -206,47 +207,9 @@ class IncrementalMedallionPipeline:
 
     # -- stage 4 (r6): gold, same derivation as the batch variant ---------------
     def silver_to_gold(self) -> int:
-        """Silver → Gold genre-revenue mart (plans/gold) — identical
-        derivation to MedallionPipeline.silver_to_gold, so batch ≡ incremental
-        extends through the gold layer (both variants read the same silver
-        zone they maintain). Returns the mart row count."""
-        from movie_genre_data_pipeline_spark.plans.gold import (
-            build_genre_revenue_mart,
-            build_language_revenue_mart,
-        )
-        from movie_genre_data_pipeline_spark.sources.batch import read_parquet
-
-        from movie_genre_data_pipeline_spark.operators.writers import (
-            register_external_table,
-        )
-
-        movie = read_parquet(self.spark, self.config.silver_path("movie"))
-        genres = read_parquet(self.spark, self.config.silver_path("genres"))
-        mart = build_genre_revenue_mart(movie, genres)
-        mart.write.mode("overwrite").parquet(self.config.gold_path("genre_revenue"))
-        # same catalog contract as the batch variant: re-register so
-        # `spark.table("<db>.genre_revenue_gold")` tracks the latest refresh
-        qualified = register_external_table(
-            self.spark,
-            "genre_revenue_gold",
-            self.config.gold_path("genre_revenue"),
-            database=self.config.database,
-        )
-        # r8: the language mart, same derivation as the batch variant (§8.3
-        # parity form over the reference-shaped silver tables) so the
-        # batch ≡ incremental equality extends through BOTH gold marts
-        language = read_parquet(self.spark, self.config.silver_path("language"))
-        lang_mart = build_language_revenue_mart(movie, language)
-        lang_mart.write.mode("overwrite").parquet(
-            self.config.gold_path("language_revenue")
-        )
-        register_external_table(
-            self.spark,
-            "language_revenue_gold",
-            self.config.gold_path("language_revenue"),
-            database=self.config.database,
-        )
-        return self.spark.table(qualified).count()
+        """Silver → Gold: both star marts (plans/gold.publish_marts), the
+        batch variant's stage verbatim. Returns the genre mart's row count."""
+        return publish_marts(self.spark, self.config)
 
     # -- convenience ------------------------------------------------------------
     def run(self, raw_path: str | None = None) -> None:

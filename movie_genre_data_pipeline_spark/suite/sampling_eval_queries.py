@@ -619,9 +619,13 @@ _WOE_MICRO = (
     " * CAST(2 * t_pos + n_bins AS DOUBLE)))"
     " * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)"
 )
+# A class with no rows in a feature (t = 0: every row of the feature is the
+# other class) has share 0 in every bin, not a division by zero.
 _SHARE_MICRO = (
-    "CAST(FLOOR(CAST({n} AS DOUBLE) * CAST(1000000 AS DOUBLE)"
+    "CASE WHEN {t} > 0 THEN"
+    " CAST(FLOOR(CAST({n} AS DOUBLE) * CAST(1000000 AS DOUBLE)"
     " / CAST({t} AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)"
+    " ELSE CAST(0 AS BIGINT) END"
 )
 _IV_MICRO = (
     "CAST(FLOOR(CAST(iv_sum AS DOUBLE) / CAST(1000000 AS DOUBLE)"

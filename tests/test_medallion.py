@@ -5,8 +5,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.config import Clock, PipelineConfig
 from movie_genre_data_pipeline_spark.plans.medallion import MedallionPipeline
+from movie_genre_data_pipeline_spark.session import codegen_compiles
 from movie_genre_data_pipeline_spark.sources.batch import read_parquet
+from movie_genre_data_pipeline_spark.streaming.incremental import (
+    IncrementalMedallionPipeline,
+)
 
 
 def _run(spark, pipeline_config, raw_movie_dir) -> MedallionPipeline:
@@ -328,3 +333,21 @@ def test_silver_to_gold_stage(spark, pipeline_config, raw_movie_dir):
     assert len({(r["total_revenue"], r["total_budget"]) for r in lrows}) == 1
     lang_table = f"{pipeline_config.database}.language_revenue_gold"
     assert spark.table(lang_table).count() == len(lrows)
+
+
+def test_rerun_reuses_generated_code(spark, raw_movie_dir, tmp_path):
+    """A session that reruns the pipeline compiles its generated classes
+    once: the third identical batch + incremental round, each into fresh
+    lakes, compiles nothing. A round needs about 180 classes, more than
+    Spark's default 100-entry codegen cache holds, so without the session's
+    larger cache every round recompiles nearly all of them."""
+    clock = Clock(fixed_utc="2024-01-01 00:00:00")
+    compiled = []
+    for i in range(3):
+        before = codegen_compiles(spark)
+        batch = PipelineConfig(root=str(tmp_path / f"batch{i}"), clock=clock)
+        MedallionPipeline(spark, batch).run(raw_movie_dir)
+        incremental = PipelineConfig(root=str(tmp_path / f"inc{i}"), clock=clock)
+        IncrementalMedallionPipeline(spark, incremental).run(raw_movie_dir)
+        compiled.append(codegen_compiles(spark) - before)
+    assert compiled[2] == 0, f"classes compiled per round: {compiled}"

@@ -288,19 +288,21 @@ def test_woe_single_bin_is_zero_and_iv_nonnegative(spark, n_pos, n_neg, cells):
     IV are exactly 0; and on any multi-bin table IV never goes negative
     (each bin's share gap and log-odds share a sign).
 
-    Domain note (hypothesis-found): a feature whose rows are ALL one class
-    (t_pos = 0 or t_neg = 0) divides by zero in the share spell under
-    Spark 4 ANSI — unreachable from woe_cell_facts on the fixtures (both
-    order statuses always occur) but a real guard candidate if the
-    producer ever feeds a one-class target; the sweep stays inside the
-    producer's domain by pinning one (1, 1) cell per feature."""
+    Domain note: a feature whose rows are ALL one class (t_pos = 0 or
+    t_neg = 0) has share 0 for the empty class in every bin: the share
+    spell guards the division, which raises under Spark 4 ANSI. The
+    sweep covers it explicitly: `pos_only` holds the drawn positives with
+    no negatives, one-bin `neg_only` the reverse (WoE and IV exactly 0),
+    and `multi` stays two-class through its (1, 1) anchor cell."""
     from movie_genre_data_pipeline_spark.suite.sampling_eval_queries import (
         woe_iv_report_from_cells,
     )
 
     rows = [("solo", "only", n_pos, n_neg)] + [
         ("multi", f"b{i}", p, q) for i, (p, q) in enumerate(cells)
-    ] + [("multi", "anchor", 1, 1)]
+    ] + [("multi", "anchor", 1, 1)] + [
+        ("pos_only", f"b{i}", p, 0) for i, (p, _) in enumerate(cells)
+    ] + [("neg_only", "only", 0, n_neg)]
     df = spark.createDataFrame(
         rows, "feature string, x string, n_pos bigint, n_neg bigint"
     )
@@ -314,3 +316,8 @@ def test_woe_single_bin_is_zero_and_iv_nonnegative(spark, n_pos, n_neg, cells):
         got["multi"]["woe_min_micro"]
         <= got["multi"]["woe_max_micro"]
     )
+    assert got["pos_only"]["n_neg"] == 0
+    assert got["pos_only"]["iv_micro"] >= 0
+    neg_only = got["neg_only"]
+    assert (neg_only["n_pos"], neg_only["iv_micro"]) == (0, 0)
+    assert neg_only["woe_min_micro"] == neg_only["woe_max_micro"] == 0
