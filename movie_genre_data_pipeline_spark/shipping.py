@@ -21,6 +21,7 @@ package shipped before the first worker-side import runs.
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -40,12 +41,14 @@ _zip_path: str | None = None
 
 def _build_zip() -> str:
     """Zip the package source once per driver process (importable zip layout:
-    ``<name>/__init__.py`` at the archive root)."""
+    ``<name>/__init__.py`` at the archive root); the zip is removed at
+    interpreter exit."""
     global _zip_path
     if _zip_path is not None and os.path.exists(_zip_path):
         return _zip_path
     fd, path = tempfile.mkstemp(prefix=f"{_PACKAGE_NAME}-", suffix=".zip")
     os.close(fd)
+    atexit.register(Path(path).unlink, missing_ok=True)
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
         for src in sorted(_PACKAGE_ROOT.rglob("*.py")):
             if "__pycache__" in src.parts:

@@ -4,8 +4,7 @@ Each module exposes ``QUERIES: dict[str, QuerySpec]`` mapping a query name to a
 (spark_fn, oracle_sql) pair. ``spark_fn(spark, sf_dir) -> DataFrame`` is the
 engine-side implementation (idiomatic DataFrame API, exercising the operators in
 movie_genre_data_pipeline_spark.operators / functions); ``oracle_sql`` is the ANSI
-SQL DuckDB equivalent, or None for ops that aren't SQL-expressible (driver then
-records a rows-only check).
+SQL DuckDB equivalent; every query has one (``all_queries`` enforces it).
 
 Column-name discipline: every computed column is aliased IDENTICALLY in both sides
 (the driver sorts columns by name and hashes values). Numeric discipline: aggregates
@@ -25,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 class QuerySpec(NamedTuple):
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -48,10 +47,10 @@ def all_queries() -> dict[str, QuerySpec]:
     """Every registered query, in the order the driver samples them.
 
     The driver's correctness gate checks the FIRST 50 entries, so the order
-    is derived by one rule rather than curated: oracled queries round-robin
-    across the suite modules in module order (each module's first query,
-    then each module's second, ...), so every operator family lands in the
-    first 50; rows-only queries (no oracle) follow, in module order.
+    is derived by one rule rather than curated: queries round-robin across
+    the suite modules in module order (each module's first query, then each
+    module's second, ...), so every operator family lands in the first 50.
+    Every query must carry an oracle; one without raises ValueError.
     """
     from movie_genre_data_pipeline_spark.suite import (
         cdc_queries,
@@ -113,16 +112,13 @@ def all_queries() -> dict[str, QuerySpec]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(mod.QUERIES)
+    missing = sorted(name for name, spec in out.items() if not spec.oracle)
+    if missing:
+        raise ValueError(f"queries without an oracle: {missing}")
 
-    oracled = [
-        [name for name, spec in mod.QUERIES.items() if spec.oracle is not None]
-        for mod in modules
-    ]
-    ordered = {
+    return {
         name: out[name]
-        for tier in itertools.zip_longest(*oracled)
+        for tier in itertools.zip_longest(*(mod.QUERIES for mod in modules))
         for name in tier
         if name is not None
     }
-    ordered.update((name, spec) for name, spec in out.items() if spec.oracle is None)
-    return ordered

@@ -130,10 +130,10 @@ def _code_names(code) -> set[str]:
     return names
 
 
-def query_fingerprint(fn, oracle: str | None) -> str:
+def query_fingerprint(fn, oracle: str) -> str:
     """sha256 fingerprint of a query's implementation (see module doc)."""
     name_map = _package_name_map()
-    pieces: dict[str, str] = {"__oracle__": oracle or ""}
+    pieces: dict[str, str] = {"__oracle__": oracle}
     frontier: list[types.FunctionType] = [fn]
     seen: set[str] = set()
     while frontier:

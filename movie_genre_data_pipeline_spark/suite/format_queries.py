@@ -7,19 +7,18 @@ BOTH the sink and the source are faithful (same pattern as `csv_roundtrip`).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
+from movie_genre_data_pipeline_spark.suite._twin import workspace
 
 
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.sources.batch import read_jsonl
 
     d = load(spark, sf_dir, "documents")
-    path = f"{tempfile.mkdtemp(prefix='mgdp_jsonl_')}/documents_jsonl"
+    path = f"{workspace('mgdp_jsonl_')}/documents_jsonl"
     d.write.format("json").mode("overwrite").save(path)
     back = read_jsonl(
         spark,
@@ -50,7 +49,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
-    path = f"{tempfile.mkdtemp(prefix='mgdp_orc_')}/customer_orc"
+    path = f"{workspace('mgdp_orc_')}/customer_orc"
     c.write.format("orc").mode("overwrite").save(path)
     back = read_orc(spark, path)
     return back.groupBy("c_mktsegment").agg(
@@ -212,7 +211,6 @@ def q_pysource_jsonl_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     it must not affect the committed aggregate, which the direct-over-events
     oracle pins exactly."""
     import os
-    import tempfile
 
     from movie_genre_data_pipeline_spark.sources.pydatasource import (
         read_ledger,
@@ -221,7 +219,7 @@ def q_pysource_jsonl_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.suite import load
 
     register_ledger(spark)
-    path = os.path.join(tempfile.mkdtemp(prefix="jsonl_ledger_"), "events")
+    path = os.path.join(workspace("jsonl_ledger_"), "events")
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -268,7 +266,6 @@ def q_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet ledger via foreachBatch; offsets make each range exactly-once and
     `readBetweenOffsets` replayable, so the final aggregate equals the pure
     LCG derivation the oracle computes from generate_series."""
-    import tempfile
     import time
 
     from movie_genre_data_pipeline_spark.sources.pydatasource import (
@@ -277,7 +274,7 @@ def q_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_stream(spark)
-    out = tempfile.mkdtemp(prefix="pysource_stream_") + "/rows"
+    out = workspace("pysource_stream_") + "/rows"
     stream = (
         spark.readStream.format(STREAM_FORMAT_NAME)
         .option("max_rows", STREAM_SRC_ROWS)
@@ -350,7 +347,6 @@ def q_pysource_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once visibility (a re-committed batchId replaces its shard set);
     the manifest-resolved read-back must equal the pure LCG derivation."""
     import os
-    import tempfile
     import time
 
     from movie_genre_data_pipeline_spark.sources.pydatasource import (
@@ -362,7 +358,7 @@ def q_pysource_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_stream(spark)
     register_ledger(spark)
-    base = tempfile.mkdtemp(prefix="pysource_ss_")
+    base = workspace("pysource_ss_")
     path, cp = f"{base}/ledger", f"{base}/cp"
     stream = (
         spark.readStream.format(STREAM_FORMAT_NAME)
@@ -410,11 +406,10 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     footers only, no data rewrite) and v1 rows read back with NULL backfill
     in the new column. The aggregate proves both generations' rows survive
     with the right nullability split."""
-    import tempfile
 
     from movie_genre_data_pipeline_spark.suite import load
 
-    out = tempfile.mkdtemp(prefix="schema_evo_") + "/orders"
+    out = workspace("schema_evo_") + "/orders"
     orders = load(spark, sf_dir, "orders")
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"

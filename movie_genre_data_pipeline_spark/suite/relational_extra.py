@@ -1220,14 +1220,13 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip-exact precision), so the aggregate over the re-read CSV must
     hash-match the oracle computed straight from parquet — that IS the check
     that both the sink and the source are faithful."""
-    import tempfile
-
     from movie_genre_data_pipeline_spark.sources.batch import read_csv
+    from movie_genre_data_pipeline_spark.suite._twin import workspace
 
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
-    path = f"{tempfile.mkdtemp(prefix='mgdp_csv_')}/customer_csv"
+    path = f"{workspace('mgdp_csv_')}/customer_csv"
     c.write.format("csv").option("header", "true").mode("overwrite").save(path)
     back = read_csv(
         spark,

@@ -1,24 +1,69 @@
 """Continuous eval/privacy/statistics streaming twins (r11-r14 wave),
-moved VERBATIM out of streaming_queries.py (r15, VERDICT r14 #6 -- the
-5.8k-line module split). The DSIR-ledger AUC family, l-diversity,
-t-closeness, WoE, burstiness, ACF, seasonal decompose, DP release,
-ledger compaction, lift/gains, Gini, Mann-Kendall, chi-squared, Neyman,
-Hill, SRM, CUSUM, ARI readability, byte histogram, source ablation,
-drift screen, assortativity, PPS, freshness SLA, Kaplan-Meier, Yule's
-K, Mahalanobis, and Theil.
+split out of streaming_queries.py (r15, VERDICT r14 #6). Each twin
+streams its source through suite/_twin.run_twin. The DSIR-ledger AUC
+family, l-diversity, t-closeness, WoE, burstiness, ACF, seasonal
+decompose, DP release, ledger compaction, lift/gains, Gini,
+Mann-Kendall, chi-squared, Neyman, Hill, SRM, CUSUM, ARI readability,
+byte histogram, source ablation, drift screen, assortativity, PPS,
+freshness SLA, Kaplan-Meier, Yule's K, Mahalanobis, and Theil.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from movie_genre_data_pipeline_spark.streaming.ledger import fold_ledger
 from movie_genre_data_pipeline_spark.suite import QuerySpec
-from movie_genre_data_pipeline_spark.suite.streaming_queries import (  # noqa: E501
-    _split,
+from movie_genre_data_pipeline_spark.suite._twin import run_twin, workspace
+from movie_genre_data_pipeline_spark.suite.cdc_queries import (
+    Q_DP_RELEASE_ORACLE,
+    Q_L_DIVERSITY_ORACLE,
+    Q_T_CLOSENESS_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.graph_queries import _assortativity_oracle
+from movie_genre_data_pipeline_spark.suite.multimodal_queries import (
+    Q_MEDIA_BYTE_HISTOGRAM_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.pipeline_queries import Q_DQ_FRESHNESS_ORACLE
+from movie_genre_data_pipeline_spark.suite.relational_extra import (
+    Q_GINI_ORACLE,
+    Q_THEIL_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.sampling_queries import (
+    Q_FEAT_CHI2_ORACLE,
+    Q_MAHA_ORACLE,
+    Q_NEYMAN_ORACLE,
+    Q_PPS_ORACLE,
+    Q_PRIORITY_ESTIMATOR_ORACLE,
+    _auc_bootstrap_oracle,
+    _auc_by_segment_oracle,
+    _auc_cv_oracle,
+    _auc_oracle,
+    _bootstrap_oracle,
+    _drift_screen_oracle,
+    _ess_oracle,
+    _ks_oracle,
+    _leakage_oracle,
+    _lift_gains_oracle,
+    _pr_auc_oracle,
+    _score_psi_oracle,
+    _source_ablation_oracle,
+    _woe_oracle,
+)
+from movie_genre_data_pipeline_spark.suite.text_queries import (
+    Q_ARI_ORACLE,
+    Q_BURSTINESS_ORACLE,
+    Q_HILL_ORACLE,
+    Q_YULE_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
+    Q_KM_ORACLE,
+    Q_TS_ACF_ORACLE,
+    Q_TS_CUSUM_ORACLE,
+    Q_TS_MANN_KENDALL_ORACLE,
+    Q_TS_SEASONAL_DECOMPOSE_ORACLE,
+    _srm_oracle,
 )
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -39,52 +84,22 @@ def q_stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         l_diversity_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ldiv_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_ldiv_")
+    led = f"{base}/cells"
     c = load(spark, sf_dir, "customer")
-    c.select("c_nationkey", "c_mktsegment", "c_acctbal").repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_mktsegment", T.StringType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         l_diversity_cell_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(c.select("c_nationkey", "c_mktsegment", "c_acctbal"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(led)
-        .groupBy("c_nationkey", "bal_band", "c_mktsegment")
-        .agg(F.sum("n_cell").cast("bigint").alias("n_cell"))
+    folded = fold_ledger(
+        spark.read.parquet(led), ["c_nationkey", "bal_band", "c_mktsegment"], ["n_cell"]
     )
     return l_diversity_from_cells(folded)
 
 
-def _stream_ldiv_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.cdc_queries import (
-        Q_L_DIVERSITY_ORACLE,
-    )
-
-    return Q_L_DIVERSITY_ORACLE
-
-
-QUERIES["stream_l_diversity"] = QuerySpec(
-    q_stream_l_diversity, _stream_ldiv_oracle()
-)
+QUERIES["stream_l_diversity"] = QuerySpec(q_stream_l_diversity, Q_L_DIVERSITY_ORACLE)
 
 
 def q_stream_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,52 +120,22 @@ def q_stream_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         t_closeness_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_tclose_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_tclose_")
+    led = f"{base}/cells"
     c = load(spark, sf_dir, "customer")
-    c.select("c_nationkey", "c_mktsegment", "c_acctbal").repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_mktsegment", T.StringType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         t_closeness_cell_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(c.select("c_nationkey", "c_mktsegment", "c_acctbal"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(led)
-        .groupBy("c_nationkey", "c_mktsegment", "bal_band")
-        .agg(F.sum("n_cell").cast("bigint").alias("n_cell"))
+    folded = fold_ledger(
+        spark.read.parquet(led), ["c_nationkey", "c_mktsegment", "bal_band"], ["n_cell"]
     )
     return t_closeness_from_cells(folded)
 
 
-def _stream_tclose_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.cdc_queries import (
-        Q_T_CLOSENESS_ORACLE,
-    )
-
-    return Q_T_CLOSENESS_ORACLE
-
-
-QUERIES["stream_t_closeness"] = QuerySpec(
-    q_stream_t_closeness, _stream_tclose_oracle()
-)
+QUERIES["stream_t_closeness"] = QuerySpec(q_stream_t_closeness, Q_T_CLOSENESS_ORACLE)
 
 
 def q_stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,26 +157,9 @@ def q_stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         priority_estimator_report,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_prio_")
-    src, cand_led, tot_led = f"{base}/src", f"{base}/cands", f"{base}/totals"
+    base = workspace("stream_prio_")
+    cand_led, tot_led = f"{base}/cands", f"{base}/totals"
     d = load(spark, sf_dir, "documents")
-    d.select("lang", "doc_id", "n_chars").repartition(_split(4)).write.parquet(
-        src
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         priority_sample(
@@ -204,30 +172,16 @@ def q_stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("bigint").alias("total_chars"),
         ).write.mode("append").parquet(tot_led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("lang", "doc_id", "n_chars"), apply_batch, base)
 
-    totals = (
-        spark.read.parquet(tot_led)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("total_chars").cast("bigint").alias("total_chars"),
-        )
+    totals = fold_ledger(
+        spark.read.parquet(tot_led), ["lang"], ["n_docs", "total_chars"]
     )
     return priority_estimator_report(spark.read.parquet(cand_led), totals)
 
 
-def _stream_prio_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        Q_PRIORITY_ESTIMATOR_ORACLE,
-    )
-
-    return Q_PRIORITY_ESTIMATOR_ORACLE
-
-
 QUERIES["stream_priority_sample"] = QuerySpec(
-    q_stream_priority_sample, _stream_prio_oracle()
+    q_stream_priority_sample, Q_PRIORITY_ESTIMATOR_ORACLE
 )
 
 
@@ -245,55 +199,27 @@ def q_stream_leakage_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         mutual_info_screen_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_leak_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_leak_")
+    led = f"{base}/cells"
     o = load(spark, sf_dir, "orders")
-    o.select(
-        "o_orderpriority", "o_orderdate", "o_custkey", "o_totalprice",
-        "o_orderstatus",
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_orderpriority", T.StringType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderstatus", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         leakage_cell_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    folded = (
-        spark.read.parquet(led)
-        .groupBy("feature", "x", "y")
-        .agg(F.sum("n_xy").cast("bigint").alias("n_xy"))
+    run_twin(
+        o.select(
+            "o_orderpriority", "o_orderdate", "o_custkey", "o_totalprice",
+            "o_orderstatus",
+        ),
+        apply_batch,
+        base,
     )
+
+    folded = fold_ledger(spark.read.parquet(led), ["feature", "x", "y"], ["n_xy"])
     return mutual_info_screen_from_cells(folded)
 
 
-def _stream_leak_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _leakage_oracle,
-    )
-
-    return _leakage_oracle()
-
-
-QUERIES["stream_leakage_screen"] = QuerySpec(
-    q_stream_leakage_screen, _stream_leak_oracle()
-)
+QUERIES["stream_leakage_screen"] = QuerySpec(q_stream_leakage_screen, _leakage_oracle())
 
 
 def q_stream_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,56 +236,27 @@ def q_stream_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         woe_iv_report_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_woe_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_woe_")
+    led = f"{base}/cells"
     o = load(spark, sf_dir, "orders")
-    o.select(
-        "o_orderpriority", "o_orderdate", "o_custkey", "o_totalprice",
-        "o_orderstatus",
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_orderpriority", T.StringType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderstatus", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         woe_cell_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    folded = (
-        spark.read.parquet(led)
-        .groupBy("feature", "x")
-        .agg(
-            F.sum("n_pos").cast("bigint").alias("n_pos"),
-            F.sum("n_neg").cast("bigint").alias("n_neg"),
-        )
+    run_twin(
+        o.select(
+            "o_orderpriority", "o_orderdate", "o_custkey", "o_totalprice",
+            "o_orderstatus",
+        ),
+        apply_batch,
+        base,
     )
+
+    folded = fold_ledger(spark.read.parquet(led), ["feature", "x"], ["n_pos", "n_neg"])
     return woe_iv_report_from_cells(folded)
 
 
-def _stream_woe_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _woe_oracle,
-    )
-
-    return _woe_oracle()
-
-
-QUERIES["stream_woe_iv"] = QuerySpec(q_stream_woe_iv, _stream_woe_oracle())
+QUERIES["stream_woe_iv"] = QuerySpec(q_stream_woe_iv, _woe_oracle())
 
 
 def q_stream_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,23 +274,9 @@ def q_stream_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         burstiness_term_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_burst_")
-    src, led, dled = f"{base}/src", f"{base}/facts", f"{base}/docs"
+    base = workspace("stream_burst_")
+    led, dled = f"{base}/facts", f"{base}/docs"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         burstiness_term_facts(batch_df).write.mode("append").parquet(led)
@@ -401,36 +284,16 @@ def q_stream_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs")
         ).write.mode("append").parquet(dled)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
-    facts = (
-        spark.read.parquet(led)
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("bigint").alias("df"),
-            F.sum("sum_x").cast("bigint").alias("sum_x"),
-            # the ledger partials land as DECIMAL(38,0); the fold stays there
-            F.sum("sum_x2").cast("decimal(38,0)").alias("sum_x2"),
-        )
-    )
+    facts = fold_ledger(spark.read.parquet(led), ["term"], ["df", "sum_x", "sum_x2"])
     n_docs = spark.read.parquet(dled).agg(
         F.sum("n_docs").cast("bigint").alias("n_docs")
     )
     return burstiness_report_from_facts(facts, n_docs)
 
 
-def _stream_burst_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_BURSTINESS_ORACLE,
-    )
-
-    return Q_BURSTINESS_ORACLE
-
-
-QUERIES["stream_burstiness"] = QuerySpec(
-    q_stream_burstiness, _stream_burst_oracle()
-)
+QUERIES["stream_burstiness"] = QuerySpec(q_stream_burstiness, Q_BURSTINESS_ORACLE)
 
 
 def q_stream_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,47 +311,20 @@ def q_stream_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly_event_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_acf_")
-    src, led = f"{base}/src", f"{base}/counts"
+    base = workspace("stream_acf_")
+    led = f"{base}/counts"
     ev = load(spark, sf_dir, "events")
-    ev.select("ts", "event_id").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         hourly_event_counts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("ts", "event_id"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("hour_id")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["hour_id"], ["cnt"])
     return acf_report_from_counts(counts)
 
 
-def _stream_acf_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        Q_TS_ACF_ORACLE,
-    )
-
-    return Q_TS_ACF_ORACLE
-
-
-QUERIES["stream_acf_lags"] = QuerySpec(q_stream_acf_lags, _stream_acf_oracle())
+QUERIES["stream_acf_lags"] = QuerySpec(q_stream_acf_lags, Q_TS_ACF_ORACLE)
 
 
 def q_stream_ess_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,55 +340,22 @@ def q_stream_ess_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_weight_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ess_")
-    src, led = f"{base}/src", f"{base}/facts"
+    base = workspace("stream_ess_")
+    led = f"{base}/facts"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "lang", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         quality_weight_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "lang", "text"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(led)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            # ledger partials land as DECIMAL(38,0); the fold stays there
-            F.sum("sum_w").cast("decimal(38,0)").alias("sum_w"),
-            F.sum("sum_w2").cast("decimal(38,0)").alias("sum_w2"),
-        )
+    folded = fold_ledger(
+        spark.read.parquet(led), ["lang"], ["n_docs", "sum_w", "sum_w2"]
     )
     return ess_report_from_facts(folded)
 
 
-def _stream_ess_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _ess_oracle,
-    )
-
-    return _ess_oracle()
-
-
-QUERIES["stream_ess_report"] = QuerySpec(
-    q_stream_ess_report, _stream_ess_oracle()
-)
+QUERIES["stream_ess_report"] = QuerySpec(q_stream_ess_report, _ess_oracle())
 
 
 def q_stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -568,48 +371,21 @@ def q_stream_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         seasonal_decompose_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_seasonal_")
-    src, led = f"{base}/src", f"{base}/counts"
+    base = workspace("stream_seasonal_")
+    led = f"{base}/counts"
     ev = load(spark, sf_dir, "events")
-    ev.select("ts", "event_id").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         hourly_event_counts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("ts", "event_id"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("hour_id")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["hour_id"], ["cnt"])
     return seasonal_decompose_from_counts(counts)
 
 
-def _stream_seasonal_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        Q_TS_SEASONAL_DECOMPOSE_ORACLE,
-    )
-
-    return Q_TS_SEASONAL_DECOMPOSE_ORACLE
-
-
 QUERIES["stream_seasonal_decompose"] = QuerySpec(
-    q_stream_seasonal_decompose, _stream_seasonal_oracle()
+    q_stream_seasonal_decompose, Q_TS_SEASONAL_DECOMPOSE_ORACLE
 )
 
 
@@ -658,28 +434,9 @@ def _dsir_labeled_from_stream(
     from movie_genre_data_pipeline_spark.suite.sampling_queries import DSIR_BUCKETS
 
     b = DSIR_BUCKETS
-    base = tempfile.mkdtemp(prefix=prefix)
-    src = f"{base}/src"
+    base = workspace(prefix)
     led_doc, led_tf, led_bkt = f"{base}/docs", f"{base}/tf", f"{base}/buckets"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "lang", "source").repartition(_split(4)).write.parquet(
-        src
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
@@ -698,19 +455,10 @@ def _dsir_labeled_from_stream(
             spark, led_bkt, ["bucket"], ["raw_c", "tgt_c"], max_files=DSIR_GC_MAX_FILES
         )
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "lang", "source"), apply_batch, base)
 
-    buckets = (
-        spark.read.parquet(led_bkt)
-        .groupBy("bucket")
-        .agg(F.sum("raw_c").alias("raw_c"), F.sum("tgt_c").alias("tgt_c"))
-    )
-    tf = (
-        spark.read.parquet(led_tf)
-        .groupBy("doc_id", "bucket")
-        .agg(F.sum("tf").alias("tf"))
-    )
+    buckets = fold_ledger(spark.read.parquet(led_bkt), ["bucket"], ["raw_c", "tgt_c"])
+    tf = fold_ledger(spark.read.parquet(led_tf), ["doc_id", "bucket"], ["tf"])
     scored = dsir_fold_scores(tf, buckets, b).select("doc_id", "logw_micro")
     return (
         spark.read.parquet(led_doc)
@@ -738,13 +486,7 @@ def q_stream_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_auc_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import _auc_oracle
-
-    return _auc_oracle()
-
-
-QUERIES["stream_auc_report"] = QuerySpec(q_stream_auc_report, _stream_auc_oracle())
+QUERIES["stream_auc_report"] = QuerySpec(q_stream_auc_report, _auc_oracle())
 
 
 def q_stream_pr_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -762,17 +504,7 @@ def q_stream_pr_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_pr_auc_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _pr_auc_oracle,
-    )
-
-    return _pr_auc_oracle()
-
-
-QUERIES["stream_pr_auc_report"] = QuerySpec(
-    q_stream_pr_auc_report, _stream_pr_auc_oracle()
-)
+QUERIES["stream_pr_auc_report"] = QuerySpec(q_stream_pr_auc_report, _pr_auc_oracle())
 
 
 def q_stream_ks_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,13 +522,7 @@ def q_stream_ks_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_ks_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import _ks_oracle
-
-    return _ks_oracle()
-
-
-QUERIES["stream_ks_report"] = QuerySpec(q_stream_ks_report, _stream_ks_oracle())
+QUERIES["stream_ks_report"] = QuerySpec(q_stream_ks_report, _ks_oracle())
 
 
 def q_stream_auc_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -815,16 +541,8 @@ def q_stream_auc_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_auc_bootstrap_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _auc_bootstrap_oracle,
-    )
-
-    return _auc_bootstrap_oracle()
-
-
 QUERIES["stream_auc_bootstrap_ci"] = QuerySpec(
-    q_stream_auc_bootstrap_ci, _stream_auc_bootstrap_oracle()
+    q_stream_auc_bootstrap_ci, _auc_bootstrap_oracle()
 )
 
 
@@ -860,16 +578,8 @@ def q_stream_auc_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_auc_by_segment_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _auc_by_segment_oracle,
-    )
-
-    return _auc_by_segment_oracle()
-
-
 QUERIES["stream_auc_by_segment"] = QuerySpec(
-    q_stream_auc_by_segment, _stream_auc_by_segment_oracle()
+    q_stream_auc_by_segment, _auc_by_segment_oracle()
 )
 
 
@@ -890,56 +600,29 @@ def q_stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         dp_release_from_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_dp_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_dp_")
+    led = f"{base}/cells"
     c = load(spark, sf_dir, "customer")
-    # pin the staged types to the declared stream schema (the fixture's
-    # c_nationkey is int32; the file-source reader does not widen)
-    c.select(
-        F.col("c_custkey").cast("bigint"),
-        F.col("c_nationkey").cast("bigint"),
-        "c_mktsegment",
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_nationkey", T.LongType()),
-            T.StructField("c_mktsegment", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         dp_marginal_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    facts = (
-        spark.read.parquet(led)
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(F.sum("n").cast("bigint").alias("n"))
+    # stage bigint keys (the fixture's c_nationkey is int32)
+    run_twin(
+        c.select(
+            F.col("c_custkey").cast("bigint"),
+            F.col("c_nationkey").cast("bigint"),
+            "c_mktsegment",
+        ),
+        apply_batch,
+        base,
     )
+
+    facts = fold_ledger(spark.read.parquet(led), ["c_nationkey", "c_mktsegment"], ["n"])
     return dp_release_from_facts(facts)
 
 
-def _stream_dp_release_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.cdc_queries import (
-        Q_DP_RELEASE_ORACLE,
-    )
-
-    return Q_DP_RELEASE_ORACLE
-
-
-QUERIES["stream_dp_release"] = QuerySpec(
-    q_stream_dp_release, _stream_dp_release_oracle()
-)
+QUERIES["stream_dp_release"] = QuerySpec(q_stream_dp_release, Q_DP_RELEASE_ORACLE)
 
 
 def q_stream_auc_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -963,25 +646,9 @@ def q_stream_auc_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     b = DSIR_BUCKETS
-    base = tempfile.mkdtemp(prefix="stream_auc_cv_")
-    src = f"{base}/src"
+    base = workspace("stream_auc_cv_")
     led_doc, led_tf, led_cell = f"{base}/docs", f"{base}/tf", f"{base}/cells"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "lang").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
@@ -998,37 +665,19 @@ def q_stream_auc_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tgt_c"),
         ).write.mode("append").parquet(led_cell)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "lang"), apply_batch, base)
 
     docs = spark.read.parquet(led_doc).selectExpr(
         "doc_id", "y", f"{_CV_FOLD_SPARK} AS fold"
     )
-    cells = (
-        spark.read.parquet(led_cell)
-        .groupBy("fold", "bucket")
-        .agg(
-            F.sum("raw_c").cast("bigint").alias("raw_c"),
-            F.sum("tgt_c").cast("bigint").alias("tgt_c"),
-        )
+    cells = fold_ledger(
+        spark.read.parquet(led_cell), ["fold", "bucket"], ["raw_c", "tgt_c"]
     )
-    tf = (
-        spark.read.parquet(led_tf)
-        .groupBy("doc_id", "bucket")
-        .agg(F.sum("tf").alias("tf"))
-    )
+    tf = fold_ledger(spark.read.parquet(led_tf), ["doc_id", "bucket"], ["tf"])
     return auc_cv_from_parts(docs, cells, tf)
 
 
-def _stream_auc_cv_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _auc_cv_oracle,
-    )
-
-    return _auc_cv_oracle()
-
-
-QUERIES["stream_auc_cv"] = QuerySpec(q_stream_auc_cv, _stream_auc_cv_oracle())
+QUERIES["stream_auc_cv"] = QuerySpec(q_stream_auc_cv, _auc_cv_oracle())
 
 
 def q_stream_score_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1053,17 +702,7 @@ def q_stream_score_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return score_psi_from_scored(scored)
 
 
-def _stream_score_psi_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _score_psi_oracle,
-    )
-
-    return _score_psi_oracle()
-
-
-QUERIES["stream_score_psi"] = QuerySpec(
-    q_stream_score_psi, _stream_score_psi_oracle()
-)
+QUERIES["stream_score_psi"] = QuerySpec(q_stream_score_psi, _score_psi_oracle())
 
 
 def q_stream_ledger_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1073,7 +712,7 @@ def q_stream_ledger_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     real arrivals: a first availableNow pass appends per-batch hourly-count
     partials; streaming/ledger.compact_ledger folds the shard pile into ONE
     generation in place (stage-and-swap — readers never see a gap); a second
-    pass over the SAME checkpoint appends the remaining arrivals; the readout
+    pass appends the remaining arrivals to the same ledger; the readout
     folds compacted-prefix + fresh-suffix. Additivity makes the identity
     exact — fold(compact(prefix) ∪ suffix) == fold(prefix ∪ suffix) — and the
     published result IS that readout, so the shared batch oracle gates the
@@ -1086,56 +725,23 @@ def q_stream_ledger_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly_event_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ledgc_")
-    src, led, ckpt = f"{base}/src", f"{base}/counts", f"{base}/ckpt"
+    base = workspace("stream_ledgc_")
+    led = f"{base}/counts"
     ev = load(spark, sf_dir, "events").select("ts", "event_id")
 
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-
-    def run_pass() -> None:
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-        )
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            hourly_event_counts(batch_df).write.mode("append").parquet(led)
-
-        q = (
-            stream.writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        hourly_event_counts(batch_df).write.mode("append").parquet(led)
 
     # first half of the feed arrives (even event ids), sharded into
     # micro-batches ...
-    ev.filter(F.col("event_id") % 2 == 0).repartition(_split(2)).write.mode(
-        "append"
-    ).parquet(src)
-    run_pass()
+    run_twin(ev.filter(F.col("event_id") % 2 == 0), apply_batch, f"{base}/first", 2)
     # ... GC the shard pile mid-stream ...
     compact_ledger(spark, led, ["hour_id"], ["cnt"])
-    # ... then the rest arrives and the SAME checkpoint processes only the
-    # new files — appends land next to the compacted generation.
-    ev.filter(F.col("event_id") % 2 == 1).repartition(_split(2)).write.mode(
-        "append"
-    ).parquet(src)
-    run_pass()
+    # ... then the rest arrives, and its appends land next to the compacted
+    # generation.
+    run_twin(ev.filter(F.col("event_id") % 2 == 1), apply_batch, f"{base}/rest", 2)
 
-    return (
-        spark.read.parquet(led)
-        .groupBy("hour_id")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    return fold_ledger(spark.read.parquet(led), ["hour_id"], ["cnt"])
 
 
 def _stream_ledger_compact_oracle() -> str:
@@ -1168,55 +774,22 @@ def q_stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         bootstrap_replicate_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_boot_")
-    src, led = f"{base}/src", f"{base}/facts"
+    base = workspace("stream_boot_")
+    led = f"{base}/facts"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "lang", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         bootstrap_replicate_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "lang", "text"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(led)
-        .groupBy("lang", "r")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("sum_q").cast("decimal(38,0)").alias("sum_q"),
-            F.sum("sum_k").cast("bigint").alias("sum_k"),
-            F.sum("sum_kq").cast("decimal(38,0)").alias("sum_kq"),
-        )
+    folded = fold_ledger(
+        spark.read.parquet(led), ["lang", "r"], ["n_docs", "sum_q", "sum_k", "sum_kq"]
     )
     return bootstrap_ci_from_facts(folded)
 
 
-def _stream_boot_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _bootstrap_oracle,
-    )
-
-    return _bootstrap_oracle()
-
-
-QUERIES["stream_bootstrap_ci"] = QuerySpec(
-    q_stream_bootstrap_ci, _stream_boot_oracle()
-)
+QUERIES["stream_bootstrap_ci"] = QuerySpec(q_stream_bootstrap_ci, _bootstrap_oracle())
 
 
 def q_stream_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1236,17 +809,7 @@ def q_stream_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lift_gains_from_labeled(labeled)
 
 
-def _stream_lift_gains_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _lift_gains_oracle,
-    )
-
-    return _lift_gains_oracle()
-
-
-QUERIES["stream_lift_gains"] = QuerySpec(
-    q_stream_lift_gains, _stream_lift_gains_oracle()
-)
+QUERIES["stream_lift_gains"] = QuerySpec(q_stream_lift_gains, _lift_gains_oracle())
 
 
 def q_stream_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1261,26 +824,9 @@ def q_stream_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         gini_from_customer_cents,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_gini_")
-    src, led = f"{base}/src", f"{base}/cents"
+    base = workspace("stream_gini_")
+    led = f"{base}/cents"
     o = load(spark, sf_dir, "orders")
-    o.select(
-        F.col("o_custkey").cast("bigint"),
-        F.col("o_totalprice").cast("double"),
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.groupBy(F.col("o_custkey").alias("c")).agg(
@@ -1289,27 +835,21 @@ def q_stream_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents")
         ).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    per_cust = (
-        spark.read.parquet(led)
-        .groupBy("c")
-        .agg(F.sum("cents").cast("bigint").alias("cents"))
+    run_twin(
+        o.select(
+            F.col("o_custkey").cast("bigint"),
+            F.col("o_totalprice").cast("double"),
+        ),
+        apply_batch,
+        base,
     )
+
+    per_cust = fold_ledger(spark.read.parquet(led), ["c"], ["cents"])
     return gini_from_customer_cents(per_cust)
 
 
-def _stream_gini_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.relational_extra import (
-        Q_GINI_ORACLE,
-    )
-
-    return Q_GINI_ORACLE
-
-
 QUERIES["stream_gini_concentration"] = QuerySpec(
-    q_stream_gini_concentration, _stream_gini_oracle()
+    q_stream_gini_concentration, Q_GINI_ORACLE
 )
 
 
@@ -1326,48 +866,21 @@ def q_stream_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         mann_kendall_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_mk_")
-    src, led = f"{base}/src", f"{base}/counts"
+    base = workspace("stream_mk_")
+    led = f"{base}/counts"
     ev = load(spark, sf_dir, "events")
-    ev.select("ts", "event_id").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         daily_event_counts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("ts", "event_id"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("day_id")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["day_id"], ["cnt"])
     return mann_kendall_from_counts(counts)
 
 
-def _stream_mk_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        Q_TS_MANN_KENDALL_ORACLE,
-    )
-
-    return Q_TS_MANN_KENDALL_ORACLE
-
-
 QUERIES["stream_mann_kendall"] = QuerySpec(
-    q_stream_mann_kendall, _stream_mk_oracle()
+    q_stream_mann_kendall, Q_TS_MANN_KENDALL_ORACLE
 )
 
 
@@ -1382,24 +895,9 @@ def q_stream_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         chi2_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_chi2_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_chi2_")
+    led = f"{base}/cells"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "lang", "source").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.groupBy(
@@ -1408,27 +906,14 @@ def q_stream_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "lang", "source"), apply_batch, base)
 
-    cells = (
-        spark.read.parquet(led)
-        .groupBy("x", "y")
-        .agg(F.sum("n_xy").cast("bigint").alias("n_xy"))
-    )
+    cells = fold_ledger(spark.read.parquet(led), ["x", "y"], ["n_xy"])
     return chi2_from_cells(cells)
 
 
-def _stream_chi2_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        Q_FEAT_CHI2_ORACLE,
-    )
-
-    return Q_FEAT_CHI2_ORACLE
-
-
 QUERIES["stream_chi2_independence"] = QuerySpec(
-    q_stream_chi2_independence, _stream_chi2_oracle()
+    q_stream_chi2_independence, Q_FEAT_CHI2_ORACLE
 )
 
 
@@ -1444,24 +929,9 @@ def q_stream_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         neyman_from_moments,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_neyman_")
-    src, led = f"{base}/src", f"{base}/moments"
+    base = workspace("stream_neyman_")
+    led = f"{base}/moments"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "lang", "n_chars").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.groupBy("lang").agg(
@@ -1472,31 +942,14 @@ def q_stream_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "lang", "n_chars"), apply_batch, base)
 
-    facts = (
-        spark.read.parquet(led)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("sx").cast("decimal(38,0)").alias("sx"),
-            F.sum("sxx").cast("decimal(38,0)").alias("sxx"),
-        )
-    )
+    facts = fold_ledger(spark.read.parquet(led), ["lang"], ["n_docs", "sx", "sxx"])
     return neyman_from_moments(facts)
 
 
-def _stream_neyman_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        Q_NEYMAN_ORACLE,
-    )
-
-    return Q_NEYMAN_ORACLE
-
-
 QUERIES["stream_neyman_allocation"] = QuerySpec(
-    q_stream_neyman_allocation, _stream_neyman_oracle()
+    q_stream_neyman_allocation, Q_NEYMAN_ORACLE
 )
 
 
@@ -1512,44 +965,21 @@ def q_stream_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         hill_from_lengths,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_hill_")
-    src, led = f"{base}/src", f"{base}/lengths"
+    base = workspace("stream_hill_")
+    led = f"{base}/lengths"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "n_chars").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
             "doc_id", F.col("n_chars").cast("bigint").alias("x")
         ).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "n_chars"), apply_batch, base)
 
     return hill_from_lengths(spark.read.parquet(led))
 
 
-def _stream_hill_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import Q_HILL_ORACLE
-
-    return Q_HILL_ORACLE
-
-
-QUERIES["stream_hill_tail_index"] = QuerySpec(
-    q_stream_hill_tail_index, _stream_hill_oracle()
-)
+QUERIES["stream_hill_tail_index"] = QuerySpec(q_stream_hill_tail_index, Q_HILL_ORACLE)
 
 
 def q_stream_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1564,49 +994,22 @@ def q_stream_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         srm_check_from_users,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_srm_")
-    src, led = f"{base}/src", f"{base}/users"
+    base = workspace("stream_srm_")
+    led = f"{base}/users"
     ev = load(spark, sf_dir, "events")
-    ev.select("user_id", "event_id").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events")
         ).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("user_id", "event_id"), apply_batch, base)
 
-    per_user = (
-        spark.read.parquet(led)
-        .groupBy("user_id")
-        .agg(F.sum("n_events").cast("bigint").alias("n_events"))
-    )
+    per_user = fold_ledger(spark.read.parquet(led), ["user_id"], ["n_events"])
     return srm_check_from_users(per_user)
 
 
-def _stream_srm_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        _srm_oracle,
-    )
-
-    return _srm_oracle()
-
-
-QUERIES["stream_srm_check"] = QuerySpec(q_stream_srm_check, _stream_srm_oracle())
+QUERIES["stream_srm_check"] = QuerySpec(q_stream_srm_check, _srm_oracle())
 
 
 def q_stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1624,27 +1027,9 @@ def q_stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         cusum_from_base,
     )
 
-    base_dir = tempfile.mkdtemp(prefix="stream_cusum_")
-    src, led = f"{base_dir}/src", f"{base_dir}/facts"
+    base_dir = workspace("stream_cusum_")
+    led = f"{base_dir}/facts"
     ev = load(spark, sf_dir, "events")
-    ev.select("event_type", "ts", "event_id", "value").repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
@@ -1654,22 +1039,13 @@ def q_stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("bigint").alias("v"),
         ).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("event_type", "ts", "event_id", "value"), apply_batch, base_dir)
 
     return cusum_from_base(spark.read.parquet(led))
 
 
-def _stream_cusum_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        Q_TS_CUSUM_ORACLE,
-    )
-
-    return Q_TS_CUSUM_ORACLE
-
-
 QUERIES["stream_cusum_changepoint"] = QuerySpec(
-    q_stream_cusum_changepoint, _stream_cusum_oracle()
+    q_stream_cusum_changepoint, Q_TS_CUSUM_ORACLE
 )
 
 
@@ -1685,52 +1061,22 @@ def q_stream_readability_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
         ari_report_from_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ari_")
-    src, led = f"{base}/src", f"{base}/moments"
+    base = workspace("stream_ari_")
+    led = f"{base}/moments"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "lang", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         ari_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "lang", "text"), apply_batch, base)
 
-    facts = (
-        spark.read.parquet(led)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("sum_ari").cast("decimal(38,0)").alias("sum_ari"),
-            F.sum("n_hard").cast("bigint").alias("n_hard"),
-        )
+    facts = fold_ledger(
+        spark.read.parquet(led), ["lang"], ["n_docs", "sum_ari", "n_hard"]
     )
     return ari_report_from_facts(facts)
 
 
-def _stream_ari_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import Q_ARI_ORACLE
-
-    return Q_ARI_ORACLE
-
-
-QUERIES["stream_readability_ari"] = QuerySpec(
-    q_stream_readability_ari, _stream_ari_oracle()
-)
+QUERIES["stream_readability_ari"] = QuerySpec(q_stream_readability_ari, Q_ARI_ORACLE)
 
 
 def q_stream_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1747,23 +1093,9 @@ def q_stream_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         byte_histogram_report,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_bytehist_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_bytehist_")
+    led = f"{base}/cells"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         media = batch_df.select(
@@ -1772,27 +1104,14 @@ def q_stream_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         byte_histogram(media).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("byte_value")
-        .agg(F.sum("n_occurrences").cast("bigint").alias("n_occurrences"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["byte_value"], ["n_occurrences"])
     return byte_histogram_report(counts)
 
 
-def _stream_bytehist_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.multimodal_queries import (
-        Q_MEDIA_BYTE_HISTOGRAM_ORACLE,
-    )
-
-    return Q_MEDIA_BYTE_HISTOGRAM_ORACLE
-
-
 QUERIES["stream_byte_histogram"] = QuerySpec(
-    q_stream_byte_histogram, _stream_bytehist_oracle()
+    q_stream_byte_histogram, Q_MEDIA_BYTE_HISTOGRAM_ORACLE
 )
 
 
@@ -1814,28 +1133,9 @@ def q_stream_auc_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     b = DSIR_BUCKETS
-    base = tempfile.mkdtemp(prefix="stream_ablation_")
-    src = f"{base}/src"
+    base = workspace("stream_ablation_")
     led_doc, led_tf, led_cells = f"{base}/docs", f"{base}/tf", f"{base}/cells"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "lang", "source").repartition(_split(4)).write.parquet(
-        src
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.selectExpr(
@@ -1854,36 +1154,18 @@ def q_stream_auc_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tgt_c"),
         ).write.mode("append").parquet(led_cells)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "lang", "source"), apply_batch, base)
 
     docs = spark.read.parquet(led_doc)
-    cells = (
-        spark.read.parquet(led_cells)
-        .groupBy("source", "bucket")
-        .agg(
-            F.sum("raw_c").cast("bigint").alias("raw_c"),
-            F.sum("tgt_c").cast("bigint").alias("tgt_c"),
-        )
+    cells = fold_ledger(
+        spark.read.parquet(led_cells), ["source", "bucket"], ["raw_c", "tgt_c"]
     )
-    tf = (
-        spark.read.parquet(led_tf)
-        .groupBy("doc_id", "bucket")
-        .agg(F.sum("tf").alias("tf"))
-    )
+    tf = fold_ledger(spark.read.parquet(led_tf), ["doc_id", "bucket"], ["tf"])
     return auc_source_ablation_from_parts(docs, cells, tf)
 
 
-def _stream_ablation_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _source_ablation_oracle,
-    )
-
-    return _source_ablation_oracle()
-
-
 QUERIES["stream_auc_source_ablation"] = QuerySpec(
-    q_stream_auc_source_ablation, _stream_ablation_oracle()
+    q_stream_auc_source_ablation, _source_ablation_oracle()
 )
 
 
@@ -1899,56 +1181,27 @@ def q_stream_drift_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         drift_screen_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_drift_scr_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_drift_scr_")
+    led = f"{base}/cells"
     o = load(spark, sf_dir, "orders")
-    o.select(
-        "o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate", "o_totalprice"
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderpriority", T.StringType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         drift_cell_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    cells = (
-        spark.read.parquet(led)
-        .groupBy("feature", "x")
-        .agg(
-            F.sum("n_pos").cast("bigint").alias("n_pos"),
-            F.sum("n_neg").cast("bigint").alias("n_neg"),
-        )
+    run_twin(
+        o.select(
+            "o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate", "o_totalprice"
+        ),
+        apply_batch,
+        base,
     )
+
+    cells = fold_ledger(spark.read.parquet(led), ["feature", "x"], ["n_pos", "n_neg"])
     return drift_screen_from_cells(cells)
 
 
-def _stream_drift_screen_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _drift_screen_oracle,
-    )
-
-    return _drift_screen_oracle()
-
-
 QUERIES["stream_drift_screen"] = QuerySpec(
-    q_stream_drift_screen, _stream_drift_screen_oracle()
+    q_stream_drift_screen, _drift_screen_oracle()
 )
 
 
@@ -1965,51 +1218,32 @@ def q_stream_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame
         assortativity_from_edges,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_assort_")
-    src, led = f"{base}/src", f"{base}/edges"
+    base = workspace("stream_assort_")
+    led = f"{base}/edges"
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
-    li.select("l_orderkey", "l_suppkey").join(
-        o.select("o_orderkey", "o_custkey"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    ).select(
-        F.col("l_suppkey").cast("bigint").alias("s"),
-        F.col("o_custkey").cast("bigint").alias("c"),
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("s", T.LongType()),
-            T.StructField("c", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select("s", "c").distinct().write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(
+        li.select("l_orderkey", "l_suppkey").join(
+            o.select("o_orderkey", "o_custkey"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        ).select(
+            F.col("l_suppkey").cast("bigint").alias("s"),
+            F.col("o_custkey").cast("bigint").alias("c"),
+        ),
+        apply_batch,
+        base,
+    )
 
     edges = spark.read.parquet(led).distinct()
     return assortativity_from_edges(edges)
 
 
-def _stream_assort_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.graph_queries import (
-        _assortativity_oracle,
-    )
-
-    return _assortativity_oracle()
-
-
 QUERIES["stream_degree_assortativity"] = QuerySpec(
-    q_stream_degree_assortativity, _stream_assort_oracle()
+    q_stream_degree_assortativity, _assortativity_oracle()
 )
 
 
@@ -2026,47 +1260,21 @@ def q_stream_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
         pps_report_from_sizes,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_pps_")
-    src, led = f"{base}/src", f"{base}/sizes"
+    base = workspace("stream_pps_")
+    led = f"{base}/sizes"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "lang", "n_chars").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
             "doc_id", "lang", F.col("n_chars").cast("bigint").alias("sz")
         ).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "lang", "n_chars"), apply_batch, base)
 
     return pps_report_from_sizes(spark.read.parquet(led))
 
 
-def _stream_pps_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        Q_PPS_ORACLE,
-    )
-
-    return Q_PPS_ORACLE
-
-
-QUERIES["stream_pps_systematic"] = QuerySpec(
-    q_stream_pps_systematic, _stream_pps_oracle()
-)
+QUERIES["stream_pps_systematic"] = QuerySpec(q_stream_pps_systematic, Q_PPS_ORACLE)
 
 
 def q_stream_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2081,51 +1289,21 @@ def q_stream_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         freshness_report_from_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_fresh_")
-    src, led = f"{base}/src", f"{base}/facts"
+    base = workspace("stream_fresh_")
+    led = f"{base}/facts"
     ev = load(spark, sf_dir, "events")
-    ev.select("event_type", "ts", "event_id").repartition(_split(4)).write.parquet(
-        src
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         freshness_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("event_type", "ts", "event_id"), apply_batch, base)
 
-    facts = (
-        spark.read.parquet(led)
-        .groupBy("event_type")
-        .agg(F.max("last_us").cast("bigint").alias("last_us"))
-    )
+    facts = fold_ledger(spark.read.parquet(led), ["event_type"], ["last_us"], "max")
     return freshness_report_from_facts(facts)
 
 
-def _stream_freshness_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
-        Q_DQ_FRESHNESS_ORACLE,
-    )
-
-    return Q_DQ_FRESHNESS_ORACLE
-
-
 QUERIES["stream_freshness_sla"] = QuerySpec(
-    q_stream_freshness_sla, _stream_freshness_oracle()
+    q_stream_freshness_sla, Q_DQ_FRESHNESS_ORACLE
 )
 
 
@@ -2146,29 +1324,14 @@ def q_stream_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         km_user_spans,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_km_")
-    src, led = f"{base}/src", f"{base}/spans"
+    base = workspace("stream_km_")
+    led = f"{base}/spans"
     ev = load(spark, sf_dir, "events")
-    ev.select("ts", "user_id").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         km_user_spans(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("ts", "user_id"), apply_batch, base)
 
     spans = (
         spark.read.parquet(led)
@@ -2181,13 +1344,7 @@ def q_stream_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return km_report_from_spans(spans)
 
 
-def _stream_km_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import Q_KM_ORACLE
-
-    return Q_KM_ORACLE
-
-
-QUERIES["stream_kaplan_meier"] = QuerySpec(q_stream_kaplan_meier, _stream_km_oracle())
+QUERIES["stream_kaplan_meier"] = QuerySpec(q_stream_kaplan_meier, Q_KM_ORACLE)
 
 
 # -- continuously-maintained Yule's K richness profile (r14) -------------------------------
@@ -2205,46 +1362,20 @@ def q_stream_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         yule_report_from_postings,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_yule_")
-    src, led = f"{base}/src", f"{base}/postings"
+    base = workspace("stream_yule_")
+    led = f"{base}/postings"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "lang", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         yule_postings(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "lang", "text"), apply_batch, base)
 
-    postings = (
-        spark.read.parquet(led)
-        .groupBy("lang", "term")
-        .agg(F.sum("tf").cast("bigint").alias("tf"))
-    )
+    postings = fold_ledger(spark.read.parquet(led), ["lang", "term"], ["tf"])
     return yule_report_from_postings(postings)
 
 
-def _stream_yule_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import Q_YULE_ORACLE
-
-    return Q_YULE_ORACLE
-
-
-QUERIES["stream_yule_k"] = QuerySpec(q_stream_yule_k, _stream_yule_oracle())
+QUERIES["stream_yule_k"] = QuerySpec(q_stream_yule_k, Q_YULE_ORACLE)
 
 
 # -- continuously-maintained Mahalanobis screen (r14) --------------------------------------
@@ -2263,39 +1394,25 @@ def q_stream_mahalanobis_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         maha_report_from_parts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_maha_")
-    src = f"{base}/src"
+    base = workspace("stream_maha_")
     led_dims, led_mom = f"{base}/dims", f"{base}/moments"
     o = load(spark, sf_dir, "orders")
-    # the fixture's o_orderdate is a physical INT96 timestamp — pin DATE at
-    # the staging write so the declared stream schema matches the footer
-    o.select(
-        "o_orderkey",
-        "o_totalprice",
-        F.to_date("o_orderdate").alias("o_orderdate"),
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.DateType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         dims = maha_dims(batch_df)
         dims.write.mode("append").parquet(led_dims)
         maha_moments(dims).write.mode("append").parquet(led_mom)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    # the fixture's o_orderdate is a physical INT96 timestamp — stage DATE
+    run_twin(
+        o.select(
+            "o_orderkey",
+            "o_totalprice",
+            F.to_date("o_orderdate").alias("o_orderdate"),
+        ),
+        apply_batch,
+        base,
+    )
 
     moments = spark.read.parquet(led_mom).agg(
         F.sum("n").cast("bigint").alias("n"),
@@ -2308,14 +1425,8 @@ def q_stream_mahalanobis_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return maha_report_from_parts(spark.read.parquet(led_dims), moments)
 
 
-def _stream_maha_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import Q_MAHA_ORACLE
-
-    return Q_MAHA_ORACLE
-
-
 QUERIES["stream_mahalanobis_screen"] = QuerySpec(
-    q_stream_mahalanobis_screen, _stream_maha_oracle()
+    q_stream_mahalanobis_screen, Q_MAHA_ORACLE
 )
 
 
@@ -2332,49 +1443,19 @@ def q_stream_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         theil_report_from_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_theil_")
-    src, led = f"{base}/src", f"{base}/facts"
+    base = workspace("stream_theil_")
+    led = f"{base}/facts"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "source", "n_chars").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         theil_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "source", "n_chars"), apply_batch, base)
 
-    facts = (
-        spark.read.parquet(led)
-        .groupBy("source")
-        .agg(
-            F.sum("n_g").cast("bigint").alias("n_g"),
-            F.sum("x_g").cast("bigint").alias("x_g"),
-            F.sum("l_g").cast("decimal(38,0)").alias("l_g"),
-        )
-    )
+    facts = fold_ledger(spark.read.parquet(led), ["source"], ["n_g", "x_g", "l_g"])
     return theil_report_from_facts(facts)
 
 
-def _stream_theil_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.relational_extra import Q_THEIL_ORACLE
-
-    return Q_THEIL_ORACLE
-
-
 QUERIES["stream_theil_decomposition"] = QuerySpec(
-    q_stream_theil_decomposition, _stream_theil_oracle()
+    q_stream_theil_decomposition, Q_THEIL_ORACLE
 )

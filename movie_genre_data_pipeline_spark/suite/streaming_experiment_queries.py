@@ -14,14 +14,20 @@ grows with history.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from movie_genre_data_pipeline_spark.streaming.ledger import fold_ledger
 from movie_genre_data_pipeline_spark.suite import QuerySpec
-from movie_genre_data_pipeline_spark.suite.streaming_queries import _split
+from movie_genre_data_pipeline_spark.suite._twin import run_twin, workspace
+from movie_genre_data_pipeline_spark.suite.experiment_queries import (
+    Q_BENFORD_ORACLE,
+    Q_CUPED_ORACLE,
+    Q_KAPPA_ORACLE,
+    Q_WILSON_ORACLE,
+    _raking_oracle,
+)
+from movie_genre_data_pipeline_spark.suite.timeseries_queries import Q_TS_LJUNG_ORACLE
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -41,56 +47,29 @@ def q_stream_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         cuped_units_from_orders,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_cuped_")
-    src, led = f"{base}/src", f"{base}/units"
+    base = workspace("stream_cuped_")
+    led = f"{base}/units"
     o = load(spark, sf_dir, "orders")
-    o.select(
-        F.col("o_custkey").cast("bigint"),
-        F.col("o_orderdate").cast("timestamp"),
-        F.col("o_totalprice").cast("double"),
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         cuped_units_from_orders(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    units = (
-        spark.read.parquet(led)
-        .groupBy("c")
-        .agg(
-            F.sum("pre_cents").cast("bigint").alias("pre_cents"),
-            F.sum("post_cents").cast("bigint").alias("post_cents"),
-        )
+    run_twin(
+        o.select(
+            F.col("o_custkey").cast("bigint"),
+            F.col("o_orderdate").cast("timestamp"),
+            F.col("o_totalprice").cast("double"),
+        ),
+        apply_batch,
+        base,
     )
+
+    units = fold_ledger(spark.read.parquet(led), ["c"], ["pre_cents", "post_cents"])
     return cuped_report_from_units(units)
 
 
-def _stream_cuped_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.experiment_queries import (
-        Q_CUPED_ORACLE,
-    )
-
-    return Q_CUPED_ORACLE
-
-
 QUERIES["stream_cuped_adjustment"] = QuerySpec(
-    q_stream_cuped_adjustment, _stream_cuped_oracle()
+    q_stream_cuped_adjustment, Q_CUPED_ORACLE
 )
 
 
@@ -105,49 +84,20 @@ def q_stream_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         kappa_report_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_kappa_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_kappa_")
+    led = f"{base}/cells"
     d = load(spark, sf_dir, "documents")
-    d.select("text", "n_chars").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         kappa_cells_from_documents(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("text", "n_chars"), apply_batch, base)
 
-    cells = (
-        spark.read.parquet(led)
-        .groupBy("flag_a", "flag_b")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    cells = fold_ledger(spark.read.parquet(led), ["flag_a", "flag_b"], ["cnt"])
     return kappa_report_from_cells(cells)
 
 
-def _stream_kappa_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.experiment_queries import (
-        Q_KAPPA_ORACLE,
-    )
-
-    return Q_KAPPA_ORACLE
-
-
-QUERIES["stream_cohens_kappa"] = QuerySpec(
-    q_stream_cohens_kappa, _stream_kappa_oracle()
-)
+QUERIES["stream_cohens_kappa"] = QuerySpec(q_stream_cohens_kappa, Q_KAPPA_ORACLE)
 
 
 def q_stream_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,46 +112,20 @@ def q_stream_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         benford_report_from_digits,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_benford_")
-    src, led = f"{base}/src", f"{base}/digits"
+    base = workspace("stream_benford_")
+    led = f"{base}/digits"
     o = load(spark, sf_dir, "orders")
-    o.select(F.col("o_totalprice").cast("double")).repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType([T.StructField("o_totalprice", T.DoubleType())])
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         benford_digits_from_orders(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(o.select(F.col("o_totalprice").cast("double")), apply_batch, base)
 
-    digits = (
-        spark.read.parquet(led)
-        .groupBy("digit")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    digits = fold_ledger(spark.read.parquet(led), ["digit"], ["cnt"])
     return benford_report_from_digits(digits)
 
 
-def _stream_benford_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.experiment_queries import (
-        Q_BENFORD_ORACLE,
-    )
-
-    return Q_BENFORD_ORACLE
-
-
-QUERIES["stream_benford_screen"] = QuerySpec(
-    q_stream_benford_screen, _stream_benford_oracle()
-)
+QUERIES["stream_benford_screen"] = QuerySpec(q_stream_benford_screen, Q_BENFORD_ORACLE)
 
 
 def q_stream_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,47 +142,20 @@ def q_stream_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         ljung_box_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ljung_")
-    src, led = f"{base}/src", f"{base}/counts"
+    base = workspace("stream_ljung_")
+    led = f"{base}/counts"
     ev = load(spark, sf_dir, "events")
-    ev.select("ts", "event_id").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         hourly_event_counts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("ts", "event_id"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("hour_id")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["hour_id"], ["cnt"])
     return ljung_box_from_counts(counts)
 
 
-def _stream_ljung_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        Q_TS_LJUNG_ORACLE,
-    )
-
-    return Q_TS_LJUNG_ORACLE
-
-
-QUERIES["stream_ljung_box"] = QuerySpec(q_stream_ljung_box, _stream_ljung_oracle())
+QUERIES["stream_ljung_box"] = QuerySpec(q_stream_ljung_box, Q_TS_LJUNG_ORACLE)
 
 
 def q_stream_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,50 +170,20 @@ def q_stream_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         wilson_report_from_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_wilson_")
-    src, led = f"{base}/src", f"{base}/facts"
+    base = workspace("stream_wilson_")
+    led = f"{base}/facts"
     d = load(spark, sf_dir, "documents")
-    d.select("lang", "n_chars").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         wilson_facts_from_documents(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("lang", "n_chars"), apply_batch, base)
 
-    facts = (
-        spark.read.parquet(led)
-        .groupBy("lang")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("s").cast("bigint").alias("s"),
-        )
-    )
+    facts = fold_ledger(spark.read.parquet(led), ["lang"], ["n", "s"])
     return wilson_report_from_facts(facts)
 
 
-def _stream_wilson_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.experiment_queries import (
-        Q_WILSON_ORACLE,
-    )
-
-    return Q_WILSON_ORACLE
-
-
-QUERIES["stream_wilson_ci"] = QuerySpec(q_stream_wilson_ci, _stream_wilson_oracle())
+QUERIES["stream_wilson_ci"] = QuerySpec(q_stream_wilson_ci, Q_WILSON_ORACLE)
 
 
 def q_stream_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,44 +200,17 @@ def q_stream_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         raking_report_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_raking_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_raking_")
+    led = f"{base}/cells"
     d = load(spark, sf_dir, "documents")
-    d.select("lang", "source").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         raking_cells_from_documents(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("lang", "source"), apply_batch, base)
 
-    cells = (
-        spark.read.parquet(led)
-        .groupBy("lang", "source")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
+    cells = fold_ledger(spark.read.parquet(led), ["lang", "source"], ["n"])
     return raking_report_from_cells(cells)
 
 
-def _stream_raking_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.experiment_queries import (
-        _raking_oracle,
-    )
-
-    return _raking_oracle()
-
-
-QUERIES["stream_raking_ipf"] = QuerySpec(q_stream_raking_ipf, _stream_raking_oracle())
+QUERIES["stream_raking_ipf"] = QuerySpec(q_stream_raking_ipf, _raking_oracle())

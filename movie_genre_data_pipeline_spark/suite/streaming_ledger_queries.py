@@ -1,22 +1,54 @@
 """Continuous model-fitting & text-ledger streaming twins (r7-r10
-wave), moved VERBATIM out of streaming_queries.py (r15, VERDICT r14 #6
--- the 5.8k-line module split). Streaming OLS/ridge Gram ledgers, EWMA,
-gold-mart IVM, importance weights, duplicate spans, trainset funnel,
-PCA moments, surprisal, BM25 postings, AMS, Heaps, packing, RRF, Zipf,
-shard balance, retention policy, k-anonymity, entropy, and pHash.
+wave), split out of streaming_queries.py (r15, VERDICT r14 #6). Each
+twin streams its source through suite/_twin.run_twin. Streaming
+OLS/ridge Gram ledgers, EWMA, gold-mart IVM, importance weights,
+duplicate spans, trainset funnel, PCA moments, surprisal, BM25 postings,
+AMS, Heaps, packing, RRF, Zipf, shard balance, retention policy,
+k-anonymity, entropy, and pHash.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from movie_genre_data_pipeline_spark.streaming.ledger import fold_ledger
 from movie_genre_data_pipeline_spark.suite import QuerySpec
-from movie_genre_data_pipeline_spark.suite.streaming_queries import (  # noqa: E501
-    _split,
+from movie_genre_data_pipeline_spark.suite._twin import run_twin, workspace
+from movie_genre_data_pipeline_spark.suite.cdc_queries import Q_K_ANONYMITY_ORACLE
+from movie_genre_data_pipeline_spark.suite.curation_queries import (
+    _surprisal_filter_oracle,
+)
+from movie_genre_data_pipeline_spark.suite.dedup_queries import _duplicate_spans_oracle
+from movie_genre_data_pipeline_spark.suite.multimodal_queries import (
+    Q_MEDIA_SHARD_BALANCE_ORACLE,
+    _phash_oracle,
+)
+from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
+    Q_GOLD_LANGUAGE_REVENUE_IVM_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.sampling_queries import (
+    Q_FEAT_MUTUAL_INFO_ORACLE,
+    Q_SAMPLE_PACK_EFFICIENCY_ORACLE,
+    _feat_ols_oracle,
+    _feat_ridge_oracle,
+    _importance_select_oracle,
+    _pca_oracle,
+    _trainset_funnel_oracle,
+)
+from movie_genre_data_pipeline_spark.suite.sketch_queries import Q_AMS_JOIN_SIZE_ORACLE
+from movie_genre_data_pipeline_spark.suite.text_queries import (
+    Q_BIGRAM_SURPRISAL_ORACLE,
+    Q_BM25_TOPK_ORACLE,
+    Q_HEAPS_VOCAB_GROWTH_ORACLE,
+    Q_JS_DIVERGENCE_ORACLE,
+    Q_RRF_FUSION_ORACLE,
+    Q_UNIGRAM_ENTROPY_ORACLE,
+    Q_ZIPF_FIT_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
+    Q_RETENTION_POLICY_ORACLE,
+    Q_TS_EWMA_ORACLE,
 )
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -36,69 +68,40 @@ def q_stream_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from movie_genre_data_pipeline_spark.suite import load
 
-    base = tempfile.mkdtemp(prefix="stream_ols_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_ols_")
+    ledger = f"{base}/ledger"
     o = load(spark, sf_dir, "orders")
-    o.select(
-        (F.col("o_orderkey") % 180 + 60).cast("bigint").alias("x1"),
-        (F.col("o_custkey") % 25).cast("bigint").alias("x2"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
-    ).repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("x1", T.LongType()),
-            T.StructField("x2", T.LongType()),
-            T.StructField("y", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         ols_gram(batch_df, "x1", "x2", "y").write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(
+        o.select(
+            (F.col("o_orderkey") % 180 + 60).cast("bigint").alias("x1"),
+            (F.col("o_custkey") % 25).cast("bigint").alias("x2"),
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
+        ),
+        apply_batch,
+        base,
+    )
 
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy()
-        .agg(
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            *[
-                F.sum(c).cast("bigint").alias(c)
-                for c in ("sx1", "sx2", "sy", "s11", "s12", "s22", "s1y", "s2y")
-            ],
-        )
+    folded = fold_ledger(
+        spark.read.parquet(ledger),
+        [],
+        ["n_rows", "sx1", "sx2", "sy", "s11", "s12", "s22", "s1y", "s2y"],
     )
     return ols_solve_micro(folded)
 
 
-def _stream_ols_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _feat_ols_oracle,
-    )
-
-    return _feat_ols_oracle()
-
-
-QUERIES["stream_ols_normal_eq"] = QuerySpec(
-    q_stream_ols_normal_eq, _stream_ols_oracle()
-)
+QUERIES["stream_ols_normal_eq"] = QuerySpec(q_stream_ols_normal_eq, _feat_ols_oracle())
 
 
 def q_stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous exponential smoothing — the first RECENCY-WEIGHTED member
     of the streaming-ledger family, and the one whose fold is inherently
     ORDER-SENSITIVE (unlike the additive/presence ledgers): batches must
-    arrive in time order, which the fixture guarantees by writing one file
-    per time-range bucket with forced ascending mtimes (FileStreamSource
-    processes availableNow files in modification-time order) —
+    arrive in time order, which the twin guarantees by streaming one
+    time-range bucket per single-batch run, in order —
     "in-order delivery" is the contract a log-compacted topic or
     time-partitioned landing zone provides in production. State per series
     is BOUNDED: the (EWMA_LAGS−1)-row value tail (the only history the next
@@ -116,9 +119,7 @@ def q_stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         EWMA_LAGS,
     )
 
-    base_dir = tempfile.mkdtemp(prefix="stream_ts_ewma_")
-    src = f"{base_dir}/src"
-    os.makedirs(src)
+    base_dir = workspace("stream_ts_ewma_")
     ev = load(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
@@ -126,28 +127,17 @@ def q_stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
     )
-    # one file per time-range bucket, mtimes forced ascending = in-order feed
+    # event_id is assigned in ts order in the fixture tables, so id-range
+    # buckets are time-range buckets
     cuts = base.selectExpr(
         "percentile_approx(event_id, 0.34) AS c1",
         "percentile_approx(event_id, 0.67) AS c2",
     ).collect()[0]
-    for i, cond in enumerate(
-        (
-            F.col("event_id") <= cuts["c1"],
-            (F.col("event_id") > cuts["c1"]) & (F.col("event_id") <= cuts["c2"]),
-            F.col("event_id") > cuts["c2"],
-        )
-    ):
-        # event_id is assigned in ts order in the fixture tables, so id-range
-        # buckets are time-range buckets; coalesce(1) = one file per batch
-        base.filter(cond).coalesce(1).write.parquet(f"{base_dir}/b{i}")
-        part = next(
-            p for p in os.listdir(f"{base_dir}/b{i}") if p.endswith(".parquet")
-        )
-        dst = f"{src}/bucket_{i}.parquet"
-        os.rename(f"{base_dir}/b{i}/{part}", dst)
-        os.utime(dst, (1000 * (i + 1), 1000 * (i + 1)))
-    feed_schema = spark.read.parquet(src).schema
+    buckets = (
+        F.col("event_id") <= cuts["c1"],
+        (F.col("event_id") > cuts["c1"]) & (F.col("event_id") <= cuts["c2"]),
+        F.col("event_id") > cuts["c2"],
+    )
 
     gen = {"n": 0}
     empty_tail = spark.createDataFrame(
@@ -160,13 +150,6 @@ def q_stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     empty_tail.write.parquet(f"{base_dir}/tail_0")
     empty_digest.write.parquet(f"{base_dir}/digest_0")
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(feed_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         tail = spark.read.parquet(f"{base_dir}/tail_{gen['n']}")
@@ -229,22 +212,15 @@ def q_stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_generations(base_dir, "tail", keep=2)
         vacuum_generations(base_dir, "digest", keep=2)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    # one single-batch run per time-range bucket, in time order
+    for i, cond in enumerate(buckets):
+        run_twin(base.filter(cond), apply_batch, f"{base_dir}/feed_{i}", 1)
     return spark.read.parquet(f"{base_dir}/digest_{gen['n']}").select(
         "event_type", "n_points", "ewma_min_fp", "ewma_max_fp", "ewma_last_fp"
     )
 
 
-def _stream_ts_ewma_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        Q_TS_EWMA_ORACLE,
-    )
-
-    return Q_TS_EWMA_ORACLE
-
-
-QUERIES["stream_ts_ewma"] = QuerySpec(q_stream_ts_ewma, _stream_ts_ewma_oracle())
+QUERIES["stream_ts_ewma"] = QuerySpec(q_stream_ts_ewma, Q_TS_EWMA_ORACLE)
 
 
 def q_stream_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,45 +240,27 @@ def q_stream_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         RIDGE_LAMBDAS,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ridge_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_ridge_")
+    ledger = f"{base}/ledger"
     o = load(spark, sf_dir, "orders")
-    o.select(
-        (F.col("o_orderkey") % 180 + 60).cast("bigint").alias("x1"),
-        (F.col("o_custkey") % 25).cast("bigint").alias("x2"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
-    ).repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("x1", T.LongType()),
-            T.StructField("x2", T.LongType()),
-            T.StructField("y", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         ols_gram(batch_df, "x1", "x2", "y").write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(
+        o.select(
+            (F.col("o_orderkey") % 180 + 60).cast("bigint").alias("x1"),
+            (F.col("o_custkey") % 25).cast("bigint").alias("x2"),
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
+        ),
+        apply_batch,
+        base,
+    )
 
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy()
-        .agg(
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            *[
-                F.sum(c).cast("bigint").alias(c)
-                for c in ("sx1", "sx2", "sy", "s11", "s12", "s22", "s1y", "s2y")
-            ],
-        )
+    folded = fold_ledger(
+        spark.read.parquet(ledger),
+        [],
+        ["n_rows", "sx1", "sx2", "sy", "s11", "s12", "s22", "s1y", "s2y"],
     )
     lam = folded.select(
         F.explode(
@@ -325,15 +283,7 @@ def q_stream_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ols_solve_micro(penalized, group_cols=("lam",))
 
 
-def _stream_ridge_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _feat_ridge_oracle,
-    )
-
-    return _feat_ridge_oracle()
-
-
-QUERIES["stream_ridge_path"] = QuerySpec(q_stream_ridge_path, _stream_ridge_oracle())
+QUERIES["stream_ridge_path"] = QuerySpec(q_stream_ridge_path, _feat_ridge_oracle())
 
 
 # -- continuous refresh of the second gold mart (r8) -----------------------------------
@@ -357,8 +307,7 @@ def q_stream_gold_language_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         _gold_language_movies,
     )
 
-    base_dir = tempfile.mkdtemp(prefix="stream_gold_lang_ivm_")
-    src = f"{base_dir}/src"
+    base_dir = workspace("stream_gold_lang_ivm_")
     base = _gold_language_movies(spark, sf_dir)
     dim_df = _gold_language_dim(spark, sf_dir)
     snap_a = base.filter(F.col("Id") % 101 != 0)
@@ -384,21 +333,12 @@ def q_stream_gold_language_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = snapshot_diff(
         snap_a, snap_b, ["Id"], ["Revenue", "Budget", "RunTime", "Language_Id"]
     ).filter(F.col("change_type") != "unchanged")
-    changes.repartition(_split(3)).write.parquet(src)
-    change_schema = spark.read.parquet(src).schema
 
     gen = {"n": 0}
     build_language_revenue_state(snap_a, dim_df).write.parquet(
         f"{base_dir}/state_0"
     )
     dim = dim_df.localCheckpoint(eager=True)  # reused every micro-batch
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(change_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         from movie_genre_data_pipeline_spark.fsutil import vacuum_generations
@@ -409,22 +349,13 @@ def q_stream_gold_language_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.write.parquet(f"{base_dir}/state_{gen['n']}")
         vacuum_generations(base_dir, "state", keep=2)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(changes, apply_batch, base_dir, 3)
     state = spark.read.parquet(f"{base_dir}/state_{gen['n']}")
     return finalize_language_revenue(state)
 
 
-def _stream_gold_language_ivm_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
-        Q_GOLD_LANGUAGE_REVENUE_IVM_ORACLE,
-    )
-
-    return Q_GOLD_LANGUAGE_REVENUE_IVM_ORACLE
-
-
 QUERIES["stream_gold_language_ivm"] = QuerySpec(
-    q_stream_gold_language_ivm, _stream_gold_language_ivm_oracle()
+    q_stream_gold_language_ivm, Q_GOLD_LANGUAGE_REVENUE_IVM_ORACLE
 )
 
 
@@ -449,28 +380,9 @@ def q_stream_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.suite.sampling_queries import DSIR_BUCKETS
 
     b = DSIR_BUCKETS
-    base = tempfile.mkdtemp(prefix="stream_dsir_")
-    src = f"{base}/src"
+    base = workspace("stream_dsir_")
     led_doc, led_tf, led_bkt = f"{base}/docs", f"{base}/tf", f"{base}/buckets"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "lang", "source").repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select("doc_id", "source").write.mode("append").parquet(led_doc)
@@ -480,19 +392,10 @@ def q_stream_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_postings(terms).write.mode("append").parquet(led_tf)
         dsir_bucket_model(terms).write.mode("append").parquet(led_bkt)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "lang", "source"), apply_batch, base)
 
-    buckets = (
-        spark.read.parquet(led_bkt)
-        .groupBy("bucket")
-        .agg(F.sum("raw_c").alias("raw_c"), F.sum("tgt_c").alias("tgt_c"))
-    )
-    tf = (
-        spark.read.parquet(led_tf)
-        .groupBy("doc_id", "bucket")
-        .agg(F.sum("tf").alias("tf"))
-    )
+    buckets = fold_ledger(spark.read.parquet(led_bkt), ["bucket"], ["raw_c", "tgt_c"])
+    tf = fold_ledger(spark.read.parquet(led_tf), ["doc_id", "bucket"], ["tf"])
     scored = dsir_fold_scores(tf, buckets, b).select("doc_id", "logw_micro")
     rep = (
         spark.read.parquet(led_doc)
@@ -533,16 +436,8 @@ def q_stream_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_importance_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _importance_select_oracle,
-    )
-
-    return _importance_select_oracle()
-
-
 QUERIES["stream_importance_weights"] = QuerySpec(
-    q_stream_importance_weights, _stream_importance_oracle()
+    q_stream_importance_weights, _importance_select_oracle()
 )
 
 
@@ -604,23 +499,9 @@ def q_stream_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.suite import load
     from movie_genre_data_pipeline_spark.suite.dedup_queries import DUP_SPAN_L
 
-    base = tempfile.mkdtemp(prefix="stream_spans_")
-    src, led_doc, led_gram = f"{base}/src", f"{base}/docs", f"{base}/grams"
+    base = workspace("stream_spans_")
+    led_doc, led_gram = f"{base}/docs", f"{base}/grams"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
@@ -630,8 +511,7 @@ def q_stream_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             led_gram
         )
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
     docs = spark.read.parquet(led_doc)
     return duplicate_spans_from_grams(
@@ -641,16 +521,8 @@ def q_stream_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_duplicate_spans_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.dedup_queries import (
-        _duplicate_spans_oracle,
-    )
-
-    return _duplicate_spans_oracle()
-
-
 QUERIES["stream_duplicate_spans"] = QuerySpec(
-    q_stream_duplicate_spans, _stream_duplicate_spans_oracle()
+    q_stream_duplicate_spans, _duplicate_spans_oracle()
 )
 
 
@@ -691,26 +563,11 @@ def q_stream_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     b = DSIR_BUCKETS
-    base = tempfile.mkdtemp(prefix="stream_funnel_")
-    src = f"{base}/src"
+    base = workspace("stream_funnel_")
     led_doc, led_gram = f"{base}/docs", f"{base}/grams"
     led_tf, led_bkt = f"{base}/tf", f"{base}/buckets"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "lang").repartition(_split(4)).write.parquet(src)
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
     L = 6
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -726,8 +583,7 @@ def q_stream_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_postings(terms).write.mode("append").parquet(led_tf)
         dsir_bucket_model(terms).write.mode("append").parquet(led_bkt)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "lang"), apply_batch, base)
 
     docs = spark.read.parquet(led_doc)
     spans = duplicate_spans_from_grams(
@@ -735,16 +591,8 @@ def q_stream_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.col("doc_id").alias("doc"), "n_tokens"),
         L,
     ).select("doc_id", "dup_fraction")
-    buckets = (
-        spark.read.parquet(led_bkt)
-        .groupBy("bucket")
-        .agg(F.sum("raw_c").alias("raw_c"), F.sum("tgt_c").alias("tgt_c"))
-    )
-    tf = (
-        spark.read.parquet(led_tf)
-        .groupBy("doc_id", "bucket")
-        .agg(F.sum("tf").alias("tf"))
-    )
+    buckets = fold_ledger(spark.read.parquet(led_bkt), ["bucket"], ["raw_c", "tgt_c"])
+    tf = fold_ledger(spark.read.parquet(led_tf), ["doc_id", "bucket"], ["tf"])
     w = dsir_fold_scores(tf, buckets, b)
     scored = (
         docs.join(spans, "doc_id")
@@ -773,16 +621,8 @@ def q_stream_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _funnel_report(scored)
 
 
-def _stream_funnel_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        _trainset_funnel_oracle,
-    )
-
-    return _trainset_funnel_oracle()
-
-
 QUERIES["stream_trainset_funnel"] = QuerySpec(
-    q_stream_trainset_funnel, _stream_funnel_oracle()
+    q_stream_trainset_funnel, _trainset_funnel_oracle()
 )
 
 
@@ -805,51 +645,31 @@ def q_stream_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         PCA_ITERS,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_pca_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_pca_")
+    ledger = f"{base}/ledger"
     o = load(spark, sf_dir, "orders")
-    o.selectExpr(
-        *[f"CAST({expr} AS BIGINT) AS {name}" for name, expr in _PCA_FEATS]
-    ).repartition(_split(4)).write.parquet(src)
 
-    schema = T.StructType(
-        [T.StructField(name, T.LongType()) for name, _ in _PCA_FEATS]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
     cols = [n for n, _ in _PCA_FEATS]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         pca_moments(batch_df, cols).write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(
+        o.selectExpr(
+            *[f"CAST({expr} AS BIGINT) AS {name}" for name, expr in _PCA_FEATS]
+        ),
+        apply_batch,
+        base,
+    )
 
     names = [f"s{i}" for i in range(1, PCA_D + 1)] + [
         f"s{i}{j}" for i in range(1, PCA_D + 1) for j in range(i, PCA_D + 1)
     ]
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy()
-        .agg(
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            *[F.sum(c).cast("decimal(38,0)").alias(c) for c in names],
-        )
-    )
+    folded = fold_ledger(spark.read.parquet(ledger), [], ["n_rows", *names])
     return pca_power_from_moments(folded, iters=PCA_ITERS)
 
 
-def _stream_pca_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import _pca_oracle
-
-    return _pca_oracle()
-
-
-QUERIES["stream_pca_moments"] = QuerySpec(q_stream_pca_moments, _stream_pca_oracle())
+QUERIES["stream_pca_moments"] = QuerySpec(q_stream_pca_moments, _pca_oracle())
 
 
 def q_stream_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,44 +687,21 @@ def q_stream_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from movie_genre_data_pipeline_spark.suite import load
 
-    base = tempfile.mkdtemp(prefix="stream_bigram_")
-    src, led_bf, led_uni = f"{base}/src", f"{base}/bf", f"{base}/uni"
+    base = workspace("stream_bigram_")
+    led_bf, led_uni = f"{base}/bf", f"{base}/uni"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         bigram_ledger_append(batch_df, led_bf, led_uni)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
     bf, uni = bigram_ledger_counts(spark, led_bf, led_uni)
     return bigram_surprisal_from_counts(bf, uni)
 
 
-def _stream_bigram_surprisal_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_BIGRAM_SURPRISAL_ORACLE,
-    )
-
-    return Q_BIGRAM_SURPRISAL_ORACLE
-
-
 QUERIES["stream_bigram_surprisal"] = QuerySpec(
-    q_stream_bigram_surprisal, _stream_bigram_surprisal_oracle()
+    q_stream_bigram_surprisal, Q_BIGRAM_SURPRISAL_ORACLE
 )
 
 
@@ -920,29 +717,14 @@ def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim, split invariance gated."""
     from movie_genre_data_pipeline_spark.suite import load
 
-    base = tempfile.mkdtemp(prefix="stream_bm25_")
-    src, led_tf, led_dl = f"{base}/src", f"{base}/tf", f"{base}/dl"
+    base = workspace("stream_bm25_")
+    led_tf, led_dl = f"{base}/tf", f"{base}/dl"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         bm25_append_postings(batch_df, led_tf, led_dl)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
     return bm25_fold_ledgers(spark, led_tf, led_dl)
 
@@ -976,16 +758,8 @@ def bm25_ledger_counts(
     RRF fusion). A pure function of ledger ROWS: file layout is irrelevant,
     which is what makes small-file compaction of a live ledger safe (pinned
     by tests/test_compact.py's mid-stream compaction test)."""
-    tf = (
-        spark.read.parquet(led_tf)
-        .groupBy("doc_id", "term")
-        .agg(F.sum("tf").cast("bigint").alias("tf"))
-    )
-    dl = (
-        spark.read.parquet(led_dl)
-        .groupBy("doc_id")
-        .agg(F.sum("dl").cast("bigint").alias("dl"))
-    )
+    tf = fold_ledger(spark.read.parquet(led_tf), ["doc_id", "term"], ["tf"])
+    dl = fold_ledger(spark.read.parquet(led_dl), ["doc_id"], ["dl"])
     return tf, dl
 
 
@@ -998,15 +772,7 @@ def bm25_fold_ledgers(spark: SparkSession, led_tf: str, led_dl: str) -> DataFram
     return bm25_from_counts(tf, dl)
 
 
-def _stream_bm25_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_BM25_TOPK_ORACLE,
-    )
-
-    return Q_BM25_TOPK_ORACLE
-
-
-QUERIES["stream_bm25_topk"] = QuerySpec(q_stream_bm25_topk, _stream_bm25_oracle())
+QUERIES["stream_bm25_topk"] = QuerySpec(q_stream_bm25_topk, Q_BM25_TOPK_ORACLE)
 
 
 def q_stream_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,26 +790,9 @@ def q_stream_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ams_signs,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ams_")
-    src, led_z, led_f = f"{base}/src", f"{base}/z", f"{base}/f"
+    base = workspace("stream_ams_")
+    led_z, led_f = f"{base}/z", f"{base}/f"
     ev = load(spark, sf_dir, "events")
-    ev.select("event_id", "user_id", "event_type").repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         both = batch_df.filter(F.col("event_type").isin("view", "purchase"))
@@ -1058,14 +807,9 @@ def q_stream_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("f")
         ).write.mode("append").parquet(led_f)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("event_id", "user_id", "event_type"), apply_batch, base)
 
-    z = (
-        spark.read.parquet(led_z)
-        .groupBy("event_type", "j")
-        .agg(F.sum("z").cast("bigint").alias("z"))
-    )
+    z = fold_ledger(spark.read.parquet(led_z), ["event_type", "j"], ["z"])
     zr = z.filter(F.col("event_type") == "view").select("j", F.col("z").alias("z_r"))
     zs = z.filter(F.col("event_type") == "purchase").select(
         "j", F.col("z").alias("z_s")
@@ -1078,11 +822,7 @@ def q_stream_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(prod_sum AS DOUBLE) / {AMS_REPS} AS est_join_size",
         )
     )
-    f = (
-        spark.read.parquet(led_f)
-        .groupBy("event_type", "user_id")
-        .agg(F.sum("f").cast("bigint").alias("f"))
-    )
+    f = fold_ledger(spark.read.parquet(led_f), ["event_type", "user_id"], ["f"])
     views = f.filter(F.col("event_type") == "view").select(
         "user_id", F.col("f").alias("fr")
     )
@@ -1102,16 +842,8 @@ def q_stream_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_ams_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sketch_queries import (
-        Q_AMS_JOIN_SIZE_ORACLE,
-    )
-
-    return Q_AMS_JOIN_SIZE_ORACLE
-
-
 QUERIES["stream_ams_join_size"] = QuerySpec(
-    q_stream_ams_join_size, _stream_ams_oracle()
+    q_stream_ams_join_size, Q_AMS_JOIN_SIZE_ORACLE
 )
 
 
@@ -1160,12 +892,8 @@ def bigram_ledger_counts(
     """(bf, uni) count tables folded by SUM from the append ledgers — the
     shared readout input for bigram_surprisal_from_counts. A pure function
     of ledger ROWS (file layout irrelevant), like bm25_ledger_counts."""
-    bf = (
-        spark.read.parquet(led_bf)
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.sum("bf").alias("bf"))
-    )
-    uni = spark.read.parquet(led_uni).groupBy("w2").agg(F.sum("cu").alias("cu"))
+    bf = fold_ledger(spark.read.parquet(led_bf), ["doc_id", "w1", "w2"], ["bf"])
+    uni = fold_ledger(spark.read.parquet(led_uni), ["w2"], ["cu"])
     return bf, uni
 
 
@@ -1188,32 +916,15 @@ def q_stream_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         SURPRISAL_KEEP_MAX,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_surp_")
-    src = f"{base}/src"
+    base = workspace("stream_surp_")
     led_bf, led_uni, led_src = f"{base}/bf", f"{base}/uni", f"{base}/srcdim"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "source").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         bigram_ledger_append(batch_df, led_bf, led_uni)
         batch_df.select("doc_id", "source").write.mode("append").parquet(led_src)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "source"), apply_batch, base)
 
     bf, uni = bigram_ledger_counts(spark, led_bf, led_uni)
     scored = bigram_surprisal_from_counts(bf, uni)
@@ -1235,16 +946,8 @@ def q_stream_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_surprisal_filter_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.curation_queries import (
-        _surprisal_filter_oracle,
-    )
-
-    return _surprisal_filter_oracle()
-
-
 QUERIES["stream_surprisal_filter"] = QuerySpec(
-    q_stream_surprisal_filter, _stream_surprisal_filter_oracle()
+    q_stream_surprisal_filter, _surprisal_filter_oracle()
 )
 
 
@@ -1261,23 +964,9 @@ def q_stream_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.suite import load
     from movie_genre_data_pipeline_spark.suite.text_queries import HEAPS_BUCKETS
 
-    base = tempfile.mkdtemp(prefix="stream_heaps_")
-    src, led_term, led_doc = f"{base}/src", f"{base}/terms", f"{base}/docs"
+    base = workspace("stream_heaps_")
+    led_term, led_doc = f"{base}/terms", f"{base}/docs"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         docs_b = alpha_token_docs(batch_df)
@@ -1296,16 +985,11 @@ def q_stream_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.size("__a").cast("bigint").alias("n_tokens")
         ).write.mode("append").parquet(led_doc)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
     from pyspark.sql import Window
 
-    docs = (
-        spark.read.parquet(led_doc)
-        .groupBy("doc_id")
-        .agg(F.sum("n_tokens").cast("bigint").alias("n_tokens"))
-    )
+    docs = fold_ledger(spark.read.parquet(led_doc), ["doc_id"], ["n_tokens"])
     terms = (
         spark.read.parquet(led_term)
         .groupBy("term")
@@ -1354,16 +1038,8 @@ def q_stream_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_heaps_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_HEAPS_VOCAB_GROWTH_ORACLE,
-    )
-
-    return Q_HEAPS_VOCAB_GROWTH_ORACLE
-
-
 QUERIES["stream_heaps_vocab_growth"] = QuerySpec(
-    q_stream_heaps_vocab_growth, _stream_heaps_oracle()
+    q_stream_heaps_vocab_growth, Q_HEAPS_VOCAB_GROWTH_ORACLE
 )
 
 
@@ -1383,51 +1059,23 @@ def q_stream_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_efficiency_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_pack_")
-    src, led = f"{base}/src", f"{base}/toks"
+    base = workspace("stream_pack_")
+    led = f"{base}/toks"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "lang").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
             "lang", "doc_id", token_count("text").alias("n_tokens")
         ).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "lang"), apply_batch, base)
 
-    t = (
-        spark.read.parquet(led)
-        .groupBy("lang", "doc_id")
-        .agg(F.sum("n_tokens").cast("bigint").alias("n_tokens"))
-    )
+    t = fold_ledger(spark.read.parquet(led), ["lang", "doc_id"], ["n_tokens"])
     return pack_efficiency_from_counts(t)
 
 
-def _stream_pack_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        Q_SAMPLE_PACK_EFFICIENCY_ORACLE,
-    )
-
-    return Q_SAMPLE_PACK_EFFICIENCY_ORACLE
-
-
 QUERIES["stream_pack_efficiency"] = QuerySpec(
-    q_stream_pack_efficiency, _stream_pack_oracle()
+    q_stream_pack_efficiency, Q_SAMPLE_PACK_EFFICIENCY_ORACLE
 )
 
 
@@ -1444,43 +1092,20 @@ def q_stream_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         rrf_fusion_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_rrf_")
-    src, led_tf, led_dl = f"{base}/src", f"{base}/tf", f"{base}/dl"
+    base = workspace("stream_rrf_")
+    led_tf, led_dl = f"{base}/tf", f"{base}/dl"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         bm25_append_postings(batch_df, led_tf, led_dl)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
     tf, dl = bm25_ledger_counts(spark, led_tf, led_dl)
     return rrf_fusion_from_counts(tf, dl)
 
 
-def _stream_rrf_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_RRF_FUSION_ORACLE,
-    )
-
-    return Q_RRF_FUSION_ORACLE
-
-
-QUERIES["stream_rrf_fusion"] = QuerySpec(q_stream_rrf_fusion, _stream_rrf_oracle())
+QUERIES["stream_rrf_fusion"] = QuerySpec(q_stream_rrf_fusion, Q_RRF_FUSION_ORACLE)
 
 
 def q_stream_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1495,23 +1120,9 @@ def q_stream_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         zipf_fit_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_zipf_")
-    src, led = f"{base}/src", f"{base}/counts"
+    base = workspace("stream_zipf_")
+    led = f"{base}/counts"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -1523,24 +1134,13 @@ def q_stream_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(led)
         )
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("term")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["term"], ["cnt"])
     return zipf_fit_from_counts(counts)
 
 
-def _stream_zipf_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import Q_ZIPF_FIT_ORACLE
-
-    return Q_ZIPF_FIT_ORACLE
-
-
-QUERIES["stream_zipf_fit"] = QuerySpec(q_stream_zipf_fit, _stream_zipf_oracle())
+QUERIES["stream_zipf_fit"] = QuerySpec(q_stream_zipf_fit, Q_ZIPF_FIT_ORACLE)
 
 
 def q_stream_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1557,23 +1157,9 @@ def q_stream_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         shard_balance_from_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_shard_")
-    src, led = f"{base}/src", f"{base}/facts"
+    base = workspace("stream_shard_")
+    led = f"{base}/facts"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         media = batch_df.select(
@@ -1582,22 +1168,13 @@ def q_stream_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         media_shard_facts(media).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
     return shard_balance_from_facts(spark.read.parquet(led))
 
 
-def _stream_shard_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.multimodal_queries import (
-        Q_MEDIA_SHARD_BALANCE_ORACLE,
-    )
-
-    return Q_MEDIA_SHARD_BALANCE_ORACLE
-
-
 QUERIES["stream_shard_balance"] = QuerySpec(
-    q_stream_shard_balance, _stream_shard_oracle()
+    q_stream_shard_balance, Q_MEDIA_SHARD_BALANCE_ORACLE
 )
 
 
@@ -1620,24 +1197,11 @@ def q_stream_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         retention_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_retention_")
-    src, led_day, led_mx = f"{base}/src", f"{base}/day", f"{base}/mx"
+    base = workspace("stream_retention_")
+    led_day, led_mx = f"{base}/day", f"{base}/mx"
     e = load(spark, sf_dir, "events")
-    e.select("user_id", "ts").repartition(_split(4)).write.parquet(src)
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         retention_day_user_facts(batch_df).write.mode("append").parquet(led_day)
@@ -1645,13 +1209,10 @@ def q_stream_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(epoch_micros("ts")).cast("bigint").alias("mx_us")
         ).write.mode("append").parquet(led_mx)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(e.select("user_id", "ts"), apply_batch, base)
 
-    per_user = (
-        spark.read.parquet(led_day)
-        .groupBy("d_bucket", "user_id")
-        .agg(F.sum("n_rows").cast("bigint").alias("n_rows"))
+    per_user = fold_ledger(
+        spark.read.parquet(led_day), ["d_bucket", "user_id"], ["n_rows"]
     )
     mx = spark.read.parquet(led_mx).agg(
         F.max("mx_us").cast("bigint").alias("mx_us")
@@ -1659,16 +1220,8 @@ def q_stream_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retention_from_counts(per_user, mx)
 
 
-def _stream_retention_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import (
-        Q_RETENTION_POLICY_ORACLE,
-    )
-
-    return Q_RETENTION_POLICY_ORACLE
-
-
 QUERIES["stream_retention_policy"] = QuerySpec(
-    q_stream_retention_policy, _stream_retention_oracle()
+    q_stream_retention_policy, Q_RETENTION_POLICY_ORACLE
 )
 
 
@@ -1689,55 +1242,26 @@ def q_stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         k_anonymity_group_facts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_kanon_")
-    src, led = f"{base}/src", f"{base}/groups"
+    base = workspace("stream_kanon_")
+    led = f"{base}/groups"
     c = load(spark, sf_dir, "customer")
-    c.select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal").repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            # c_nationkey is INT32 in the fixture parquet; the file-source
-            # schema must match the physical type or the scan fails
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_mktsegment", T.StringType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         k_anonymity_group_facts(batch_df).write.mode("append").parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(
+        c.select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal"),
+        apply_batch,
+        base,
+    )
 
-    folded = (
-        spark.read.parquet(led)
-        .groupBy("c_nationkey", "c_mktsegment", "bal_band")
-        .agg(F.sum("g_size").cast("bigint").alias("g_size"))
+    folded = fold_ledger(
+        spark.read.parquet(led), ["c_nationkey", "c_mktsegment", "bal_band"], ["g_size"]
     )
     return k_anonymity_from_groups(folded)
 
 
-def _stream_k_anonymity_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.cdc_queries import (
-        Q_K_ANONYMITY_ORACLE,
-    )
-
-    return Q_K_ANONYMITY_ORACLE
-
-
-QUERIES["stream_k_anonymity"] = QuerySpec(
-    q_stream_k_anonymity, _stream_k_anonymity_oracle()
-)
+QUERIES["stream_k_anonymity"] = QuerySpec(q_stream_k_anonymity, Q_K_ANONYMITY_ORACLE)
 
 
 def q_stream_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1753,23 +1277,9 @@ def q_stream_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         entropy_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_entropy_")
-    src, led = f"{base}/src", f"{base}/counts"
+    base = workspace("stream_entropy_")
+    led = f"{base}/counts"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -1781,27 +1291,14 @@ def q_stream_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(led)
         )
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("term")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["term"], ["cnt"])
     return entropy_from_counts(counts)
 
 
-def _stream_entropy_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_UNIGRAM_ENTROPY_ORACLE,
-    )
-
-    return Q_UNIGRAM_ENTROPY_ORACLE
-
-
 QUERIES["stream_unigram_entropy"] = QuerySpec(
-    q_stream_unigram_entropy, _stream_entropy_oracle()
+    q_stream_unigram_entropy, Q_UNIGRAM_ENTROPY_ORACLE
 )
 
 
@@ -1825,23 +1322,9 @@ def q_stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         PHASH_MAX_HAMMING,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_phash_")
-    src, led = f"{base}/src", f"{base}/fps"
+    base = workspace("stream_phash_")
+    led = f"{base}/fps"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         media = batch_df.select(
@@ -1852,8 +1335,7 @@ def q_stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(led)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
     pairs = phash_near_dup_pairs(
         spark.read.parquet(led),
@@ -1865,17 +1347,7 @@ def q_stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_phash_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.multimodal_queries import (
-        _phash_oracle,
-    )
-
-    return _phash_oracle()
-
-
-QUERIES["stream_phash_dedup"] = QuerySpec(
-    q_stream_phash_dedup, _stream_phash_oracle()
-)
+QUERIES["stream_phash_dedup"] = QuerySpec(q_stream_phash_dedup, _phash_oracle())
 
 
 def q_stream_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1891,25 +1363,9 @@ def q_stream_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         mutual_info_from_cells,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_mi_")
-    src, led = f"{base}/src", f"{base}/cells"
+    base = workspace("stream_mi_")
+    led = f"{base}/cells"
     o = load(spark, sf_dir, "orders")
-    o.select("o_orderpriority", "o_orderstatus").repartition(
-        _split(4)
-    ).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("o_orderpriority", T.StringType()),
-            T.StructField("o_orderstatus", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -1922,26 +1378,15 @@ def q_stream_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(led)
         )
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(o.select("o_orderpriority", "o_orderstatus"), apply_batch, base)
 
-    cells = (
-        spark.read.parquet(led)
-        .groupBy("x", "y")
-        .agg(F.sum("n_xy").cast("bigint").alias("n_xy"))
-    )
+    cells = fold_ledger(spark.read.parquet(led), ["x", "y"], ["n_xy"])
     return mutual_info_from_cells(cells)
 
 
-def _stream_mi_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sampling_queries import (
-        Q_FEAT_MUTUAL_INFO_ORACLE,
-    )
-
-    return Q_FEAT_MUTUAL_INFO_ORACLE
-
-
-QUERIES["stream_mutual_info"] = QuerySpec(q_stream_mutual_info, _stream_mi_oracle())
+QUERIES["stream_mutual_info"] = QuerySpec(
+    q_stream_mutual_info, Q_FEAT_MUTUAL_INFO_ORACLE
+)
 
 
 def q_stream_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1957,24 +1402,9 @@ def q_stream_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         js_divergence_from_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_js_")
-    src, led = f"{base}/src", f"{base}/counts"
+    base = workspace("stream_js_")
+    led = f"{base}/counts"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text", "source").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # join-free: source rides the projection (the batch query's shape) —
@@ -1990,25 +1420,12 @@ def q_stream_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(led)
         )
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text", "source"), apply_batch, base)
 
-    counts = (
-        spark.read.parquet(led)
-        .groupBy("source", "term")
-        .agg(F.sum("c").cast("bigint").alias("c"))
-    )
+    counts = fold_ledger(spark.read.parquet(led), ["source", "term"], ["c"])
     return js_divergence_from_counts(counts)
 
 
-def _stream_js_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_JS_DIVERGENCE_ORACLE,
-    )
-
-    return Q_JS_DIVERGENCE_ORACLE
-
-
 QUERIES["stream_js_divergence"] = QuerySpec(
-    q_stream_js_divergence, _stream_js_oracle()
+    q_stream_js_divergence, Q_JS_DIVERGENCE_ORACLE
 )

@@ -22,26 +22,32 @@ Raw_to_Bronze.py:21-23) applied per physical encoding.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from movie_genre_data_pipeline_spark.streaming.ledger import fold_ledger
 from movie_genre_data_pipeline_spark.suite import QuerySpec
-
-# Micro-batch split override for the ledger-fold family. The additive folds
-# claim BATCH-SPLIT INDEPENDENCE (any partition of the feed into micro-batches
-# yields the same final state); tests/test_stream_split_invariance.py sets
-# this to 1/3/7 and asserts identical outputs — the direct gate the shared
-# batch oracles only imply (VERDICT r7 #6). None = each query's default.
-SOURCE_SPLIT: int | None = None
-
-
-def _split(default: int) -> int:
-    return SOURCE_SPLIT if SOURCE_SPLIT is not None else default
-
+from movie_genre_data_pipeline_spark.suite._twin import run_twin, workspace
+from movie_genre_data_pipeline_spark.suite.cdc_queries import Q_CDC_JOIN_IVM_ORACLE
+from movie_genre_data_pipeline_spark.suite.mining_queries import (
+    Q_MINE_BRAND_PAIRS_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
+    Q_DQ_DRIFT_REPORT_ORACLE,
+    Q_GOLD_GENRE_REVENUE_IVM_ORACLE,
+    Q_MERGE_SCD2_ORACLE,
+    Q_OPS_DATASET_FINGERPRINT_ORACLE,
+)
+from movie_genre_data_pipeline_spark.suite.sketch_queries import (
+    Q_CMS_HEAVY_HITTERS_ORACLE,
+    Q_HISTOGRAM_QUANTILES_ORACLE,
+    _hll_oracle,
+)
+from movie_genre_data_pipeline_spark.suite.text_queries import Q_SOURCE_KEYNESS_ORACLE
+from movie_genre_data_pipeline_spark.suite.timeseries_queries import _ab_oracle
 
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
@@ -90,7 +96,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events.parquet is a single FILE; the streaming file source requires a
     # directory (its per-batch relation rejects file-valued basePaths). Expose it
     # through a temp directory containing a symlink — zero-copy, read-only-safe.
-    link_dir = tempfile.mkdtemp(prefix="events_stream_")
+    link_dir = workspace("events_stream_")
     os.symlink(f"{sf_dir}/events.parquet", f"{link_dir}/events.parquet")
     return _open_event_stream(spark, sf_dir, link_dir)
 
@@ -301,7 +307,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dropDuplicatesWithinWatermark` on event_id collapses the duplicates with
     state bounded by the watermark (the 100 TB requirement: dedup state must
     expire, not grow forever). Oracle: each event counted exactly once."""
-    link_dir = tempfile.mkdtemp(prefix="events_dup_stream_")
+    link_dir = workspace("events_dup_stream_")
     os.symlink(f"{sf_dir}/events.parquet", f"{link_dir}/events_copy1.parquet")
     os.symlink(f"{sf_dir}/events.parquet", f"{link_dir}/events_copy2.parquet")
     stream = _open_event_stream(spark, sf_dir, link_dir)
@@ -412,26 +418,20 @@ GROUP BY 1, 2
 def q_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's `foreachBatch(upsertToDelta)` stream
     (Autoloader_notebook/Bronze_to_Silver.py:257-276) rebuilt over Parquet: a
-    file-source stream of customers feeds per-micro-batch join-based upserts
-    into a materialized target table (negative-balance customers flip status
+    one-batch file-source stream of negative-balance customers feeds
+    join-based upserts into a materialized target table (their status flips
     new→flagged). Ping-pong target dirs keep each batch's read/write disjoint;
     the final table is returned and oracle-checked — streaming execution, exact
     batch-SQL answer."""
     from movie_genre_data_pipeline_spark.operators.upsert import upsert_update
     from movie_genre_data_pipeline_spark.suite import load
 
-    base = tempfile.mkdtemp(prefix="febatch_merge_")
+    base = workspace("febatch_merge_")
     target0 = f"{base}/t0"
     cust = load(spark, sf_dir, "customer")
     cust.select("c_custkey").withColumn("status", F.lit("new")).write.parquet(target0)
-
-    link_dir = f"{base}/stream_src"
-    os.mkdir(link_dir)
-    os.symlink(f"{sf_dir}/customer.parquet", f"{link_dir}/customer.parquet")
-    schema = spark.read.parquet(f"{sf_dir}/customer.parquet").schema
-    stream = spark.readStream.format("parquet").schema(schema).load(link_dir)
     updates = (
-        stream.filter(F.col("c_acctbal") < 0)
+        cust.filter(F.col("c_acctbal") < 0)
         .select("c_custkey")
         .withColumn("new_status", F.lit("flagged"))
     )
@@ -444,12 +444,7 @@ def q_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_update(tgt, batch_df, "c_custkey", {"status": "new_status"}).write.parquet(nxt)
         state["cur"] = nxt
 
-    q = (
-        updates.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_twin(updates, apply_batch, base, 1)
     return spark.read.parquet(state["cur"])
 
 
@@ -478,18 +473,12 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.text import fingerprint
     from movie_genre_data_pipeline_spark.suite import load
 
-    base = tempfile.mkdtemp(prefix="stream_inc_dedup_")
+    base = workspace("stream_inc_dedup_")
     ledger = f"{base}/ledger"
     docs = load(spark, sf_dir, "documents")
     docs.filter(F.col("doc_id") % 4 != 0).select(
         "doc_id", "lang", fingerprint("text").alias("fp")
     ).write.parquet(ledger)
-
-    link_dir = f"{base}/stream_src"
-    os.mkdir(link_dir)
-    os.symlink(f"{sf_dir}/documents.parquet", f"{link_dir}/documents.parquet")
-    schema = docs.schema
-    stream = spark.readStream.format("parquet").schema(schema).load(link_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         history = spark.read.parquet(ledger)
@@ -498,12 +487,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         fresh.select("doc_id", "lang", "fp").write.mode("append").parquet(ledger)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_twin(docs, apply_batch, base, 1)
     return spark.read.parquet(ledger)
 
 
@@ -530,7 +514,7 @@ WHERE rn = 1
 
 def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming distinct-count at sketch size: four real micro-batches
-    (maxFilesPerTrigger=1 over a 4-file copy of events) each append their HLL
+    (one file per trigger over a 4-file copy of events) each append their HLL
     register table to a ledger; the final union + re-max + estimate EXACTLY
     equals the batch sketch — the mergeability contract from functions/hll.py
     under genuine incremental execution, so this shares the batch HLL oracle
@@ -545,36 +529,19 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.suite import load
     from movie_genre_data_pipeline_spark.suite.sketch_queries import HLL_P
 
-    base = tempfile.mkdtemp(prefix="stream_hll_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_hll_")
+    ledger = f"{base}/ledger"
     ev = load(spark, sf_dir, "events")
-    ev.select("event_type", "user_id").repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         hll_registers(batch_df, "user_id", ["event_type"], p=HLL_P).write.mode(
             "append"
         ).parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("event_type", "user_id"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("rho"))
+    folded = fold_ledger(
+        spark.read.parquet(ledger), ["event_type", "bucket"], ["rho"], "max"
     )
     est = hll_estimate(folded, ["event_type"], p=HLL_P)
     exact = ev.groupBy("event_type").agg(
@@ -590,12 +557,6 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("hll_est") - F.col("n_exact")) / F.col("n_exact"), 4
         ).alias("rel_err"),
     )
-
-
-def _stream_hll_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sketch_queries import _hll_oracle
-
-    return _hll_oracle()
 
 
 STREAM_KMV_K = 128
@@ -614,31 +575,16 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.kmv import HASH_SPACE, kmv_sketch
     from movie_genre_data_pipeline_spark.suite import load
 
-    base = tempfile.mkdtemp(prefix="stream_kmv_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_kmv_")
+    ledger = f"{base}/ledger"
     ev = load(spark, sf_dir, "events")
-    ev.select("event_type", "user_id").repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         kmv_sketch(batch_df, "user_id", ["event_type"], k=STREAM_KMV_K).write.mode(
             "append"
         ).parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("event_type", "user_id"), apply_batch, base)
 
     from pyspark.sql import Window
 
@@ -733,37 +679,18 @@ def q_stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         HISTO_QS,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_histo_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_histo_")
+    ledger = f"{base}/ledger"
     ev = load(spark, sf_dir, "events")
-    ev.select("event_type", "value").repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         build_histogram(
             batch_df, "value", HISTO_LO, HISTO_HI, HISTO_BINS, ["event_type"]
         ).write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("event_type", "value"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy("event_type", "bin")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    folded = fold_ledger(spark.read.parquet(ledger), ["event_type", "bin"], ["cnt"])
     est = histogram_quantiles(
         folded, HISTO_QS, HISTO_LO, HISTO_HI, HISTO_BINS, ["event_type"]
     )
@@ -782,14 +709,6 @@ def q_stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("hq50") - F.col("p50_exact"), 6).alias("err50"),
         F.round(F.col("hq99") - F.col("p99_exact"), 6).alias("err99"),
     )
-
-
-def _stream_histo_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sketch_queries import (
-        Q_HISTOGRAM_QUANTILES_ORACLE,
-    )
-
-    return Q_HISTOGRAM_QUANTILES_ORACLE
 
 
 def q_stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,23 +730,9 @@ def q_stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
         TOP_N,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_cms_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_cms_")
+    ledger = f"{base}/ledger"
     d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         grams = shingle_rows(batch_df, "doc_id", "text", k=GRAM_K).select(
@@ -835,15 +740,11 @@ def q_stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         build_cms(grams, "gram", CMS_W, CMS_D).write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(d.select("doc_id", "text"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy("row_idx", "col_idx")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        .localCheckpoint()
-    )
+    folded = fold_ledger(
+        spark.read.parquet(ledger), ["row_idx", "col_idx"], ["cnt"]
+    ).localCheckpoint()
     grams = shingle_rows(d, "doc_id", "text", k=GRAM_K).select(
         F.col("s").alias("gram")
     )
@@ -861,14 +762,6 @@ def q_stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("cms_est").desc(), F.col("gram").asc())
         .limit(TOP_N)
     )
-
-
-def _stream_cms_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.sketch_queries import (
-        Q_CMS_HEAVY_HITTERS_ORACLE,
-    )
-
-    return Q_CMS_HEAVY_HITTERS_ORACLE
 
 
 def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -889,8 +782,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from movie_genre_data_pipeline_spark.suite import load
 
-    base_dir = tempfile.mkdtemp(prefix="stream_scd2_")
-    src = f"{base_dir}/src"
+    base_dir = workspace("stream_scd2_")
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     ups = (
@@ -909,7 +801,6 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tier"),
         )
     )
-    ups.repartition(4).write.parquet(src)
 
     base = cust.select(
         "c_custkey",
@@ -923,20 +814,6 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     base.write.parquet(log_dir)
     scd2_apply(base, base.limit(0), ["c_custkey"], ["tier"], "eff_from").write.parquet(
         f"{base_dir}/hist_0"
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("eff_from", T.TimestampType()),
-            T.StructField("tier", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -957,8 +834,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         vacuum_generations(base_dir, "hist", keep=2)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ups, apply_batch, base_dir)
     hist = spark.read.parquet(f"{base_dir}/hist_{gen['n']}")
     return hist.select("c_custkey", "tier", "eff_from", "eff_to", "is_current")
 
@@ -983,27 +859,17 @@ def q_stream_gold_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         gold_ivm_frames,
     )
 
-    base_dir = tempfile.mkdtemp(prefix="stream_gold_ivm_")
-    src = f"{base_dir}/src"
+    base_dir = workspace("stream_gold_ivm_")
     snap_a, snap_b, genre_dim = gold_ivm_frames(spark, sf_dir)
     changes = snapshot_diff(
         snap_a, snap_b, ["Id"], ["Revenue", "Budget", "RunTime", "Genres_Id"]
     ).filter(F.col("change_type") != "unchanged")
-    changes.repartition(3).write.parquet(src)
-    change_schema = spark.read.parquet(src).schema
 
     gen = {"n": 0}
     build_genre_revenue_state(snap_a, genre_dim).write.parquet(
         f"{base_dir}/state_0"
     )
     dim = genre_dim.localCheckpoint(eager=True)  # reused every micro-batch
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(change_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         from movie_genre_data_pipeline_spark.fsutil import vacuum_generations
@@ -1015,8 +881,7 @@ def q_stream_gold_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reclaim superseded generations; keep=2 preserves read-prev/write-next
         vacuum_generations(base_dir, "state", keep=2)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(changes, apply_batch, base_dir, 3)
     state = spark.read.parquet(f"{base_dir}/state_{gen['n']}")
     return finalize_genre_revenue(state)
 
@@ -1038,27 +903,18 @@ def q_stream_dq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         gold_ivm_frames,
     )
 
-    base_dir = tempfile.mkdtemp(prefix="stream_dq_drift_")
-    src = f"{base_dir}/src"
+    base_dir = workspace("stream_dq_drift_")
     counts_dir = f"{base_dir}/bin_counts"
     snap_a, snap_b, _ = gold_ivm_frames(spark, sf_dir)
-    snap_b.select("Revenue").repartition(3).write.parquet(src)
 
     LO, WIDTH, NBINS = 0.0, 50_000.0, 12
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("Revenue double")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         bin_counts(batch_df, "Revenue", LO, WIDTH, NBINS, "n").write.mode(
             "append"
         ).parquet(counts_dir)
 
-    q = stream.writeStream.foreachBatch(fold_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(snap_b.select("Revenue"), fold_batch, base_dir, 3)
 
     # fold = per-bin re-sum of the appended deltas; the report core consumes
     # the folded count ledger directly — counts are additive, so stream ==
@@ -1086,8 +942,7 @@ def q_stream_ops_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     P = 2_147_483_647
-    base_dir = tempfile.mkdtemp(prefix="stream_fp_")
-    src = f"{base_dir}/src"
+    base_dir = workspace("stream_fp_")
     ledger = f"{base_dir}/ledger"
     from movie_genre_data_pipeline_spark.suite import load
 
@@ -1096,22 +951,13 @@ def q_stream_ops_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linenumber").cast("string").alias("k2"),
         F.col("l_suppkey").cast("string").alias("k3"),
     )
-    li.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("k1 string, k2 string, k3 string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         dataset_fingerprint(batch_df, ["k1", "k2", "k3"]).write.mode(
             "append"
         ).parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(fold_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(li, fold_batch, base_dir)
     return (
         spark.read.parquet(ledger)
         .agg(
@@ -1119,30 +965,6 @@ def q_stream_ops_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("content_hash") % P).cast("bigint").alias("content_hash"),
         )
     )
-
-
-def _stream_fp_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
-        Q_OPS_DATASET_FINGERPRINT_ORACLE,
-    )
-
-    return Q_OPS_DATASET_FINGERPRINT_ORACLE
-
-
-def _stream_dq_drift_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
-        Q_DQ_DRIFT_REPORT_ORACLE,
-    )
-
-    return Q_DQ_DRIFT_REPORT_ORACLE
-
-
-def _stream_gold_ivm_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
-        Q_GOLD_GENRE_REVENUE_IVM_ORACLE,
-    )
-
-    return Q_GOLD_GENRE_REVENUE_IVM_ORACLE
 
 
 def q_stream_cdc_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1168,8 +990,7 @@ def q_stream_cdc_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         JV_REPRICE_MOD,
     )
 
-    base_dir = tempfile.mkdtemp(prefix="stream_cdc_join_ivm_")
-    src = f"{base_dir}/src"
+    base_dir = workspace("stream_cdc_join_ivm_")
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     facts = orders.select(
@@ -1209,19 +1030,10 @@ def q_stream_cdc_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("bigint").alias("price_cents"),
         F.lit("REASSIGNED").alias("c_mktsegment"),
     )
-    ups.unionByName(dels).unionByName(dimu).repartition(_split(3)).write.parquet(src)
-    feed_schema = spark.read.parquet(src).schema
 
     gen = {"n": 0}
     view0.write.parquet(f"{base_dir}/view_0")
     dim.write.parquet(f"{base_dir}/dim_0")
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(feed_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         prev_view = spark.read.parquet(f"{base_dir}/view_{gen['n']}")
@@ -1253,44 +1065,25 @@ def q_stream_cdc_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_generations(base_dir, "view", keep=2)
         vacuum_generations(base_dir, "dim", keep=2)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ups.unionByName(dels).unionByName(dimu), apply_batch, base_dir, 3)
     return spark.read.parquet(f"{base_dir}/view_{gen['n']}")
-
-
-def _stream_cdc_join_ivm_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.cdc_queries import (
-        Q_CDC_JOIN_IVM_ORACLE,
-    )
-
-    return Q_CDC_JOIN_IVM_ORACLE
-
-
-def _stream_scd2_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
-        Q_MERGE_SCD2_ORACLE,
-    )
-
-    return Q_MERGE_SCD2_ORACLE
 
 
 QUERIES: dict[str, QuerySpec] = {
     "stream_tumbling_window": QuerySpec(q_stream_tumbling, Q_STREAM_TUMBLING_ORACLE),
-    "stream_scd2_incremental": QuerySpec(q_stream_scd2, _stream_scd2_oracle()),
-    "stream_gold_ivm": QuerySpec(q_stream_gold_ivm, _stream_gold_ivm_oracle()),
-    "stream_cdc_join_ivm": QuerySpec(
-        q_stream_cdc_join_ivm, _stream_cdc_join_ivm_oracle()
-    ),
-    "stream_dq_drift": QuerySpec(q_stream_dq_drift, _stream_dq_drift_oracle()),
+    "stream_scd2_incremental": QuerySpec(q_stream_scd2, Q_MERGE_SCD2_ORACLE),
+    "stream_gold_ivm": QuerySpec(q_stream_gold_ivm, Q_GOLD_GENRE_REVENUE_IVM_ORACLE),
+    "stream_cdc_join_ivm": QuerySpec(q_stream_cdc_join_ivm, Q_CDC_JOIN_IVM_ORACLE),
+    "stream_dq_drift": QuerySpec(q_stream_dq_drift, Q_DQ_DRIFT_REPORT_ORACLE),
     "stream_ops_fingerprint": QuerySpec(
-        q_stream_ops_fingerprint, _stream_fp_oracle()
+        q_stream_ops_fingerprint, Q_OPS_DATASET_FINGERPRINT_ORACLE
     ),
-    "stream_cms_heavy": QuerySpec(q_stream_cms_heavy, _stream_cms_oracle()),
+    "stream_cms_heavy": QuerySpec(q_stream_cms_heavy, Q_CMS_HEAVY_HITTERS_ORACLE),
     "stream_histogram_quantiles": QuerySpec(
-        q_stream_histogram_quantiles, _stream_histo_oracle()
+        q_stream_histogram_quantiles, Q_HISTOGRAM_QUANTILES_ORACLE
     ),
     "stream_kmv_distinct": QuerySpec(q_stream_kmv_distinct, _stream_kmv_oracle()),
-    "stream_hll_distinct": QuerySpec(q_stream_hll_distinct, _stream_hll_oracle()),
+    "stream_hll_distinct": QuerySpec(q_stream_hll_distinct, _hll_oracle()),
     "stream_sliding_window": QuerySpec(q_stream_sliding, Q_STREAM_SLIDING_ORACLE),
     "stream_sessionize": QuerySpec(q_stream_sessionize, Q_STREAM_SESSIONIZE_ORACLE),
     "stream_watermarked_append": QuerySpec(
@@ -1327,50 +1120,23 @@ def q_stream_text_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_term_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_keyness_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_keyness_")
+    ledger = f"{base}/ledger"
     docs = load(spark, sf_dir, "documents")
-    docs.select("source", "text").repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("source", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         source_term_counts(batch_df).write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(docs.select("source", "text"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy("source", "term")
-        .agg(F.sum("o").cast("bigint").alias("o"))
-    )
+    folded = fold_ledger(spark.read.parquet(ledger), ["source", "term"], ["o"])
     return keyness_top_terms(
         folded, top_k=KEYNESS_TOP_K, min_count=KEYNESS_MIN_COUNT
     )
 
 
-def _stream_keyness_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.text_queries import (
-        Q_SOURCE_KEYNESS_ORACLE,
-    )
-
-    return Q_SOURCE_KEYNESS_ORACLE
-
-
 QUERIES["stream_text_keyness"] = QuerySpec(
-    q_stream_text_keyness, _stream_keyness_oracle()
+    q_stream_text_keyness, Q_SOURCE_KEYNESS_ORACLE
 )
 
 
@@ -1391,24 +1157,10 @@ def q_stream_mine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         PAIR_MIN_SUPPORT,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_mine_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_mine_")
+    ledger = f"{base}/ledger"
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    li.select("l_orderkey", "l_partkey").repartition(_split(4)).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType()),
-            T.StructField("l_partkey", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         items = (
@@ -1426,8 +1178,7 @@ def q_stream_mine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             items = items.join(seen, ["basket", "item"], "left_anti")
         items.write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(li.select("l_orderkey", "l_partkey"), apply_batch, base)
 
     folded = spark.read.parquet(ledger)
     pairs = pair_supports(folded)
@@ -1438,17 +1189,7 @@ def q_stream_mine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_mine_pairs_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.mining_queries import (
-        Q_MINE_BRAND_PAIRS_ORACLE,
-    )
-
-    return Q_MINE_BRAND_PAIRS_ORACLE
-
-
-QUERIES["stream_mine_pairs"] = QuerySpec(
-    q_stream_mine_pairs, _stream_mine_pairs_oracle()
-)
+QUERIES["stream_mine_pairs"] = QuerySpec(q_stream_mine_pairs, Q_MINE_BRAND_PAIRS_ORACLE)
 
 
 def q_stream_ab_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1464,23 +1205,9 @@ def q_stream_ab_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ab_report_from_user_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ab_")
-    src, ledger = f"{base}/src", f"{base}/ledger"
+    base = workspace("stream_ab_")
+    ledger = f"{base}/ledger"
     ev = load(spark, sf_dir, "events")
-    ev.select("user_id", "event_type").repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.groupBy("user_id").agg(
@@ -1489,57 +1216,11 @@ def q_stream_ab_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("x")
         ).write.mode("append").parquet(ledger)
 
-    q = stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    run_twin(ev.select("user_id", "event_type"), apply_batch, base)
 
-    folded = (
-        spark.read.parquet(ledger)
-        .groupBy("user_id")
-        .agg(F.sum("x").cast("bigint").alias("x"))
-    )
+    folded = fold_ledger(spark.read.parquet(ledger), ["user_id"], ["x"])
     return ab_report_from_user_counts(folded)
 
 
-def _stream_ab_oracle() -> str:
-    from movie_genre_data_pipeline_spark.suite.timeseries_queries import _ab_oracle
+QUERIES["stream_ab_report"] = QuerySpec(q_stream_ab_report, _ab_oracle())
 
-    return _ab_oracle()
-
-
-QUERIES["stream_ab_report"] = QuerySpec(q_stream_ab_report, _stream_ab_oracle())
-
-
-
-# r15 (VERDICT r14 #6): the r11+ waves moved VERBATIM into per-family
-# submodules (streaming_ledger_queries, streaming_eval_queries);
-# suite/__init__.all_queries registers them immediately after this module.
-
-
-# r15 (VERDICT r14 #6): names moved VERBATIM into the split submodules stay
-# importable from this module via PEP 562 lazy attribute resolution --
-# function-local imports and tests across the package predate the split, and
-# rewriting their import paths would flip seating fingerprints for a pure
-# move. Lazy (not a top-level re-export) so importing a submodule first can
-# never hit a partially-initialized parent.
-_SPLIT_SUBMODULES = ('streaming_ledger_queries', 'streaming_eval_queries')
-
-
-def __getattr__(name: str):
-    # Never forward dunder probes: the import machinery itself asks for
-    # __path__ (package check) during every `from <this module> import x`,
-    # and forwarding that into a submodule import while a submodule is
-    # already mid-initialization deadlocks the cycle this hook exists to
-    # avoid.
-    if name.startswith("__") and name.endswith("__"):
-        raise AttributeError(name)
-    import importlib
-
-    for _m in _SPLIT_SUBMODULES:
-        mod = importlib.import_module(
-            f"movie_genre_data_pipeline_spark.suite.{_m}"
-        )
-        if hasattr(mod, name):
-            return getattr(mod, name)
-    raise AttributeError(
-        f"module {__name__!r} has no attribute {name!r}"
-    )

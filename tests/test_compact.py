@@ -230,37 +230,20 @@ def test_bm25_ledger_fold_survives_mid_stream_compaction(spark, tmp_path):
     append path (bm25_append_postings) over a real availableNow stream,
     compact BOTH ledgers inside foreachBatch after batch 1, and assert the
     folded top-k equals the batch ranker's answer on the same corpus."""
-    from pyspark.sql import functions as F  # noqa: F401
-    from pyspark.sql import types as T
-
     from movie_genre_data_pipeline_spark.operators.compact import (
         compact_parquet_dir,
     )
     from movie_genre_data_pipeline_spark.suite import load
-    from movie_genre_data_pipeline_spark.suite.streaming_queries import (
+    from movie_genre_data_pipeline_spark.suite._twin import run_twin
+    from movie_genre_data_pipeline_spark.suite.streaming_ledger_queries import (
         bm25_append_postings,
         bm25_fold_ledgers,
     )
     from movie_genre_data_pipeline_spark.suite.text_queries import q_bm25_topk
 
     sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "src")
     led_tf, led_dl = str(tmp_path / "tf"), str(tmp_path / "dl")
     d = load(spark, sf, "documents").select("doc_id", "text")
-    d.repartition(4).write.parquet(src)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
     compactions: list[dict] = []
 
     def apply_batch(batch_df, batch_id):
@@ -272,12 +255,7 @@ def test_bm25_ledger_fold_survives_mid_stream_compaction(spark, tmp_path):
                     compact_parquet_dir(spark, led, target_file_bytes=1 << 30)
                 )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_twin(d, apply_batch, str(tmp_path))
 
     assert len(compactions) == 2
     assert all(s["files_after"] < s["files_before"] for s in compactions), (

@@ -77,7 +77,7 @@ def test_dsir_twin_readout_identical_with_gc_disabled(spark, monkeypatch):
     the labeled (doc_id, source, y, logw_micro) frame every stream AUC/KS/
     PSI/lift readout consumes must be IDENTICAL with the GC stubbed out."""
     import movie_genre_data_pipeline_spark.streaming.ledger as L
-    import movie_genre_data_pipeline_spark.suite.streaming_queries as sq
+    import movie_genre_data_pipeline_spark.suite.streaming_eval_queries as sq
 
     def run():
         df = sq._dsir_labeled_from_stream(spark, SF_DIR, "gc_gate_")

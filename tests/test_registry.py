@@ -2,9 +2,9 @@
 
 Order: the driver's correctness gate samples the first 50 entries of
 ``queries()``, so declaration order is load-bearing (VERDICT r01 #1). It is
-derived, not curated: ``all_queries()`` round-robins oracled queries across
-the suite modules, then appends rows-only queries. The tests below pin that
-rule's consequences.
+derived, not curated: ``all_queries()`` round-robins queries across the
+suite modules, and rejects any query without an oracle. The tests below pin
+that rule's consequences.
 
 Verify-then-record: ``seating_manifest.json`` holds each query's
 implementation fingerprint (suite/_seating.py) as of its last exact oracle
@@ -62,6 +62,21 @@ def test_rows_only_queries_sorted_last():
     assert all(q[n].oracle is None for n in names[first_rows_only:])
     # so the 50 driver-sampled entries all carry an oracle
     assert first_rows_only >= 50
+
+
+def test_query_without_oracle_is_rejected(monkeypatch):
+    """A query registered without an oracle fails the registry loudly instead
+    of being ordered after the driver-sampled window."""
+    from movie_genre_data_pipeline_spark.suite import QuerySpec, format_queries
+
+    spec = next(iter(format_queries.QUERIES.values()))
+    monkeypatch.setattr(
+        format_queries,
+        "QUERIES",
+        {**format_queries.QUERIES, "oracle_less_probe": QuerySpec(spec.fn, None)},
+    )
+    with pytest.raises(ValueError, match="oracle_less_probe"):
+        all_queries()
 
 
 def test_documented_query_counts_match_registry():

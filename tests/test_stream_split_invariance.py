@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from movie_genre_data_pipeline_spark.suite import streaming_queries as SQ
+from movie_genre_data_pipeline_spark.suite import _twin
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -240,6 +240,10 @@ FOLDS = [
     # — re-derives at readout, since the fixed point depends on the final
     # margins)
     "stream_raking_ipf",
+    # the HLL register ledger (MAX fold) and the (source, term) keyness
+    # count ledger (SUM fold)
+    "stream_hll_distinct",
+    "stream_text_keyness",
 ]
 
 
@@ -274,19 +278,19 @@ assert _DEFAULT_REPS <= set(FOLDS)
     ],
 )
 def test_ledger_fold_is_split_invariant(spark, name):
-    # r15 split: stream queries live across three modules now; resolve via
-    # the registry. SOURCE_SPLIT stays a streaming_queries global (every
-    # moved twin still reads it through the parent's _source_split helper).
+    # stream queries live across four modules; resolve via the registry.
+    # Every twin stages its source through suite/_twin.run_twin, the only
+    # reader of SOURCE_SPLIT.
     from movie_genre_data_pipeline_spark.suite import all_queries
 
     fn = all_queries()[name].fn
     results = []
     for split in (1, 3, 7):
-        SQ.SOURCE_SPLIT = split
+        _twin.SOURCE_SPLIT = split
         try:
             rows = sorted(_norm(r) for r in fn(spark, SF_DIR).collect())
         finally:
-            SQ.SOURCE_SPLIT = None
+            _twin.SOURCE_SPLIT = None
         results.append(rows)
     assert results[0] == results[1], f"{name}: split 1 vs 3 differ"
     assert results[1] == results[2], f"{name}: split 3 vs 7 differ"

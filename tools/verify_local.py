@@ -102,14 +102,11 @@ def check_query(
     spark, con, name: str, spec, sf_dir: str, exact: bool = False
 ) -> list[str]:
     """Run one suite query against its oracle; return a list of failure strings
-    (empty = pass). Rows-only queries (oracle=None) fail only on Spark error or
-    an empty result."""
+    (empty = pass)."""
     try:
         sdf = spec.fn(spark, sf_dir).toPandas()
     except Exception as e:
         return [f"spark error: {e}"]
-    if spec.oracle is None:
-        return ["rows-only query returned 0 rows"] if len(sdf) == 0 else []
     try:
         odf = con.sql(spec.oracle).df()
     except Exception as e:
@@ -159,8 +156,7 @@ def verify_queries(
                 for e in errs:
                     print(f"FAIL  {name}: {e}")
         elif verbose:
-            tag = "skip " if spec.oracle is None else "ok   "
-            print(f"{tag} {name} ({time.time()-t0:.1f}s)")
+            print(f"ok    {name} ({time.time()-t0:.1f}s)")
     return failures
 
 
