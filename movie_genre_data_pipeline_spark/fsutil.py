@@ -21,6 +21,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.operators.writers import batch_writer
+
 
 def remove_dir(path: str) -> None:
     """`dbutils.fs.rm(path, recurse=True)` equivalent
@@ -65,6 +67,13 @@ def rewrite_parquet(
     whole-table swap remains the fallback for unpartitioned tables or full
     rewrites.
 
+    File layout: the partition-scoped staging write goes through
+    `operators.writers.batch_writer`, so each touched partition comes back as
+    one file (or advisory-sized files when it is large), however many tasks
+    `df` spans. The whole-table path writes `df` with its own partitioning:
+    `compact_parquet_dir` sizes its files with an explicit repartition, and a
+    second shuffle would undo that sizing.
+
     Visibility contract: the WHOLE-TABLE swap is a single directory rename — a
     reader sees either the old table or the new one, never a gap. The
     partition-scoped path swaps each touched partition with two consecutive
@@ -96,12 +105,7 @@ def rewrite_parquet(
             F.col(partition_column).cast("string").isin(values)
         )
         staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-        (
-            scoped.write.format("parquet")
-            .mode("overwrite")
-            .partitionBy(partition_column)
-            .save(staging)
-        )
+        batch_writer(scoped, partition_column, mode="overwrite").save(staging)
         target = Path(path)
         target.mkdir(parents=True, exist_ok=True)
         for v in values:
@@ -128,6 +132,8 @@ def rewrite_parquet(
         return
 
     staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
+    # Not batch_writer: keep df's own partitioning, which compact_parquet_dir
+    # sizes with an explicit repartition that a rebalance would undo.
     writer = df.write.format("parquet").mode("overwrite")
     if partition_column:
         writer = writer.partitionBy(partition_column)

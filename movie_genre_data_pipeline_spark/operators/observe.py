@@ -20,6 +20,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
 
+from movie_genre_data_pipeline_spark.operators.writers import batch_writer
+
 
 def write_with_metrics(
     df: DataFrame,
@@ -31,13 +33,10 @@ def write_with_metrics(
 ) -> dict[str, object]:
     """Write `df` to `path` and return the observed metric values computed
     during that same job. Each metric must be an aggregate Column with an
-    explicit alias (the alias becomes the result key)."""
+    explicit alias (the alias becomes the result key). The file layout is
+    `batch_writer`'s."""
     obs = Observation()
-    observed = df.observe(obs, *metrics)
-    writer = observed.write.format(fmt).mode(mode)
-    if partition_column:
-        writer = writer.partitionBy(partition_column)
-    writer.save(path)
+    batch_writer(df.observe(obs, *metrics), partition_column, mode=mode, fmt=fmt).save(path)
     return dict(obs.get)
 
 

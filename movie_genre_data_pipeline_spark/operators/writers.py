@@ -12,6 +12,26 @@ Scale notes:
 - `mode="overwrite"` + spark.sql.sources.partitionOverwriteMode=dynamic (set in
   session.py) rewrites only the partitions present in the frame — idempotent
   re-runs without the reference's rm -r (Batch_notebook/rawToBronze.py:7).
+- File layout: `batch_writer` is the one place that decides it for a
+  partitioned write. A plain `partitionBy` writes one file per (task, value),
+  so a frame spread over N tasks leaves up to N small files in every value's
+  directory, and opens, footer parses and listings scale with files, not
+  bytes. The reference leaves file sizing to Delta's OPTIMIZE; open-source
+  Parquet has none. So a partitioned write first applies Spark's REBALANCE
+  hint on the partition columns. Under AQE (on in session.py; Spark's default
+  since 3.2) the rebalance exchange coalesces small shuffle partitions, so
+  each value lands in one file, and splits any value larger than
+  `spark.sql.adaptive.advisoryPartitionSizeInBytes` into several, so at scale
+  files stay near the advisory size and never funnel one value through one
+  writer. Without AQE the hint is a plain hash repartition on the partition
+  columns: one file per value, but one task per value too.
+- Two partitioned writes do not go through here, on purpose:
+  `fsutil.rewrite_parquet`'s whole-table path, because
+  `compact_parquet_dir` sizes its files with an explicit repartition that a
+  second shuffle would undo; and the raw→bronze file-sink stream in
+  `streaming/incremental.py`, because a streaming query runs without AQE and
+  every row of one arrival shares its `p_ingestdate`, so the hint would put
+  the whole arrival through one task.
 """
 
 from __future__ import annotations
@@ -30,12 +50,20 @@ def batch_writer(
     mode: str = "append",
     fmt: str = "parquet",
 ) -> DataFrameWriter:
-    """Configured writer (reference: operations/operations.py:36-44)."""
-    writer = dataframe.drop(*exclude_columns).write.format(fmt).mode(mode)
-    if partition_column:
-        cols = [partition_column] if isinstance(partition_column, str) else list(partition_column)
-        writer = writer.partitionBy(*cols)
-    return writer
+    """Configured writer (reference: operations/operations.py:36-44). A
+    partitioned write is rebalanced on its partition columns first, so each
+    value is written as one file, or as advisory-sized files when it is large
+    (module "Scale notes")."""
+    dataframe = dataframe.drop(*exclude_columns)
+    if not partition_column:
+        return dataframe.write.format(fmt).mode(mode)
+    cols = [partition_column] if isinstance(partition_column, str) else list(partition_column)
+    return (
+        dataframe.hint("rebalance", *cols)
+        .write.format(fmt)
+        .mode(mode)
+        .partitionBy(*cols)
+    )
 
 
 def write_partitioned(

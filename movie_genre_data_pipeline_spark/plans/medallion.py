@@ -11,7 +11,10 @@ and §8):
   the scan for all 5 downstream actions).
 - Status merges key on the `value` struct for reference parity (J1,
   operations/operations.py:119), via join-based upsert + staged rewrite instead of
-  Delta MERGE.
+  Delta MERGE. Each stage merges once: `bronze_to_silver` flips its loaded and
+  quarantined rows in one (value, status) merge, because the two sets are
+  disjoint (one deduped frame split on one predicate), so bronze is rewritten
+  once per stage, not once per status.
 - Partitioning: bronze by p_ingestdate, movie_silver by p_CreatedDate (same as the
   reference); genres/language are written UNpartitioned — the reference's
   partitionBy("Id") is one-directory-per-key, an anti-pattern at scale
@@ -112,8 +115,11 @@ class MedallionPipeline:
             "quarantined": quarantined.count(),
             "genres": genres.count(),
         }
-        self._update_bronze_status(clean.select("value"), STATUS_LOADED)
-        self._update_bronze_status(quarantined.select("value"), STATUS_QUARANTINED)
+        self._update_bronze_status(
+            _with_status(clean, STATUS_LOADED).unionByName(
+                _with_status(quarantined, STATUS_QUARANTINED)
+            )
+        )
         clean.unpersist()
         quarantined.unpersist()
         return counts
@@ -139,7 +145,7 @@ class MedallionPipeline:
             new_rows, cfg.silver_path("movie"), "p_CreatedDate", mode="append"
         )
         n = silver_ready.count()
-        self._update_bronze_status(silver_ready.select("value"), STATUS_LOADED)
+        self._update_bronze_status(_with_status(silver_ready, STATUS_LOADED))
         silver_ready.unpersist()
         return n
 
@@ -162,14 +168,15 @@ class MedallionPipeline:
             delta = upsert_insert_missing(target, df, on=on)
         write_partitioned(delta, path, partition_column, mode="append")
 
-    def _update_bronze_status(self, matched_values: DataFrame, status: str) -> None:
+    def _update_bronze_status(self, statuses: DataFrame) -> None:
         """J1 status flip (operations/operations.py:112-129): MERGE bronze ON
-        bronze.value = df.value WHEN MATCHED UPDATE SET status. Emulated as a
-        broadcast left join + matched-marker update + staged PARTITION-scoped
+        bronze.value = df.value WHEN MATCHED UPDATE SET status, for a
+        (value, status) frame whose values each carry one status. Emulated as
+        a broadcast left join + matched-marker update + staged PARTITION-scoped
         rewrite: only p_ingestdate partitions containing matched rows are
         rewritten (at 100 TB a full-table rewrite per status flip is the
         difference between minutes and days)."""
-        source = matched_values.distinct().withColumn("status", F.lit(status))
+        source = statuses.distinct()
         bronze = read_parquet(self.spark, self.config.bronze_path)
         touched = [
             r[0]
@@ -185,7 +192,7 @@ class MedallionPipeline:
         updated = upsert_update(
             bronze, source, on="value",
             set_columns={"status": "status"},
-            verify_unique=False,  # source deduped on the full struct key above
+            verify_unique=False,  # one status per value, deduped above
         )
         fsutil.rewrite_parquet(
             self.spark, updated, self.config.bronze_path, "p_ingestdate",
@@ -206,3 +213,8 @@ class MedallionPipeline:
         counts["repaired"] = self.silver_update()
         counts["gold_genres"] = self.silver_to_gold()
         return counts
+
+
+def _with_status(rows: DataFrame, status: str) -> DataFrame:
+    """(value, status) rows for `_update_bronze_status`."""
+    return rows.select("value", F.lit(status).alias("status"))

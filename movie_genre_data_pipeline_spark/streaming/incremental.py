@@ -117,6 +117,10 @@ class IncrementalMedallionPipeline:
         bronze = with_audit_columns(
             exploded, self.config.datasource_name, self.config.clock, "value"
         )
+        # A plain file sink, not batch_writer's rebalanced layout: a streaming
+        # query runs without AQE, so the hint would be a hash repartition on
+        # p_ingestdate, and every row of one arrival shares that date, so a
+        # single task would write the whole arrival.
         q = (
             bronze.writeStream.format("parquet")
             .option("checkpointLocation", self.config.checkpoint_path("bronze"))

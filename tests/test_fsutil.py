@@ -43,6 +43,31 @@ def test_partition_scoped_rewrite_leaves_untouched_partitions_alone(spark, tmp_p
     assert rows == {(1, "A", "p1"), (2, "b", "p1"), (3, "c", "p2"), (4, "d", "p3")}
 
 
+def test_partition_scoped_rewrite_writes_one_file_per_touched_partition(
+    spark, tmp_path
+):
+    """The staged write goes through batch_writer: a touched partition whose
+    rows come from several tasks is rewritten as one file."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, f"v{i}", "p1" if i % 4 else "p2") for i in range(40)],
+        "id int, v string, p string",
+    )
+    df.repartition(4).write.partitionBy("p").parquet(path)
+    assert len(_part_files(path, "p=p1")) > 1
+    before_p2 = _part_files(path, "p=p2")
+
+    live = spark.read.parquet(path)
+    updated = live.withColumn("v", F.upper("v"))
+    rewrite_parquet(spark, updated, path, "p", touched_values=["p1"])
+
+    assert len(_part_files(path, "p=p1")) == 1
+    assert _part_files(path, "p=p2") == before_p2
+    rows = spark.read.parquet(path)
+    assert rows.count() == 40
+    assert rows.filter((F.col("p") == "p1") & (F.col("v") != F.upper("v"))).count() == 0
+
+
 def test_partition_scoped_rewrite_empty_touched_is_noop(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a", "p1")], "id int, v string, p string")

@@ -3,6 +3,10 @@ reconstructed as assertions since it ships no tests."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.config import Clock, PipelineConfig
@@ -12,6 +16,7 @@ from movie_genre_data_pipeline_spark.sources.batch import read_parquet
 from movie_genre_data_pipeline_spark.streaming.incremental import (
     IncrementalMedallionPipeline,
 )
+from tests.conftest import _movie
 
 
 def _run(spark, pipeline_config, raw_movie_dir) -> MedallionPipeline:
@@ -351,3 +356,78 @@ def test_rerun_reuses_generated_code(spark, raw_movie_dir, tmp_path):
         IncrementalMedallionPipeline(spark, incremental).run(raw_movie_dir)
         compiled.append(codegen_compiles(spark) - before)
     assert compiled[2] == 0, f"classes compiled per round: {compiled}"
+
+
+def _data_files(table_path: str, prefix: str) -> dict[str, int]:
+    """Data files per partition directory `<prefix>...` of a Parquet table."""
+    return {
+        d.name: sum(1 for _ in d.glob("*.parquet"))
+        for d in Path(table_path).iterdir()
+        if d.is_dir() and d.name.startswith(prefix)
+    }
+
+
+@pytest.fixture()
+def spread_raw_movie_dir(tmp_path: Path) -> str:
+    """Four raw files (one read task each), every file holding clean and
+    negative-RunTime movies across the same three CreatedDates, so each
+    partition value of bronze and silver movie arrives from several tasks."""
+    raw = tmp_path / "raw_spread"
+    raw.mkdir()
+    dates = ["2020-01-15", "2020-02-15", "2020-03-15"]
+    for f in range(4):
+        movies = [
+            _movie(
+                10 * f + i,
+                f"M{f}_{i}",
+                runtime=-60 if i % 3 == 0 else 100 + i,
+                created=dates[i % 3],
+            )
+            for i in range(9)
+        ]
+        (raw / f"movies_{f}.json").write_text(json.dumps({"movie": movies}))
+    return str(raw)
+
+
+def test_batch_run_writes_one_file_per_partition_value(
+    spark, pipeline_config, spread_raw_movie_dir
+):
+    """Every partitioned write goes through the rebalancing batch_writer: a
+    bronze date holds one file however many raw files fed it, and a silver
+    movie date holds at most two, one from bronze_to_silver and one from the
+    repair append."""
+    MedallionPipeline(spark, pipeline_config).run(spread_raw_movie_dir)
+    bronze = _data_files(pipeline_config.bronze_path, "p_ingestdate=")
+    assert bronze and set(bronze.values()) == {1}, bronze
+    movie = _data_files(pipeline_config.silver_path("movie"), "p_CreatedDate=")
+    assert len(movie) == 3 and max(movie.values()) <= 2, movie
+    silver = read_parquet(spark, pipeline_config.silver_path("movie"))
+    assert silver.count() == 36  # 4 files x 9 distinct movies, repaired included
+
+
+def test_bronze_to_silver_rewrites_bronze_once(
+    spark, pipeline_config, raw_movie_dir, monkeypatch
+):
+    """The loaded and quarantined flips are disjoint, so bronze_to_silver
+    merges them in one (value, status) pass: one staged rewrite, not one per
+    status."""
+    from movie_genre_data_pipeline_spark import fsutil
+
+    calls = []
+    real = fsutil.rewrite_parquet
+
+    def counting(*args, **kwargs):
+        calls.append(kwargs.get("touched_values"))
+        return real(*args, **kwargs)
+
+    pipe = MedallionPipeline(spark, pipeline_config)
+    pipe.raw_to_bronze(raw_movie_dir)
+    monkeypatch.setattr(fsutil, "rewrite_parquet", counting)
+    pipe.bronze_to_silver()
+    assert len(calls) == 1, calls
+    bronze = read_parquet(spark, pipeline_config.bronze_path)
+    by_status = {
+        r["status"]: r["n"]
+        for r in bronze.groupBy("status").agg(F.count("*").alias("n")).collect()
+    }
+    assert by_status == {"loaded": 5, "quarantined": 2}

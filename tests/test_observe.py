@@ -4,6 +4,8 @@ post-write COUNT(*) queries (SURVEY.md §2.5 A2)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.operators.observe import write_with_metrics
@@ -38,9 +40,21 @@ def test_write_with_metrics_matches_recomputation(spark, tmp_path):
     assert spark.read.parquet(path).count() == got["n_rows"]
 
 
+def _files_per_dir(path: str, prefix: str) -> dict[str, int]:
+    return {
+        d.name: sum(1 for _ in d.glob("*.parquet"))
+        for d in Path(path).iterdir()
+        if d.is_dir() and d.name.startswith(prefix)
+    }
+
+
 def test_write_with_metrics_partitioned(spark, tmp_path):
-    src = spark.read.parquet(f"{SF_DIR}/orders.parquet").withColumn(
-        "p_status", F.col("o_orderstatus")
+    """The observed write takes batch_writer's layout: input spread over
+    several tasks still leaves one data file per partition value."""
+    src = (
+        spark.read.parquet(f"{SF_DIR}/orders.parquet")
+        .withColumn("p_status", F.col("o_orderstatus"))
+        .repartition(6)
     )
     path = str(tmp_path / "orders_observed_part")
     got = write_with_metrics(
@@ -52,6 +66,35 @@ def test_write_with_metrics_partitioned(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == got["n_rows"]
     assert "p_status" in back.columns
+    files = _files_per_dir(path, "p_status=")
+    assert len(files) >= 2 and set(files.values()) == {1}, files
+
+
+def test_partitioned_write_splits_a_value_above_the_advisory_size(spark, tmp_path):
+    """The one-file-per-value layout never funnels a large value through one
+    writer: under AQE a value several times the advisory partition size is
+    written as several files, and every small value as one."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(64 * 1024))
+    try:
+        # range splits are contiguous: ids >= 19000 (the small values) all sit
+        # in the last of the 8 input tasks, the big value spans all 8
+        src = spark.range(0, 20000, numPartitions=8).select(
+            F.when(F.col("id") < 19000, F.lit("big"))
+            .otherwise(F.concat(F.lit("v"), (F.col("id") % 5).cast("string")))
+            .alias("p"),
+            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        )
+        path = str(tmp_path / "skewed")
+        write_with_metrics(
+            src, path, [F.count(F.lit(1)).alias("n")], partition_column="p"
+        )
+    finally:
+        spark.conf.set(key, saved)
+    files = _files_per_dir(path, "p=")
+    assert files.pop("p=big") > 1
+    assert len(files) == 5 and set(files.values()) == {1}, files
 
 
 # -- declarative expectations (operators/quality.py, r5) --------------------------------
