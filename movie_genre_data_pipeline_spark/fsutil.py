@@ -30,12 +30,6 @@ def remove_dir(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
 
 
-def list_dir(path: str) -> list[str]:
-    """`dbutils.fs.ls` equivalent (reference: Batch_notebook/rawToBronze.py:6)."""
-    p = Path(path)
-    return sorted(str(c) for c in p.iterdir()) if p.exists() else []
-
-
 # Characters Hive/Spark URL-escape in partition directory names
 # (ExternalCatalogUtils.escapePathName's char set, plus all control chars).
 _HIVE_UNSAFE = re.compile(r'["#%\'*/:=?\\\x00-\x1f\x7f{\[\]^]')

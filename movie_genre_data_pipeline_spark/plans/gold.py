@@ -1,30 +1,34 @@
-"""Gold-layer star mart — the medallion stage the reference DESCRIBES but never
+"""Gold-layer star marts — the medallion stage the reference DESCRIBES but never
 builds (its README sketches Bronze/Silver/Gold; the pipeline stops at three
 Silver tables — /root/reference/README.md:10-15, SURVEY.md §0).
 
-This module completes the story: `movie_silver` (fact, one row per movie with a
-`Genres_Id` array) × `genres_silver` (dimension) → one aggregated mart row per
-genre. The plan is the canonical star rollup:
+This module completes the story with two marts over `movie_silver` (the fact):
+revenue per genre (`genres_silver` dimension) and per language
+(`language_silver`). Both are the canonical star rollup, written once and
+parameterized by a `StarSpec` (`GENRE`, `LANGUAGE`):
 
-- explode the genre-id array (one fact row per (movie, genre) membership),
-- broadcast the genre dimension (genre dims are tiny — tens of rows — so the
-  join is shuffle-free on the fact side at any fact scale),
-- one hash aggregate on (genre_id, genre_name) with map-side partial
-  aggregation.
+- project the fact's foreign key — exploded when it is an id array (one fact
+  row per (movie, genre) membership), taken as is when it is a scalar,
+- broadcast the dimension (tens of rows — so the join is shuffle-free on the
+  fact side at any fact scale),
+- one hash aggregate on (id, label) with map-side partial aggregation.
 
-At 100 TB the only shuffle is the final aggregate on ~|genres| keys; the
+At 100 TB the only shuffle is the final aggregate on ~|dimension| keys; the
 explode and broadcast-hash-join pipeline inside one stage over the fact scan.
+Every mart sorts by (id, label).
 
 Semantics notes (documented, pinned by tests):
 - Movies with an empty/NULL `Genres_Id` array don't appear (the mart covers
   genre memberships; `explode` drops them by design).
-- Genre ids absent from the dimension are dropped by the inner join (the dim
-  is the mart's foreign-key contract).
+- Ids absent from the dimension are dropped by the inner join (the dim is the
+  mart's foreign-key contract).
 - `avg_runtime` averages non-NULL runtimes (SQL AVG semantics); the int sum
   is exact, so the quotient is bit-stable across engines.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +37,7 @@ from movie_genre_data_pipeline_spark.config import PipelineConfig
 from movie_genre_data_pipeline_spark.operators.observe import write_with_metrics
 from movie_genre_data_pipeline_spark.operators.writers import register_external_table
 
-# Additive per-genre state for incremental maintenance. Money is kept in
+# Additive per-key state for incremental maintenance. Money is kept in
 # INTEGER CENTS (bigint) so applying signed deltas is EXACT — float sums would
 # drift from a from-scratch rebuild by accumulation order, turning "IVM equals
 # recompute" into an approximation. Runtime keeps (sum, non-null count) so the
@@ -47,32 +51,74 @@ STATE_COLS = (
 )
 
 
+class StarSpec(NamedTuple):
+    """One star mart: the fact's foreign-key column, whether it holds an id
+    array (exploded) or a scalar id, the mart's id and label column names, and
+    the dimension's label column (the dimension key is always `Id`)."""
+
+    fk: str
+    exploded: bool
+    mart_id: str
+    mart_label: str
+    dim_label: str
+
+
+# Genre memberships: `Genres_Id` is an array, so the fact explodes.
+GENRE = StarSpec(
+    fk="Genres_Id", exploded=True,
+    mart_id="genre_id", mart_label="genre_name", dim_label="name",
+)
+
+# Language (r8): the OTHER foreign key the reference's star sketch names
+# (README.md:10-15 draws movie→language next to movie→genre; SURVEY.md §2.9
+# notes `Language_Id` exists only to enable this join). The FK is SCALAR, so
+# the rollup has no explode. The reference's language dimension is DEGENERATE
+# (§8.3 quirk 3: every language row gets Id=1 and movies carry Language_Id=1),
+# so its join fans every movie out to every language. The functions take
+# whatever dim they are given: a fixed dim (unique ids) gives the real mart,
+# the parity dim reproduces the fanout as identical per-language totals. The
+# medallion gold stage publishes the parity form (its silver tables ARE the
+# reference's), and the suite oracles both.
+LANGUAGE = StarSpec(
+    fk="Language_Id", exploded=False,
+    mart_id="language_id", mart_label="language", dim_label="OriginalLanguage",
+)
+
+
 def _cents(col):
     return F.round(F.col(col) * 100).cast("bigint")
 
 
-def build_genre_revenue_state(
-    movie_silver: DataFrame,
-    genres_silver: DataFrame,
-    genre_array_col: str = "Genres_Id",
-) -> DataFrame:
-    """Additive per-genre state (STATE_COLS) — the maintainable form of the
-    mart. Same explode + broadcast-dim plan as the mart, but sums are kept in
-    integer cents / integer runtime so signed CDC deltas apply exactly."""
-    exploded = movie_silver.select(
-        _cents("Revenue").alias("__rev_c"),
-        _cents("Budget").alias("__bud_c"),
-        F.col("RunTime"),
-        F.explode(genre_array_col).alias("genre_id"),
+def _fact(spec: StarSpec, rows: DataFrame, measures: list, prefix: str = "") -> DataFrame:
+    """`measures` plus the mart id read from the `prefix`ed FK column: one row
+    per id, so an array FK explodes."""
+    fk = F.col(prefix + spec.fk)
+    return rows.select(
+        *measures, (F.explode(fk) if spec.exploded else fk).alias(spec.mart_id)
     )
-    dim = F.broadcast(
-        genres_silver.select(
-            F.col("Id").alias("genre_id"), F.col("name").alias("genre_name")
+
+
+def _dim(spec: StarSpec, dim: DataFrame) -> DataFrame:
+    """The dimension as (mart id, mart label), broadcast."""
+    return F.broadcast(
+        dim.select(
+            F.col("Id").alias(spec.mart_id), F.col(spec.dim_label).alias(spec.mart_label)
         )
     )
+
+
+def build_state(spec: StarSpec, movie_silver: DataFrame, dim: DataFrame) -> DataFrame:
+    """Additive per-key state (STATE_COLS) — the maintainable form of the
+    mart. Same fact + broadcast-dim plan as the mart, but sums are kept in
+    integer cents / integer runtime so signed CDC deltas apply exactly."""
+    fact = _fact(
+        spec,
+        movie_silver,
+        [_cents("Revenue").alias("__rev_c"), _cents("Budget").alias("__bud_c"), F.col("RunTime")],
+    )
     return (
-        exploded.join(dim, "genre_id")
-        .groupBy("genre_id", "genre_name")
+        fact.join(_dim(spec, dim), spec.mart_id)
+        .groupBy(spec.mart_id, spec.mart_label)
         .agg(
             F.count(F.lit(1)).alias("n_movies"),
             F.sum("__rev_c").alias("revenue_cents"),
@@ -83,15 +129,15 @@ def build_genre_revenue_state(
     )
 
 
-def finalize_genre_revenue(state: DataFrame) -> DataFrame:
-    """State → the published mart schema (same columns as
-    build_genre_revenue_mart): cents back to 2-decimal money, avg over
-    non-NULL runtimes, genres with no remaining movies dropped."""
+def finalize(spec: StarSpec, state: DataFrame) -> DataFrame:
+    """State → the published mart schema (same columns as build_mart): cents
+    back to 2-decimal money, avg over non-NULL runtimes, keys with no
+    remaining movies dropped."""
     return (
         state.filter(F.col("n_movies") > 0)
         .select(
-            "genre_id",
-            "genre_name",
+            spec.mart_id,
+            spec.mart_label,
             "n_movies",
             F.round(F.col("revenue_cents") / 100.0, 2).alias("total_revenue"),
             F.round(F.col("budget_cents") / 100.0, 2).alias("total_budget"),
@@ -99,51 +145,47 @@ def finalize_genre_revenue(state: DataFrame) -> DataFrame:
                 F.col("runtime_sum").cast("double") / F.col("runtime_n"), 4
             ).alias("avg_runtime"),
         )
-        .orderBy("genre_id")
+        .orderBy(spec.mart_id, spec.mart_label)
     )
 
 
-def apply_genre_revenue_delta(
-    state: DataFrame, changes: DataFrame, genres_silver: DataFrame
+def apply_delta(
+    spec: StarSpec, state: DataFrame, changes: DataFrame, dim: DataFrame
 ) -> DataFrame:
     """Incremental view maintenance: fold a CDC change feed
     (operators.cdc.snapshot_diff output over movie rows, compare_cols =
-    [Revenue, Budget, RunTime, Genres_Id]) into the additive state WITHOUT
+    [Revenue, Budget, RunTime, <spec.fk>]) into the additive state WITHOUT
     touching unchanged movies. Deleted and updated rows retract their OLD
-    contribution (sign -1 over the old genre array); inserted and updated rows
-    add their NEW contribution (sign +1). Because the state is integral, the
+    contribution (sign -1 over the old FK); inserted and updated rows add
+    their NEW contribution (sign +1), so a genre-set change or a language
+    move is a retire/insert pair. Because the state is integral, the
     maintained state equals a from-scratch rebuild BIT-FOR-BIT — the IVM
     contract float sums cannot give. At 100 TB the change feed is
-    days-of-churn-sized, so this plan touches |changes| rows + |genres| state
-    rows instead of the full fact history."""
+    days-of-churn-sized, so this plan touches |changes| rows + |dimension|
+    state rows instead of the full fact history."""
     changed = changes.filter(F.col("change_type") != "unchanged")
-    old_side = changed.filter(
-        F.col("change_type").isin("deleted", "updated")
-    ).select(
-        F.lit(-1).alias("__sign"),
-        F.round(F.col("old_Revenue") * 100).cast("bigint").alias("__rev_c"),
-        F.round(F.col("old_Budget") * 100).cast("bigint").alias("__bud_c"),
-        F.col("old_RunTime").alias("RunTime"),
-        F.explode("old_Genres_Id").alias("genre_id"),
-    )
-    new_side = changed.filter(
-        F.col("change_type").isin("inserted", "updated")
-    ).select(
-        F.lit(1).alias("__sign"),
-        F.round(F.col("new_Revenue") * 100).cast("bigint").alias("__rev_c"),
-        F.round(F.col("new_Budget") * 100).cast("bigint").alias("__bud_c"),
-        F.col("new_RunTime").alias("RunTime"),
-        F.explode("new_Genres_Id").alias("genre_id"),
-    )
-    dim = F.broadcast(
-        genres_silver.select(
-            F.col("Id").alias("genre_id"), F.col("name").alias("genre_name")
+    old_side, new_side = (
+        _fact(
+            spec,
+            changed.filter(F.col("change_type").isin(*kinds)),
+            [
+                F.lit(sign).alias("__sign"),
+                _cents(prefix + "Revenue").alias("__rev_c"),
+                _cents(prefix + "Budget").alias("__bud_c"),
+                F.col(prefix + "RunTime").alias("RunTime"),
+            ],
+            prefix,
+        )
+        for sign, prefix, kinds in (
+            (-1, "old_", ("deleted", "updated")),
+            (1, "new_", ("inserted", "updated")),
         )
     )
+    keys = (spec.mart_id, spec.mart_label)
     delta = (
         old_side.unionByName(new_side)
-        .join(dim, "genre_id")
-        .groupBy("genre_id", "genre_name")
+        .join(_dim(spec, dim), spec.mart_id)
+        .groupBy(*keys)
         .agg(
             F.sum("__sign").alias("d_n"),
             F.sum(F.col("__sign") * F.col("__rev_c")).alias("d_rev"),
@@ -158,14 +200,13 @@ def apply_genre_revenue_delta(
     )
     # r15: state + delta merge as UNION → one hash re-aggregate instead of a
     # full-outer join — integer sums are associative, so summing the two
-    # contribution rows per genre equals the coalesce-add over the joined
-    # row bit-for-bit (either side may be absent → one-row sum), and the
-    # plan drops the join's two sort+exchange legs (full outer cannot
-    # broadcast) for one |genres|-keyed exchange.
-    s = state.select("genre_id", "genre_name", *STATE_COLS)
+    # contribution rows per key equals the coalesce-add over the joined row
+    # bit-for-bit (either side may be absent → one-row sum), and the plan
+    # drops the join's two sort+exchange legs (full outer cannot broadcast)
+    # for one |dimension|-keyed exchange.
+    s = state.select(*keys, *STATE_COLS)
     d = delta.select(
-        "genre_id",
-        "genre_name",
+        *keys,
         F.col("d_n").alias("n_movies"),
         F.col("d_rev").alias("revenue_cents"),
         F.col("d_bud").alias("budget_cents"),
@@ -174,7 +215,7 @@ def apply_genre_revenue_delta(
     )
     return (
         s.unionByName(d)
-        .groupBy("genre_id", "genre_name")
+        .groupBy(*keys)
         # NULL edge (r15 ADVICE): when a column is NULL on the ONLY
         # contributing side (delta-only key with an all-NULL measure, or a
         # state row whose runtime_sum is NULL from all-NULL runtimes),
@@ -186,214 +227,22 @@ def apply_genre_revenue_delta(
     )
 
 
-def build_genre_revenue_mart(
-    movie_silver: DataFrame,
-    genres_silver: DataFrame,
-    genre_array_col: str = "Genres_Id",
-) -> DataFrame:
-    """(genre_id, genre_name, n_movies, total_revenue, total_budget,
-    avg_runtime) — one row per genre, ordered by genre_id."""
-    exploded = movie_silver.select(
-        F.col("Revenue"),
-        F.col("Budget"),
-        F.col("RunTime"),
-        F.explode(genre_array_col).alias("genre_id"),
-    )
-    dim = F.broadcast(
-        genres_silver.select(
-            F.col("Id").alias("genre_id"), F.col("name").alias("genre_name")
-        )
-    )
+def build_mart(spec: StarSpec, movie_silver: DataFrame, dim: DataFrame) -> DataFrame:
+    """(id, label, n_movies, total_revenue, total_budget, avg_runtime) — one
+    row per dimension row, ordered by (id, label). With the reference's
+    degenerate language dim (all Id=1) every language row aggregates every
+    movie — §8.3 parity, reproduced rather than silently corrected."""
+    fact = _fact(spec, movie_silver, [F.col("Revenue"), F.col("Budget"), F.col("RunTime")])
     return (
-        exploded.join(dim, "genre_id")
-        .groupBy("genre_id", "genre_name")
+        fact.join(_dim(spec, dim), spec.mart_id)
+        .groupBy(spec.mart_id, spec.mart_label)
         .agg(
             F.count(F.lit(1)).alias("n_movies"),
             F.round(F.sum("Revenue"), 2).alias("total_revenue"),
             F.round(F.sum("Budget"), 2).alias("total_budget"),
             F.round(F.avg("RunTime"), 4).alias("avg_runtime"),
         )
-        .orderBy("genre_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Second star mart (r8): language revenue — the OTHER foreign key the
-# reference's star sketch names (README.md:10-15 draws movie→language next to
-# movie→genre; SURVEY.md §2.9 notes `Language_Id` exists only to enable this
-# join). Unlike genres, the FK is SCALAR (one language per movie), so the
-# rollup has no explode — a plain broadcast-dim hash join + one aggregate on
-# ~|languages| keys: the cheapest possible star shape at any fact scale.
-#
-# The reference's language dimension is DEGENERATE (§8.3 quirk 3: every
-# language row gets Id=1, and movies carry Language_Id=1, so the join fans
-# every movie out to every language). Both modes are first-class here:
-# `build_language_revenue_mart` takes whatever dim it is given — a fixed dim
-# (unique ids) produces the real mart; the parity dim reproduces the
-# reference's fanout, made visible as identical per-language totals. The
-# medallion gold stage materializes the parity form (its silver tables ARE
-# the reference's), and the suite oracles both.
-# ---------------------------------------------------------------------------
-
-
-def build_language_revenue_state(
-    movie_silver: DataFrame,
-    language_silver: DataFrame,
-    fk_col: str = "Language_Id",
-) -> DataFrame:
-    """Additive per-language state (STATE_COLS) — same integral-sum contract
-    as the genre state, minus the explode (scalar FK)."""
-    fact = movie_silver.select(
-        _cents("Revenue").alias("__rev_c"),
-        _cents("Budget").alias("__bud_c"),
-        F.col("RunTime"),
-        F.col(fk_col).alias("language_id"),
-    )
-    dim = F.broadcast(
-        language_silver.select(
-            F.col("Id").alias("language_id"),
-            F.col("OriginalLanguage").alias("language"),
-        )
-    )
-    return (
-        fact.join(dim, "language_id")
-        .groupBy("language_id", "language")
-        .agg(
-            F.count(F.lit(1)).alias("n_movies"),
-            F.sum("__rev_c").alias("revenue_cents"),
-            F.sum("__bud_c").alias("budget_cents"),
-            F.sum(F.col("RunTime").cast("bigint")).alias("runtime_sum"),
-            F.count("RunTime").alias("runtime_n"),
-        )
-    )
-
-
-def finalize_language_revenue(state: DataFrame) -> DataFrame:
-    """State → published mart schema (cents to 2-decimal money, avg over
-    non-NULL runtimes, languages with no remaining movies dropped)."""
-    return (
-        state.filter(F.col("n_movies") > 0)
-        .select(
-            "language_id",
-            "language",
-            "n_movies",
-            F.round(F.col("revenue_cents") / 100.0, 2).alias("total_revenue"),
-            F.round(F.col("budget_cents") / 100.0, 2).alias("total_budget"),
-            F.round(
-                F.col("runtime_sum").cast("double") / F.col("runtime_n"), 4
-            ).alias("avg_runtime"),
-        )
-        .orderBy("language_id", "language")
-    )
-
-
-def apply_language_revenue_delta(
-    state: DataFrame,
-    changes: DataFrame,
-    language_silver: DataFrame,
-) -> DataFrame:
-    """Fold a CDC change feed (snapshot_diff over movie rows, compare_cols =
-    [Revenue, Budget, RunTime, Language_Id]) into the additive language state
-    — the same retire(-old)/insert(+new) signed-delta plan as the genre IVM,
-    with the scalar FK in place of the exploded array. Integral state ⇒ the
-    maintained mart equals a from-scratch rebuild bit-for-bit."""
-    changed = changes.filter(F.col("change_type") != "unchanged")
-    old_side = changed.filter(
-        F.col("change_type").isin("deleted", "updated")
-    ).select(
-        F.lit(-1).alias("__sign"),
-        F.round(F.col("old_Revenue") * 100).cast("bigint").alias("__rev_c"),
-        F.round(F.col("old_Budget") * 100).cast("bigint").alias("__bud_c"),
-        F.col("old_RunTime").alias("RunTime"),
-        F.col("old_Language_Id").alias("language_id"),
-    )
-    new_side = changed.filter(
-        F.col("change_type").isin("inserted", "updated")
-    ).select(
-        F.lit(1).alias("__sign"),
-        F.round(F.col("new_Revenue") * 100).cast("bigint").alias("__rev_c"),
-        F.round(F.col("new_Budget") * 100).cast("bigint").alias("__bud_c"),
-        F.col("new_RunTime").alias("RunTime"),
-        F.col("new_Language_Id").alias("language_id"),
-    )
-    dim = F.broadcast(
-        language_silver.select(
-            F.col("Id").alias("language_id"),
-            F.col("OriginalLanguage").alias("language"),
-        )
-    )
-    delta = (
-        old_side.unionByName(new_side)
-        .join(dim, "language_id")
-        .groupBy("language_id", "language")
-        .agg(
-            F.sum("__sign").alias("d_n"),
-            F.sum(F.col("__sign") * F.col("__rev_c")).alias("d_rev"),
-            F.sum(F.col("__sign") * F.col("__bud_c")).alias("d_bud"),
-            F.sum(
-                F.col("__sign") * F.coalesce(F.col("RunTime").cast("bigint"), F.lit(0))
-            ).alias("d_rt"),
-            F.sum(
-                F.when(F.col("RunTime").isNotNull(), F.col("__sign")).otherwise(0)
-            ).alias("d_rtn"),
-        )
-    )
-    # r15: union + one hash re-aggregate in place of the full-outer join —
-    # see apply_genre_revenue_delta (integer sums make the two forms
-    # bit-identical; the join's sort+exchange legs disappear).
-    s = state.select("language_id", "language", *STATE_COLS)
-    d = delta.select(
-        "language_id",
-        "language",
-        F.col("d_n").alias("n_movies"),
-        F.col("d_rev").alias("revenue_cents"),
-        F.col("d_bud").alias("budget_cents"),
-        F.col("d_rt").alias("runtime_sum"),
-        F.col("d_rtn").alias("runtime_n"),
-    )
-    return (
-        s.unionByName(d)
-        .groupBy("language_id", "language")
-        # NULL edge (r15 ADVICE): when a column is NULL on the ONLY
-        # contributing side (delta-only key with an all-NULL measure, or a
-        # state row whose runtime_sum is NULL from all-NULL runtimes),
-        # SUM over the union would publish NULL where the old
-        # full_outer+coalesce merge published 0 — coalesce the aggregate
-        # back to 0 so the union form keeps the join form's semantics on
-        # every input, not just the fixtures.
-        .agg(*[F.coalesce(F.sum(c), F.lit(0).cast("bigint")).alias(c) for c in STATE_COLS])
-    )
-
-
-def build_language_revenue_mart(
-    movie_silver: DataFrame,
-    language_silver: DataFrame,
-    fk_col: str = "Language_Id",
-) -> DataFrame:
-    """(language_id, language, n_movies, total_revenue, total_budget,
-    avg_runtime) — one row per dimension row. With a FIXED dim (unique ids)
-    this is the real per-language mart; with the reference's degenerate dim
-    (all Id=1) every language row aggregates every movie — §8.3 parity,
-    reproduced rather than silently corrected."""
-    fact = movie_silver.select(
-        "Revenue", "Budget", "RunTime", F.col(fk_col).alias("language_id")
-    )
-    dim = F.broadcast(
-        language_silver.select(
-            F.col("Id").alias("language_id"),
-            F.col("OriginalLanguage").alias("language"),
-        )
-    )
-    return (
-        fact.join(dim, "language_id")
-        .groupBy("language_id", "language")
-        .agg(
-            F.count(F.lit(1)).alias("n_movies"),
-            F.round(F.sum("Revenue"), 2).alias("total_revenue"),
-            F.round(F.sum("Budget"), 2).alias("total_budget"),
-            F.round(F.avg("RunTime"), 4).alias("avg_runtime"),
-        )
-        .orderBy("language_id", "language")
+        .orderBy(spec.mart_id, spec.mart_label)
     )
 
 
@@ -403,11 +252,11 @@ def publish_marts(spark: SparkSession, config: PipelineConfig) -> int:
     zone and register each as `<db>.<mart>_gold`. The reference's README
     sketches Bronze/Silver/Gold but its pipeline stops at Silver (reference
     README.md:10-15). Overwrite is correct: gold is derived and silver is its
-    source of truth (churn-sized refreshes use the IVM path,
-    apply_genre_revenue_delta). One derivation for both variants keeps
-    batch ≡ incremental true through gold. The language mart is the §8.3
-    parity form, since the silver language dim is the reference's degenerate
-    one (language_projection(degenerate=False) upstream makes it real).
+    source of truth (churn-sized refreshes use the IVM path, apply_delta).
+    One derivation for both variants keeps batch ≡ incremental true through
+    gold. The language mart is the §8.3 parity form, since the silver
+    language dim is the reference's degenerate one
+    (language_projection(degenerate=False) upstream makes it real).
     Returns the genre mart's row count, observed by its write job."""
     # resolved per call, so a wrapper on sources.batch.read_parquet (the
     # layered benchmark's tracing) also sees the gold stage's reads
@@ -415,11 +264,11 @@ def publish_marts(spark: SparkSession, config: PipelineConfig) -> int:
 
     movie = read_parquet(spark, config.silver_path("movie"))
     marts = {
-        "genre_revenue": build_genre_revenue_mart(
-            movie, read_parquet(spark, config.silver_path("genres"))
+        "genre_revenue": build_mart(
+            GENRE, movie, read_parquet(spark, config.silver_path("genres"))
         ),
-        "language_revenue": build_language_revenue_mart(
-            movie, read_parquet(spark, config.silver_path("language"))
+        "language_revenue": build_mart(
+            LANGUAGE, movie, read_parquet(spark, config.silver_path("language"))
         ),
     }
     rows = {}

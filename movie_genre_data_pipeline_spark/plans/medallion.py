@@ -2,13 +2,17 @@
 (SURVEY.md §2.9 raw_to_bronze / bronze_to_silver / silver_update,
 Batch_notebook/main.py:10-65).
 
+The transforms are plans/movie_transforms.py, shared with the incremental
+variant. This module reads new bronze rows with a status filter and flips
+status in place; its I/O goes through its own names so a tracer can wrap them.
+
 Differences from the reference (all deliberate; SURVEY.md §4 "missed optimizations"
 and §8):
 - The thrice-consumed bronze frame is read once per stage from the materialized
   bronze table — bronze IS the cache; no re-derivation from raw JSON.
-- The clean/quarantine split dedups ONCE (§8.7) and the deduped projection is
-  `.cache()`d across the two writes + two status merges (§4: the reference re-ran
-  the scan for all 5 downstream actions).
+- The clean/quarantine split dedups ONCE (§8.7) and both halves are
+  `.cache()`d across the silver write and the status merge (§4: the reference
+  re-ran the scan for all 5 downstream actions).
 - Status merges key on the `value` struct for reference parity (J1,
   operations/operations.py:119), via join-based upsert + staged rewrite instead of
   Delta MERGE. Each stage merges once: `bronze_to_silver` flips its loaded and
@@ -23,19 +27,19 @@ and §8):
 
 from __future__ import annotations
 
+from functools import reduce
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark import fsutil
 from movie_genre_data_pipeline_spark.config import PipelineConfig
-from movie_genre_data_pipeline_spark.operators.cleanse import quarantine_split
 from movie_genre_data_pipeline_spark.operators.enrich import (
     STATUS_LOADED,
     STATUS_NEW,
     STATUS_QUARANTINED,
-    with_audit_columns,
 )
-from movie_genre_data_pipeline_spark.operators.nested import expand_struct, explode_array
 from movie_genre_data_pipeline_spark.operators.upsert import (
     upsert_insert_missing,
     upsert_update,
@@ -43,9 +47,10 @@ from movie_genre_data_pipeline_spark.operators.upsert import (
 from movie_genre_data_pipeline_spark.operators.writers import write_partitioned
 from movie_genre_data_pipeline_spark.plans.gold import publish_marts
 from movie_genre_data_pipeline_spark.plans.movie_transforms import (
-    genres_projection,
-    language_projection,
-    movie_projection,
+    SILVER_TABLES,
+    bronze_envelope,
+    repair,
+    silver_split,
 )
 from movie_genre_data_pipeline_spark.sources.batch import read_multiline_json, read_parquet
 
@@ -63,19 +68,16 @@ class MedallionPipeline:
 
     # -- stage 1 ------------------------------------------------------------
     def raw_to_bronze(self, raw_path: str | None = None, mode: str = "overwrite") -> None:
-        """Batch_notebook/main.py:10-17: read multiline JSON, explode the `movie`
-        array, wrap in the bronze envelope, write partitioned by p_ingestdate."""
+        """Batch_notebook/main.py:10-17: read multiline JSON, wrap it in the
+        bronze envelope, write partitioned by p_ingestdate."""
         raw = read_multiline_json(self.spark, raw_path or self.config.raw_path)
-        exploded = explode_array(raw.select("movie"), "movie", alias="value")
-        bronze = with_audit_columns(
-            exploded, self.config.datasource_name, self.config.clock, "value"
-        )
+        bronze = bronze_envelope(raw, self.config.datasource_name, self.config.clock)
         write_partitioned(bronze, self.config.bronze_path, "p_ingestdate", mode=mode)
 
     # -- stage 2 ------------------------------------------------------------
     def bronze_to_silver(self) -> dict[str, int]:
         """Batch_notebook/main.py:21-46: status=="new" → three silver branches +
-        two status merges. Returns row counts per branch (the reference printed
+        one status merge. Returns row counts per branch (the reference printed
         them interactively).
 
         Writes are APPEND + insert-missing, like the reference's append writers
@@ -86,40 +88,21 @@ class MedallionPipeline:
         previously loaded silver rows from any touched partition. Full reset =
         fsutil.remove_dir on the layer paths (reference: rawToBronze.py:7 rm -r).
         """
-        cfg = self.config
-        bronze_new = read_parquet(self.spark, cfg.bronze_path).filter(
+        bronze_new = read_parquet(self.spark, self.config.bronze_path).filter(
             F.col("status") == STATUS_NEW
         )
-        augmented = expand_struct(bronze_new, "value")
-
-        movie = movie_projection(augmented, cfg.budget_floor)
-        clean, quarantined = quarantine_split(movie, F.col("RunTime") >= 0)
-        clean = clean.cache()
-        quarantined = quarantined.cache()
-
-        self._append_new_rows(
-            clean.drop("value"), cfg.silver_path("movie"),
-            on=["Id"], partition_column="p_CreatedDate",
+        clean, quarantined, genres, language = silver_split(
+            bronze_new, self.config.budget_floor
         )
-        genres = genres_projection(augmented)
-        self._append_new_rows(
-            genres, cfg.silver_path("genres"), on=list(genres.columns)
-        )
-        language = language_projection(augmented)
-        self._append_new_rows(
-            language, cfg.silver_path("language"), on=list(language.columns)
-        )
+        clean, quarantined = clean.cache(), quarantined.cache()
+        self._append_missing(movie=clean.drop("value"), genres=genres, language=language)
 
         counts = {
             "clean": clean.count(),
             "quarantined": quarantined.count(),
             "genres": genres.count(),
         }
-        self._update_bronze_status(
-            _with_status(clean, STATUS_LOADED).unionByName(
-                _with_status(quarantined, STATUS_QUARANTINED)
-            )
-        )
+        self._update_bronze_status({STATUS_LOADED: clean, STATUS_QUARANTINED: quarantined})
         clean.unpersist()
         quarantined.unpersist()
         return counts
@@ -129,54 +112,40 @@ class MedallionPipeline:
         """Batch_notebook/main.py:50-59: repair loop — quarantined rows get
         RunTime=abs(RunTime), are inserted into movie_silver if their Id is absent
         (J2), and their bronze status flips to loaded."""
-        cfg = self.config
-        quarantined = read_parquet(self.spark, cfg.bronze_path).filter(
+        quarantined = read_parquet(self.spark, self.config.bronze_path).filter(
             F.col("status") == STATUS_QUARANTINED
         )
-        augmented = expand_struct(quarantined, "value").distinct()
-        repaired = augmented.withColumn("RunTime", F.abs(F.col("RunTime")))
-        silver_ready = movie_projection(repaired, cfg.budget_floor).cache()
-
-        target = read_parquet(self.spark, cfg.silver_path("movie"))
-        new_rows = upsert_insert_missing(
-            target, silver_ready.drop("value"), on="Id"
-        )
-        write_partitioned(
-            new_rows, cfg.silver_path("movie"), "p_CreatedDate", mode="append"
-        )
+        silver_ready = repair(quarantined, self.config.budget_floor).cache()
+        self._append_missing(movie=silver_ready.drop("value"))
         n = silver_ready.count()
-        self._update_bronze_status(_with_status(silver_ready, STATUS_LOADED))
+        self._update_bronze_status({STATUS_LOADED: silver_ready})
         silver_ready.unpersist()
         return n
 
     # -- shared -------------------------------------------------------------
-    def _append_new_rows(
-        self,
-        df: DataFrame,
-        path: str,
-        on: list[str],
-        partition_column: str | None = None,
-    ) -> None:
-        """J2-style incremental load: append only the rows whose key is absent
-        from the existing table (anti-join delta — no target rewrite). First
-        write (no table yet) appends everything."""
-        from pathlib import Path
+    def _append_missing(self, **tables: DataFrame) -> None:
+        """J2-style incremental load: append to each silver table only the rows
+        whose natural key (SILVER_TABLES) it lacks (anti-join delta — no target
+        rewrite). A first write (no table yet) appends everything."""
+        for table, rows in tables.items():
+            key, partition_column = SILVER_TABLES[table]
+            path = self.config.silver_path(table)
+            if Path(path).exists():
+                rows = upsert_insert_missing(read_parquet(self.spark, path), rows, on=key)
+            write_partitioned(rows, path, partition_column, mode="append")
 
-        delta = df
-        if Path(path).exists():
-            target = read_parquet(self.spark, path)
-            delta = upsert_insert_missing(target, df, on=on)
-        write_partitioned(delta, path, partition_column, mode="append")
-
-    def _update_bronze_status(self, statuses: DataFrame) -> None:
+    def _update_bronze_status(self, rows_by_status: dict[str, DataFrame]) -> None:
         """J1 status flip (operations/operations.py:112-129): MERGE bronze ON
-        bronze.value = df.value WHEN MATCHED UPDATE SET status, for a
-        (value, status) frame whose values each carry one status. Emulated as
+        bronze.value = df.value WHEN MATCHED UPDATE SET status, for disjoint
+        row sets, each flipped to its status in one merge. Emulated as
         a broadcast left join + matched-marker update + staged PARTITION-scoped
         rewrite: only p_ingestdate partitions containing matched rows are
         rewritten (at 100 TB a full-table rewrite per status flip is the
         difference between minutes and days)."""
-        source = statuses.distinct()
+        source = reduce(DataFrame.unionByName, [
+            rows.select("value", F.lit(status).alias("status"))
+            for status, rows in rows_by_status.items()
+        ]).distinct()
         bronze = read_parquet(self.spark, self.config.bronze_path)
         touched = [
             r[0]
@@ -213,8 +182,3 @@ class MedallionPipeline:
         counts["repaired"] = self.silver_update()
         counts["gold_genres"] = self.silver_to_gold()
         return counts
-
-
-def _with_status(rows: DataFrame, status: str) -> DataFrame:
-    """(value, status) rows for `_update_bronze_status`."""
-    return rows.select("value", F.lit(status).alias("status"))

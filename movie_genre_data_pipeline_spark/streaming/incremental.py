@@ -21,6 +21,10 @@ the payload (md5 of the canonical JSON). Current status = max-precedence entry
 (loaded > quarantined > new) — order-free and idempotent, so replays are safe.
 tests/test_incremental.py asserts the two variants converge to identical silver
 tables and per-record statuses.
+
+The transforms are the batch variant's (plans/movie_transforms.py, then
+plans/gold.publish_marts); its I/O goes through this module's own names so a
+tracer can wrap them.
 """
 
 from __future__ import annotations
@@ -35,16 +39,15 @@ from movie_genre_data_pipeline_spark.operators.enrich import (
     STATUS_LOADED,
     STATUS_NEW,
     STATUS_QUARANTINED,
-    with_audit_columns,
 )
-from movie_genre_data_pipeline_spark.operators.nested import expand_struct, explode_array
 from movie_genre_data_pipeline_spark.operators.upsert import upsert_insert_missing
 from movie_genre_data_pipeline_spark.operators.writers import write_partitioned
 from movie_genre_data_pipeline_spark.plans.gold import publish_marts
 from movie_genre_data_pipeline_spark.plans.movie_transforms import (
-    genres_projection,
-    language_projection,
-    movie_projection,
+    SILVER_TABLES,
+    bronze_envelope,
+    repair,
+    silver_split,
 )
 from movie_genre_data_pipeline_spark.sources.batch import (
     freeze_schema,
@@ -93,12 +96,8 @@ class IncrementalMedallionPipeline:
             return keys.select("vkey", F.lit(STATUS_NEW).alias("status"))
         ledger = read_parquet(self.spark, self.ledger_path)
         latest = ledger.groupBy("vkey").agg(F.max("precedence").alias("p"))
-        inv = {v: k for k, v in _PRECEDENCE.items()}
         status_col = F.coalesce(
-            *[
-                F.when(F.col("p") == p, F.lit(inv[p]))
-                for p in sorted(inv, reverse=True)
-            ],
+            *[F.when(F.col("p") == p, F.lit(s)) for s, p in _PRECEDENCE.items()],
             F.lit(STATUS_NEW),
         )
         return keys.join(latest, "vkey", "left").select(
@@ -110,13 +109,9 @@ class IncrementalMedallionPipeline:
         """S3/S5/W4/ST1/ST2/ST6: incremental JSON discovery with frozen schema,
         exactly-once append into partitioned Parquet bronze."""
         raw_path = raw_path or self.config.raw_path
-        sample = read_multiline_json(self.spark, raw_path)
-        schema = freeze_schema(sample)
+        schema = freeze_schema(read_multiline_json(self.spark, raw_path))
         stream = read_file_stream(self.spark, raw_path, schema)
-        exploded = explode_array(stream.select("movie"), "movie", alias="value")
-        bronze = with_audit_columns(
-            exploded, self.config.datasource_name, self.config.clock, "value"
-        )
+        bronze = bronze_envelope(stream, self.config.datasource_name, self.config.clock)
         # A plain file sink, not batch_writer's rebalanced layout: a streaming
         # query runs without AQE, so the hint would be a hash repartition on
         # p_ingestdate, and every row of one arrival shares that date, so a
@@ -136,10 +131,9 @@ class IncrementalMedallionPipeline:
     # -- stage 2: bronze → silver (stream + foreachBatch upserts) ----------------
     def bronze_to_silver(self) -> None:
         """S4/W5/ST5: stream the bronze directory, process each micro-batch with
-        the same transforms as the batch plan, upsert into silver, and append
+        the batch plan's silver split, insert-missing into silver, and append
         status transitions to the ledger."""
-        bronze_batch = read_parquet(self.spark, self.config.bronze_path)
-        schema = freeze_schema(bronze_batch)
+        schema = freeze_schema(read_parquet(self.spark, self.config.bronze_path))
         stream = (
             self.spark.readStream.format("parquet")
             .schema(schema)
@@ -157,55 +151,41 @@ class IncrementalMedallionPipeline:
         q.awaitTermination()
 
     def _process_bronze_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        cfg = self.config
-        augmented = expand_struct(batch_df, "value").distinct().cache()
-
-        movie = movie_projection(augmented, cfg.budget_floor)
-        clean = movie.filter(F.col("RunTime") >= 0).cache()
-        quarantined = movie.filter(~(F.col("RunTime") >= 0)).cache()
-
-        self._insert_missing_silver(clean.drop("value"), "movie", "Id", "p_CreatedDate")
-        # dims: no global sort in the stream path (SURVEY.md §8.9) and insert-only
-        genres = genres_projection(augmented, order=False)
-        self._insert_missing_silver(genres, "genres", "Id", None)
-        language = language_projection(augmented)
-        self._insert_missing_silver(language, "language", "OriginalLanguage", None)
-
-        self._append_ledger(clean.select("value"), STATUS_LOADED)
-        self._append_ledger(quarantined.select("value"), STATUS_QUARANTINED)
-        augmented.unpersist()
+        clean, quarantined, genres, language = silver_split(
+            batch_df, self.config.budget_floor
+        )
+        clean, quarantined = clean.cache(), quarantined.cache()
+        self._append_missing(movie=clean.drop("value"), genres=genres, language=language)
+        self._append_ledger(clean, STATUS_LOADED)
+        self._append_ledger(quarantined, STATUS_QUARANTINED)
         clean.unpersist()
         quarantined.unpersist()
 
-    def _insert_missing_silver(
-        self, rows: DataFrame, table: str, key: str, partition_col: str | None
-    ) -> None:
-        path = self.config.silver_path(table)
-        if Path(path).exists():
-            target = read_parquet(self.spark, path)
-            rows = upsert_insert_missing(target, rows, on=key)
-        write_partitioned(rows, path, partition_col, mode="append")
+    def _append_missing(self, **tables: DataFrame) -> None:
+        """Append to each silver table only the rows whose natural key
+        (SILVER_TABLES) it lacks; a first write appends everything."""
+        for table, rows in tables.items():
+            key, partition_column = SILVER_TABLES[table]
+            path = self.config.silver_path(table)
+            if Path(path).exists():
+                rows = upsert_insert_missing(read_parquet(self.spark, path), rows, on=key)
+            write_partitioned(rows, path, partition_column, mode="append")
 
     # -- stage 3: repair loop ------------------------------------------------------
     def silver_update(self) -> int:
         """Quarantined records (per ledger) get RunTime=abs(RunTime), insert-if-
         missing into silver, and a 'loaded' ledger entry."""
-        cfg = self.config
-        bronze = read_parquet(self.spark, cfg.bronze_path)
+        bronze = read_parquet(self.spark, self.config.bronze_path)
         status = self.current_status().filter(F.col("status") == STATUS_QUARANTINED)
         quarantined = (
             bronze.withColumn("vkey", value_key("value"))
             .join(F.broadcast(status), "vkey")
             .drop("vkey", "status")
         )
-        augmented = expand_struct(quarantined, "value").distinct()
-        repaired = augmented.withColumn("RunTime", F.abs(F.col("RunTime")))
-        silver_ready = movie_projection(repaired, cfg.budget_floor).cache()
+        silver_ready = repair(quarantined, self.config.budget_floor).cache()
         n = silver_ready.count()
-        self._insert_missing_silver(
-            silver_ready.drop("value"), "movie", "Id", "p_CreatedDate"
-        )
-        self._append_ledger(silver_ready.select("value"), STATUS_LOADED)
+        self._append_missing(movie=silver_ready.drop("value"))
+        self._append_ledger(silver_ready, STATUS_LOADED)
         silver_ready.unpersist()
         return n
 

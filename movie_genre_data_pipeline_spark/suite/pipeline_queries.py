@@ -550,7 +550,7 @@ def q_gold_genre_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode on their genre ids, broadcast-join the genre dimension (nation), and
     roll up to one mart row per genre. The plan is one fact scan → explode →
     broadcast hash join → single hash aggregate on ~|genres| keys."""
-    from movie_genre_data_pipeline_spark.plans.gold import build_genre_revenue_mart
+    from movie_genre_data_pipeline_spark.plans.gold import GENRE, build_mart
 
     orders = load(spark, sf_dir, "orders")
     nation = load(spark, sf_dir, "nation")
@@ -568,7 +568,7 @@ def q_gold_genre_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     genre_dim = nation.select(
         F.col("n_nationkey").cast("INTEGER").alias("Id"), F.col("n_name").alias("name")
     )
-    return build_genre_revenue_mart(movies, genre_dim)
+    return build_mart(GENRE, movies, genre_dim)
 
 
 Q_GOLD_GENRE_REVENUE_ORACLE = """
@@ -651,18 +651,19 @@ def q_gold_genre_revenue_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     |changes| + |genres| rows, not the fact history."""
     from movie_genre_data_pipeline_spark.operators.cdc import snapshot_diff
     from movie_genre_data_pipeline_spark.plans.gold import (
-        apply_genre_revenue_delta,
-        build_genre_revenue_state,
-        finalize_genre_revenue,
+        GENRE,
+        apply_delta,
+        build_state,
+        finalize,
     )
 
     snap_a, snap_b, genre_dim = gold_ivm_frames(spark, sf_dir)
     changes = snapshot_diff(
         snap_a, snap_b, ["Id"], ["Revenue", "Budget", "RunTime", "Genres_Id"]
     )
-    state_a = build_genre_revenue_state(snap_a, genre_dim)
-    state_b = apply_genre_revenue_delta(state_a, changes, genre_dim)
-    return finalize_genre_revenue(state_b)
+    state_a = build_state(GENRE, snap_a, genre_dim)
+    state_b = apply_delta(GENRE, state_a, changes, genre_dim)
+    return finalize(GENRE, state_b)
 
 
 Q_GOLD_GENRE_REVENUE_IVM_ORACLE = """
@@ -1183,13 +1184,14 @@ def q_gold_language_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the ADDITIVE state (integer cents) + finalize so the published
     money columns derive from exact integer sums in both engines."""
     from movie_genre_data_pipeline_spark.plans.gold import (
-        build_language_revenue_state,
-        finalize_language_revenue,
+        LANGUAGE,
+        build_state,
+        finalize,
     )
 
     movies = _gold_language_movies(spark, sf_dir)
     dim = _gold_language_dim(spark, sf_dir)
-    return finalize_language_revenue(build_language_revenue_state(movies, dim))
+    return finalize(LANGUAGE, build_state(LANGUAGE, movies, dim))
 
 
 _GOLD_LANGUAGE_MOVIE_CTE = """movie AS (
@@ -1238,9 +1240,10 @@ def q_gold_language_revenue_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch rebuild over B (the oracle) bit-for-bit."""
     from movie_genre_data_pipeline_spark.operators.cdc import snapshot_diff
     from movie_genre_data_pipeline_spark.plans.gold import (
-        apply_language_revenue_delta,
-        build_language_revenue_state,
-        finalize_language_revenue,
+        LANGUAGE,
+        apply_delta,
+        build_state,
+        finalize,
     )
 
     base = _gold_language_movies(spark, sf_dir)
@@ -1268,9 +1271,9 @@ def q_gold_language_revenue_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = snapshot_diff(
         snap_a, snap_b, ["Id"], ["Revenue", "Budget", "RunTime", "Language_Id"]
     )
-    state_a = build_language_revenue_state(snap_a, dim)
-    state_b = apply_language_revenue_delta(state_a, changes, dim)
-    return finalize_language_revenue(state_b)
+    state_a = build_state(LANGUAGE, snap_a, dim)
+    state_b = apply_delta(LANGUAGE, state_a, changes, dim)
+    return finalize(LANGUAGE, state_b)
 
 
 Q_GOLD_LANGUAGE_REVENUE_IVM_ORACLE = """
@@ -1318,8 +1321,9 @@ def q_gold_language_parity_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     switching engines sees the same (buggy) mart until they flip
     language_projection(degenerate=False)."""
     from movie_genre_data_pipeline_spark.plans.gold import (
-        build_language_revenue_state,
-        finalize_language_revenue,
+        LANGUAGE,
+        build_state,
+        finalize,
     )
 
     movies = _gold_language_movies(spark, sf_dir).withColumn(
@@ -1328,7 +1332,7 @@ def q_gold_language_parity_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = _gold_language_dim(spark, sf_dir).withColumn(
         "Id", F.lit(1).cast("INTEGER")
     )
-    return finalize_language_revenue(build_language_revenue_state(movies, dim))
+    return finalize(LANGUAGE, build_state(LANGUAGE, movies, dim))
 
 
 Q_GOLD_LANGUAGE_PARITY_ORACLE = f"""

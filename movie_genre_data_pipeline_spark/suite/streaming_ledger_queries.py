@@ -298,9 +298,10 @@ def q_stream_gold_language_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim."""
     from movie_genre_data_pipeline_spark.operators.cdc import snapshot_diff
     from movie_genre_data_pipeline_spark.plans.gold import (
-        apply_language_revenue_delta,
-        build_language_revenue_state,
-        finalize_language_revenue,
+        LANGUAGE,
+        apply_delta,
+        build_state,
+        finalize,
     )
     from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
         _gold_language_dim,
@@ -335,7 +336,7 @@ def q_stream_gold_language_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("change_type") != "unchanged")
 
     gen = {"n": 0}
-    build_language_revenue_state(snap_a, dim_df).write.parquet(
+    build_state(LANGUAGE, snap_a, dim_df).write.parquet(
         f"{base_dir}/state_0"
     )
     dim = dim_df.localCheckpoint(eager=True)  # reused every micro-batch
@@ -344,14 +345,14 @@ def q_stream_gold_language_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         from movie_genre_data_pipeline_spark.fsutil import vacuum_generations
 
         prev = spark.read.parquet(f"{base_dir}/state_{gen['n']}")
-        nxt = apply_language_revenue_delta(prev, batch_df, dim)
+        nxt = apply_delta(LANGUAGE, prev, batch_df, dim)
         gen["n"] += 1
         nxt.write.parquet(f"{base_dir}/state_{gen['n']}")
         vacuum_generations(base_dir, "state", keep=2)
 
     run_twin(changes, apply_batch, base_dir, 3)
     state = spark.read.parquet(f"{base_dir}/state_{gen['n']}")
-    return finalize_language_revenue(state)
+    return finalize(LANGUAGE, state)
 
 
 QUERIES["stream_gold_language_ivm"] = QuerySpec(

@@ -851,9 +851,10 @@ def q_stream_gold_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold maintenance priced per-batch at |changes| + |genres| rows."""
     from movie_genre_data_pipeline_spark.operators.cdc import snapshot_diff
     from movie_genre_data_pipeline_spark.plans.gold import (
-        apply_genre_revenue_delta,
-        build_genre_revenue_state,
-        finalize_genre_revenue,
+        GENRE,
+        apply_delta,
+        build_state,
+        finalize,
     )
     from movie_genre_data_pipeline_spark.suite.pipeline_queries import (
         gold_ivm_frames,
@@ -866,7 +867,7 @@ def q_stream_gold_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("change_type") != "unchanged")
 
     gen = {"n": 0}
-    build_genre_revenue_state(snap_a, genre_dim).write.parquet(
+    build_state(GENRE, snap_a, genre_dim).write.parquet(
         f"{base_dir}/state_0"
     )
     dim = genre_dim.localCheckpoint(eager=True)  # reused every micro-batch
@@ -875,7 +876,7 @@ def q_stream_gold_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         from movie_genre_data_pipeline_spark.fsutil import vacuum_generations
 
         prev = spark.read.parquet(f"{base_dir}/state_{gen['n']}")
-        nxt = apply_genre_revenue_delta(prev, batch_df, dim)
+        nxt = apply_delta(GENRE, prev, batch_df, dim)
         gen["n"] += 1
         nxt.write.parquet(f"{base_dir}/state_{gen['n']}")
         # reclaim superseded generations; keep=2 preserves read-prev/write-next
@@ -883,7 +884,7 @@ def q_stream_gold_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_twin(changes, apply_batch, base_dir, 3)
     state = spark.read.parquet(f"{base_dir}/state_{gen['n']}")
-    return finalize_genre_revenue(state)
+    return finalize(GENRE, state)
 
 
 def q_stream_dq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:

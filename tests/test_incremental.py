@@ -117,3 +117,38 @@ def test_incremental_rerun_is_idempotent(spark, tmp_path: Path):
     inc.run(str(raw))  # no new files: no-op round
     assert _silver_movie_rows(spark, cfg) == first
     assert read_parquet(spark, cfg.bronze_path).count() == 4
+
+
+def test_renamed_genre_keeps_one_row_in_both_variants(spark, tmp_path: Path):
+    """Both variants key the silver genres table on its natural key `Id`: a
+    genre that comes back under a new name in a later run keeps its first
+    row, so silver holds one row for it and gold reports it once."""
+    clock = Clock(fixed_utc="2024-01-01 00:00:00")
+    runs = [
+        {"movie": [_movie(1, "Alpha", genres=[(1, "Action")])]},
+        {"movie": [_movie(2, "Beta", genres=[(1, "Action Movies")])]},
+    ]
+    batch_cfg = PipelineConfig(root=str(tmp_path / "batch_lake"), clock=clock)
+    inc_cfg = PipelineConfig(root=str(tmp_path / "inc_lake"), clock=clock)
+    batch = MedallionPipeline(spark, batch_cfg)
+    inc = IncrementalMedallionPipeline(spark, inc_cfg)
+    inc_raw = tmp_path / "inc_raw"
+    inc_raw.mkdir()
+    for i, payload in enumerate(runs):
+        batch_raw = tmp_path / f"batch_raw{i}"
+        batch_raw.mkdir()
+        (batch_raw / "movies.json").write_text(json.dumps(payload))
+        batch.raw_to_bronze(str(batch_raw), mode="append")
+        batch.bronze_to_silver()
+        batch.silver_update()
+        batch.silver_to_gold()
+        (inc_raw / f"movies_{i}.json").write_text(json.dumps(payload))
+        inc.run(str(inc_raw))
+
+    for cfg in (batch_cfg, inc_cfg):
+        genres = read_parquet(spark, cfg.silver_path("genres")).filter("Id = 1")
+        assert [tuple(r) for r in genres.collect()] == [(1, "Action")], cfg.root
+        gold = read_parquet(spark, cfg.gold_path("genre_revenue")).filter("genre_id = 1")
+        assert [(r["genre_name"], r["n_movies"]) for r in gold.collect()] == [
+            ("Action", 2)
+        ], cfg.root

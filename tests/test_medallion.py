@@ -150,33 +150,49 @@ def test_null_runtime_in_neither_branch(spark, pipeline_config, null_runtime_raw
     assert status == {7: "loaded", 8: "new"}
 
 
-def test_null_runtime_split_expressions_agree_across_variants(spark):
-    """The batch split (quarantine_split) and the incremental split
-    (streaming/incremental.py:159-160) use the same predicate pair; pin that a
-    NULL row is dropped by BOTH branches of both pairs."""
-    from movie_genre_data_pipeline_spark.operators.cleanse import quarantine_split
+def test_null_runtime_split_expressions_agree_across_variants(
+    spark, pipeline_config, null_runtime_raw_dir
+):
+    """Both variants split silver with the one shared silver_split: a NULL
+    RunTime lands in neither half, so the incremental variant, like the batch
+    one (test_null_runtime_in_neither_branch), leaves the row out of silver
+    and at 'new'."""
+    from movie_genre_data_pipeline_spark.plans.movie_transforms import (
+        bronze_envelope,
+        silver_split,
+    )
+    from movie_genre_data_pipeline_spark.sources.batch import read_multiline_json
+    from movie_genre_data_pipeline_spark.streaming.incremental import value_key
 
-    df = spark.createDataFrame([(1, 10), (2, -5), (3, None)], "Id int, RunTime int")
-    clean, quarantined = quarantine_split(df, F.col("RunTime") >= 0)
-    assert {r["Id"] for r in clean.collect()} == {1}
-    assert {r["Id"] for r in quarantined.collect()} == {2}
-    # incremental variant's literal expressions
-    inc_clean = df.filter(F.col("RunTime") >= 0)
-    inc_quar = df.filter(~(F.col("RunTime") >= 0))
-    assert {r["Id"] for r in inc_clean.collect()} == {1}
-    assert {r["Id"] for r in inc_quar.collect()} == {2}
+    raw = read_multiline_json(spark, null_runtime_raw_dir)
+    bronze = bronze_envelope(raw, "movie.json", pipeline_config.clock)
+    clean, quarantined, _, _ = silver_split(bronze, pipeline_config.budget_floor)
+    assert {r["Id"] for r in clean.collect()} == {7}
+    assert quarantined.count() == 0
+
+    inc = IncrementalMedallionPipeline(spark, pipeline_config)
+    inc.run(null_runtime_raw_dir)
+    silver = read_parquet(spark, pipeline_config.silver_path("movie"))
+    assert sorted(r["Id"] for r in silver.select("Id").collect()) == [7]
+    ids = read_parquet(spark, pipeline_config.bronze_path).select(
+        value_key("value").alias("vkey"), F.col("value.Id").alias("Id")
+    )
+    status = {
+        r["Id"]: r["status"] for r in ids.join(inc.current_status(), "vkey").collect()
+    }
+    assert status == {7: "loaded", 8: "new"}
 
 
 def test_gold_genre_revenue_mart(spark, pipeline_config, raw_movie_dir):
     """Silver→Gold completes the medallion: one mart row per genre, the empty-
     name genre (dropped from the dim) takes its memberships with it, and the
     dim side is broadcast."""
-    from movie_genre_data_pipeline_spark.plans.gold import build_genre_revenue_mart
+    from movie_genre_data_pipeline_spark.plans.gold import GENRE, build_mart
 
     _run(spark, pipeline_config, raw_movie_dir)
     movie = read_parquet(spark, pipeline_config.silver_path("movie"))
     genres = read_parquet(spark, pipeline_config.silver_path("genres"))
-    mart = build_genre_revenue_mart(movie, genres)
+    mart = build_mart(GENRE, movie, genres)
     rows = {r["genre_id"]: r for r in mart.collect()}
     # clean movies: Alpha(genres 1,2) floored to 100k budget, Gamma(1), Epsilon(3,5);
     # genre 2 has an empty name -> not in the dim -> membership dropped
@@ -199,9 +215,10 @@ def test_gold_ivm_equals_rebuild(spark):
     genre-membership change, and a NULL runtime."""
     from movie_genre_data_pipeline_spark.operators.cdc import snapshot_diff
     from movie_genre_data_pipeline_spark.plans.gold import (
-        apply_genre_revenue_delta,
-        build_genre_revenue_state,
-        finalize_genre_revenue,
+        GENRE,
+        apply_delta,
+        build_state,
+        finalize,
     )
 
     schema = (
@@ -232,19 +249,17 @@ def test_gold_ivm_equals_rebuild(spark):
     changes = snapshot_diff(
         snap_a, snap_b, ["Id"], ["Revenue", "Budget", "RunTime", "Genres_Id"]
     )
-    maintained = apply_genre_revenue_delta(
-        build_genre_revenue_state(snap_a, dim), changes, dim
-    )
-    rebuilt = build_genre_revenue_state(snap_b, dim)
+    maintained = apply_delta(GENRE, build_state(GENRE, snap_a, dim), changes, dim)
+    rebuilt = build_state(GENRE, snap_b, dim)
     key = lambda r: (r["genre_id"],)
     m_rows = sorted(map(tuple, maintained.filter("n_movies > 0").collect()))
     r_rows = sorted(map(tuple, rebuilt.collect()))
     assert m_rows == r_rows  # integral state: exact equality, not approx
-    f_m = sorted(map(tuple, finalize_genre_revenue(maintained).collect()))
-    f_r = sorted(map(tuple, finalize_genre_revenue(rebuilt).collect()))
+    f_m = sorted(map(tuple, finalize(GENRE, maintained).collect()))
+    f_r = sorted(map(tuple, finalize(GENRE, rebuilt).collect()))
     assert f_m == f_r
     # sanity on the published mart: genre 2 lost movie 2 (deleted) but gained 5
-    mart = {r["genre_id"]: r for r in finalize_genre_revenue(maintained).collect()}
+    mart = {r["genre_id"]: r for r in finalize(GENRE, maintained).collect()}
     assert mart[2]["n_movies"] == 2  # movies 1 and 5
     assert mart[1]["n_movies"] == 3  # movies 1, 3 (gained), 4
     assert mart[1]["avg_runtime"] == 95.0  # NULL runtime of movie 3 excluded
@@ -256,9 +271,10 @@ def test_gold_language_ivm_equals_rebuild(spark):
     a LANGUAGE MOVE (the scalar-FK retire/insert path), and a NULL runtime."""
     from movie_genre_data_pipeline_spark.operators.cdc import snapshot_diff
     from movie_genre_data_pipeline_spark.plans.gold import (
-        apply_language_revenue_delta,
-        build_language_revenue_state,
-        finalize_language_revenue,
+        LANGUAGE,
+        apply_delta,
+        build_state,
+        finalize,
     )
 
     schema = (
@@ -288,18 +304,18 @@ def test_gold_language_ivm_equals_rebuild(spark):
     changes = snapshot_diff(
         snap_a, snap_b, ["Id"], ["Revenue", "Budget", "RunTime", "Language_Id"]
     )
-    maintained = apply_language_revenue_delta(
-        build_language_revenue_state(snap_a, dim), changes, dim
+    maintained = apply_delta(
+        LANGUAGE, build_state(LANGUAGE, snap_a, dim), changes, dim
     )
-    rebuilt = build_language_revenue_state(snap_b, dim)
+    rebuilt = build_state(LANGUAGE, snap_b, dim)
     m_rows = sorted(map(tuple, maintained.filter("n_movies > 0").collect()))
     r_rows = sorted(map(tuple, rebuilt.collect()))
     assert m_rows == r_rows  # integral state: exact equality
-    f_m = sorted(map(tuple, finalize_language_revenue(maintained).collect()))
-    f_r = sorted(map(tuple, finalize_language_revenue(rebuilt).collect()))
+    f_m = sorted(map(tuple, finalize(LANGUAGE, maintained).collect()))
+    f_r = sorted(map(tuple, finalize(LANGUAGE, rebuilt).collect()))
     assert f_m == f_r
     mart = {
-        r["language_id"]: r for r in finalize_language_revenue(maintained).collect()
+        r["language_id"]: r for r in finalize(LANGUAGE, maintained).collect()
     }
     assert mart[1]["n_movies"] == 2      # movies 1 and 3 (moved in)
     assert mart[2]["n_movies"] == 1      # lost 2 (deleted) and 3, gained 5

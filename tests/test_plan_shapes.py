@@ -85,8 +85,9 @@ def test_ann_queries_scan_the_checkpointed_corpus(spark, name):
     )
 
 
-def test_gold_ivm_broadcasts_its_dims(spark):
-    plan = _plan(spark, "gold_genre_revenue_ivm")
+@pytest.mark.parametrize("name", ["gold_genre_revenue_ivm", "gold_language_revenue_ivm"])
+def test_gold_ivm_broadcasts_its_dims(spark, name):
+    plan = _plan(spark, name)
     assert _count(plan, "BroadcastHashJoin") >= 3
     assert _count(plan, "CartesianProduct") == 0
 

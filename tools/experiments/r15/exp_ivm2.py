@@ -9,7 +9,7 @@ from movie_genre_data_pipeline_spark.suite.pipeline_queries import gold_ivm_fram
 from movie_genre_data_pipeline_spark.suite import load
 from movie_genre_data_pipeline_spark.operators.cdc import snapshot_diff
 from movie_genre_data_pipeline_spark.plans.gold import (
-    apply_genre_revenue_delta, build_genre_revenue_state, finalize_genre_revenue)
+    GENRE, apply_delta, build_state, finalize)
 SF = "/root/testdata/sf0.1"
 COMPS = ["Revenue", "Budget", "RunTime", "Genres_Id"]
 
@@ -54,14 +54,14 @@ def fused_changes(spark, sf_dir):
 def variant_a():
     snap_a, snap_b, genre_dim = gold_ivm_frames(spark, SF)
     changes = snapshot_diff(snap_a, snap_b, ["Id"], COMPS)
-    state_a = build_genre_revenue_state(snap_a, genre_dim)
-    return finalize_genre_revenue(apply_genre_revenue_delta(state_a, changes, genre_dim))
+    state_a = build_state(GENRE, snap_a, genre_dim)
+    return finalize(GENRE, apply_delta(GENRE, state_a, changes, genre_dim))
 
 def variant_b():
     snap_a, snap_b, genre_dim = gold_ivm_frames(spark, SF)
     changes = fused_changes(spark, SF)
-    state_a = build_genre_revenue_state(snap_a, genre_dim)
-    return finalize_genre_revenue(apply_genre_revenue_delta(state_a, changes, genre_dim))
+    state_a = build_state(GENRE, snap_a, genre_dim)
+    return finalize(GENRE, apply_delta(GENRE, state_a, changes, genre_dim))
 
 # value identity on the change feed itself AND the final mart
 sa, sb, gd = gold_ivm_frames(spark, SF)
