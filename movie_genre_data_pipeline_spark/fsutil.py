@@ -1,5 +1,6 @@
-"""Filesystem helpers replacing the reference's `dbutils.fs` calls
-(SURVEY.md §2.1 S6) and the read-modify-write cycle Delta gave it for free.
+"""Filesystem helpers for the read-modify-write cycle Delta gave the reference
+for free. The reference's `dbutils.fs` ls/rm reset (SURVEY.md §2.1 S6) needs no
+helper: a full reset is deleting the layer directories.
 
 `rewrite_parquet` solves the OSS-Parquet problem Delta MERGE hides: Spark cannot
 overwrite a path it is still lazily reading from. We stage the new contents to a
@@ -22,12 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.operators.writers import batch_writer
-
-
-def remove_dir(path: str) -> None:
-    """`dbutils.fs.rm(path, recurse=True)` equivalent
-    (reference: Batch_notebook/rawToBronze.py:7)."""
-    shutil.rmtree(path, ignore_errors=True)
 
 
 # Characters Hive/Spark URL-escape in partition directory names

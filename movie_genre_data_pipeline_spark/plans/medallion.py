@@ -85,8 +85,8 @@ class MedallionPipeline:
         row is processed once, and the anti-join delta guarantees a re-ingested
         payload can't duplicate silver keys. Safe when bronze accrues rows across
         runs (raw_to_bronze(mode="append")) — an overwrite here would drop
-        previously loaded silver rows from any touched partition. Full reset =
-        fsutil.remove_dir on the layer paths (reference: rawToBronze.py:7 rm -r).
+        previously loaded silver rows from any touched partition. A full reset
+        is deleting the layer directories (reference: rawToBronze.py:7 rm -r).
         """
         bronze_new = read_parquet(self.spark, self.config.bronze_path).filter(
             F.col("status") == STATUS_NEW

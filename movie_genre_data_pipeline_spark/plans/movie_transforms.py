@@ -31,7 +31,7 @@ from movie_genre_data_pipeline_spark.config import Clock
 from movie_genre_data_pipeline_spark.operators.cleanse import (
     abs_repair,
     conditional_floor,
-    fix_dimension,
+    drop_empty,
     quarantine_split,
 )
 from movie_genre_data_pipeline_spark.operators.enrich import with_audit_columns
@@ -119,13 +119,15 @@ def movie_projection(bronze_augmented: DataFrame, budget_floor: float = 100_000.
 
 def genres_projection(bronze_augmented: DataFrame) -> DataFrame:
     """`transform_bronze(..., "genres")` (operations/operations.py:86-89 + fix_genres
-    :53-54): explode genres → flatten → distinct → drop empty names, unsorted
-    (see the module doc)."""
+    :53-54): explode genres → flatten → drop empty names → one row per `Id`,
+    unsorted (see the module doc). A genre id that arrives under two names in
+    one arrival keeps the smaller name, so silver holds it once and the genre
+    mart reports it once; across arrivals the stored row still wins."""
     exploded = bronze_augmented.select(F.explode(F.col("genres")))
     flat = exploded.select(
         F.col("col.id").alias("Id"), F.col("col.name").alias("name")
     )
-    return fix_dimension(flat, "Id", "name", order=False)
+    return drop_empty(flat, "name").groupBy("Id").agg(F.min("name").alias("name"))
 
 
 def language_projection(bronze_augmented: DataFrame, degenerate: bool = True) -> DataFrame:

@@ -18,6 +18,18 @@ scale-relevant knobs explicit so the same code runs on local[32] for tests and o
   batch + incremental unit 170-200, so at 100 entries a warm pass recompiled
   155 of 165 and the JIT warmed every fresh class up again; at 1024 a warm
   pass compiles almost nothing (`codegen_compiles` counts it).
+- zstd Parquet (Spark's default level) for every table the package writes:
+  the lake keeps each movie payload twice (bronze `value` struct and silver
+  movie row), and those bytes are both the storage bill and the scan volume.
+  On the perfbench medallion workload (4 cores, seeds 101-110) the lake
+  footprint (`space_amp`) fell from 0.498 to 0.400 against snappy, lower in
+  10 of 10 pairs, with CPU, wall time and memory unchanged within noise. One
+  batch run plus two incremental rounds (seed 63): batch lake 740 -> 583 KB,
+  incremental lake 1004 -> 819 KB, batch bronze 296 -> 212 KB, batch silver
+  movie 437 -> 365 KB, status ledger 68 -> 41 KB. gzip was only 2% smaller
+  than zstd and slower; lz4_raw was 10% larger than snappy. Parquet records
+  the codec per column chunk, so snappy lakes stay readable and appends may
+  mix codecs.
 """
 
 from __future__ import annotations
@@ -92,7 +104,8 @@ def build_session(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+        # zstd, not snappy: a fifth fewer lake bytes at equal CPU (module doc)
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # micros, not legacy INT96: smaller, predicate-pushdown-friendly, and
         # readable by every modern engine without special-casing
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

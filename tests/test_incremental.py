@@ -1,6 +1,8 @@
 """Incremental-pipeline tests (SURVEY.md §5): true incrementality across two
 availableNow rounds, and batch ≡ incremental silver equivalence — the invariant
-the reference never verifies (it ships both variants untested)."""
+the reference never verifies (it ships both variants untested). Also the lake's
+Parquet codec: every table both variants write is zstd, and a lake begun with
+snappy takes zstd appends without changing what it holds."""
 
 from __future__ import annotations
 
@@ -8,6 +10,7 @@ import json
 import shutil
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,3 +155,121 @@ def test_renamed_genre_keeps_one_row_in_both_variants(spark, tmp_path: Path):
         assert [(r["genre_name"], r["n_movies"]) for r in gold.collect()] == [
             ("Action", 2)
         ], cfg.root
+
+
+@pytest.mark.parametrize(
+    "variant", [MedallionPipeline, IncrementalMedallionPipeline], ids=["batch", "incremental"]
+)
+def test_genre_named_twice_in_one_arrival_keeps_one_row(spark, tmp_path: Path, variant):
+    """One arrival carries genre 1 under two names: silver keeps one row for
+    it (the smaller name) and the genre mart counts both movies under it."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    (raw / "movies.json").write_text(json.dumps({"movie": [
+        _movie(1, "Alpha", genres=[(1, "Action")]),
+        _movie(2, "Beta", genres=[(1, "Action Movies")]),
+    ]}))
+    cfg = PipelineConfig(
+        root=str(tmp_path / "lake"), clock=Clock(fixed_utc="2024-01-01 00:00:00")
+    )
+    variant(spark, cfg).run(str(raw))
+    genres = read_parquet(spark, cfg.silver_path("genres")).filter("Id = 1")
+    assert [tuple(r) for r in genres.collect()] == [(1, "Action")]
+    gold = read_parquet(spark, cfg.gold_path("genre_revenue")).filter("genre_id = 1")
+    assert [(r["genre_name"], r["n_movies"]) for r in gold.collect()] == [("Action", 2)]
+
+
+CODEC_CONF = "spark.sql.parquet.compression.codec"
+# every table both variants write, as <zone>/<table> under the lake root
+LAKE_TABLES = [
+    "bronze/movie_bronze",
+    "silver/movie_silver",
+    "silver/genres_silver",
+    "silver/language_silver",
+    "gold/genre_revenue_gold",
+    "gold/language_revenue_gold",
+]
+SILVER_GOLD = [t for t in LAKE_TABLES if not t.startswith("bronze/")]
+
+
+def _codecs_by_table(root: str) -> dict[str, set[str]]:
+    """<zone>/<table> -> the codecs of every column chunk of every Parquet
+    file under it (partition directories included)."""
+    out: dict[str, set[str]] = {}
+    for f in Path(root).rglob("*.parquet"):
+        table = "/".join(f.relative_to(root).parts[:2])
+        meta = pq.ParquetFile(f).metadata
+        out.setdefault(table, set()).update(
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        )
+    return out
+
+
+def _table_rows(spark, path: str) -> list[str]:
+    df = read_parquet(spark, path)
+    return sorted(repr(tuple(r)) for r in df.select(sorted(df.columns)).collect())
+
+
+@pytest.fixture(scope="module")
+def batch_lake(spark, tmp_path_factory) -> PipelineConfig:
+    """One batch run over FILE1 and FILE2, written with the session's codec."""
+    root = tmp_path_factory.mktemp("codec_batch")
+    raw = root / "raw"
+    raw.mkdir()
+    (raw / "movies_part1.json").write_text(json.dumps(FILE1))
+    (raw / "movies_part2.json").write_text(json.dumps(FILE2))
+    cfg = PipelineConfig(
+        root=str(root / "lake"), clock=Clock(fixed_utc="2024-01-01 00:00:00")
+    )
+    MedallionPipeline(spark, cfg).run(str(raw))
+    return cfg
+
+
+def _two_incremental_rounds(spark, tmp_path: Path, first_codec: str | None) -> PipelineConfig:
+    """FILE1 in round 1 (under `first_codec` when given), FILE2 in round 2
+    under the session's codec."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    cfg = PipelineConfig(
+        root=str(tmp_path / "inc_lake"), clock=Clock(fixed_utc="2024-01-01 00:00:00")
+    )
+    inc = IncrementalMedallionPipeline(spark, cfg)
+    session_codec = spark.conf.get(CODEC_CONF)
+    (raw / "movies_part1.json").write_text(json.dumps(FILE1))
+    try:
+        if first_codec:
+            spark.conf.set(CODEC_CONF, first_codec)
+        inc.run(str(raw))
+    finally:
+        spark.conf.set(CODEC_CONF, session_codec)
+    (raw / "movies_part2.json").write_text(json.dumps(FILE2))
+    inc.run(str(raw))
+    return cfg
+
+
+def test_every_lake_table_is_written_zstd(spark, batch_lake, tmp_path: Path):
+    """The session default reaches every writer: the rebalanced and plain
+    batch writes, the staged bronze status rewrite, the raw→bronze file sink,
+    the status ledger appends and the gold marts."""
+    inc_cfg = _two_incremental_rounds(spark, tmp_path, first_codec=None)
+    assert _codecs_by_table(batch_lake.root) == {t: {"ZSTD"} for t in LAKE_TABLES}
+    assert _codecs_by_table(inc_cfg.root) == {
+        t: {"ZSTD"} for t in LAKE_TABLES + ["bronze/status_ledger"]
+    }
+
+
+def test_snappy_lake_takes_zstd_appends(spark, batch_lake, tmp_path: Path):
+    """Parquet records the codec per column chunk: an incremental lake begun
+    with snappy holds both codecs after a zstd round and still equals the
+    batch lake built from the same files."""
+    inc_cfg = _two_incremental_rounds(spark, tmp_path, first_codec="snappy")
+    assert spark.conf.get(CODEC_CONF) == "zstd"
+    codecs = _codecs_by_table(inc_cfg.root)
+    for table in ("bronze/movie_bronze", "bronze/status_ledger", "silver/movie_silver"):
+        assert codecs[table] == {"SNAPPY", "ZSTD"}, table
+    for table in SILVER_GOLD:
+        assert _table_rows(spark, str(Path(inc_cfg.root) / table)) == _table_rows(
+            spark, str(Path(batch_lake.root) / table)
+        ), table
