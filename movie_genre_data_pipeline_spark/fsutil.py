@@ -9,6 +9,22 @@ uses FileSystem.rename; on object stores you'd prefer per-partition dynamic
 overwrite from the staged copy — `rewrite_parquet(partition_column=...)` does that
 second hop when the table is partitioned, so only touched partitions are rewritten
 at scale instead of the whole table.
+
+`append_parquet` is the engine's one append, and it sizes files the way Delta's
+auto-compaction does for the reference. A plain append adds a file to every
+partition value it touches, so a table fed by many appends breaks into small
+files, and opens, footer reads and listings grow with the number of appends.
+Here an append writes each touched value's new rows together with that value's
+*open* files, through the same stage-and-swap. An open file is a data file
+smaller than half of `spark.sql.files.maxPartitionBytes`, Spark's read-split
+size. A file at or above that size is never rewritten, so an append rewrites
+at most the arrival plus one small tail file per value it touches, and costs
+O(arrival) however large the table grows. After any append each value holds at
+most one open file. An unpartitioned table counts as a single value.
+
+Every staged write here is sized by on-disk bytes (`files_for`), never by
+shuffle bytes: zstd Parquet comes out several times smaller than its shuffle
+blocks, so an advisory-sized split would leave several open files per value.
 """
 
 from __future__ import annotations
@@ -16,22 +32,237 @@ from __future__ import annotations
 import re
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from movie_genre_data_pipeline_spark.operators.writers import batch_writer
 
 
 # Characters Hive/Spark URL-escape in partition directory names
 # (ExternalCatalogUtils.escapePathName's char set, plus all control chars).
 _HIVE_UNSAFE = re.compile(r'["#%\'*/:=?\\\x00-\x1f\x7f{\[\]^]')
+# The directory Spark writes a null partition value to.
+DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _needs_hive_escaping(value: str) -> bool:
     return bool(_HIVE_UNSAFE.search(value))
+
+
+def split_bytes(spark: SparkSession) -> int:
+    """`spark.sql.files.maxPartitionBytes` in bytes: Spark's read-split size,
+    and the file size every staged write here aims at."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
+def files_for(n_bytes: float, target: int) -> int:
+    """How many files `n_bytes` of Parquet is cut into: one per whole
+    `target`, at least one. Every file of a value cut in two or more holds at
+    least `target` bytes, so only an uncut value can leave a file below half
+    of it, even when `n_bytes` is estimated up to twice too high."""
+    return max(1, int(n_bytes // target))
+
+
+def data_files(directory: Path) -> list[Path]:
+    """The Parquet data files directly in `directory`, skipping the `_` and
+    `.` names Spark skips; none when the directory is absent."""
+    if not directory.is_dir():
+        return []
+    return sorted(
+        f for f in directory.glob("*.parquet")
+        if f.is_file() and not f.name.startswith(("_", "."))
+    )
+
+
+def value_dirs(path: str, partition_column: str) -> dict[str | None, Path]:
+    """{value: directory} of the table at `path` partitioned by
+    `partition_column`. A value is its directory name's text; Spark's null
+    partition is None."""
+    prefix = f"{partition_column}="
+    out: dict[str | None, Path] = {}
+    for d in Path(path).iterdir():
+        if d.is_dir() and d.name.startswith(prefix):
+            name = d.name[len(prefix):]
+            out[None if name == DEFAULT_PARTITION else name] = d
+    return out
+
+
+def _value_dir(path: str | Path, partition_column: str | None, name: str | None) -> Path:
+    """The directory holding value `name`; the table itself when unpartitioned."""
+    if partition_column is None:
+        return Path(path)
+    return Path(path) / f"{partition_column}={DEFAULT_PARTITION if name is None else name}"
+
+
+def _names(values: Iterable[object]) -> list[str | None]:
+    """Partition values as directory-name text, deduplicated; None stays None
+    (Spark's null partition). Values Spark would URL-escape in a directory
+    name are rejected, since the directory matcher does not replicate it."""
+    names = {None if v is None else str(v) for v in values}
+    unsafe = sorted(n for n in names if n is not None and _needs_hive_escaping(n))
+    if unsafe:
+        raise ValueError(
+            "partition values needing Hive path-escaping are unsupported by "
+            f"the partition-scoped rewrite: {unsafe!r}; rewrite the whole "
+            "table (touched_values=None) instead"
+        )
+    return sorted(names, key=lambda n: (n is None, n or ""))
+
+
+def _select(df: DataFrame, partition_column: str, names: list[str | None]) -> DataFrame:
+    """`df`'s rows whose partition value is one of `names`."""
+    col = F.col(partition_column)
+    match = col.cast("string").isin([n for n in names if n is not None])
+    if None in names:
+        match = match | col.isNull()
+    return df.filter(match)
+
+
+def _size(files: Iterable[Path]) -> int:
+    return sum(f.stat().st_size for f in files)
+
+
+def _row_bytes(files: list[Path]) -> float:
+    """On-disk bytes per row of `files`, read from their footers: column-chunk
+    bytes over rows, leaving out the footer's fixed cost. 0 without rows."""
+    import pyarrow.parquet as pq
+
+    rows = chunks = 0
+    for f in files:
+        meta = pq.read_metadata(f)
+        rows += meta.num_rows
+        chunks += sum(
+            meta.row_group(g).column(c).total_compressed_size
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        )
+    return chunks / rows if rows else 0.0
+
+
+def _cut_keys(df: DataFrame, partition_column: str, cuts: dict[str | None, int]) -> list[Column]:
+    """Shuffle keys that cut each value into `cuts[value]` row sets: the
+    partition column and a content hash modulo the value's cut. Never rand():
+    an expression-repartition on a random column is retry-unsafe, since a
+    recomputed task can re-draw and route rows to a different shuffle
+    partition, duplicating or dropping them."""
+    col = F.col(partition_column)
+    n = F.lit(1)
+    for name, k in cuts.items():
+        if k > 1:
+            match = col.isNull() if name is None else col.cast("string") == name
+            n = F.when(match, F.lit(k)).otherwise(n)
+    return [col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), n)]
+
+
+def _stage(
+    df: DataFrame,
+    path: str,
+    partition_column: str | None,
+    value_bytes: dict[str | None, float] | None,
+    target: int,
+) -> Path:
+    """Write `df` to a fresh staging sibling of `path`, sized by on-disk
+    bytes: value `v` is cut into `files_for(value_bytes[v], target)` files.
+    A write whose bytes fit one file runs as one task with no shuffle.
+    `value_bytes=None` means nothing on disk to size by (a first write): each
+    value is written as one file."""
+    if value_bytes is None:
+        df = df.repartition(partition_column) if partition_column else df.coalesce(1)
+    elif files_for(sum(value_bytes.values()), target) == 1:
+        df = df.coalesce(1)
+    else:
+        cuts = {name: files_for(b, target) for name, b in value_bytes.items()}
+        keys = _cut_keys(df, partition_column, cuts) if partition_column else []
+        df = df.repartition(sum(cuts.values()), *keys)
+    return _write_staging(df, path, partition_column)
+
+
+def _write_staging(df: DataFrame, path: str, partition_column: str | None) -> Path:
+    """Write `df` with its own partitioning to a fresh staging sibling of
+    `path`, on the same filesystem so the swap is a rename."""
+    staging = Path(f"{path}__staging_{uuid.uuid4().hex[:8]}")
+    writer = df.write.format("parquet").mode("overwrite")
+    if partition_column:
+        writer = writer.partitionBy(partition_column)
+    writer.save(str(staging))
+    return staging
+
+
+def _crc(f: Path) -> Path:
+    """The Hadoop local-filesystem checksum file beside data file `f`."""
+    return f.with_name(f".{f.name}.crc")
+
+
+def _swap_in(staged: Path, live: Path, replaced: list[Path]) -> None:
+    """Put the data files of directory `staged` into `live` in place of
+    `replaced`, which are data files of `live`.
+
+    When `replaced` is every data file of `live`, the directory itself is
+    swapped: the staged copy is first moved next to it (same filesystem, as
+    staging is a sibling), so the live→backup→new window is two bare renames
+    with no write in between. Otherwise the kept files stay where they are:
+    the replaced files are renamed aside to hidden names, the staged files are
+    renamed in, and the ones aside are deleted. A staged directory that is
+    absent (every row of that value was dropped) empties the value."""
+    token = uuid.uuid4().hex[:8]
+    if set(replaced) == set(data_files(live)):
+        incoming = None
+        if staged.exists():
+            incoming = live.with_name(f"__new_{token}")
+            staged.rename(incoming)
+        backup = live.with_name(f"__old_{token}")
+        if live.exists():
+            live.rename(backup)
+        if incoming is not None:
+            incoming.rename(live)
+        shutil.rmtree(backup, ignore_errors=True)
+        return
+    aside = []
+    for f in replaced:
+        _crc(f).unlink(missing_ok=True)
+        aside.append(f.rename(f.with_name(f"__old_{token}_{f.name}")))
+    for f in data_files(staged):
+        if _crc(f).exists():
+            _crc(f).rename(_crc(live / f.name))
+        f.rename(live / f.name)
+    for f in aside:
+        f.unlink()
+
+
+def rewrite_partitions(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_column: str,
+    values: Iterable[object],
+    target_file_bytes: int,
+) -> None:
+    """Replace the directories of `values` in the Parquet table at `path`,
+    partitioned by `partition_column`, with `df`'s rows of those values; `df`
+    may read from `path` itself. Each value is staged cut into
+    `files_for(its live on-disk bytes, target_file_bytes)` files, then its
+    directory is swapped for the staged one (`_swap_in`); the filter on the
+    partition column prunes the staged scan to those directories, and every
+    other value keeps its files untouched. A None value is Spark's null
+    partition."""
+    names = _names(values)
+    if not names:
+        return
+    live = {n: data_files(_value_dir(path, partition_column, n)) for n in names}
+    staging = _stage(
+        _select(df, partition_column, names), path, partition_column,
+        {n: _size(files) for n, files in live.items()}, target_file_bytes,
+    )
+    Path(path).mkdir(parents=True, exist_ok=True)
+    for n in names:
+        _swap_in(
+            _value_dir(staging, partition_column, n),
+            _value_dir(path, partition_column, n),
+            live[n],
+        )
+    shutil.rmtree(staging, ignore_errors=True)
 
 
 def rewrite_parquet(
@@ -39,7 +270,7 @@ def rewrite_parquet(
     df: DataFrame,
     path: str,
     partition_column: str | None = None,
-    touched_values: Sequence[object] | None = None,
+    touched_values: Iterable[object] | None = None,
 ) -> None:
     """Replace the Parquet table at `path` with `df`'s contents, where `df` may
     read from `path` itself (the MERGE-rewrite shape, SURVEY.md §2.6 J1).
@@ -49,19 +280,18 @@ def rewrite_parquet(
     half-written table on a posix FS.
 
     When `partition_column` AND `touched_values` are given, ONLY those partition
-    directories are staged and swapped — the filter on the partition column prunes
-    the staged scan to the touched directories and untouched partitions keep their
-    original files untouched. This is the 100 TB path: a status flip over one
-    ingest-date's files rewrites that date's partition, not the table. The
-    whole-table swap remains the fallback for unpartitioned tables or full
-    rewrites.
+    directories are staged and swapped (`rewrite_partitions`) and untouched
+    partitions keep their original files untouched. This is the 100 TB path: a
+    status flip over one ingest-date's files rewrites that date's partition,
+    not the table. A None touched value is the null partition. The whole-table
+    swap remains the fallback for unpartitioned tables or full rewrites.
 
-    File layout: the partition-scoped staging write goes through
-    `operators.writers.batch_writer`, so each touched partition comes back as
-    one file (or advisory-sized files when it is large), however many tasks
-    `df` spans. The whole-table path writes `df` with its own partitioning:
-    `compact_parquet_dir` sizes its files with an explicit repartition, and a
-    second shuffle would undo that sizing.
+    File layout: the partition-scoped path cuts each touched value by its live
+    on-disk bytes against `spark.sql.files.maxPartitionBytes` (`files_for`),
+    so a value below twice that size comes back as one file, however many
+    tasks `df` spans. The whole-table path writes `df` with its own
+    partitioning: `compact_parquet_dir` sizes its files with an explicit
+    coalesce, and a shuffle here would undo that sizing.
 
     Visibility contract: the WHOLE-TABLE swap is a single directory rename — a
     reader sees either the old table or the new one, never a gap. The
@@ -80,59 +310,86 @@ def rewrite_parquet(
     supported domain.
     """
     if partition_column and touched_values is not None:
-        values = sorted({str(v) for v in touched_values})
-        if not values:
-            return
-        unsafe = [v for v in values if _needs_hive_escaping(v)]
-        if unsafe:
-            raise ValueError(
-                "partition values needing Hive path-escaping are unsupported by "
-                f"the partition-scoped rewrite: {unsafe!r}; rewrite the whole "
-                "table (touched_values=None) instead"
-            )
-        scoped = df.filter(
-            F.col(partition_column).cast("string").isin(values)
+        rewrite_partitions(
+            spark, df, path, partition_column, touched_values, split_bytes(spark)
         )
-        staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-        batch_writer(scoped, partition_column, mode="overwrite").save(staging)
-        target = Path(path)
-        target.mkdir(parents=True, exist_ok=True)
-        for v in values:
-            subdir = f"{partition_column}={v}"
-            staged_part = Path(staging) / subdir
-            live_part = target / subdir
-            token = uuid.uuid4().hex[:8]
-            backup = target / f"__old_{token}_{subdir}"
-            # Move the staged copy into the target dir FIRST (same filesystem —
-            # staging is a sibling), so the live→backup→new window is two bare
-            # renames with no write in between.
-            incoming = None
-            if staged_part.exists():
-                incoming = target / f"__new_{token}_{subdir}"
-                staged_part.rename(incoming)
-            if live_part.exists():
-                live_part.rename(backup)
-            if incoming is not None:
-                incoming.rename(live_part)
-            # staged partition absent ⇒ every row of that value was dropped by
-            # df — the rename above already removed the live copy.
-            shutil.rmtree(backup, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
         return
 
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    # Not batch_writer: keep df's own partitioning, which compact_parquet_dir
-    # sizes with an explicit repartition that a rebalance would undo.
-    writer = df.write.format("parquet").mode("overwrite")
-    if partition_column:
-        writer = writer.partitionBy(partition_column)
-    writer.save(staging)
+    staging = _write_staging(df, path, partition_column)
     backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
     target = Path(path)
     if target.exists():
         target.rename(backup)
-    Path(staging).rename(path)
+    staging.rename(path)
     shutil.rmtree(backup, ignore_errors=True)
+
+
+def append_parquet(
+    spark: SparkSession,
+    rows: DataFrame,
+    path: str,
+    partition_column: str | None = None,
+) -> None:
+    """Append `rows` to the Parquet table at `path`, merging them into each
+    touched value's open files (module doc); a missing table is created with
+    one file per value.
+
+    `rows` is cached (unless the caller cached it), and one aggregate over it
+    finds the touched values and their row counts, so the staged write reads
+    the arrival from the cache. The arrival's on-disk bytes are estimated from
+    those counts and the bytes per row in the footers of the open files (or,
+    with none open, of one touched value's file), and each value is cut by
+    `files_for` its open files' bytes plus that estimate. Every touched value
+    is then swapped by `_swap_in`: its open files leave and the staged files
+    arrive, while its other files never move. An empty arrival writes
+    nothing."""
+    table = Path(path)
+    target = split_bytes(spark)
+    if not table.exists():
+        _stage(rows, path, partition_column, None, target).rename(table)
+        return
+    cache_here = rows.storageLevel == StorageLevel.NONE
+    if cache_here:
+        rows = rows.cache()
+    try:
+        by = [partition_column] if partition_column else []
+        counts = {
+            (None if r[0] is None else str(r[0])) if by else None: r["count"]
+            for r in rows.groupBy(*by).count().collect()
+            if r["count"]
+        }
+        if not counts:
+            return
+        names = _names(counts)
+        live = {n: data_files(_value_dir(path, partition_column, n)) for n in names}
+        tails = {
+            n: [f for f in files if f.stat().st_size < target // 2]
+            for n, files in live.items()
+        }
+        open_files = [f for n in names for f in tails[n]]
+        sample = open_files or [f for n in names for f in live[n]][:1]
+        row_bytes = _row_bytes(sample)
+        merged = rows
+        if open_files:
+            merged = rows.unionByName(
+                spark.read.schema(rows.schema)
+                .option("basePath", path)
+                .parquet(*[str(f) for f in open_files])
+            )
+        staging = _stage(
+            merged, path, partition_column,
+            {n: _size(tails[n]) + counts[n] * row_bytes for n in names}, target,
+        )
+        for n in names:
+            _swap_in(
+                _value_dir(staging, partition_column, n),
+                _value_dir(path, partition_column, n),
+                tails[n],
+            )
+        shutil.rmtree(staging, ignore_errors=True)
+    finally:
+        if cache_here:
+            rows.unpersist()
 
 
 _GEN_RE = re.compile(r"^(?P<prefix>.+)_(?P<n>\d+)$")

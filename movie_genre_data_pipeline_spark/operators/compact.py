@@ -9,25 +9,28 @@ bytes.
 
 `compact_parquet_dir` rewrites a Parquet directory into ~target-sized files:
 
-- file count is derived from the MEASURED on-disk bytes (not row counts), so the
-  result holds for any row width;
-- the rewrite is one narrow `coalesce` job when shrinking (no shuffle at all) and
-  falls back to `repartition` only when the table is partitioned (files must be
-  re-bucketed per partition value);
-- the swap reuses `fsutil.rewrite_parquet`'s stage-then-rename, so readers never
-  see a half-compacted table.
+- file counts come from the MEASURED on-disk bytes (not row counts), through
+  `fsutil.files_for`, the same sizing every append and partition-scoped
+  rewrite uses, so the result holds for any row width;
+- an unpartitioned table is rewritten by one narrow `coalesce` job (no
+  shuffle at all) and swapped whole by `fsutil.rewrite_parquet`'s
+  stage-then-rename, so readers never see a half-compacted table;
+- a partitioned table (pass `partition_column`) is judged per value: only the
+  values holding more files than their own bytes call for are rewritten,
+  through `fsutil.rewrite_partitions`, and every other value keeps its files.
 
-At cluster scale the same routine runs per-partition (pass `partition_column`),
-compacting only partitions whose file count exceeds the target — full-table
-rewrites are a local-FS convenience, not the 100 TB path.
+Appends keep tables compact on their own: `fsutil.append_parquet` merges each
+arrival into its value's small tail file. This pass is for tables written some
+other way, e.g. by many writers or by an older layout.
 """
 
 from __future__ import annotations
 
-import math
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from movie_genre_data_pipeline_spark import fsutil
 
 
 def dir_parquet_stats(path: str) -> tuple[int, int]:
@@ -47,49 +50,37 @@ def compact_parquet_dir(
     target_file_bytes: int = 128 * 1024 * 1024,
     partition_column: str | None = None,
 ) -> dict[str, int]:
-    """Rewrite the Parquet table at `path` into ceil(bytes/target) files.
+    """Rewrite the Parquet table at `path` into `files_for(bytes, target)`
+    files, per partition value when `partition_column` is given.
 
     Returns {"files_before", "files_after", "bytes"} so callers (and tests) can
-    assert the compaction actually happened. No-op (no rewrite at all) when the
-    table already has <= the target file count.
+    assert the compaction actually happened. No-op (no rewrite at all) for a
+    table, or a partition value, already at or below its target file count.
+    A partition value that needs rewriting and that Spark escapes in its
+    directory name (e.g. a timestamp) raises ValueError, as in
+    `fsutil.rewrite_parquet`.
     """
-    from movie_genre_data_pipeline_spark.fsutil import rewrite_parquet
-
     files_before, total_bytes = dir_parquet_stats(path)
-    n_target = max(1, math.ceil(total_bytes / target_file_bytes))
-    if files_before <= n_target:
-        return {
-            "files_before": files_before,
-            "files_after": files_before,
-            "bytes": total_bytes,
-        }
-
-    df = spark.read.parquet(path)
     if partition_column:
-        # Re-bucket within each partition value. Hashing on the partition column
-        # ALONE would map every row of one value to a single task → one output
-        # file per value no matter its size; a uniform splitter key fans large
-        # values out over ~files_per_value tasks so file sizes track the target.
-        # The splitter is derived from ROW CONTENT (xxhash64 of every column),
-        # never from rand(): an expression-repartition on a random column is
-        # retry-unsafe — a recomputed task can re-draw and route rows to a
-        # different shuffle partition, silently duplicating or dropping them.
-        # A content hash re-executes to the identical partition every time.
-        from pyspark.sql import functions as F
-
-        part_dirs = [
-            d for d in Path(path).iterdir() if d.is_dir() and "=" in d.name
-        ]
-        files_per_value = max(1, math.ceil(n_target / max(1, len(part_dirs))))
-        splitter = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(files_per_value)
-        ).cast("int")
-        df = df.repartition(n_target, partition_column, splitter)
+        over = []
+        for value, directory in fsutil.value_dirs(path, partition_column).items():
+            files = fsutil.data_files(directory)
+            n_bytes = sum(f.stat().st_size for f in files)
+            if len(files) > fsutil.files_for(n_bytes, target_file_bytes):
+                over.append(value)
+        if over:
+            fsutil.rewrite_partitions(
+                spark, spark.read.parquet(path), path, partition_column, over,
+                target_file_bytes,
+            )
     else:
-        # pure shrink: coalesce is narrow — each output task concatenates input
-        # splits, zero shuffle
-        df = df.coalesce(n_target)
-    rewrite_parquet(spark, df, path, partition_column=partition_column)
+        n_target = fsutil.files_for(total_bytes, target_file_bytes)
+        if files_before > n_target:
+            # pure shrink: coalesce is narrow — each output task concatenates
+            # input splits, zero shuffle
+            fsutil.rewrite_parquet(
+                spark, spark.read.parquet(path).coalesce(n_target), path
+            )
     files_after, _ = dir_parquet_stats(path)
     return {
         "files_before": files_before,

@@ -114,11 +114,13 @@ def upsert_insert_missing(
     """MERGE ... WHEN NOT MATCHED INSERT ALL (J2) as anti-join + union.
 
     Returns only the NEW rows (the delta to append) — callers append them, which is
-    the cheap path at scale (no target rewrite at all).
+    the cheap path at scale (no target rewrite at all). The target keys are
+    not deduplicated first: a left-anti join's result ignores duplicate keys
+    on its right side, and a distinct would add a shuffle stage.
     """
     keys = _key_cols(on)
     if verify_unique:
         _check_unique(source, keys)
     return source.join(
-        target.select(*keys).distinct(), on=keys, how="left_anti"
+        target.select(*keys), on=keys, how="left_anti"
     ).select(*[F.col(c) for c in source.columns])

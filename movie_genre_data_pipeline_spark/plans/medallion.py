@@ -125,14 +125,16 @@ class MedallionPipeline:
     # -- shared -------------------------------------------------------------
     def _append_missing(self, **tables: DataFrame) -> None:
         """J2-style incremental load: append to each silver table only the rows
-        whose natural key (SILVER_TABLES) it lacks (anti-join delta — no target
-        rewrite). A first write (no table yet) appends everything."""
+        whose natural key (SILVER_TABLES) it lacks (anti-join delta), merged
+        into each touched value's small tail file (fsutil.append_parquet), so
+        a value stays one file across stages and runs. A first write (no
+        table yet) appends everything."""
         for table, rows in tables.items():
             key, partition_column = SILVER_TABLES[table]
             path = self.config.silver_path(table)
             if Path(path).exists():
                 rows = upsert_insert_missing(read_parquet(self.spark, path), rows, on=key)
-            write_partitioned(rows, path, partition_column, mode="append")
+            fsutil.append_parquet(self.spark, rows, path, partition_column)
 
     def _update_bronze_status(self, rows_by_status: dict[str, DataFrame]) -> None:
         """J1 status flip (operations/operations.py:112-129): MERGE bronze ON

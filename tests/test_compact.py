@@ -57,6 +57,19 @@ def test_compact_noop_when_already_compact(spark, tmp_path):
     )
 
 
+def test_compact_partitioned_noop_keeps_file_names(spark, tmp_path):
+    """An already-compact partitioned table is judged per value: with one file
+    per value and every value under the target, nothing is rewritten."""
+    import pathlib
+
+    path = _fragmented_copy(spark, tmp_path, n_files=1, partition_column="p_status")
+    before = sorted(pathlib.Path(path).rglob("*.parquet"))
+    assert len(before) > 1  # one file in each of several values
+    stats = compact_parquet_dir(spark, path, partition_column="p_status")
+    assert stats["files_before"] == stats["files_after"] == len(before)
+    assert sorted(pathlib.Path(path).rglob("*.parquet")) == before
+
+
 def test_compact_partitioned_keeps_layout(spark, tmp_path):
     path = _fragmented_copy(spark, tmp_path, n_files=16, partition_column="p_status")
     before_rows = sorted(

@@ -7,7 +7,11 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from movie_genre_data_pipeline_spark.fsutil import rewrite_parquet
+from movie_genre_data_pipeline_spark.fsutil import (
+    DEFAULT_PARTITION,
+    append_parquet,
+    rewrite_parquet,
+)
 from movie_genre_data_pipeline_spark.operators.upsert import upsert_update
 
 
@@ -77,6 +81,145 @@ def test_partition_scoped_rewrite_empty_touched_is_noop(spark, tmp_path):
         spark, spark.read.parquet(path), path, "p", touched_values=[]
     )
     assert _part_files(path, "p=p1") == before
+
+
+def test_partition_scoped_rewrite_reaches_null_partition(spark, tmp_path):
+    """A None touched value is Spark's null partition: its directory is
+    swapped and its rows carry the update, like any other touched value."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "a", "a"), (2, "b", None), (3, "c", "c")], "id int, v string, p string"
+    )
+    df.write.partitionBy("p").parquet(path)
+    before_c = _part_files(path, "p=c")
+
+    live = spark.read.parquet(path)
+    rewrite_parquet(
+        spark, live.withColumn("v", F.upper("v")), path, "p", touched_values=["a", None]
+    )
+
+    rows = {(r.id, r.v, r.p) for r in spark.read.parquet(path).collect()}
+    assert rows == {(1, "A", "a"), (2, "B", None), (3, "c", "c")}
+    assert _part_files(path, "p=c") == before_c
+
+
+def _rows(spark, ids, p):
+    """Rows whose payload does not compress away, so file sizes track rows."""
+    return spark.range(*ids).select(
+        F.col("id").cast("int").alias("id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("v"),
+        F.lit(p).cast("string").alias("p"),
+    )
+
+
+def _data_file_counts(path: str) -> dict[str, int]:
+    return {
+        d.name: sum(1 for f in d.glob("*.parquet") if not f.name.startswith(("_", ".")))
+        for d in Path(path).iterdir()
+        if d.is_dir() and "=" in d.name
+    }
+
+
+def test_append_merges_each_value_into_its_tail_file(spark, tmp_path):
+    """Appends to a table of small files merge into each touched value's one
+    open file, the null partition included; untouched values keep their
+    files, and no row is lost or doubled."""
+    path = str(tmp_path / "t")
+    append_parquet(spark, _rows(spark, (0, 20), "a").unionByName(
+        _rows(spark, (20, 30), None)).unionByName(_rows(spark, (30, 40), "c")), path, "p")
+    before_c = _part_files(path, "p=c")
+    append_parquet(spark, _rows(spark, (40, 45), "a").unionByName(
+        _rows(spark, (45, 50), None)), path, "p")
+    append_parquet(spark, _rows(spark, (50, 52), None).unionByName(
+        _rows(spark, (52, 60), "d")), path, "p")
+
+    assert _data_file_counts(path) == {
+        "p=a": 1, f"p={DEFAULT_PARTITION}": 1, "p=c": 1, "p=d": 1
+    }
+    assert _part_files(path, "p=c") == before_c
+    got = spark.read.parquet(path)
+    assert sorted(r.id for r in got.collect()) == list(range(60))
+    assert got.filter(F.col("p").isNull()).count() == 10 + 5 + 2
+
+
+def test_append_to_unpartitioned_table_keeps_one_file(spark, tmp_path):
+    path = str(tmp_path / "t")
+    for lo in (0, 10, 20):
+        append_parquet(spark, _rows(spark, (lo, lo + 10), "x"), path)
+    append_parquet(spark, _rows(spark, (0, 0), "x"), path)  # empty: no write
+    files = [f for f in Path(path).glob("*.parquet")]
+    assert len(files) == 1, files
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(30))
+
+
+def test_append_leaves_a_caller_cache_in_place(spark, tmp_path):
+    """The arrival is cached for the append only when the caller has not
+    cached it: a caller's cache outlives the append."""
+    from pyspark import StorageLevel
+
+    path = str(tmp_path / "t")
+    append_parquet(spark, _rows(spark, (0, 5), "a"), path, "p")
+    arrival = _rows(spark, (5, 10), "a").cache()
+    try:
+        append_parquet(spark, arrival, path, "p")
+        assert arrival.storageLevel != StorageLevel.NONE
+    finally:
+        arrival.unpersist()
+    assert spark.read.parquet(path).count() == 10
+
+
+def test_append_never_rewrites_a_file_at_half_the_split_size(spark, tmp_path):
+    """A file at or above half of spark.sql.files.maxPartitionBytes is closed:
+    an append to its value adds one file beside it and leaves it as it was,
+    name and mtime, while an open value's tail is merged away."""
+    path = str(tmp_path / "t")
+    append_parquet(
+        spark, _rows(spark, (0, 400), "big").unionByName(_rows(spark, (400, 405), "small")),
+        path, "p",
+    )
+    (big,) = (Path(path) / "p=big").glob("*.parquet")
+    before_big = _part_files(path, "p=big")
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, str(2 * big.stat().st_size))
+    try:
+        append_parquet(
+            spark,
+            _rows(spark, (405, 410), "big").unionByName(_rows(spark, (410, 415), "small")),
+            path, "p",
+        )
+        # a second append merges into the new small file, not the closed one
+        append_parquet(spark, _rows(spark, (415, 420), "big"), path, "p")
+    finally:
+        spark.conf.set(conf, saved)
+
+    after_big = _part_files(path, "p=big")
+    assert {k: v for k, v in after_big.items() if k in before_big} == before_big
+    assert len(after_big) == 2
+    assert _data_file_counts(path) == {"p=big": 2, "p=small": 1}
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(420))
+
+
+def test_append_cuts_a_large_merge_into_closed_files(spark, tmp_path):
+    """A merge bigger than the split size is cut by on-disk bytes: every file
+    it writes is at or above half the split size but at most one per value,
+    so no value is left with more than one open file."""
+    path = str(tmp_path / "t")
+    append_parquet(spark, _rows(spark, (0, 50), "a"), path, "p")
+    (tail,) = (Path(path) / "p=a").glob("*.parquet")
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    split = 4 * tail.stat().st_size
+    spark.conf.set(conf, str(split))
+    try:
+        append_parquet(spark, _rows(spark, (50, 2000), "a"), path, "p")
+    finally:
+        spark.conf.set(conf, saved)
+
+    sizes = [f.stat().st_size for f in (Path(path) / "p=a").glob("*.parquet")]
+    assert len(sizes) > 1, sizes
+    assert sum(s < split // 2 for s in sizes) <= 1, (split, sizes)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(2000))
 
 
 def test_upsert_update_writes_null_like_delta_merge(spark):

@@ -262,14 +262,94 @@ def test_every_lake_table_is_written_zstd(spark, batch_lake, tmp_path: Path):
 
 def test_snappy_lake_takes_zstd_appends(spark, batch_lake, tmp_path: Path):
     """Parquet records the codec per column chunk: an incremental lake begun
-    with snappy holds both codecs after a zstd round and still equals the
-    batch lake built from the same files."""
+    with snappy holds both codecs in bronze after a zstd round, since the file
+    sink never rewrites a file, and still equals the batch lake built from the
+    same files. The status ledger and silver movie are zstd only: the zstd
+    round merged their small snappy files into its appends."""
     inc_cfg = _two_incremental_rounds(spark, tmp_path, first_codec="snappy")
     assert spark.conf.get(CODEC_CONF) == "zstd"
     codecs = _codecs_by_table(inc_cfg.root)
-    for table in ("bronze/movie_bronze", "bronze/status_ledger", "silver/movie_silver"):
-        assert codecs[table] == {"SNAPPY", "ZSTD"}, table
+    assert codecs["bronze/movie_bronze"] == {"SNAPPY", "ZSTD"}
+    for table in ("bronze/status_ledger", "silver/movie_silver"):
+        assert codecs[table] == {"ZSTD"}, table
     for table in SILVER_GOLD:
         assert _table_rows(spark, str(Path(inc_cfg.root) / table)) == _table_rows(
             spark, str(Path(batch_lake.root) / table)
+        ), table
+
+
+# Two arrivals over two CreatedDates and the null date (CreatedDate missing):
+# round 2 touches every value round 1 wrote, and each round repairs a
+# quarantined movie into a value it already touched.
+DATED_ROUNDS = [
+    {"movie": [
+        _movie(11, "Jan", created="2020-01-15"),
+        _movie(12, "Feb", runtime=-70, created="2020-02-15"),
+        _movie(13, "Undated", created=None),
+    ]},
+    {"movie": [
+        _movie(14, "Jan2", language="fr", genres=[(6, "War")], created="2020-01-15"),
+        _movie(15, "Feb2", created="2020-02-15"),
+        _movie(16, "Undated2", runtime=-30, created=None),
+    ]},
+]
+
+
+@pytest.fixture(scope="module")
+def dated_lakes(spark, tmp_path_factory) -> tuple[PipelineConfig, PipelineConfig]:
+    """(incremental lake after one round per DATED_ROUNDS file, batch lake
+    over both files)."""
+    root = tmp_path_factory.mktemp("dated")
+    clock = Clock(fixed_utc="2024-01-01 00:00:00")
+    raw = root / "raw"
+    raw.mkdir()
+    inc_cfg = PipelineConfig(root=str(root / "inc_lake"), clock=clock)
+    inc = IncrementalMedallionPipeline(spark, inc_cfg)
+    for i, payload in enumerate(DATED_ROUNDS):
+        (raw / f"movies_{i}.json").write_text(json.dumps(payload))
+        inc.run(str(raw))
+    batch_cfg = PipelineConfig(root=str(root / "batch_lake"), clock=clock)
+    MedallionPipeline(spark, batch_cfg).run(str(raw))
+    return inc_cfg, batch_cfg
+
+
+def _files_per_dir(table_path: str) -> dict[str, int]:
+    """Data files in each directory of a table that holds any."""
+    out: dict[str, int] = {}
+    for f in Path(table_path).rglob("*.parquet"):
+        if not f.name.startswith(("_", ".")):
+            key = f.parent.name if f.parent != Path(table_path) else "."
+            out[key] = out.get(key, 0) + 1
+    return out
+
+
+def test_two_rounds_keep_one_file_per_value(dated_lakes):
+    """Every append merges into its value's small tail file: after two rounds
+    each silver movie date, the null date included, holds one data file, and
+    genres, language and the status ledger hold one each."""
+    inc_cfg, _ = dated_lakes
+    movie = _files_per_dir(inc_cfg.silver_path("movie"))
+    assert movie == {
+        "p_CreatedDate=2020-01-15": 1,
+        "p_CreatedDate=2020-02-15": 1,
+        "p_CreatedDate=__HIVE_DEFAULT_PARTITION__": 1,
+    }
+    ledger = str(Path(inc_cfg.root) / "bronze" / "status_ledger")
+    for table in (inc_cfg.silver_path("genres"), inc_cfg.silver_path("language"), ledger):
+        assert _files_per_dir(table) == {".": 1}, table
+
+
+def test_undated_movies_survive_two_rounds_like_batch(spark, dated_lakes):
+    """Movies with a null CreatedDate live in the null partition: the round-2
+    merge into it keeps round 1's movie, and both lakes hold the same
+    silver and gold tables."""
+    inc_cfg, batch_cfg = dated_lakes
+    undated = read_parquet(spark, inc_cfg.silver_path("movie")).filter(
+        F.col("p_CreatedDate").isNull()
+    )
+    assert sorted((r.Id, r.RunTime) for r in undated.collect()) == [(13, 120), (16, 30)]
+    assert _silver_movie_rows(spark, inc_cfg) == _silver_movie_rows(spark, batch_cfg)
+    for table in SILVER_GOLD:
+        assert _table_rows(spark, str(Path(inc_cfg.root) / table)) == _table_rows(
+            spark, str(Path(batch_cfg.root) / table)
         ), table

@@ -408,15 +408,14 @@ def spread_raw_movie_dir(tmp_path: Path) -> str:
 def test_batch_run_writes_one_file_per_partition_value(
     spark, pipeline_config, spread_raw_movie_dir
 ):
-    """Every partitioned write goes through the rebalancing batch_writer: a
-    bronze date holds one file however many raw files fed it, and a silver
-    movie date holds at most two, one from bronze_to_silver and one from the
-    repair append."""
+    """A bronze date holds one file however many raw files fed it (the
+    rebalancing batch_writer), and a silver movie date holds one too: the
+    repair append merges into the file bronze_to_silver wrote."""
     MedallionPipeline(spark, pipeline_config).run(spread_raw_movie_dir)
     bronze = _data_files(pipeline_config.bronze_path, "p_ingestdate=")
     assert bronze and set(bronze.values()) == {1}, bronze
     movie = _data_files(pipeline_config.silver_path("movie"), "p_CreatedDate=")
-    assert len(movie) == 3 and max(movie.values()) <= 2, movie
+    assert len(movie) == 3 and set(movie.values()) == {1}, movie
     silver = read_parquet(spark, pipeline_config.silver_path("movie"))
     assert silver.count() == 36  # 4 files x 9 distinct movies, repaired included
 
