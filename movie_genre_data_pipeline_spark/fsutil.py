@@ -1,30 +1,34 @@
-"""Filesystem helpers for the read-modify-write cycle Delta gave the reference
-for free. The reference's `dbutils.fs` ls/rm reset (SURVEY.md §2.1 S6) needs no
-helper: a full reset is deleting the layer directories.
+"""Where the engine's Parquet files go, and which ones move.
 
-`rewrite_parquet` solves the OSS-Parquet problem Delta MERGE hides: Spark cannot
-overwrite a path it is still lazily reading from. We stage the new contents to a
-sibling directory, then atomically swap (local FS rename). On HDFS the same pattern
-uses FileSystem.rename; on object stores you'd prefer per-partition dynamic
-overwrite from the staged copy — `rewrite_parquet(partition_column=...)` does that
-second hop when the table is partitioned, so only touched partitions are rewritten
-at scale instead of the whole table.
+Delta gave the reference its read-modify-write cycle and its file sizing for
+free: MERGE rewrites files in place, OPTIMIZE and auto-compaction keep them
+large. On open-source Parquet both are this module's job, and it is the one
+place that decides them. (The reference's `dbutils.fs` ls/rm reset, SURVEY.md
+§2.1 S6, needs no helper: a full reset is deleting the layer directories.)
 
-`append_parquet` is the engine's one append, and it sizes files the way Delta's
-auto-compaction does for the reference. A plain append adds a file to every
-partition value it touches, so a table fed by many appends breaks into small
-files, and opens, footer reads and listings grow with the number of appends.
-Here an append writes each touched value's new rows together with that value's
-*open* files, through the same stage-and-swap. An open file is a data file
-smaller than half of `spark.sql.files.maxPartitionBytes`, Spark's read-split
-size. A file at or above that size is never rewritten, so an append rewrites
-at most the arrival plus one small tail file per value it touches, and costs
-O(arrival) however large the table grows. After any append each value holds at
-most one open file. An unpartitioned table counts as a single value.
+Spark cannot overwrite a path it is still lazily reading from, so every write
+here is staged to a sibling directory and swapped in by renames (`_swap_in`).
+One layout rule sizes the staged files:
 
-Every staged write here is sized by on-disk bytes (`files_for`), never by
-shuffle bytes: zstd Parquet comes out several times smaller than its shuffle
-blocks, so an advisory-sized split would leave several open files per value.
+- A first write (no table yet) is rebalanced on the partition column (Spark's
+  REBALANCE hint, as `operators/writers.batch_writer` does): under AQE each
+  value lands in one file, or in advisory-sized files when it is large. An
+  unpartitioned first write keeps the frame's own partitioning.
+- Appends (`append_parquet`), partition-scoped rewrites (`rewrite_parquet`)
+  and compaction (`compact_open_files`) cut each value they write by its
+  on-disk bytes (`files_for`), never by shuffle bytes: zstd Parquet comes out
+  several times smaller than its shuffle blocks, so an advisory-sized split
+  would leave several small files per value.
+- A data file below half of `spark.sql.files.maxPartitionBytes`, Spark's read
+  split, is *open*; any other file is *closed* and never moves under an
+  append or a compaction. An append writes each touched value's new rows
+  together with that value's open files; compaction merges the open files of
+  every value holding two or more, with no new rows. Both cost O(what moves)
+  however large the table grows, and leave each value they write with at most
+  one open file. An unpartitioned table counts as a single value.
+
+Only `rewrite_parquet`'s whole-table path writes the caller's frame with its
+own partitioning, since `streaming/ledger.compact_ledger` sizes it.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ import re
 import shutil
 import uuid
 from collections.abc import Iterable
+from functools import reduce
 from pathlib import Path
 
 from pyspark import StorageLevel
@@ -74,6 +79,18 @@ def data_files(directory: Path) -> list[Path]:
         f for f in directory.glob("*.parquet")
         if f.is_file() and not f.name.startswith(("_", "."))
     )
+
+
+def table_files(path: str | Path) -> list[Path]:
+    """Every data file of the table at `path`: `data_files` of its directory
+    and of every subdirectory Spark's reader enters (names not starting with
+    `_` or `.`), so files a swap has set aside are never counted."""
+    root = Path(path)
+    files = data_files(root)
+    for d in sorted(root.iterdir()) if root.is_dir() else []:
+        if d.is_dir() and not d.name.startswith(("_", ".")):
+            files += table_files(d)
+    return files
 
 
 def value_dirs(path: str, partition_column: str) -> dict[str | None, Path]:
@@ -124,6 +141,11 @@ def _size(files: Iterable[Path]) -> int:
     return sum(f.stat().st_size for f in files)
 
 
+def _open(files: list[Path], target: int) -> list[Path]:
+    """The open files among `files`: below half of the split size `target`."""
+    return [f for f in files if f.stat().st_size < target // 2]
+
+
 def _row_bytes(files: list[Path]) -> float:
     """On-disk bytes per row of `files`, read from their footers: column-chunk
     bytes over rows, leaving out the footer's fixed cost. 0 without rows."""
@@ -160,17 +182,13 @@ def _stage(
     df: DataFrame,
     path: str,
     partition_column: str | None,
-    value_bytes: dict[str | None, float] | None,
+    value_bytes: dict[str | None, float],
     target: int,
 ) -> Path:
     """Write `df` to a fresh staging sibling of `path`, sized by on-disk
     bytes: value `v` is cut into `files_for(value_bytes[v], target)` files.
-    A write whose bytes fit one file runs as one task with no shuffle.
-    `value_bytes=None` means nothing on disk to size by (a first write): each
-    value is written as one file."""
-    if value_bytes is None:
-        df = df.repartition(partition_column) if partition_column else df.coalesce(1)
-    elif files_for(sum(value_bytes.values()), target) == 1:
+    A write whose bytes fit one file runs as one task with no shuffle."""
+    if files_for(sum(value_bytes.values()), target) == 1:
         df = df.coalesce(1)
     else:
         cuts = {name: files_for(b, target) for name, b in value_bytes.items()}
@@ -197,15 +215,16 @@ def _crc(f: Path) -> Path:
 
 def _swap_in(staged: Path, live: Path, replaced: list[Path]) -> None:
     """Put the data files of directory `staged` into `live` in place of
-    `replaced`, which are data files of `live`.
+    `replaced`, which are data files of `live`: the package's one swap.
 
-    When `replaced` is every data file of `live`, the directory itself is
-    swapped: the staged copy is first moved next to it (same filesystem, as
-    staging is a sibling), so the live→backup→new window is two bare renames
-    with no write in between. Otherwise the kept files stay where they are:
-    the replaced files are renamed aside to hidden names, the staged files are
-    renamed in, and the ones aside are deleted. A staged directory that is
-    absent (every row of that value was dropped) empties the value."""
+    When `replaced` is every data file of `live` (always so for a whole table
+    or a missing one), the directory itself is swapped: the staged copy is
+    first moved next to it (same filesystem, as staging is a sibling), so the
+    live→backup→new window is two bare renames with no write in between.
+    Otherwise the kept files stay where they are: the replaced files are
+    renamed aside to hidden names, the staged files are renamed in, and the
+    ones aside are deleted. A staged directory that is absent (every row of
+    that value was dropped) empties the value."""
     token = uuid.uuid4().hex[:8]
     if set(replaced) == set(data_files(live)):
         incoming = None
@@ -231,36 +250,18 @@ def _swap_in(staged: Path, live: Path, replaced: list[Path]) -> None:
         f.unlink()
 
 
-def rewrite_partitions(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    partition_column: str,
-    values: Iterable[object],
-    target_file_bytes: int,
+def _swap_values(
+    staging: Path, path: str, partition_column: str | None,
+    replaced: dict[str | None, list[Path]],
 ) -> None:
-    """Replace the directories of `values` in the Parquet table at `path`,
-    partitioned by `partition_column`, with `df`'s rows of those values; `df`
-    may read from `path` itself. Each value is staged cut into
-    `files_for(its live on-disk bytes, target_file_bytes)` files, then its
-    directory is swapped for the staged one (`_swap_in`); the filter on the
-    partition column prunes the staged scan to those directories, and every
-    other value keeps its files untouched. A None value is Spark's null
-    partition."""
-    names = _names(values)
-    if not names:
-        return
-    live = {n: data_files(_value_dir(path, partition_column, n)) for n in names}
-    staging = _stage(
-        _select(df, partition_column, names), path, partition_column,
-        {n: _size(files) for n, files in live.items()}, target_file_bytes,
-    )
+    """`_swap_in` each value of `replaced` from `staging` into the table at
+    `path`, then drop what is left of `staging`."""
     Path(path).mkdir(parents=True, exist_ok=True)
-    for n in names:
+    for name, files in replaced.items():
         _swap_in(
-            _value_dir(staging, partition_column, n),
-            _value_dir(path, partition_column, n),
-            live[n],
+            _value_dir(staging, partition_column, name),
+            _value_dir(path, partition_column, name),
+            files,
         )
     shutil.rmtree(staging, ignore_errors=True)
 
@@ -276,31 +277,24 @@ def rewrite_parquet(
     read from `path` itself (the MERGE-rewrite shape, SURVEY.md §2.6 J1).
 
     Stage → swap: write df to a staging dir (forces full materialization from the
-    OLD files), then swap directories. Never leaves a window where readers see a
-    half-written table on a posix FS.
+    OLD files), then swap it in (`_swap_in`). Never leaves a window where
+    readers see a half-written table on a posix FS.
 
     When `partition_column` AND `touched_values` are given, ONLY those partition
-    directories are staged and swapped (`rewrite_partitions`) and untouched
-    partitions keep their original files untouched. This is the 100 TB path: a
-    status flip over one ingest-date's files rewrites that date's partition,
-    not the table. A None touched value is the null partition. The whole-table
-    swap remains the fallback for unpartitioned tables or full rewrites.
+    directories are staged and swapped, and untouched partitions keep their
+    original files. This is the 100 TB path: a status flip over one
+    ingest-date's files rewrites that date's partition, not the table. A None
+    touched value is the null partition. Each touched value is cut by its live
+    on-disk bytes (module doc), so a value below twice the split size comes
+    back as one file, however many tasks `df` spans. Otherwise the whole table
+    is swapped, and `df` is written with its own partitioning:
+    `streaming/ledger.compact_ledger` clamps its width, and a shuffle here
+    would undo it.
 
-    File layout: the partition-scoped path cuts each touched value by its live
-    on-disk bytes against `spark.sql.files.maxPartitionBytes` (`files_for`),
-    so a value below twice that size comes back as one file, however many
-    tasks `df` spans. The whole-table path writes `df` with its own
-    partitioning: `compact_parquet_dir` sizes its files with an explicit
-    coalesce, and a shuffle here would undo that sizing.
-
-    Visibility contract: the WHOLE-TABLE swap is a single directory rename — a
-    reader sees either the old table or the new one, never a gap. The
-    partition-scoped path swaps each touched partition with two consecutive
-    renames (staged→tmp-in-target happens up front, so the gap is rename+rename,
-    no copy in between); a concurrent lister can still observe one partition
-    absent for that instant. Delta/Iceberg close this with a metadata pointer —
-    on plain Parquet directories per-partition atomicity is the best available,
-    and callers that need stronger isolation should swap the whole table.
+    Visibility contract: each swap is two consecutive renames with no copy in
+    between, so a concurrent lister can observe the table, or one touched
+    partition, absent for that instant. Delta/Iceberg close this with a
+    metadata pointer — on plain Parquet directories it is the best available.
 
     Partition values are matched to directory names as `col=str(value)`. Spark
     URL-escapes special characters when writing partition dirs (e.g. ':' →
@@ -309,19 +303,53 @@ def rewrite_parquet(
     int / plain-string partition values (the `p_ingestdate` convention) are the
     supported domain.
     """
-    if partition_column and touched_values is not None:
-        rewrite_partitions(
-            spark, df, path, partition_column, touched_values, split_bytes(spark)
-        )
+    if not partition_column or touched_values is None:
+        table = Path(path)
+        _swap_in(_write_staging(df, path, partition_column), table, data_files(table))
         return
+    names = _names(touched_values)
+    if not names:
+        return
+    live = {n: data_files(_value_dir(path, partition_column, n)) for n in names}
+    staging = _stage(
+        _select(df, partition_column, names), path, partition_column,
+        {n: _size(files) for n, files in live.items()}, split_bytes(spark),
+    )
+    _swap_values(staging, path, partition_column, live)
 
-    staging = _write_staging(df, path, partition_column)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    target = Path(path)
-    if target.exists():
-        target.rename(backup)
-    staging.rename(path)
-    shutil.rmtree(backup, ignore_errors=True)
+
+def _merge(
+    spark: SparkSession,
+    path: str,
+    partition_column: str | None,
+    tails: dict[str | None, list[Path]],
+    arrival: DataFrame | None = None,
+    arrival_bytes: dict[str | None, float] | None = None,
+) -> None:
+    """The append merge: stage each value of `tails` from its open files
+    `tails[value]` and its rows of `arrival` (`arrival_bytes[value]` on
+    disk, estimated), cut by on-disk bytes, and swap the staged files in for
+    those open files. The value's closed files never move."""
+    _names(tails)  # reject names the directory matcher cannot reach
+    parts = [] if arrival is None else [arrival]
+    open_files = [str(f) for files in tails.values() for f in files]
+    if open_files:
+        if arrival is not None:
+            schema = arrival.schema
+        else:  # the partition column as its directory text, which round-trips
+            schema = spark.read.parquet(*open_files).schema
+            if partition_column:
+                schema = schema.add(partition_column, "string")
+        parts.append(
+            spark.read.schema(schema).option("basePath", path).parquet(*open_files)
+        )
+    arrival_bytes = arrival_bytes or {}
+    staging = _stage(
+        reduce(DataFrame.unionByName, parts), path, partition_column,
+        {n: _size(files) + arrival_bytes.get(n, 0) for n, files in tails.items()},
+        split_bytes(spark),
+    )
+    _swap_values(staging, path, partition_column, tails)
 
 
 def append_parquet(
@@ -331,22 +359,21 @@ def append_parquet(
     partition_column: str | None = None,
 ) -> None:
     """Append `rows` to the Parquet table at `path`, merging them into each
-    touched value's open files (module doc); a missing table is created with
-    one file per value.
+    touched value's open files (module doc); a missing table is created by a
+    rebalanced first write.
 
     `rows` is cached (unless the caller cached it), and one aggregate over it
     finds the touched values and their row counts, so the staged write reads
     the arrival from the cache. The arrival's on-disk bytes are estimated from
     those counts and the bytes per row in the footers of the open files (or,
-    with none open, of one touched value's file), and each value is cut by
-    `files_for` its open files' bytes plus that estimate. Every touched value
-    is then swapped by `_swap_in`: its open files leave and the staged files
-    arrive, while its other files never move. An empty arrival writes
-    nothing."""
+    with none open, of one data file of a touched value or else of the
+    table), and each value is cut by `files_for` its open files' bytes plus
+    that estimate. An empty arrival writes nothing."""
     table = Path(path)
-    target = split_bytes(spark)
     if not table.exists():
-        _stage(rows, path, partition_column, None, target).rename(table)
+        if partition_column:
+            rows = rows.hint("rebalance", partition_column)
+        _swap_in(_write_staging(rows, path, partition_column), table, [])
         return
     cache_here = rows.storageLevel == StorageLevel.NONE
     if cache_here:
@@ -360,36 +387,39 @@ def append_parquet(
         }
         if not counts:
             return
-        names = _names(counts)
-        live = {n: data_files(_value_dir(path, partition_column, n)) for n in names}
-        tails = {
-            n: [f for f in files if f.stat().st_size < target // 2]
-            for n, files in live.items()
-        }
-        open_files = [f for n in names for f in tails[n]]
-        sample = open_files or [f for n in names for f in live[n]][:1]
-        row_bytes = _row_bytes(sample)
-        merged = rows
-        if open_files:
-            merged = rows.unionByName(
-                spark.read.schema(rows.schema)
-                .option("basePath", path)
-                .parquet(*[str(f) for f in open_files])
-            )
-        staging = _stage(
-            merged, path, partition_column,
-            {n: _size(tails[n]) + counts[n] * row_bytes for n in names}, target,
+        target = split_bytes(spark)
+        live = {n: data_files(_value_dir(path, partition_column, n)) for n in counts}
+        tails = {n: _open(files, target) for n, files in live.items()}
+        row_bytes = _row_bytes(
+            [f for files in tails.values() for f in files]
+            or [f for files in live.values() for f in files][:1]
+            or table_files(path)[:1]
         )
-        for n in names:
-            _swap_in(
-                _value_dir(staging, partition_column, n),
-                _value_dir(path, partition_column, n),
-                tails[n],
-            )
-        shutil.rmtree(staging, ignore_errors=True)
+        _merge(
+            spark, path, partition_column, tails, rows,
+            {n: c * row_bytes for n, c in counts.items()},
+        )
     finally:
         if cache_here:
             rows.unpersist()
+
+
+def compact_open_files(
+    spark: SparkSession, path: str, partition_column: str | None = None
+) -> None:
+    """The append merge with no arrival: in every value of the table at
+    `path` holding two or more open files, those files are merged (module
+    doc). Closed files never move, and a value with one open file or none is
+    left as it is."""
+    target = split_bytes(spark)
+    if partition_column:
+        live = {v: data_files(d) for v, d in value_dirs(path, partition_column).items()}
+    else:
+        live = {None: data_files(Path(path))}
+    tails = {v: _open(files, target) for v, files in live.items()}
+    tails = {v: files for v, files in tails.items() if len(files) > 1}
+    if tails:
+        _merge(spark, path, partition_column, tails)
 
 
 _GEN_RE = re.compile(r"^(?P<prefix>.+)_(?P<n>\d+)$")

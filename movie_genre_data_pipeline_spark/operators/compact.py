@@ -1,32 +1,25 @@
-"""Small-file compaction — the table-maintenance pass incremental pipelines need.
+"""Small-file compaction — the maintenance pass for Parquet tables that did not
+grow through `fsutil.append_parquet`.
 
 The reference's Autoloader variant appends one file set per Trigger.Once run
-(reference: Autoloader_notebook/Raw_to_Bronze.py:62-70); Delta's OPTIMIZE would
-compact those on Databricks, but on OSS Parquet the small-file problem is ours to
-solve: a 100 TB table fed by thousands of micro-batches degrades into millions of
-KB-scale files, and scan cost becomes dominated by file-open overhead instead of
-bytes.
+(reference: Autoloader_notebook/Raw_to_Bronze.py:62-70); Delta's OPTIMIZE and
+auto-compaction keep those files large on Databricks, but on OSS Parquet the
+small-file problem is ours to solve: a 100 TB table fed by thousands of
+micro-batches or many writers degrades into millions of KB-scale files, and
+scan cost becomes dominated by file-open overhead instead of bytes.
 
-`compact_parquet_dir` rewrites a Parquet directory into ~target-sized files:
-
-- file counts come from the MEASURED on-disk bytes (not row counts), through
-  `fsutil.files_for`, the same sizing every append and partition-scoped
-  rewrite uses, so the result holds for any row width;
-- an unpartitioned table is rewritten by one narrow `coalesce` job (no
-  shuffle at all) and swapped whole by `fsutil.rewrite_parquet`'s
-  stage-then-rename, so readers never see a half-compacted table;
-- a partitioned table (pass `partition_column`) is judged per value: only the
-  values holding more files than their own bytes call for are rewritten,
-  through `fsutil.rewrite_partitions`, and every other value keeps its files.
-
-Appends keep tables compact on their own: `fsutil.append_parquet` merges each
-arrival into its value's small tail file. This pass is for tables written some
-other way, e.g. by many writers or by an older layout.
+`compact_parquet_dir` is the append merge with no arrival
+(`fsutil.compact_open_files`). In every partition value holding two or more
+open files — data files below half of `spark.sql.files.maxPartitionBytes` —
+those files are merged by the same staged write and swap an append uses, cut
+by their on-disk bytes. Closed files never move, in compaction just as in
+appends, so a value made only of closed files is not rewritten however many
+it holds. Afterwards every value holds at most one open file, the invariant
+appends keep. There is no target parameter: like every staged write in
+`fsutil`, the files aim at Spark's read split.
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -34,53 +27,28 @@ from movie_genre_data_pipeline_spark import fsutil
 
 
 def dir_parquet_stats(path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) for a Parquet directory (recursive — covers
-    hive-partitioned layouts)."""
-    files = [
-        p
-        for p in Path(path).rglob("*.parquet")
-        if p.is_file() and not p.name.startswith((".", "_"))
-    ]
+    """(n_data_files, total_bytes) for a Parquet directory, partition
+    directories included (`fsutil.table_files`)."""
+    files = fsutil.table_files(path)
     return len(files), sum(p.stat().st_size for p in files)
 
 
 def compact_parquet_dir(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
     partition_column: str | None = None,
 ) -> dict[str, int]:
-    """Rewrite the Parquet table at `path` into `files_for(bytes, target)`
-    files, per partition value when `partition_column` is given.
+    """Merge the open files of each value of the Parquet table at `path`
+    (module doc), per partition value when `partition_column` is given.
 
     Returns {"files_before", "files_after", "bytes"} so callers (and tests) can
     assert the compaction actually happened. No-op (no rewrite at all) for a
-    table, or a partition value, already at or below its target file count.
-    A partition value that needs rewriting and that Spark escapes in its
-    directory name (e.g. a timestamp) raises ValueError, as in
-    `fsutil.rewrite_parquet`.
+    table whose every value holds at most one open file. A partition value
+    that needs merging and that Spark escapes in its directory name (e.g. a
+    timestamp) raises ValueError, as in `fsutil.rewrite_parquet`.
     """
     files_before, total_bytes = dir_parquet_stats(path)
-    if partition_column:
-        over = []
-        for value, directory in fsutil.value_dirs(path, partition_column).items():
-            files = fsutil.data_files(directory)
-            n_bytes = sum(f.stat().st_size for f in files)
-            if len(files) > fsutil.files_for(n_bytes, target_file_bytes):
-                over.append(value)
-        if over:
-            fsutil.rewrite_partitions(
-                spark, spark.read.parquet(path), path, partition_column, over,
-                target_file_bytes,
-            )
-    else:
-        n_target = fsutil.files_for(total_bytes, target_file_bytes)
-        if files_before > n_target:
-            # pure shrink: coalesce is narrow — each output task concatenates
-            # input splits, zero shuffle
-            fsutil.rewrite_parquet(
-                spark, spark.read.parquet(path).coalesce(n_target), path
-            )
+    fsutil.compact_open_files(spark, path, partition_column)
     files_after, _ = dir_parquet_stats(path)
     return {
         "files_before": files_before,

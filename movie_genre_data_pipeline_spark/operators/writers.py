@@ -13,30 +13,12 @@ Scale notes:
   session.py) rewrites only the partitions present in the frame — idempotent
   re-runs without the reference's rm -r (Batch_notebook/rawToBronze.py:7).
 - File layout of a one-shot partitioned write: a plain `partitionBy` writes
-  one file per (task, value), so a frame spread over N tasks leaves up to N
-  small files in every value's directory, and opens, footer parses and
-  listings scale with files, not bytes. So `batch_writer` first applies
-  Spark's REBALANCE hint on the partition columns. Under AQE (on in
-  session.py; Spark's default since 3.2) the rebalance exchange coalesces
-  small shuffle partitions, so each value lands in one file, and splits any
-  value larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes` into
-  several, so files never funnel one value through one writer. Without AQE
-  the hint is a plain hash repartition on the partition columns: one file per
-  value, but one task per value too. Batch bronze is written this way.
-- Tables that grow by appends are not sized here. The reference leaves that
-  to Delta's OPTIMIZE and auto-compaction; open-source Parquet has none, so
-  `fsutil.append_parquet` merges each append into its value's small tail
-  file, and `fsutil`'s staged writes (appends, partition-scoped rewrites,
-  `compact_parquet_dir`) cut values by on-disk bytes (`fsutil.files_for`).
-  The advisory size counts shuffle bytes, which zstd Parquet comes out
-  several times smaller than, so a value it split would leave several small
-  files that every later append would rewrite again. The silver tables and
-  the status ledger grow this way.
-- The raw→bronze file-sink stream in `streaming/incremental.py` does not go
-  through here either: a streaming query runs without AQE and every row of
-  one arrival shares its `p_ingestdate`, so the hint would put the whole
-  arrival through one task. Its files are never merged, since the sink's
-  `_spark_metadata` log lists them by name.
+  one file per (task, value), so `batch_writer` first applies Spark's
+  REBALANCE hint on the partition columns. Under AQE (on in session.py) each
+  value then lands in one file, or in advisory-sized files when it is large;
+  without AQE the hint is a hash repartition, one file and one task per
+  value. Batch bronze is written this way. Tables that grow by appends are
+  sized by `fsutil` (its module doc).
 """
 
 from __future__ import annotations

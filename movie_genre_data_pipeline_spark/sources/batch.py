@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from movie_genre_data_pipeline_spark.fsutil import table_files
+
 
 def read_multiline_json(
     spark: SparkSession, path: str, schema: StructType | None = None
@@ -81,7 +83,7 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
         return []
     p = Path(path)
     if p.is_dir():
-        candidates = sorted(p.rglob("*.parquet"))
+        candidates = table_files(p)
         if not candidates:
             return []
         p = candidates[0]

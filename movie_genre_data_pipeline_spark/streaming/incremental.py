@@ -97,15 +97,22 @@ class IncrementalMedallionPipeline:
         ]).distinct()
         fsutil.append_parquet(self.spark, entries, self.ledger_path)
 
+    def _ledger_precedence(self) -> DataFrame | None:
+        """(vkey, p): each payload's max-precedence ledger entry, or None
+        before the ledger exists. Only the ledger moves a record past 'new'."""
+        if not Path(self.ledger_path).exists():
+            return None
+        ledger = read_parquet(self.spark, self.ledger_path)
+        return ledger.groupBy("vkey").agg(F.max("precedence").alias("p"))
+
     def current_status(self) -> DataFrame:
         """(vkey, status) — max-precedence ledger entry per payload; records never
         seen by silver processing default to 'new'."""
         bronze = read_parquet(self.spark, self.config.bronze_path)
         keys = bronze.select(value_key("value").alias("vkey")).distinct()
-        if not Path(self.ledger_path).exists():
+        latest = self._ledger_precedence()
+        if latest is None:
             return keys.select("vkey", F.lit(STATUS_NEW).alias("status"))
-        ledger = read_parquet(self.spark, self.ledger_path)
-        latest = ledger.groupBy("vkey").agg(F.max("precedence").alias("p"))
         status_col = F.coalesce(
             *[F.when(F.col("p") == p, F.lit(s)) for s, p in _PRECEDENCE.items()],
             F.lit(STATUS_NEW),
@@ -184,13 +191,17 @@ class IncrementalMedallionPipeline:
     # -- stage 3: repair loop ------------------------------------------------------
     def silver_update(self) -> int:
         """Quarantined records (per ledger) get RunTime=abs(RunTime), insert-if-
-        missing into silver, and a 'loaded' ledger entry."""
-        bronze = read_parquet(self.spark, self.config.bronze_path)
-        status = self.current_status().filter(F.col("status") == STATUS_QUARANTINED)
+        missing into silver, and a 'loaded' ledger entry. Their keys come from
+        the ledger's fold alone, so bronze is hashed once, for the join."""
+        latest = self._ledger_precedence()
+        if latest is None:  # no ledger: nothing is quarantined
+            return 0
+        keys = latest.filter(F.col("p") == _PRECEDENCE[STATUS_QUARANTINED])
         quarantined = (
-            bronze.withColumn("vkey", value_key("value"))
-            .join(F.broadcast(status), "vkey")
-            .drop("vkey", "status")
+            read_parquet(self.spark, self.config.bronze_path)
+            .withColumn("vkey", value_key("value"))
+            .join(F.broadcast(keys.select("vkey")), "vkey")
+            .drop("vkey")
         )
         silver_ready = repair(quarantined, self.config.budget_floor).cache()
         n = silver_ready.count()

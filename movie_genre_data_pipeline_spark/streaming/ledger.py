@@ -97,7 +97,9 @@ def compact_ledger(
     a caller with max_files below the default width (e.g. max_files=2 on a
     32-partition session) would stay above threshold after every compaction
     and re-fold the full ledger on every subsequent batch — unbounded write
-    amplification, the r14 advice finding.
+    amplification, the r14 advice finding. So this fold keeps its own width
+    and takes `rewrite_parquet`'s whole-table path, which writes the frame as
+    partitioned: fsutil's byte-sized cuts know no file-count threshold.
     """
     from movie_genre_data_pipeline_spark.fsutil import rewrite_parquet
     from movie_genre_data_pipeline_spark.sources.batch import read_parquet
@@ -116,12 +118,13 @@ def compact_ledger(
 
 def ledger_file_count(path: str) -> int:
     """Number of Parquet shard files in the ledger pile at `path` — the
-    cadence signal maybe_compact_ledger thresholds on. A directory listing,
-    never a data scan; on HDFS/object stores this is the same listStatus the
-    reader's file-source planning pays anyway."""
-    from pathlib import Path
+    cadence signal maybe_compact_ledger thresholds on. A directory listing
+    (`fsutil.table_files`, which skips what a swap has set aside), never a
+    data scan; on HDFS/object stores this is the same listStatus the reader's
+    file-source planning pays anyway."""
+    from movie_genre_data_pipeline_spark.fsutil import table_files
 
-    return sum(1 for p in Path(path).rglob("*.parquet") if p.is_file())
+    return len(table_files(path))
 
 
 def maybe_compact_ledger(

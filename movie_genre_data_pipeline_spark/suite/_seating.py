@@ -35,7 +35,10 @@ constant, or oracle still does.
 Name resolution is by bare name across ALL package modules (suite style is
 function-local imports, which never appear in __globals__), which is
 deliberately OVER-inclusive: a name collision can only pull in extra source
-text and force a spurious re-check — never miss a real change.
+text and force a spurious re-check — never miss a real change. The one
+module left out is `shipping`: every query reaches it through `suite.load`,
+but packaging the engine for workers cannot change a query's rows, and
+following it made a one-line edit there re-check all 403 loading queries.
 
 `seating_manifest.json` records each query's fingerprint as of its last
 passing exact check. tests/test_registry.py runs every stale query against
@@ -56,6 +59,8 @@ import types
 from pathlib import Path
 
 _PKG = "movie_genre_data_pipeline_spark"
+# worker packaging: reached by every query, never part of its rows (module doc)
+_UNFOLLOWED = f"{_PKG}.shipping"
 MANIFEST_PATH = Path(__file__).resolve().parent / "seating_manifest.json"
 
 def _module_assign_sources(py_path: str) -> dict[str, list[str]]:
@@ -98,6 +103,8 @@ def _package_name_map() -> dict[str, list[tuple[str, str]]]:
     pkg = importlib.import_module(_PKG)
     out: dict[str, list[tuple[str, str]]] = {}
     for info in pkgutil.walk_packages(pkg.__path__, prefix=f"{_PKG}."):
+        if info.name == _UNFOLLOWED:
+            continue
         try:
             mod = importlib.import_module(info.name)
         except Exception:  # pragma: no cover - optional deps
@@ -130,8 +137,9 @@ def _code_names(code) -> set[str]:
     return names
 
 
-def query_fingerprint(fn, oracle: str) -> str:
-    """sha256 fingerprint of a query's implementation (see module doc)."""
+def fingerprint_pieces(fn, oracle: str) -> dict[str, str]:
+    """{content key: source text} of everything a query's fingerprint covers
+    (see module doc)."""
     name_map = _package_name_map()
     pieces: dict[str, str] = {"__oracle__": oracle}
     frontier: list[types.FunctionType] = [fn]
@@ -159,6 +167,12 @@ def query_fingerprint(fn, oracle: str) -> str:
                     cand = getattr(g, n, None)
                     if isinstance(cand, types.FunctionType):
                         frontier.append(cand)
+    return pieces
+
+
+def query_fingerprint(fn, oracle: str) -> str:
+    """sha256 fingerprint of a query's implementation (see module doc)."""
+    pieces = fingerprint_pieces(fn, oracle)
     h = hashlib.sha256()
     for key in sorted(pieces):
         h.update(key.encode())

@@ -1,9 +1,12 @@
 """Small-file compaction (operators/compact.py): the maintenance pass that keeps
 incrementally-fed Parquet tables scannable at scale. Content must survive the
 rewrite exactly; file counts must actually shrink; an already-compact table must
-not be rewritten."""
+not be rewritten, and a closed file never moves. Compaction aims at
+`spark.sql.files.maxPartitionBytes`, so the tests set it (`_split`)."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 
@@ -15,6 +18,18 @@ from movie_genre_data_pipeline_spark.operators.compact import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@contextmanager
+def _split(spark, n_bytes: int):
+    """`spark.sql.files.maxPartitionBytes` set to `n_bytes`, restored after."""
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, str(n_bytes))
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, saved)
 
 
 def _fragmented_copy(spark, tmp_path, n_files: int, partition_column=None) -> str:
@@ -38,7 +53,8 @@ def test_compact_shrinks_files_preserves_rows(spark, tmp_path):
     assert n_before == 40
 
     # target = whole table in one file
-    stats = compact_parquet_dir(spark, path, target_file_bytes=total_bytes + 1)
+    with _split(spark, total_bytes + 1):
+        stats = compact_parquet_dir(spark, path)
     assert stats["files_before"] == 40
     assert stats["files_after"] == 1
     after_rows = sorted(spark.read.parquet(path).collect())
@@ -49,7 +65,8 @@ def test_compact_noop_when_already_compact(spark, tmp_path):
     path = _fragmented_copy(spark, tmp_path, n_files=2)
     _, total_bytes = dir_parquet_stats(path)
     first_listing = sorted(p for p in __import__("pathlib").Path(path).rglob("*"))
-    stats = compact_parquet_dir(spark, path, target_file_bytes=total_bytes // 2)
+    with _split(spark, total_bytes // 2):
+        stats = compact_parquet_dir(spark, path)
     # 2 files <= ceil(bytes/target)=2 or 3 -> no rewrite at all (same file objects)
     assert stats["files_before"] == stats["files_after"] == 2
     assert sorted(p for p in __import__("pathlib").Path(path).rglob("*")) == (
@@ -70,6 +87,30 @@ def test_compact_partitioned_noop_keeps_file_names(spark, tmp_path):
     assert sorted(pathlib.Path(path).rglob("*.parquet")) == before
 
 
+def test_compact_merges_open_files_and_never_moves_a_closed_one(spark, tmp_path):
+    """A value holding one closed file and two open ones: compaction merges
+    the open files into one, and the closed file keeps its name and mtime."""
+    import pathlib
+
+    path = str(tmp_path / "t")
+    for lo, hi in ((0, 2000), (2000, 2010), (2010, 2020)):  # one file each
+        spark.range(lo, hi, 1, 1).selectExpr(
+            "cast(id AS int) AS id", "sha2(cast(id AS string), 256) AS v", "'a' AS p"
+        ).write.mode("append").partitionBy("p").parquet(path)
+    value = pathlib.Path(path) / "p=a"
+    files = sorted(value.glob("*.parquet"), key=lambda f: f.stat().st_size)
+    assert len(files) == 3
+    big = files[-1]
+    big_mtime = big.stat().st_mtime_ns
+
+    with _split(spark, 2 * big.stat().st_size):  # big sits at half: closed
+        stats = compact_parquet_dir(spark, path, partition_column="p")
+
+    assert stats["files_before"] == 3 and stats["files_after"] == 2
+    assert big.exists() and big.stat().st_mtime_ns == big_mtime
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(2020))
+
+
 def test_compact_partitioned_keeps_layout(spark, tmp_path):
     path = _fragmented_copy(spark, tmp_path, n_files=16, partition_column="p_status")
     before_rows = sorted(
@@ -78,9 +119,8 @@ def test_compact_partitioned_keeps_layout(spark, tmp_path):
     n_before, total_bytes = dir_parquet_stats(path)
     assert n_before > 3  # fragmented across partition dirs
 
-    compact_parquet_dir(
-        spark, path, target_file_bytes=total_bytes + 1, partition_column="p_status"
-    )
+    with _split(spark, total_bytes + 1):
+        compact_parquet_dir(spark, path, partition_column="p_status")
     after = spark.read.parquet(path)
     # hive layout survives: partition column still derivable from dirs
     assert "p_status" in after.columns
@@ -138,11 +178,8 @@ def test_compact_partitioned_splits_large_partition_values(spark, tmp_path):
     n_values = len(part_dirs)
 
     # demand ~3 files per partition value
-    stats = compact_parquet_dir(
-        spark, path,
-        target_file_bytes=max(1, total_bytes // (3 * n_values)),
-        partition_column="p_status",
-    )
+    with _split(spark, max(1, total_bytes // (3 * n_values))):
+        stats = compact_parquet_dir(spark, path, partition_column="p_status")
     assert stats["files_after"] < stats["files_before"]
     # the biggest partition value (O's dominate o_orderstatus) got >1 file
     sizes = {
@@ -264,11 +301,10 @@ def test_bm25_ledger_fold_survives_mid_stream_compaction(spark, tmp_path):
         if batch_id == 1:
             # big target => everything into one file; the GC a live index runs
             for led in (led_tf, led_dl):
-                compactions.append(
-                    compact_parquet_dir(spark, led, target_file_bytes=1 << 30)
-                )
+                compactions.append(compact_parquet_dir(spark, led))
 
-    run_twin(d, apply_batch, str(tmp_path))
+    with _split(spark, 1 << 30):
+        run_twin(d, apply_batch, str(tmp_path))
 
     assert len(compactions) == 2
     assert all(s["files_after"] < s["files_before"] for s in compactions), (

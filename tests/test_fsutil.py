@@ -222,6 +222,43 @@ def test_append_cuts_a_large_merge_into_closed_files(spark, tmp_path):
     assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(2000))
 
 
+def test_append_sizes_new_values_by_the_tables_bytes_per_row(spark, tmp_path):
+    """Touched values that hold no file yet are sized by the bytes per row of
+    any data file of the table, so a large arrival into new values is cut
+    into several files, not written by one task as one file."""
+    path = str(tmp_path / "t")
+    append_parquet(spark, _rows(spark, (0, 20_000), "a"), path, "p")
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, str(64 * 1024))
+    try:
+        append_parquet(spark, _rows(spark, (20_000, 40_000), "b").unionByName(
+            _rows(spark, (40_000, 60_000), "c")), path, "p")
+    finally:
+        spark.conf.set(conf, saved)
+
+    counts = _data_file_counts(path)
+    assert counts["p=b"] > 1 and counts["p=c"] > 1, counts
+    assert spark.read.parquet(path).count() == 60_000
+
+
+def test_first_append_is_rebalanced_not_one_task(spark, tmp_path):
+    """A missing table is created by a rebalanced write: under AQE a value
+    larger than the advisory partition size is split over several files
+    instead of going through one task."""
+    path = str(tmp_path / "t")
+    conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, str(256 * 1024))
+    try:
+        append_parquet(spark, _rows(spark, (0, 40_000), "a"), path, "p")
+    finally:
+        spark.conf.set(conf, saved)
+
+    assert _data_file_counts(path)["p=a"] > 1
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(40_000))
+
+
 def test_upsert_update_writes_null_like_delta_merge(spark):
     """Delta MERGE whenMatchedUpdate writes the source value even when NULL —
     a coalesce-based emulation would silently keep the target value instead."""

@@ -214,3 +214,27 @@ def test_fingerprints_ignore_runtime_module_state():
         if hasattr(_seating, "_NAME_MAP"):
             del _seating._NAME_MAP
     assert before == after
+
+
+def test_no_fingerprint_piece_comes_from_shipping():
+    """Worker packaging cannot change a query's rows, so no fingerprint covers
+    `shipping`'s source, though every loading query reaches it through
+    `suite.load`: an edit there leaves every query seated."""
+    import inspect
+
+    import movie_genre_data_pipeline_spark.shipping as sh
+    from movie_genre_data_pipeline_spark.suite import _seating, load
+
+    shipped = [
+        inspect.getsource(f) for f in vars(sh).values()
+        if inspect.isfunction(f) and f.__module__ == sh.__name__
+    ] + [seg for segs in _seating._module_assign_sources(sh.__file__).values()
+         for seg in segs]
+    assert shipped
+    pieces = {
+        text
+        for spec in all_queries().values()
+        for text in _seating.fingerprint_pieces(spec.fn, spec.oracle).values()
+    }
+    assert inspect.getsource(load) in pieces  # the path into shipping is live
+    assert not [src for src in shipped for text in pieces if src in text]
