@@ -4,11 +4,12 @@ MinHash+LSH, SimHash, and n-gram Jaccard.
 Scale design (the whole point of these):
 - Exact dedup = hash-groupBy on a digest of normalized text — one shuffle keyed by
   a 128-bit hash, perfectly balanced.
-- MinHash+LSH never compares all pairs: signatures are computed per-row with JVM
-  higher-order functions (zero shuffle), then candidates come from ONE shuffle on
-  (band, band_key) — docs only meet if they collide in a band bucket. This is the
-  standard shingle→minhash→band→bucket-join pipeline; complexity O(n·H) + bucket
-  joins, never O(n²).
+- MinHash+LSH never compares all pairs: signatures are per-doc minima over
+  shingle rows (map-side partial aggregation before the one shuffle on doc id),
+  then candidates come from ONE shuffle on (band, band_key) — docs only meet if
+  they collide in a band bucket. This is the standard
+  shingle→minhash→band→bucket-join pipeline; complexity O(n·H) + bucket joins,
+  never O(n²).
 - SimHash: one explode + one groupBy(doc) — linear; near-dup lookup then groups by
   simhash prefix.
 - n-gram Jaccard is exact pairwise similarity, so it MUST be candidate-limited:
@@ -30,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.functions.text import fingerprint, tokens
+from movie_genre_data_pipeline_spark.session import materialize
 
 
 # -- exact ----------------------------------------------------------------------
@@ -79,66 +81,10 @@ def exact_dedup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-# -- shingling -------------------------------------------------------------------
-def word_shingles(col: str | Column, k: int = 3) -> Column:
-    """Array of word k-grams (space-joined). Documents shorter than k words get an
-    empty array (sequence() would count DOWN for n<k, hence the guard)."""
-    toks = tokens(col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), n - F.lit(k - 1))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
-
-
 # -- MinHash + LSH -----------------------------------------------------------------
 # Largest prime below 2^48: the affine family (a + h*b) % MINHASH_P over the two
 # 48-bit halves of md5(shingle). One md5 per shingle, H cheap arithmetic ops.
 MINHASH_P = 281474976710597
-
-
-def _affine_hash(digest: Column, h: Column | int) -> Column:
-    """(a + h*b) mod P where a/b are the md5 hex digest's 48-bit halves."""
-    a = F.conv(F.substring(digest, 1, 12), 16, 10).cast("long")
-    b = F.conv(F.substring(digest, 13, 12), 16, 10).cast("long")
-    h_col = F.lit(h) if isinstance(h, int) else h.cast("long")
-    return (a + h_col * b) % F.lit(MINHASH_P)
-
-
-def minhash_signature(col: str | Column, num_hashes: int = 12, k: int = 3) -> Column:
-    """MinHash signature as array<long> of length `num_hashes`:
-    sig[h] = min over shingles of (a + h*b) mod P, a/b = halves of md5(shingle).
-    Empty-shingle docs get the sentinel P (> any residue) so they never collide
-    with real text."""
-    digests = F.transform(word_shingles(col, k), lambda s: F.md5(s))
-    hash_ids = F.array(*[F.lit(h) for h in range(num_hashes)])
-    sig = F.transform(
-        hash_ids,
-        lambda h: F.array_min(
-            F.transform(digests, lambda d: _affine_hash(d, h))
-        ),
-    )
-    sentinel = F.array(*[F.lit(MINHASH_P).cast("long") for _ in range(num_hashes)])
-    return F.when(F.size(digests) > 0, sig).otherwise(sentinel)
-
-
-def lsh_band_keys(
-    col: str | Column, bands: int = 4, rows_per_band: int = 3, k: int = 3
-) -> Column:
-    """Array of `bands` bucket keys; two docs are candidates iff any key matches.
-    key[b] = md5(b || '|' || sig[b*r] || '|' || ... || sig[b*r+r-1])."""
-    sig = minhash_signature(col, bands * rows_per_band, k)
-    band_ids = F.array(*[F.lit(b) for b in range(bands)])
-    return F.transform(
-        band_ids,
-        lambda b: F.md5(
-            F.concat_ws(
-                "|",
-                b.cast("string"),
-                # slice is 1-based; band b covers sig[b*r+1 .. b*r+r]
-                F.concat_ws("|", F.slice(sig, b * rows_per_band + 1, rows_per_band)),
-            )
-        ),
-    )
 
 
 def shingle_rows(
@@ -151,7 +97,7 @@ def shingle_rows(
 ) -> DataFrame:
     """(doc, s) word-k-gram rows via POSITION explode: the generator input is a
     cheap `sequence(1, n_tokens-k+1)` and the shingle string is sliced AFTER the
-    explode from the carried tokens array. Exploding `word_shingles(...)`
+    explode from the carried tokens array. Exploding a per-doc shingle array
     directly re-evaluates the whole nested slice/concat HOF per output row —
     O(n_tokens²) per doc; measured 10× slower than this shape on the sf0.1
     corpus. Docs with < k tokens are filtered out (they have no shingles; the
@@ -192,9 +138,9 @@ def minhash_signature_table(
     Documents with fewer than k tokens produce no shingles and drop out — they
     have no text signature.
 
-    (A pure column-expression variant — `minhash_signature` — exists, but keeping
-    giant nested HOF expressions out of Generate/joins matters: Spark re-evaluates
-    generator input per output row, measured 7× slower on this exact operator.)
+    Not a pure column expression: keeping giant nested HOF expressions out of
+    Generate/joins matters — Spark re-evaluates generator input per output row,
+    and the column-expression form measured 7× slower on this exact operator.
     """
     sh = shingle_rows(df, id_col, text_col, k)
     # one md5 per shingle ROW; the H family members are cheap arithmetic on its
@@ -349,12 +295,11 @@ def ngram_jaccard_pairs(
     blocking = blocking or []
     # same four-consumer shape as the containment scan below: pin the
     # shingle frame or the tokenize+explode runs 4x per action (r11 audit)
-    sh = (
+    sh = materialize(
         shingle_rows(
             df, id_col, text_col, k, extra_cols=tuple(blocking), distinct=True
         )
         .withColumnRenamed("s", "sh")
-        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
@@ -411,12 +356,11 @@ def ngram_containment_pairs(
     # the shingle frame feeds FOUR consumers (both join sides + both size
     # lookups) — one barrier or the tokenize+shingle explode runs 4x per
     # action (plan audit: 4 corpus scans without it; the funnel lesson)
-    sh = (
+    sh = materialize(
         shingle_rows(
             df, id_col, text_col, k, extra_cols=tuple(blocking), distinct=True
         )
         .withColumnRenamed("s", "sh")
-        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
@@ -514,7 +458,7 @@ def duplicate_clusters(
     Iterative min-label propagation: per round every node takes the min of its
     own label and its neighbors' labels; converges in O(graph diameter) rounds.
     Each round is one equi-join + one aggregate (shuffles on node id), and the
-    frame is localCheckpoint'ed to truncate lineage — the standard Spark shape
+    frame is checkpointed to truncate lineage — the standard Spark shape
     for iterative algorithms (no exponential plan growth, spill-safe). This is a
     genuinely non-SQL-expressible operator batch-side; the DuckDB oracle uses a
     recursive CTE instead.
@@ -526,9 +470,12 @@ def duplicate_clusters(
         )
         .distinct()
     )
-    labels = all_docs.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("lbl")
-    ).localCheckpoint(eager=True)
+    labels = materialize(
+        all_docs.select(
+            F.col(id_col).alias("node"), F.col(id_col).alias("lbl")
+        ),
+        eager=True,
+    )
 
     for _ in range(max_iterations):
         neighbor_min = (
@@ -536,13 +483,13 @@ def duplicate_clusters(
             .groupBy("src")
             .agg(F.min("lbl").alias("nlbl"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
                 F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         changed = (
             new_labels.alias("n")

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.session import materialize
+
 
 def pagerank_fixed_point(
     edges: DataFrame,
@@ -54,16 +56,17 @@ def pagerank_fixed_point(
     # materialize the edge list ONCE: the graph is usually derived by an
     # expensive fact-side reduction (the suite's 5-way TPC-H join), and every
     # iteration references it — without a stage barrier each of the
-    # `iterations` plans would re-execute that derivation. localCheckpoint
+    # `iterations` plans would re-execute that derivation. The checkpoint
     # truncates the lineage so iterations replan only dimension-sized joins.
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
-    nodes = (
+    e = materialize(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
+        eager=True,
+    )
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -90,7 +93,10 @@ def pagerank_fixed_point(
             .groupBy("dst")
             .agg(F.sum("contrib").alias("in_sum"))
         )
-        ranks = (
+        # flat lineage per iteration: without this, iteration t's plan
+        # re-executes iterations 1..t-1 (O(iter²) shuffles). Rank state is
+        # one row per node — the checkpoint is vertex-sized.
+        ranks = materialize(
             nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
             .select(
                 "node",
@@ -102,11 +108,8 @@ def pagerank_fixed_point(
                         / F.lit(float(d_den))
                     ).cast("double")
                 ).alias("rank_fp"),
-            )
-            # flat lineage per iteration: without this, iteration t's plan
-            # re-executes iterations 1..t-1 (O(iter²) shuffles). Rank state is
-            # one row per node — the checkpoint is vertex-sized.
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return ranks.select(
         "node", "rank_fp", (F.col("rank_fp") / F.lit(scale)).alias("rank")
@@ -131,11 +134,11 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     equi-join — each triangle counted exactly once. All three joins are on
     node keys (shuffle- or broadcast-joinable); no neighborhood arrays, so
     skewed high-degree nodes cost |N(v)|² join rows, not driver memory."""
-    # localCheckpoint (not cache) so the shared oriented edge list is
+    # a checkpoint (not cache) so the shared oriented edge list is
     # materialized once for the three joins below but its blocks are released
     # by the ContextCleaner when the frame is GC'd — a plain cache() here
     # leaked executor storage across repeated calls in a long-lived session.
-    und = orient_edges(edges, src, dst).localCheckpoint(eager=True)
+    und = materialize(orient_edges(edges, src, dst), eager=True)
     e1 = und.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     e2 = und.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     e3 = und.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
@@ -166,9 +169,9 @@ def kcore_peel(
 
     Scale shape: a round is one degree aggregate (groupBy node over the
     current edge set, map-side combined) + two semi-joins to drop edges
-    touching removed nodes. Edge state is localCheckpoint'd per round so
+    touching removed nodes. Edge state is checkpointed per round so
     lineage stays flat; state is O(|edges|), never per-round multiples."""
-    active = orient_edges(edges, src, dst).localCheckpoint(eager=True)
+    active = materialize(orient_edges(edges, src, dst), eager=True)
     for _ in range(rounds):
         deg = (
             active.select(F.col("lo").alias("n"))
@@ -177,11 +180,11 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("n")
-        active = (
+        active = materialize(
             active.join(keep.withColumnRenamed("n", "lo"), "lo", "left_semi")
             .join(keep.withColumnRenamed("n", "hi"), "hi", "left_semi")
-            .select("lo", "hi")
-            .localCheckpoint(eager=True)
+            .select("lo", "hi"),
+            eager=True,
         )
     return (
         active.select(F.col("lo").alias("node"))
@@ -212,24 +215,24 @@ def label_propagation(
     Scale shape: a round is one edge⋈label equi-join on the node key + one
     (node, label) count aggregate (map-side combined) + one per-node top-1
     window — all keyed on the node, so state is O(|edges|) per round and the
-    per-round label frame is localCheckpoint'd to keep lineage flat."""
+    per-round label frame is checkpointed to keep lineage flat."""
     from pyspark.sql import Window
 
-    und = (
+    und = materialize(
         orient_edges(edges, src, dst)
         .selectExpr("lo AS e_src", "hi AS e_dst")
         .unionAll(
             orient_edges(edges, src, dst).selectExpr(
                 "hi AS e_src", "lo AS e_dst"
             )
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
-    labels = (
+    labels = materialize(
         und.select(F.col("e_src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("label", F.col("node")),
+        eager=True,
     )
     for _ in range(rounds):
         counts = (
@@ -247,13 +250,13 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", F.col("label").alias("new_label"))
         )
-        labels = (
+        labels = materialize(
             labels.join(pick, "node", "left")
             .select(
                 "node",
                 F.coalesce("new_label", "label").alias("label"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return labels.orderBy("node")
 
@@ -268,7 +271,7 @@ def local_triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") 
     fold, so the count arrives via one explode of a 3-array — no second pass
     over the edge list. Skew cost is the same |N(v)|² join-row bound as the
     census; per-node state is two integers."""
-    und = orient_edges(edges, src, dst).localCheckpoint(eager=True)
+    und = materialize(orient_edges(edges, src, dst), eager=True)
     e1 = und.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     e2 = und.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     e3 = und.select(F.col("lo").alias("a"), F.col("hi").alias("c"))

@@ -2,18 +2,17 @@
 the IVF coarse quantizer (`similarity.py` uses the fixture's `label` as a stand-in
 cell id; this module learns real cells).
 
-Spark shape: per iteration, ONE equi-free assignment pass (centroids are a
-broadcast literal array — no join, no shuffle) + ONE groupBy(cluster) partial
+Spark shape: per iteration, ONE equi-free assignment pass (centroids travel as
+one broadcast matrix row — no shuffle) + ONE groupBy(cluster) partial
 aggregate (map-side combined). Centroids live on the driver (k·d doubles — tiny);
-the data never leaves executors. This is the standard iterative-algorithm loop:
-k jobs over cached input, lineage kept flat by re-planning from the cached frame.
+the data never leaves executors.
 
 Determinism: init is k-means|| free — centroids seed from the k lowest-id vectors
 (deterministic everywhere); ties in nearest-centroid break toward the lower
-cluster index. Float sums across partitions make centroid low bits run-dependent,
-so EXACT cross-engine equality is not claimed (no SQL oracle); the properties
-tests assert the things that ARE guaranteed: monotone non-increasing inertia,
-assignment stability at convergence, and correct cluster count.
+cluster index. Vectors are quantized to integral doubles first
+(`quantize_vectors`), whose cluster sums are exact in any accumulation order, so
+every centroid is reproducible bit-for-bit and the fits are SQL-oracled (see
+`kmeans_fit_exact`).
 """
 
 from __future__ import annotations
@@ -88,83 +87,6 @@ def assign_clusters(
     return out.select("vid", "cluster", "sq_dist")
 
 
-def kmeans_fit(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    max_iterations: int = 10,
-    tol: float = 1e-6,
-) -> tuple[list[list[float]], list[float]]:
-    """Lloyd's iterations; returns (centroids, per-iteration inertia history).
-
-    Init: the k vectors with the lowest ids (deterministic, seedless). Empty
-    clusters keep their previous centroid. Stops when inertia improves by less
-    than `tol` relatively, or after `max_iterations`.
-    """
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    ).cache()
-    dim = len(base.first()["v"])
-    centroids = [
-        r["v"] for r in base.orderBy("vid").limit(k).collect()
-    ]
-    history: list[float] = []
-    for _ in range(max_iterations):
-        # assignment is computed INLINE on the same row (pure projection) —
-        # re-deriving it via assign_clusters + a join back on vid would add a
-        # full key shuffle per iteration for data the row already carries
-        assigned = (
-            base.withColumn(
-                "__d", F.array(*[_sq_dist(F.col("v"), c) for c in centroids])
-            )
-            .withColumn(
-                "cluster",
-                F.expr("array_position(__d, array_min(__d))").cast("int") - 1,
-            )
-            .withColumn("sq_dist", F.expr("array_min(__d)"))
-        )
-        agg = assigned.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.array(*[F.sum(F.col("v")[i]) for i in range(dim)]).alias("sums"),
-            F.sum("sq_dist").alias("inertia"),
-        )
-        rows = {r["cluster"]: r for r in agg.collect()}
-        inertia = float(sum(r["inertia"] for r in rows.values()))
-        history.append(inertia)
-        centroids = [
-            [s / rows[c]["n"] for s in rows[c]["sums"]] if c in rows else centroids[c]
-            for c in range(k)
-        ]
-        if len(history) >= 2 and history[-2] - history[-1] <= tol * max(history[-2], 1.0):
-            break
-    base.unpersist()
-    return centroids, history
-
-
-def kmeans_ivf_top_k(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k_clusters: int = 8,
-    k_neighbors: int = 1,
-    max_iterations: int = 5,
-) -> DataFrame:
-    """IVF ANN with LEARNED cells: fit k-means, assign every vector to its cell,
-    then exact top-k within cells (equi-join on the cell id — the same plan
-    shape as `brute_force_top_k(partition_col=...)`, cells now data-driven)."""
-    from movie_genre_data_pipeline_spark.functions.similarity import brute_force_top_k
-
-    centroids, _ = kmeans_fit(df, id_col, vec_col, k_clusters, max_iterations)
-    cells = assign_clusters(df, id_col, vec_col, centroids).select(
-        F.col("vid").alias(id_col), "cluster"
-    )
-    with_cells = df.join(cells, id_col)
-    return brute_force_top_k(
-        with_cells, id_col, vec_col, k=k_neighbors, partition_col="cluster"
-    )
-
-
 # -- cross-engine-exact variant (oracled) -----------------------------------------
 def quantize_vectors(df: DataFrame, id_col: str, vec_col: str, scale: float = 1e6):
     """(vid, vq): components rounded to integral doubles round(x*scale).
@@ -183,7 +105,7 @@ def kmeans_fit_exact(
     quantized: DataFrame, k: int, iterations: int
 ) -> list[list[float]]:
     """Lloyd's over quantized integral vectors with run-order-independent
-    arithmetic — unlike `kmeans_fit`, every number here is reproducible
+    arithmetic — every number here is reproducible
     bit-for-bit by a SQL engine (see `suite/similarity_queries.py`'s
     `sim_kmeans_recall` oracle, which unrolls these exact iterations in DuckDB):
 

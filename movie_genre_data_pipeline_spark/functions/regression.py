@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.session import materialize
+
 # Cramer's rule for [[n,sx1,sx2],[sx1,s11,s12],[sx2,s12,s22]] beta = [sy,s1y,s2y],
 # written once and parsed by BOTH engines (identical precedence/ordering →
 # identical IEEE evaluation). All identifiers reference DOUBLE-cast sums.
@@ -435,20 +437,22 @@ def logreg_irls_grouped(
     group (ONE shuffle, d²·|groups| state), and the Cramer solve projects
     over every group row at once — no driver round-trip at all, unlike the
     ungrouped trainer's bounded per-step collect. The beta table is
-    lineage-truncated per iteration (localCheckpoint) so the plan stays flat
+    lineage-truncated per iteration (a checkpoint) so the plan stays flat
     in the iteration count.
 
     Returns (group, b0_micro, b1_micro, b2_micro, n_correct, n_rows): final
     betas + exact integer-score training accuracy per group."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    feats = df.select(
-        F.col(group).alias("__g"),
-        F.col(x1).cast("bigint").alias("x1"),
-        F.col(x2).cast("bigint").alias("x2"),
-        F.col(y).cast("bigint").alias("y"),
-    ).localCheckpoint(eager=False)
-    betas = (
+    feats = materialize(
+        df.select(
+            F.col(group).alias("__g"),
+            F.col(x1).cast("bigint").alias("x1"),
+            F.col(x2).cast("bigint").alias("x2"),
+            F.col(y).cast("bigint").alias("y"),
+        )
+    )
+    betas = materialize(
         feats.select("__g")
         .distinct()
         .select(
@@ -457,7 +461,6 @@ def logreg_irls_grouped(
             F.lit(0).cast("bigint").alias("b1"),
             F.lit(0).cast("bigint").alias("b2"),
         )
-        .localCheckpoint(eager=False)
     )
     dec = "decimal(38,0)"
     for _t in range(1, iters + 1):
@@ -501,7 +504,7 @@ def logreg_irls_grouped(
             F.expr(DELTA_MICRO12_SQL["d1"]).alias("d1"),
             F.expr(DELTA_MICRO12_SQL["d2"]).alias("d2"),
         )
-        betas = (
+        betas = materialize(
             betas.join(deltas, "__g")
             .select(
                 "__g",
@@ -509,7 +512,6 @@ def logreg_irls_grouped(
                 (F.col("b1") + F.col("d1")).alias("b1"),
                 (F.col("b2") + F.col("d2")).alias("b2"),
             )
-            .localCheckpoint(eager=False)
         )
     acc = (
         feats.join(F.broadcast(betas), "__g")

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.session import materialize
+
 # Tiny deterministic stopword lexicons for the language-ID heuristic. Real
 # pipelines swap in fastText/CLD3 behind the same column contract; the heuristic
 # is the dependency-free baseline and is exactly reproducible in ANSI SQL (the
@@ -409,7 +411,7 @@ def keyness_top_terms(
     # without this the corpus would be tokenized four times. The checkpoint
     # materializes the vocabulary-sized reduction once; everything after runs
     # on it.
-    term_counts = term_counts.localCheckpoint(eager=True)
+    term_counts = materialize(term_counts, eager=True)
     src_tot = term_counts.groupBy("source").agg(
         F.sum("o").cast("bigint").alias("s_tot")
     )
@@ -572,19 +574,20 @@ def _bpe_loop(df, text_col: str, n_merges: int, apply_all: bool):
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    syms = words.select(
-        "w",
-        "freq",
-        F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").alias(
-            "s"
-        ),
-        # localCheckpoint, not cache() (r16, VERDICT r15 #6): the initial
-        # symbol table is re-read by every merge round INSIDE one plan (reuse
-        # we want), but a cache() entry is keyed on the canonicalized plan and
-        # would also satisfy the NEXT invocation's identical subtree — making
-        # repeated runs non-independent. Checkpoint blocks are private to this
-        # lineage and released by the ContextCleaner (graph.py precedent).
-    ).localCheckpoint(eager=False)
+    # a checkpoint, not cache() (r16, VERDICT r15 #6): the initial symbol
+    # table is re-read by every merge round INSIDE one plan (reuse we want),
+    # but a cache() entry is keyed on the canonicalized plan and would also
+    # satisfy the NEXT invocation's identical subtree — making repeated runs
+    # non-independent. Checkpoint blocks are private to this lineage.
+    syms = materialize(
+        words.select(
+            "w",
+            "freq",
+            F.expr(
+                "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
+            ).alias("s"),
+        )
+    )
     empty_pairs = F.expr("cast(array() as array<struct<x:string,y:string>>)")
     empty_syms = F.expr("cast(array() as array<string>)")
     rules = []
@@ -630,14 +633,11 @@ def _bpe_loop(df, text_col: str, n_merges: int, apply_all: bool):
                     ),
                 ).otherwise(F.concat(acc, F.array(x))),
             )
-            syms = (
-                syms.crossJoin(rule)
-                .select("w", "freq", merged.alias("s"))
-                # localCheckpoint = the lineage-truncation discipline the
-                # docstring promises for cluster runs: without it the
-                # 9-level fold/crossJoin plan tree exhausts a default-sized
-                # driver heap during optimization (the word-type DATA is
-                # vocabulary-sized and trivially fits)
-                .localCheckpoint(eager=False)
+            # the lineage-truncation discipline the docstring promises for
+            # cluster runs: without it the 9-level fold/crossJoin plan tree
+            # exhausts a default-sized driver heap during optimization (the
+            # word-type DATA is vocabulary-sized and trivially fits)
+            syms = materialize(
+                syms.crossJoin(rule).select("w", "freq", merged.alias("s"))
             )
     return rules, syms

@@ -17,19 +17,19 @@ ties would be broken arbitrarily in BOTH forms. `spark_partition_id()` must
 agree between the offsets subquery and the ranked branch — range boundaries
 come from sampling seeded per exchange instance, so two INDEPENDENT
 exchanges can disagree and misrank boundary rows. The partitioned frame is
-therefore pinned with localCheckpoint. (r10 tried relying on Spark's
+therefore pinned with `session.materialize`. (r10 tried relying on Spark's
 exchange reuse instead — it holds in a standalone rank, but inside the
 composed six-layout skipping-ratio query one consumer pair did NOT reuse
 and file assignments silently diverged; a ~0.3 s materialization per use is
 the price of determinism, visible only at micro-bench scale.)
 
-Fault-tolerance trade-off (ADVICE r10): localCheckpoint truncates lineage
-and keeps the pinned blocks ONLY on executors — losing an executor mid-job
-makes those partitions unrecoverable and fails the job (loudly; never a
-wrong answer). For multi-hour jobs on preemptible fleets, set
-`spark.sparkContext.setCheckpointDir(...)` and pass `reliable=True` to the
-public entry points: they switch to `.checkpoint()` (HDFS/object-store
-backed, survives executor loss) at the cost of a synchronous write barrier.
+Fault tolerance (ADVICE r10) is the session's choice, as at every barrier in
+the package: with a checkpoint directory set (`setCheckpointDir` or
+`spark.checkpoint.dir`) the pin is a `.checkpoint()` written there, which
+survives executor loss at the cost of a synchronous write barrier — the
+setting for multi-hour jobs on preemptible fleets. Without one it is a
+localCheckpoint: blocks live only on executors, and losing one mid-job fails
+the job (loudly; never a wrong answer).
 
 Used by functions/entity.sorted_neighborhood_pairs (candidate rank) and
 suite/layout_queries.q_skipping_ratio (ntile file assignment) — the two
@@ -41,19 +41,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.session import materialize
+
 _PID = "__rrn_pid"
 _LOCAL = "__rrn_local"
 _OFFSET = "__rrn_offset"
-
-
-def _pin(df: DataFrame, reliable: bool) -> DataFrame:
-    """Determinism barrier for the range-partitioned frame. Default is
-    localCheckpoint (executor-local blocks, lineage truncated — an executor
-    loss mid-job fails the job loudly); `reliable=True` uses
-    `.checkpoint()` against the session's checkpoint dir so the pinned
-    partitions survive executor loss on long preemptible-fleet jobs, at the
-    cost of an eager write barrier."""
-    return df.checkpoint() if reliable else df.localCheckpoint(eager=False)
 
 
 def _ranked(
@@ -61,7 +53,6 @@ def _ranked(
     order_cols: list[Column | str],
     out_col: str,
     num_partitions: int | None,
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(ranked df with `out_col`, per-partition counts frame). The counts
     frame is (pid, __cnt) — callers needing the grand total fold it instead
@@ -70,11 +61,10 @@ def _ranked(
         num_partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
-    part = _pin(
+    part = materialize(
         df.repartitionByRange(num_partitions, *order_cols).withColumn(
             _PID, F.spark_partition_id()
-        ),
-        reliable,
+        )
     )
     counts = part.groupBy(_PID).agg(F.count(F.lit(1)).alias("__cnt"))
     # exclusive running sum over the <= num_partitions count rows; the
@@ -110,7 +100,6 @@ def ranged_row_number(
     order_cols: list[Column | str],
     out_col: str,
     num_partitions: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """df + an `out_col` holding the 1-based global row number over
     `order_cols` — value-equal to
@@ -119,7 +108,7 @@ def ranged_row_number(
     (no stage ever holds all rows in one task) and typed BIGINT (the window
     form's int would overflow at 2^31 rows — past the point the single-task
     window could run at all)."""
-    ranked, _ = _ranked(df, order_cols, out_col, num_partitions, reliable)
+    ranked, _ = _ranked(df, order_cols, out_col, num_partitions)
     return ranked
 
 
@@ -129,7 +118,6 @@ def ranged_running_sum(
     value_col: Column,
     out_col: str,
     num_partitions: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """df + an `out_col` holding the EXCLUSIVE prefix sum of `value_col` over
     the total order (the bin-packing shape: "how much did every PRIOR row
@@ -144,11 +132,10 @@ def ranged_running_sum(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
     val = value_col.cast("bigint")
-    part = _pin(
+    part = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
         .withColumn(_PID, F.spark_partition_id())
-        .withColumn("__rrn_val", val),
-        reliable,
+        .withColumn("__rrn_val", val)
     )
     totals = part.groupBy(_PID).agg(F.sum("__rrn_val").alias("__cnt"))
     off_w = (
@@ -183,7 +170,6 @@ def ranged_ntile(
     n_tiles: int,
     out_col: str,
     num_partitions: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """df + an `out_col` holding `F.ntile(n_tiles).over(Window.orderBy(...))`
     computed from the ranged global row number instead of a single-task
@@ -193,7 +179,7 @@ def ranged_ntile(
     distributed rank. The total folds from the per-partition counts (no
     second scan of the input)."""
     rn = "__rrn_rank"
-    ranked, counts = _ranked(df, order_cols, rn, num_partitions, reliable)
+    ranked, counts = _ranked(df, order_cols, rn, num_partitions)
     total = counts.agg(F.sum("__cnt").cast("bigint").alias("__total"))
     # integer DIV throughout (ADVICE r10): `/` is double division in Spark,
     # and floor over a double is exact only below 2^53 — this module exists

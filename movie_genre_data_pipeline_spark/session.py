@@ -37,7 +37,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _env_cpus() -> str:
@@ -58,6 +58,17 @@ def _env_bool(name: str, default: str) -> str:
     return raw.lower()
 
 
+def _env_bytes(name: str, default: str) -> str:
+    """A byte-size env var in Spark's byte-string grammar: digits plus an
+    optional b, k, kb, m, mb, g, gb, t, tb, p or pb (any case). Spark does not
+    reject a malformed size conf when the session is built; a bad
+    SPARK_GRAFT_SHJ_LOCALMAP hung the first join with no error."""
+    raw = os.environ.get(name, default)
+    if not re.fullmatch(r"[0-9]+([kmgtp]?b|[kmgtp])?", raw, re.IGNORECASE):
+        raise ValueError(f"{name} must be a byte size such as 64m, got {raw!r}")
+    return raw
+
+
 def build_session(
     app_name: str = "movie_genre_data_pipeline_spark",
     master: str | None = None,
@@ -72,6 +83,7 @@ def build_session(
     """
     cpus = _env_cpus()
     prefer_smj = _env_bool("SPARK_GRAFT_PREFER_SMJ", "false")
+    shj_localmap = _env_bytes("SPARK_GRAFT_SHJ_LOCALMAP", "64m")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -99,8 +111,7 @@ def build_session(
         # change needed.
         .config("spark.sql.join.preferSortMergeJoin", prefer_smj)
         .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shj_localmap
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -130,6 +141,22 @@ def build_session(
 
     ensure_package_on_workers(spark)
     return spark
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """The package's one lineage barrier: pin `df` so later actions and
+    branches reuse its rows instead of replaying its plan.
+
+    With a checkpoint directory on the session (`setCheckpointDir` or
+    `spark.checkpoint.dir`) the barrier is reliable: `df.checkpoint()` writes
+    the rows there, eagerly, and they survive executor loss. Without one it is
+    `df.localCheckpoint(eager=eager)`: blocks live only on executors, so
+    losing one mid-job fails the job loudly (never a wrong answer). That is
+    the rule MLlib's `checkpointInterval` follows too: no directory, no
+    reliable checkpoint."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint(eager=eager)
 
 
 def codegen_compiles(spark: SparkSession) -> int:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.operators.cdc import purge_keys, snapshot_diff
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 OLD_CUT = "1999-01-01"
@@ -121,17 +122,19 @@ def q_purge_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    tomb = (
+    tomb = materialize(
         cust.filter(F.col("c_custkey") % PURGE_MOD == 0)
-        .select("c_custkey")
-        .localCheckpoint()
+        .select("c_custkey"),
+        eager=True,
     )
     _, dead = purge_keys(
         orders.select("o_orderkey", F.col("o_custkey").alias("c_custkey")),
         tomb,
         ["c_custkey"],
     )
-    dead_orders = dead.select(F.col("o_orderkey").alias("l_orderkey")).localCheckpoint()
+    dead_orders = materialize(
+        dead.select(F.col("o_orderkey").alias("l_orderkey")), eager=True
+    )
 
     def audit(name: str, df: DataFrame, keys: DataFrame, key: str) -> DataFrame:
         flagged = df.join(
@@ -495,7 +498,7 @@ def t_closeness_from_cells(cells: DataFrame) -> DataFrame:
     # through it, the group sizes, and the lattice's left-join side): one
     # barrier or the fact scan + cell aggregate re-run per consumer (the
     # plan audit counted 4 customer scans without it)
-    cells = cells.localCheckpoint(eager=False)
+    cells = materialize(cells)
     glob = cells.groupBy("bal_band").agg(
         F.sum("n_cell").cast("bigint").alias("n_glob")
     )

@@ -30,6 +30,7 @@ from movie_genre_data_pipeline_spark.functions.curation import (
 from movie_genre_data_pipeline_spark.functions.sampling import mixture_resample
 from movie_genre_data_pipeline_spark.functions.similarity import quantize_int8
 from movie_genre_data_pipeline_spark.functions.text import TOKS_SQL, fingerprint_sql
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 _TOKS = TOKS_SQL  # engine-proof whitespace class — see functions/text.py
@@ -239,7 +240,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (≤ m/32-row) bitmap so Catalyst doesn't re-derive the whole benchmark
     # shingle scan per reference — same stage-barrier pattern as the corpus
     # pipeline. At scale this is "persist the bitmap table once, probe forever".
-    bloom = build_bloom(bench_sh, "sh", BLOOM_M, BLOOM_K).localCheckpoint()
+    bloom = materialize(build_bloom(bench_sh, "sh", BLOOM_M, BLOOM_K), eager=True)
     corpus_sh = (
         shingle_rows(corpus, "doc_id", "text", k=DECON_K)
         .select("doc", F.md5("s").alias("sh"))
@@ -433,17 +434,17 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each stage's output feeds MULTIPLE downstream subtrees (the decon probe
     # AND the join-back; mixture's count agg AND its filter join): without a
     # materialization barrier Catalyst re-derives the whole upstream per
-    # reference — the unchecked plan re-scanned the corpus 14x. localCheckpoint
-    # is the in-memory stand-in for the stage boundary a real pipeline writes
-    # to storage (bronze→silver): each stage's lineage is computed exactly once.
-    kept = exact_dedup(kept, "doc_id", "text").localCheckpoint(eager=False)
+    # reference — the unchecked plan re-scanned the corpus 14x. The checkpoint
+    # stands in for the stage boundary a real pipeline writes to storage
+    # (bronze→silver): each stage's lineage is computed exactly once.
+    kept = materialize(exact_dedup(kept, "doc_id", "text"))
     # 3. benchmark decontamination
     clean_ids = (
         decontaminate(kept, bench, "doc_id", "text", k=DECON_K, threshold=DECON_THRESHOLD)
         .filter(~F.col("contaminated"))
         .select("doc_id")
     )
-    kept = kept.join(clean_ids, "doc_id").localCheckpoint(eager=False)
+    kept = materialize(kept.join(clean_ids, "doc_id"))
     # 4. rebalance the language mixture
     kept = mixture_resample(
         kept, "doc_id", "lang", MIXTURE_WEIGHTS, PIPE_TARGET, salt="mixture"

@@ -15,6 +15,7 @@ from movie_genre_data_pipeline_spark.functions.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 from movie_genre_data_pipeline_spark.suite.text_queries import _TOKS
 
@@ -606,7 +607,7 @@ def q_dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents")
-    truth = (
+    truth = materialize(
         ngram_jaccard_pairs(
             d,
             "doc_id",
@@ -616,16 +617,17 @@ def q_dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=JACCARD_THRESHOLD,
         )
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     tt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("truth_total"))
     # ONE corpus hashing pass: every (bands x rows) geometry slices the same
     # 12-hash signature table (r9 review: per-config recomputation tripled
     # the dominant shingle+md5 cost) — the same one-sig-many-bands shape the
     # oracle's sig CTE already had
-    sig = minhash_signature_table(
-        d, "doc_id", "text", num_hashes=LSH_TUNING_HASHES, k=SHINGLE_K
-    ).localCheckpoint(eager=False)
+    sig = materialize(
+        minhash_signature_table(
+            d, "doc_id", "text", num_hashes=LSH_TUNING_HASHES, k=SHINGLE_K
+        )
+    )
     out = None
     for b, r in LSH_TUNING_CONFIGS:
         keyed = band_keys_from_signature(sig, b, r)
@@ -900,17 +902,16 @@ def q_dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     h = BANDS * ROWS_PER_BAND
     d = load(spark, sf_dir, "documents")
-    sig = minhash_signature_table(
-        d, "doc_id", "text", num_hashes=h, k=SHINGLE_K
-    ).localCheckpoint(eager=False)
+    sig = materialize(
+        minhash_signature_table(d, "doc_id", "text", num_hashes=h, k=SHINGLE_K)
+    )
     keyed = band_keys_from_signature(sig, BANDS, ROWS_PER_BAND)
     ka, kb = keyed.alias("a"), keyed.alias("b")
-    cand = (
+    cand = materialize(
         ka.join(kb, "band_key")
         .filter(F.col("a.doc") < F.col("b.doc"))
         .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     siga = sig.select(
         F.col("doc").alias("id_a"), *[F.col(f"m{i}").alias(f"a{i}") for i in range(h)]
@@ -931,10 +932,9 @@ def q_dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_in_play = cand.selectExpr("id_a AS doc").union(
         cand.selectExpr("id_b AS doc")
     ).distinct()
-    sh = (
+    sh = materialize(
         shingle_rows(d, "doc_id", "text", SHINGLE_K, distinct=True)
         .join(docs_in_play, "doc", "left_semi")
-        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
     inter = (

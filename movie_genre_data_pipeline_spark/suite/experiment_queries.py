@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.functions.sampling import hex_threshold
 from movie_genre_data_pipeline_spark.functions.text import token_count
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 from movie_genre_data_pipeline_spark.suite.text_queries import _TOKS
 
@@ -149,7 +150,7 @@ def cuped_report_from_units(units: DataFrame) -> DataFrame:
             "SUM(CAST(pre_cents AS DECIMAL(38,0)) * post_cents)"
         ).alias("sxy"),
     )
-    per_arm = per_arm_raw.localCheckpoint(eager=False)
+    per_arm = materialize(per_arm_raw)
     glob = per_arm.agg(
         F.sum("n").cast("bigint").alias("nt"),
         F.sum("sx").cast("decimal(38,0)").alias("sxt"),
@@ -393,7 +394,7 @@ def benford_report_from_digits(digits: DataFrame) -> DataFrame:
     per digit, all-integer. The 9-row digit table feeds both the total fold
     and the output join — pinned (the ACF fan-out precedent) so the fact
     scan behind it runs once, not once per consumer."""
-    digits = digits.localCheckpoint(eager=False)
+    digits = materialize(digits)
     totals = digits.agg(F.sum("cnt").cast("bigint").alias("n_total"))
     return (
         digits.crossJoin(F.broadcast(totals))
@@ -675,10 +676,12 @@ def q_ops_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 10-row decile table feeds three consumers (both sides of the
     # cumulative self-join + the total fold) — pin it so the ranked
     # customer scan behind it runs once, not once per consumer
-    deciles = tiled.groupBy(F.col("decile").cast("bigint").alias("decile")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cust"),
-        F.sum("cents").cast("bigint").alias("decile_cents"),
-    ).localCheckpoint(eager=False)
+    deciles = materialize(
+        tiled.groupBy(F.col("decile").cast("bigint").alias("decile")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_cust"),
+            F.sum("cents").cast("bigint").alias("decile_cents"),
+        )
+    )
     # ten rows: the cumulative fold is a broadcast self-join, not a window
     cum = (
         deciles.alias("a")
@@ -744,7 +747,7 @@ QUERIES["ops_lorenz_deciles"] = QuerySpec(q_ops_lorenz_deciles, Q_LORENZ_ORACLE)
 # can't flip the hash. Scale shape: ONE corpus scan map-side-combines to
 # the |langs|x|sources| grid; every iteration is a grid-sized fold + a
 # broadcast join — dimension-bounded forever, and the grid is
-# localCheckpoint-pinned so the half-step fan-out never replays upstream.
+# checkpoint-pinned so the half-step fan-out never replays upstream.
 IPF_ROUNDS = 3
 
 _IPF_TARGET_L = (
@@ -786,7 +789,7 @@ def raking_report_from_cells(cells: DataFrame) -> DataFrame:
     (shared fragments). Each half-step is a grid-sized aggregate + a
     broadcast join; the grid is pinned per step so the fan-out (the fold
     consumes it AND the join consumes it) replays nothing upstream."""
-    cells = cells.localCheckpoint(eager=False)
+    cells = materialize(cells)
     tgt = cells.agg(
         F.sum("n").cast("bigint").alias("nn"),
         F.countDistinct("lang").cast("bigint").alias("ll"),
@@ -795,15 +798,17 @@ def raking_report_from_cells(cells: DataFrame) -> DataFrame:
         f"{_IPF_TARGET_L} AS tl",
         f"{_IPF_TARGET_S} AS ts",
     )
-    grid = cells.crossJoin(F.broadcast(tgt)).selectExpr(
-        "lang", "source", "n", "CAST(1000000 AS BIGINT) AS w", "tl", "ts"
-    ).localCheckpoint(eager=False)
+    grid = materialize(
+        cells.crossJoin(F.broadcast(tgt)).selectExpr(
+            "lang", "source", "n", "CAST(1000000 AS BIGINT) AS w", "tl", "ts"
+        )
+    )
     for _ in range(IPF_ROUNDS):
         for axis, target in (("lang", "tl"), ("source", "ts")):
             tot = grid.groupBy(axis).agg(
                 F.expr("SUM(CAST(n AS DECIMAL(38,0)) * w)").alias("cl")
             )
-            grid = (
+            grid = materialize(
                 grid.join(F.broadcast(tot), axis)
                 .selectExpr(
                     "lang",
@@ -813,7 +818,6 @@ def raking_report_from_cells(cells: DataFrame) -> DataFrame:
                     "tl",
                     "ts",
                 )
-                .localCheckpoint(eager=False)
             )
     return grid.selectExpr("lang", "source", "n AS n_docs", "w AS w_micro")
 

@@ -20,6 +20,7 @@ from movie_genre_data_pipeline_spark.functions.graph import (
     pagerank_fixed_point,
     triangle_count,
 )
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 PR_ITERS = 5
@@ -454,7 +455,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_shared"),
         F.sum("w_micro").cast("bigint").alias("aa_micro"),
     )
-    scored = scored.localCheckpoint(eager=False)
+    scored = materialize(scored)
     stats = scored.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs")
     ).crossJoin(
@@ -537,7 +538,7 @@ def assortativity_from_edges(edges: DataFrame) -> DataFrame:
         _ACF_R_MICRO,
     )
 
-    edges = edges.localCheckpoint(eager=False)
+    edges = materialize(edges)
     sdeg = edges.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("x"))
     cdeg = edges.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("y"))
     joined = edges.join(sdeg, "s").join(cdeg, "c")

@@ -16,6 +16,7 @@ from movie_genre_data_pipeline_spark.functions.multimodal import (
     frame_sample_plan,
     image_features,
 )
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 
@@ -340,7 +341,7 @@ def byte_histogram_report(counts: DataFrame) -> DataFrame:
     """The report tail over additive (byte_value, n_occurrences) cells,
     however accumulated — shared by the batch query and the streaming
     ledger twin."""
-    counts = counts.localCheckpoint(eager=False)
+    counts = materialize(counts)
     tot = counts.agg(
         F.sum("n_occurrences").cast("bigint").alias("total_bytes")
     )

@@ -27,6 +27,7 @@ from movie_genre_data_pipeline_spark.operators.upsert import (
     upsert_insert_missing,
     upsert_update,
 )
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 
@@ -450,9 +451,15 @@ def q_merge_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in production `history` is a persisted dimension TABLE; deriving it
     # inline here, the checkpoint stands in for that materialization so the
     # incremental pass doesn't re-derive it per reference (untouched + touched)
-    history = scd2_apply(
-        base, ups.filter(F.col("eff_from") < split), ["c_custkey"], ["tier"], "eff_from"
-    ).localCheckpoint(eager=False)
+    history = materialize(
+        scd2_apply(
+            base,
+            ups.filter(F.col("eff_from") < split),
+            ["c_custkey"],
+            ["tier"],
+            "eff_from",
+        )
+    )
     hist2 = scd2_apply_incremental(
         history, ups.filter(F.col("eff_from") >= split), ["c_custkey"], ["tier"], "eff_from"
     )
@@ -1390,7 +1397,7 @@ def freshness_facts(events: DataFrame) -> DataFrame:
 def freshness_report_from_facts(facts: DataFrame) -> DataFrame:
     """The SLA report over per-type MAX facts, however accumulated — shared
     by the batch query and the streaming ledger twin."""
-    facts = facts.localCheckpoint(eager=False)
+    facts = materialize(facts)
     horizon = facts.agg(F.max("last_us").cast("bigint").alias("now_us"))
     return (
         facts.crossJoin(F.broadcast(horizon))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 
@@ -1433,9 +1434,7 @@ def gini_from_customer_cents(per_cust: DataFrame) -> DataFrame:
         ranged_row_number,
     )
 
-    ranked = ranged_row_number(
-        per_cust, [F.col("cents"), F.col("c")], "i"
-    ).localCheckpoint(eager=False)
+    ranked = materialize(ranged_row_number(per_cust, [F.col("cents"), F.col("c")], "i"))
     tot = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
         F.sum("cents").cast("bigint").alias("total_cents"),

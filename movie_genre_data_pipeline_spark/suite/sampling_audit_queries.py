@@ -18,6 +18,7 @@ from movie_genre_data_pipeline_spark.functions.sampling import (
     stratified_sample,
 )
 from movie_genre_data_pipeline_spark.functions.text import token_count
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 from movie_genre_data_pipeline_spark.suite.text_queries import _TOKS
 from movie_genre_data_pipeline_spark.suite.sampling_queries import (  # noqa: E501
@@ -113,7 +114,7 @@ def auc_bootstrap_from_labeled(labeled: DataFrame) -> DataFrame:
     """The bootstrap-AUC tail over (doc_id, y, logw_micro) rows, however the
     scores were derived. `labeled` feeds the replicate fan-out AND the plain
     point-estimate pass, so it is barrier-pinned."""
-    labeled = labeled.localCheckpoint(eager=False)
+    labeled = materialize(labeled)
     reps = (
         labeled.select(
             "doc_id",
@@ -369,12 +370,12 @@ def auc_cv_from_parts(
     the global model; `cells` feeds the global fold AND the left side of
     the complement join, so it is barrier-pinned."""
     b = DSIR_BUCKETS
-    cells = cells.localCheckpoint(eager=False)
+    cells = materialize(cells)
     glob = cells.groupBy("bucket").agg(
         F.sum("raw_c").cast("bigint").alias("raw_tot"),
         F.sum("tgt_c").cast("bigint").alias("tgt_tot"),
     )
-    comp = (
+    comp = materialize(
         glob.selectExpr(
             "bucket",
             "raw_tot",
@@ -388,7 +389,6 @@ def auc_cv_from_parts(
             "raw_tot - coalesce(raw_c, 0) AS raw_c",
             "tgt_tot - coalesce(tgt_c, 0) AS tgt_c",
         )
-        .localCheckpoint(eager=False)
     )
     ftot = comp.groupBy("fold").agg(
         F.sum("raw_c").cast("bigint").alias("t_raw"),
@@ -579,7 +579,7 @@ def score_psi_from_scored(scored: DataFrame) -> DataFrame:
     barrier-pinned."""
     from movie_genre_data_pipeline_spark.operators.ranking import ranged_ntile
 
-    scored = scored.localCheckpoint(eager=False)
+    scored = materialize(scored)
     ranked = ranged_ntile(
         scored.filter(F.col("is_ref")),
         [F.col("s"), F.col("doc_id")],
@@ -875,14 +875,13 @@ def q_feat_conformal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranged_row_number,
     )
 
-    scored = (
+    scored = materialize(
         _logreg_scored(spark, sf_dir)
         .selectExpr(
             "k",
             "ABS(1000000 * y - mu_micro) AS r",
             "k % 2 = 0 AS is_cal",
         )
-        .localCheckpoint(eager=False)
     )
     cal = scored.filter(F.col("is_cal"))
     n_cal = cal.agg(F.count(F.lit(1)).cast("bigint").alias("n_cal"))
@@ -993,15 +992,17 @@ def neyman_from_moments(facts: DataFrame) -> DataFrame:
         ranged_row_number,
     )
 
-    strata = facts.selectExpr(
-        "lang",
-        "n_docs",
-        f"{_NEYMAN_STD_MICRO} AS std_micro",
-    ).selectExpr(
-        "lang", "n_docs", "std_micro", "n_docs * std_micro AS w_micro"
-    ).localCheckpoint(eager=False)
+    strata = materialize(
+        facts.selectExpr(
+            "lang",
+            "n_docs",
+            f"{_NEYMAN_STD_MICRO} AS std_micro",
+        ).selectExpr(
+            "lang", "n_docs", "std_micro", "n_docs * std_micro AS w_micro"
+        )
+    )
     tot = strata.agg(F.sum("w_micro").cast("bigint").alias("tw"))
-    based = (
+    based = materialize(
         strata.crossJoin(F.broadcast(tot))
         .selectExpr(
             "lang",
@@ -1015,7 +1016,6 @@ def neyman_from_moments(facts: DataFrame) -> DataFrame:
             f" ({NEYMAN_BUDGET} * w_micro) % tw"
             " ELSE CAST(0 AS BIGINT) END AS rem",
         )
-        .localCheckpoint(eager=False)
     )
     left = based.agg(
         (F.lit(NEYMAN_BUDGET) - F.sum("base_n")).cast("bigint").alias("l_seats"),
@@ -1130,13 +1130,12 @@ def rank_tau_from_scores(scored: DataFrame) -> DataFrame:
         RANK_TAU_TILES,
         "by",
     )
-    cells = (
+    cells = materialize(
         t.groupBy(
             F.col("bx").cast("bigint").alias("bx"),
             F.col("by").cast("bigint").alias("by"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_xy"))
-        .localCheckpoint(eager=False)
     )
     a = cells.selectExpr("bx AS x1", "by AS y1", "n_xy AS n1")
     b = cells.selectExpr("bx AS x2", "by AS y2", "n_xy AS n2")
@@ -1350,8 +1349,8 @@ def auc_source_ablation_from_parts(
     — see ABLATION_MAX_SOURCES. The guard count runs on the CELLS table
     (|sources|×buckets rows, never the corpus), so it is metadata-cheap."""
     b = DSIR_BUCKETS
-    cells = cells.localCheckpoint(eager=False)
-    docs = docs.localCheckpoint(eager=False)
+    cells = materialize(cells)
+    docs = materialize(docs)
     if not allow_many_sources:
         n_src = cells.select("source").distinct().count()
         if n_src > max_sources:
@@ -1361,17 +1360,16 @@ def auc_source_ablation_from_parts(
                 f"Coarsen the source key before ablating, or pass "
                 f"allow_many_sources=True for an explicitly budgeted run."
             )
-    abls = (
+    abls = materialize(
         cells.select(F.col("source").alias("abl"))
         .distinct()
         .union(docs.sparkSession.createDataFrame([(ABLATION_FULL,)], "abl string"))
-        .localCheckpoint(eager=False)
     )
     glob = cells.groupBy("bucket").agg(
         F.sum("raw_c").cast("bigint").alias("raw_tot"),
         F.sum("tgt_c").cast("bigint").alias("tgt_tot"),
     )
-    comp = (
+    comp = materialize(
         glob.crossJoin(F.broadcast(abls))
         .join(
             cells.selectExpr(
@@ -1386,7 +1384,6 @@ def auc_source_ablation_from_parts(
             "raw_tot - coalesce(r0, 0) AS raw_c",
             "tgt_tot - coalesce(t0, 0) AS tgt_c",
         )
-        .localCheckpoint(eager=False)
     )
     ftot = comp.groupBy("abl").agg(
         F.sum("raw_c").cast("bigint").alias("t_raw"),
@@ -1436,13 +1433,15 @@ def auc_source_ablation_from_parts(
         F.sum(F.when(F.col("y"), 1).otherwise(0)).cast("bigint").alias("c_pos"),
         F.sum(F.when(F.col("y"), 0).otherwise(1)).cast("bigint").alias("c_neg"),
     )
-    sums = partitioned_mann_whitney_sums(groups, "abl").selectExpr(
-        "abl",
-        "n_pos",
-        "n_neg",
-        "n_scores",
-        f"{_AUC_MICRO} AS auc_micro",
-    ).localCheckpoint(eager=False)
+    sums = materialize(
+        partitioned_mann_whitney_sums(groups, "abl").selectExpr(
+            "abl",
+            "n_pos",
+            "n_neg",
+            "n_scores",
+            f"{_AUC_MICRO} AS auc_micro",
+        )
+    )
     base = sums.filter(F.col("abl") == ABLATION_FULL).selectExpr(
         "auc_micro AS base_auc_micro"
     )
@@ -1709,9 +1708,7 @@ def pps_report_from_sizes(sizes: DataFrame) -> DataFrame:
         ranged_running_sum,
     )
 
-    cum = ranged_running_sum(
-        sizes, ["doc_id"], F.col("sz"), "cum_before"
-    ).localCheckpoint(eager=False)
+    cum = materialize(ranged_running_sum(sizes, ["doc_id"], F.col("sz"), "cum_before"))
     tot = cum.agg(F.sum("sz").cast("bigint").alias("t_sz"))
     pts = cum.crossJoin(F.broadcast(tot)).selectExpr(
         "lang",
@@ -2044,9 +2041,7 @@ def q_sample_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("bigint").alias("sz"),
         F.size(tokens("text")).cast("bigint").alias("y"),
     )
-    cum = ranged_running_sum(
-        sizes, ["doc_id"], F.col("sz"), "cum_before"
-    ).localCheckpoint(eager=False)
+    cum = materialize(ranged_running_sum(sizes, ["doc_id"], F.col("sz"), "cum_before"))
     tot = cum.agg(F.sum("sz").cast("bigint").alias("t_sz"))
     pts = cum.crossJoin(F.broadcast(tot)).selectExpr(
         "lang",
@@ -2162,15 +2157,17 @@ def isotonic_from_bins(bins: DataFrame) -> DataFrame:
     )
 
     pre = ranged_running_sum(bins, ["bin"], F.col("n_rows"), "cn_excl")
-    pre = ranged_running_sum(pre, ["bin"], F.col("sum_y"), "cy_excl").selectExpr(
-        "bin",
-        "n_rows",
-        "sum_y",
-        "cn_excl",
-        "cy_excl",
-        "cn_excl + n_rows AS cn",
-        "cy_excl + sum_y AS cy",
-    ).localCheckpoint(eager=False)
+    pre = materialize(
+        ranged_running_sum(pre, ["bin"], F.col("sum_y"), "cy_excl").selectExpr(
+            "bin",
+            "n_rows",
+            "sum_y",
+            "cn_excl",
+            "cy_excl",
+            "cn_excl + n_rows AS cn",
+            "cy_excl + sum_y AS cy",
+        )
+    )
     j = pre.selectExpr(
         "bin AS j_bin", "cn_excl AS j_cn_excl", "cy_excl AS j_cy_excl"
     )

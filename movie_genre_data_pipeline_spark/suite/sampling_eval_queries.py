@@ -17,6 +17,7 @@ from movie_genre_data_pipeline_spark.functions.sampling import (
     stratified_sample,
 )
 from movie_genre_data_pipeline_spark.functions.text import token_count
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 from movie_genre_data_pipeline_spark.suite.text_queries import _TOKS
 from movie_genre_data_pipeline_spark.suite.sampling_queries import (  # noqa: E501
@@ -72,7 +73,7 @@ def mutual_info_from_cells(cells: DataFrame) -> DataFrame:
     # frame, and — through the marginals — both entropy sums): one barrier
     # or the fact scan + cell aggregate re-run per consumer (plan audit: 6
     # orders scans without it)
-    cells = cells.localCheckpoint(eager=False)
+    cells = materialize(cells)
     mx = cells.groupBy("x").agg(F.sum("n_xy").cast("bigint").alias("n_x"))
     my = cells.groupBy("y").agg(F.sum("n_xy").cast("bigint").alias("n_y"))
     tot = cells.agg(F.sum("n_xy").cast("bigint").alias("n_rows"))
@@ -199,7 +200,7 @@ def chi2_from_cells(cells: DataFrame) -> DataFrame:
     facts, however accumulated — shared by the batch query and the
     streaming ledger twin. Margins, the zero-filled grid, per-cell terms,
     and the V readout all derive here."""
-    cells = cells.localCheckpoint(eager=False)
+    cells = materialize(cells)
     mx = cells.groupBy("x").agg(F.sum("n_xy").cast("bigint").alias("r_tot"))
     my = cells.groupBy("y").agg(F.sum("n_xy").cast("bigint").alias("c_tot"))
     tot = cells.agg(F.sum("n_xy").cast("bigint").alias("n_rows"))
@@ -457,7 +458,7 @@ def mutual_info_screen_from_cells(cells: DataFrame) -> DataFrame:
     contingency facts for EVERY screened feature, however accumulated (one
     stacked batch scan or a streaming ledger folded by SUM). Same five-
     consumer fan-out as mutual_info_from_cells, so the same barrier pin."""
-    cells = cells.localCheckpoint(eager=False)
+    cells = materialize(cells)
     mx = cells.groupBy("feature", "x").agg(
         F.sum("n_xy").cast("bigint").alias("n_x")
     )
@@ -658,7 +659,7 @@ def woe_iv_report_from_cells(cells: DataFrame) -> DataFrame:
     however accumulated (one stacked batch scan or a streaming ledger folded
     by SUM). Two consumers of `cells` (the totals aggregate and the bin
     join), so the cell fan-out is barrier-pinned."""
-    cells = cells.localCheckpoint(eager=False)
+    cells = materialize(cells)
     tot = cells.groupBy("feature").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bins"),
         F.sum("n_pos").cast("bigint").alias("t_pos"),
@@ -1161,7 +1162,7 @@ def ks_report_from_labeled(labeled: DataFrame) -> DataFrame:
     # inclusive CDFs (exclusive prefix + the group's own count); each gap is
     # the exact integer cross-product, so the max is integer-ordered and no
     # per-term quantization exists anywhere.
-    gaps = (
+    gaps = materialize(
         cum.selectExpr(
             "s",
             "CAST(pos_below + c_pos AS BIGINT) AS cum_pos",
@@ -1176,7 +1177,6 @@ def ks_report_from_labeled(labeled: DataFrame) -> DataFrame:
             "abs(CAST(cum_pos AS DECIMAL(38,0)) * n_neg"
             " - CAST(cum_neg AS DECIMAL(38,0)) * n_pos) AS gap_num",
         )
-        .localCheckpoint(eager=False)
     )
     best = gaps.agg(
         F.max("n_pos").alias("n_pos"),
@@ -1475,7 +1475,7 @@ _TERM_TO_MICRO = (
 
 
 def q_feat_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _logreg_scored(spark, sf_dir).localCheckpoint(eager=False)
+    scored = materialize(_logreg_scored(spark, sf_dir))
     glob = scored.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum("y").cast("bigint").alias("sum_y"),

@@ -18,6 +18,7 @@ from movie_genre_data_pipeline_spark.functions.sampling import (
     stratified_sample,
 )
 from movie_genre_data_pipeline_spark.functions.text import token_count
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 from movie_genre_data_pipeline_spark.suite.text_queries import _TOKS
 
@@ -1261,7 +1262,13 @@ def q_curate_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = dsir_importance(
         d, "doc_id", "text", (F.col("lang") == "en"), n_buckets=DSIR_BUCKETS
     ).select("doc_id", "logw_micro")
-    scored = (
+    # stage barrier (the curate_corpus_pipeline discipline): the scored
+    # frame feeds BOTH the funnel aggregate and the split/pack branch,
+    # and each scoring table re-scans the corpus to build — checkpoint
+    # once so the final plan reads the 500-column-free scored rows, not
+    # 16 parquet re-derivations (measured: 16 → 0 document scans in the
+    # final plan)
+    scored = materialize(
         d.select("doc_id")
         .join(spans, "doc_id")
         .join(q, "doc_id")
@@ -1280,13 +1287,6 @@ def q_curate_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("logw_micro") > F.lit(FUNNEL_DSIR_MIN_MICRO))
             ).alias("s4"),
         )
-        # stage barrier (the curate_corpus_pipeline discipline): the scored
-        # frame feeds BOTH the funnel aggregate and the split/pack branch,
-        # and each scoring table re-scans the corpus to build — checkpoint
-        # once so the final plan reads the 500-column-free scored rows, not
-        # 16 parquet re-derivations (measured: 16 → 0 document scans in the
-        # final plan)
-        .localCheckpoint(eager=False)
     )
     return _funnel_report(scored)
 

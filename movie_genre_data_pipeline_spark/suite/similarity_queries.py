@@ -15,6 +15,7 @@ from movie_genre_data_pipeline_spark.functions.similarity import (
     lsh_top_k,
     similar_pair_counts,
 )
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 PAIR_THRESHOLD = 0.35
@@ -235,6 +236,17 @@ SELECT vid, neighbor, cos_sim, rnk FROM ranked WHERE rnk <= 1
 
 
 # -- ANN quality: LSH recall@1 vs exact baseline --------------------------------------
+def _recall_at_1(joined: DataFrame, got: str, want: str) -> DataFrame:
+    """(n_queries, n_hits, recall_at_1) over one row per query: a hit is a
+    row whose `got` equals `want`; a null `got` (no candidate) is a miss."""
+    hit = F.col(got) == F.col(want)
+    return joined.agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        F.sum(F.when(hit, 1).otherwise(0)).cast("bigint").alias("n_hits"),
+        F.round(F.avg(F.when(hit, 1.0).otherwise(0.0)), 6).alias("recall_at_1"),
+    )
+
+
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@1 of the sign-LSH index against the exact brute-force answer —
     the self-evaluation loop an ANN deployment needs (recall tunes via
@@ -249,16 +261,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vid", F.col("cos_sim").alias("lsh_cos")
     )
     joined = exact.join(approx, "vid", "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum(
-            F.when(F.col("lsh_cos") == F.col("exact_cos"), 1).otherwise(0)
-        ).cast("bigint").alias("n_hits"),
-        F.round(
-            F.avg(F.when(F.col("lsh_cos") == F.col("exact_cos"), 1.0).otherwise(0.0)),
-            6,
-        ).alias("recall_at_1"),
-    )
+    return _recall_at_1(joined, "lsh_cos", "exact_cos")
 
 
 def _lsh_recall_oracle() -> str:
@@ -302,16 +305,24 @@ def q_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vid", F.col("cos_sim").alias("exact_cos")
     )
     joined = exact.join(approx, "vid", "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum(F.when(F.col("ivf_cos") == F.col("exact_cos"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_hits"),
-        F.round(
-            F.avg(F.when(F.col("ivf_cos") == F.col("exact_cos"), 1.0).otherwise(0.0)),
-            6,
-        ).alias("recall_at_1"),
-    )
+    return _recall_at_1(joined, "ivf_cos", "exact_cos")
+
+
+def _ann_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(embeddings, quantized corpus): the raw `embeddings` table and its
+    `quantize_vectors` form (vid, vq) behind one `session.materialize`
+    barrier — the shared input of every trained-index (IVF / PQ) query.
+
+    A checkpoint, not cache() (r16, VERDICT r15 #6): the quantized corpus is
+    reused by the training collects AND by several branches of the returned
+    plan. Checkpoint blocks give both reuses with ONE parquet scan, and they
+    are invisible to the next invocation (cache() entries are keyed on the
+    canonicalized plan and would satisfy it — warm bench samples). Local
+    blocks are ContextCleaner-released on GC."""
+    from movie_genre_data_pipeline_spark.functions.kmeans import quantize_vectors
+
+    e = load(spark, sf_dir, "embeddings")
+    return e, materialize(quantize_vectors(e, "vec_id", "embedding"))
 
 
 NPROBE = 2
@@ -330,23 +341,13 @@ def q_kmeans_recall_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_clusters,
         kmeans_fit_exact,
         probe_cells,
-        quantize_vectors,
     )
     from movie_genre_data_pipeline_spark.functions.similarity import (
         _as_double,
         cosine,
     )
 
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    e, q = _ann_corpus(spark, sf_dir)
     cents = kmeans_fit_exact(q, KMEANS_K, KMEANS_ITERS)
     corpus_cells = assign_clusters(q, "vid", "vq", cents).select(
         F.col("vid").alias("neighbor"), "cluster"
@@ -369,16 +370,7 @@ def q_kmeans_recall_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vid", F.col("cos_sim").alias("exact_cos")
     )
     joined = exact.join(approx, "vid", "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum(F.when(F.col("ivf_cos") == F.col("exact_cos"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_hits"),
-        F.round(
-            F.avg(F.when(F.col("ivf_cos") == F.col("exact_cos"), 1.0).otherwise(0.0)),
-            6,
-        ).alias("recall_at_1"),
-    )
+    return _recall_at_1(joined, "ivf_cos", "exact_cos")
 
 
 def _kmeans_recall_nprobe_oracle() -> str:
@@ -731,19 +723,10 @@ def _pq_recall_tail(
         .select("vid", _pq_sqd_col(F.col("va"), F.col("vb")).alias("d_chosen"))
     )
     joined = exact_best.join(d_chosen, "vid", "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum(F.when(F.col("d_chosen") == F.col("d_min"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_hits"),
-        F.round(
-            F.avg(F.when(F.col("d_chosen") == F.col("d_min"), 1.0).otherwise(0.0)), 6
-        ).alias("recall_at_1"),
-    )
+    return _recall_at_1(joined, "d_chosen", "d_min")
 
 
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from movie_genre_data_pipeline_spark.functions.kmeans import quantize_vectors
     from movie_genre_data_pipeline_spark.functions.pq import (
         pq_adc_scores,
         pq_encode,
@@ -751,16 +734,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     qs = _pq_query_panel(q)
     train_rows = _collect_train(q)
     books = pq_train_local(train_rows, DIM, PQ_M, PQ_K, PQ_ITERS)
@@ -958,7 +932,6 @@ def q_pq_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.kmeans import (
         kmeans_fit_exact_local,
         probe_cells,
-        quantize_vectors,
     )
     from movie_genre_data_pipeline_spark.functions.pq import (
         pq_adc_scores,
@@ -969,16 +942,7 @@ def q_pq_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     k = _ivf_nlist(q.count())
     # all training runs driver-side over the collected bounded sample —
     # the corpus is only touched by single-pass projections below
@@ -1040,7 +1004,6 @@ def q_pq_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_local_two_level,
         kmeans_fit_exact_local,
         probe_cells,
-        quantize_vectors,
     )
     from movie_genre_data_pipeline_spark.functions.pq import (
         pq_adc_scores,
@@ -1051,16 +1014,7 @@ def q_pq_ivfadc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     k = _ivf_nlist(q.count())
     train_rows = _collect_train(q)
     cents = kmeans_fit_exact_local(train_rows, k, IVF_ITERS)
@@ -1448,23 +1402,13 @@ def q_sim_topk_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     that loss; production composes the projection with a rerank stage
     (shortlist in k dims, rerank survivors in d). Fully oracled: the sign
     matrix, projection, pair scan, and exact baseline all replay in SQL."""
-    from movie_genre_data_pipeline_spark.functions.kmeans import quantize_vectors
     from movie_genre_data_pipeline_spark.functions.similarity import (
         project_signed,
         sign_matrix,
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     proj = q.select(
         "vid", project_signed("vq", sign_matrix(JL_K, DIM)).alias("pv")
     )
@@ -1546,7 +1490,6 @@ def q_sim_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.kmeans import (
         kmeans_fit_exact_local,
         probe_cells,
-        quantize_vectors,
     )
     from movie_genre_data_pipeline_spark.functions.similarity import (
         project_signed,
@@ -1557,16 +1500,7 @@ def q_sim_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     k = _ivf_nlist(q.count())
     cents = kmeans_fit_exact_local(_collect_train(q), k, IVF_ITERS)
     cells = assign_cells_two_level_np(
@@ -1702,20 +1636,10 @@ def q_sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized CTE chain (functions/similarity.py:mmr_greedy)."""
     from pyspark.sql import Window
 
-    from movie_genre_data_pipeline_spark.functions.kmeans import quantize_vectors
     from movie_genre_data_pipeline_spark.functions.similarity import mmr_greedy
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     qs = _pq_query_panel(q)
     a = q.join(qs, "vid").select("vid", F.col("vq").alias("va"))
     b = q.select(F.col("vid").alias("neighbor"), F.col("vq").alias("vb"))
@@ -1728,19 +1652,17 @@ def q_sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_rel = Window.partitionBy("vid").orderBy(
         F.col("d_rel").asc(), F.col("neighbor").asc()
     )
-    # cache the shortlist: every greedy step (and every union branch) re-reads
-    # this PQ_NQ*MMR_C-row frame instead of re-running the panel scan
-    short = (
+    # pin the shortlist: every greedy step (and every union branch) re-reads
+    # this PQ_NQ*MMR_C-row frame instead of re-running the panel scan.
+    # A checkpoint, not cache() (r16, VERDICT r15 #6): the greedy unroll
+    # re-reads it K times inside ONE plan (reuse we want), but a cache()
+    # entry is keyed on the canonicalized plan and would also satisfy the
+    # NEXT invocation's identical subtree — making repeated runs
+    # non-independent. Checkpoint blocks are private to this lineage.
+    short = materialize(
         cand.withColumn("__rn", F.row_number().over(w_rel))
         .filter(F.col("__rn") <= MMR_C)
         .drop("__rn")
-        # localCheckpoint, not cache() (r16, VERDICT r15 #6): the greedy
-        # unroll re-reads this PQ_NQ*MMR_C-row frame K times inside ONE plan
-        # (reuse we want), but a cache() entry is keyed on the canonicalized
-        # plan and would also satisfy the NEXT invocation's identical subtree
-        # — making repeated runs non-independent. Checkpoint blocks are
-        # private to this lineage and ContextCleaner-released.
-        .localCheckpoint(eager=False)
     )
     return mmr_greedy(short, MMR_K, MMR_W_REL, MMR_W_DIV)
 
@@ -1818,25 +1740,13 @@ def q_sim_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the report is one row. Exact: sizes are integers, the single double
     division is of exact integers (< 2^53 until n ~ 9e7 — at larger corpora
     the 6-dp ROUND dwarfs the cast ulp anyway)."""
-    from movie_genre_data_pipeline_spark.functions.kmeans import (
-        kmeans_fit_exact_local,
-        quantize_vectors,
-    )
+    from movie_genre_data_pipeline_spark.functions.kmeans import kmeans_fit_exact_local
     from movie_genre_data_pipeline_spark.functions.vectorized import (
         assign_cells_two_level_np,
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     k = _ivf_nlist(q.count())
     cents = kmeans_fit_exact_local(_collect_train(q), k, IVF_ITERS)
     cells = assign_cells_two_level_np(q, "vid", "vq", cents, IVF_GROUP_ITERS)
@@ -1901,23 +1811,13 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.kmeans import (
         kmeans_fit_exact_local,
         probe_cells,
-        quantize_vectors,
     )
     from movie_genre_data_pipeline_spark.functions.vectorized import (
         assign_cells_two_level_np,
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    e, q = _ann_corpus(spark, sf_dir)
     labels = e.select(F.col("vec_id").alias("vid"), "label")
     k = _ivf_nlist(q.count())
     cents = kmeans_fit_exact_local(_collect_train(q), k, IVF_ITERS)
@@ -2061,7 +1961,6 @@ def q_sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.kmeans import (
         assign_clusters,
         kmeans_fit_exact,
-        quantize_vectors,
     )
     from movie_genre_data_pipeline_spark.functions.similarity import (
         _as_double,
@@ -2069,34 +1968,22 @@ def q_sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    e, q = _ann_corpus(spark, sf_dir)
     cents = kmeans_fit_exact(q, KMEANS_K, KMEANS_ITERS)
     corpus_cells = assign_clusters(q, "vid", "vq", cents).select(
         F.col("vid").alias("neighbor"), "cluster"
     )
     # ranked once, pinned once — every nprobe rung filters the same frame
-    probes_all = _ranked_probes(q, cents).filter(F.col("rn") <= 4).localCheckpoint(
-        eager=False
-    )
+    probes_all = materialize(_ranked_probes(q, cents).filter(F.col("rn") <= 4))
     ea = e.select(F.col("vec_id").alias("vid"), _as_double("embedding").alias("va"))
     eb = e.select(
         F.col("vec_id").alias("neighbor"), _as_double("embedding").alias("vb")
     )
     # the exact top-10 feeds one hit-join per nprobe setting — one barrier or
     # the O(n²) baseline runs twice (the funnel lesson)
-    exact = (
+    exact = materialize(
         brute_force_top_k(e, "vec_id", "embedding", k=RECALL_AT_K)
         .select("vid", "neighbor")
-        .localCheckpoint(eager=False)
     )
 
     def hits_at(nprobe: int) -> DataFrame:
@@ -2239,7 +2126,6 @@ def q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.kmeans import (
         kmeans_fit_exact_local,
         probe_cells,
-        quantize_vectors,
     )
     from movie_genre_data_pipeline_spark.functions.vectorized import (
         assign_cells_two_level_np,
@@ -2247,16 +2133,7 @@ def q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _pq_tune(spark)
-    e = load(spark, sf_dir, "embeddings")
-    # localCheckpoint, not cache() (r16, VERDICT r15 #6): the quantized
-    # corpus is reused by the training collects AND by several branches of
-    # the returned plan — checkpoint blocks give both reuses with ONE
-    # parquet scan, are invisible to the next invocation (cache() entries
-    # are keyed on the canonicalized plan and would satisfy it — warm
-    # bench samples), and are ContextCleaner-released on GC. This is the
-    # "cluster deployments checkpoint instead" shape regression.py:333
-    # documents.
-    q = quantize_vectors(e, "vec_id", "embedding").localCheckpoint(eager=False)
+    _, q = _ann_corpus(spark, sf_dir)
     k = _ivf_nlist(q.count())
     cents = kmeans_fit_exact_local(_collect_train(q), k, IVF_ITERS)
     cells = assign_cells_two_level_np(

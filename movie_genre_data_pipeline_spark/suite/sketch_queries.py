@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.functions.cms import build_cms, cms_estimate
 from movie_genre_data_pipeline_spark.functions.dedup import shingle_rows
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 from movie_genre_data_pipeline_spark.suite.text_queries import _TOKS
 
@@ -37,7 +38,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (≤ d·w)-row grid is referenced d times by the probe joins; checkpoint
     # so Catalyst doesn't re-derive the corpus scan per reference — persist-the-
     # sketch-once is also exactly the production usage.
-    cms = build_cms(grams, "gram", CMS_W, CMS_D).localCheckpoint()
+    cms = materialize(build_cms(grams, "gram", CMS_W, CMS_D), eager=True)
     vocab = grams.groupBy("gram").agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     est = cms_estimate(vocab, "gram", cms, CMS_W, CMS_D)
     return (
@@ -199,11 +200,11 @@ def q_kmv_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the subtree (A/B-measured: warm times identical), so this barrier is a
     # GUARD, not a win: it pins single-computation even if a future edit
     # breaks subtree identity and silently disables reuse
-    vocab = (
+    vocab = materialize(
         shingle_rows(d, "doc_id", "text", k=GRAM_K, extra_cols=("lang",))
         .select("lang", F.col("s").alias("tok"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     est = kmv_pair_estimates(
         kmv_sketch(vocab, "tok", ["lang"], k=KMV_K), "lang", k=KMV_K
@@ -542,7 +543,7 @@ def q_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load(spark, sf_dir, "events")
-    regs = (
+    regs = materialize(
         hll_registers(
             ev.filter(F.col("event_type").isin(HLL_SET_A, HLL_SET_B)),
             "user_id",
@@ -550,7 +551,6 @@ def q_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
             p=HLL_P,
         )
         .withColumnRenamed("event_type", "pop")
-        .localCheckpoint(eager=False)
     )
     union_regs = (
         regs.groupBy("bucket")

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.streaming.ledger import fold_ledger
 from movie_genre_data_pipeline_spark.suite import QuerySpec
 from movie_genre_data_pipeline_spark.suite._twin import run_twin, workspace
@@ -339,7 +340,7 @@ def q_stream_gold_language_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_state(LANGUAGE, snap_a, dim_df).write.parquet(
         f"{base_dir}/state_0"
     )
-    dim = dim_df.localCheckpoint(eager=True)  # reused every micro-batch
+    dim = materialize(dim_df, eager=True)  # reused every micro-batch
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         from movie_genre_data_pipeline_spark.fsutil import vacuum_generations
@@ -595,7 +596,7 @@ def q_stream_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = fold_ledger(spark.read.parquet(led_bkt), ["bucket"], ["raw_c", "tgt_c"])
     tf = fold_ledger(spark.read.parquet(led_tf), ["doc_id", "bucket"], ["tf"])
     w = dsir_fold_scores(tf, buckets, b)
-    scored = (
+    scored = materialize(
         docs.join(spans, "doc_id")
         .join(w.select("doc_id", "logw_micro"), "doc_id", "left")
         .select(
@@ -615,7 +616,6 @@ def q_stream_trainset_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("s4"),
         )
-        .localCheckpoint(eager=False)
     )
     from movie_genre_data_pipeline_spark.suite.sampling_queries import _funnel_report
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.streaming.ledger import fold_ledger
 from movie_genre_data_pipeline_spark.suite import QuerySpec
 from movie_genre_data_pipeline_spark.suite._twin import run_twin, workspace
@@ -742,9 +743,12 @@ def q_stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_twin(d.select("doc_id", "text"), apply_batch, base)
 
-    folded = fold_ledger(
-        spark.read.parquet(ledger), ["row_idx", "col_idx"], ["cnt"]
-    ).localCheckpoint()
+    folded = materialize(
+        fold_ledger(
+            spark.read.parquet(ledger), ["row_idx", "col_idx"], ["cnt"]
+        ),
+        eager=True,
+    )
     grams = shingle_rows(d, "doc_id", "text", k=GRAM_K).select(
         F.col("s").alias("gram")
     )
@@ -870,7 +874,7 @@ def q_stream_gold_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_state(GENRE, snap_a, genre_dim).write.parquet(
         f"{base_dir}/state_0"
     )
-    dim = genre_dim.localCheckpoint(eager=True)  # reused every micro-batch
+    dim = materialize(genre_dim, eager=True)  # reused every micro-batch
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         from movie_genre_data_pipeline_spark.fsutil import vacuum_generations

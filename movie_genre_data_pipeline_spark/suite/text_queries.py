@@ -25,6 +25,7 @@ from movie_genre_data_pipeline_spark.functions.text import (
     token_count,
     tokens,
 )
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 # shared SQL fragments ---------------------------------------------------------
@@ -239,7 +240,7 @@ def q_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_genre_data_pipeline_spark.functions.dedup import shingle_rows
 
     d = load(spark, sf_dir, "documents")
-    # position-explode (see shingle_rows): exploding word_shingles directly
+    # position-explode (see shingle_rows): exploding a shingle array directly
     # re-evaluates the slice/concat HOF per output row — O(n_tokens²) per doc
     grams = shingle_rows(d, "doc_id", "text", k=2, extra_cols=("lang",)).select(
         "lang", F.col("s").alias("bigram")
@@ -1186,8 +1187,8 @@ def rrf_fusion_from_counts(tf: DataFrame, dl: DataFrame) -> DataFrame:
     # tf feeds four branches (BM25, ctf, candidates, the QL left join) and dl
     # three — one barrier each or Catalyst re-derives the upstream
     # tokenize+explode (or ledger fold) per branch, the funnel lesson
-    tf = tf.localCheckpoint(eager=False)
-    dl = dl.localCheckpoint(eager=False)
+    tf = materialize(tf)
+    dl = materialize(dl)
     bm = bm25_from_counts(tf, dl).select(
         "doc_id", F.col("rnk").alias("bm_rnk")
     )
@@ -1527,7 +1528,7 @@ def js_divergence_from_counts(counts: DataFrame) -> DataFrame:
     here; shared by the batch query and its streaming twin."""
     # counts feeds both pair sides + totals — one barrier or the upstream
     # (tokenize+explode, or the ledger fold) re-runs per consumer
-    counts = counts.localCheckpoint(eager=False)
+    counts = materialize(counts)
     totals = counts.groupBy("source").agg(F.sum("c").cast("bigint").alias("t"))
     pairs = (
         totals.select(F.col("source").alias("sa"), F.col("t").alias("ta"))
@@ -1797,9 +1798,9 @@ def hill_from_lengths(lengths: DataFrame) -> DataFrame:
         ranged_row_number,
     )
 
-    ranked = ranged_row_number(
-        lengths, [F.col("x").desc(), F.col("doc_id")], "rn"
-    ).localCheckpoint(eager=False)
+    ranked = materialize(
+        ranged_row_number(lengths, [F.col("x").desc(), F.col("doc_id")], "rn")
+    )
     thr = ranked.filter(F.col("rn") == HILL_K + 1).select(
         F.col("x").alias("x_thr")
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.operators.timeseries import time_bucket_gapfill
+from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
 
 BUCKET_S = 3600  # hourly
@@ -299,10 +300,10 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # weekly feeds three consumers (cohorts, sizes-via-cohorts, cells); the
     # checkpoint pins ONE events scan — weekly is (user, week) grain, far
     # smaller than raw events at any scale
-    weekly = (
+    weekly = materialize(
         ev.select("user_id", time_bucket("ts", WEEK_S).alias("week"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     cohorts = weekly.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     sizes = cohorts.groupBy("cohort_week").agg(
@@ -855,16 +856,18 @@ def acf_report_from_counts(counts: DataFrame) -> DataFrame:
     lag-shifted sibling per ladder rung, fold the five moments, resolve r.
     `counts` feeds three consumers (the spine scalars and both join sides),
     so the hourly fan-out is barrier-pinned."""
-    counts = counts.localCheckpoint(eager=False)
+    counts = materialize(counts)
     spine = (
         counts.agg(
             F.min("hour_id").alias("min_h"), F.max("hour_id").alias("max_h")
         )
         .selectExpr("explode(sequence(min_h, max_h)) AS hour_id")
     )
-    dense = spine.join(F.broadcast(counts), "hour_id", "left").select(
-        "hour_id", F.coalesce("cnt", F.lit(0)).cast("bigint").alias("cnt")
-    ).localCheckpoint(eager=False)
+    dense = materialize(
+        spine.join(F.broadcast(counts), "hour_id", "left").select(
+            "hour_id", F.coalesce("cnt", F.lit(0)).cast("bigint").alias("cnt")
+        )
+    )
     lags = counts.sparkSession.createDataFrame(
         [(lag,) for lag in ACF_LAGS], "lag_hours bigint"
     )
@@ -976,7 +979,7 @@ def seasonal_decompose_from_counts(counts: DataFrame) -> DataFrame:
     UTC; pmod, not %, so pre-1970 hours land in [0, 24) instead of printing
     negative wall hours), fold per-bucket sums, divide once against the
     broadcast global."""
-    counts = counts.localCheckpoint(eager=False)
+    counts = materialize(counts)
     spine = (
         counts.agg(
             F.min("hour_id").alias("min_h"), F.max("hour_id").alias("max_h")
@@ -1112,25 +1115,22 @@ def mann_kendall_from_counts(counts: DataFrame) -> DataFrame:
         ranged_row_number,
     )
 
-    counts = counts.localCheckpoint(eager=False)
+    counts = materialize(counts)
     spine = (
         counts.agg(
             F.min("day_id").alias("min_d"), F.max("day_id").alias("max_d")
         )
         .selectExpr("explode(sequence(min_d, max_d)) AS day_id")
     )
-    dense = (
+    dense = materialize(
         spine.join(F.broadcast(counts), "day_id", "left")
         .select(
             "day_id", F.coalesce("cnt", F.lit(0)).cast("bigint").alias("cnt")
         )
-        .localCheckpoint(eager=False)
     )
     d1 = dense.select(F.col("day_id").alias("d1"), F.col("cnt").alias("x1"))
     d2 = dense.select(F.col("day_id").alias("d2"), F.col("cnt").alias("x2"))
-    pairs = d1.join(F.broadcast(d2), F.col("d2") > F.col("d1")).localCheckpoint(
-        eager=False
-    )
+    pairs = materialize(d1.join(F.broadcast(d2), F.col("d2") > F.col("d1")))
     s_fold = pairs.agg(
         F.sum(F.expr("CAST(sign(x2 - x1) AS BIGINT)")).cast("bigint").alias(
             "s_stat"
@@ -1553,16 +1553,18 @@ def ljung_box_from_counts(counts: DataFrame) -> DataFrame:
     accumulated: densify, pair per consecutive lag, fold the five exact
     moments per lag, resolve each r_micro (the ACF fragment), square into
     exact per-lag BIGINT terms, and scale by n(n+2) once."""
-    counts = counts.localCheckpoint(eager=False)
+    counts = materialize(counts)
     spine = (
         counts.agg(
             F.min("hour_id").alias("min_h"), F.max("hour_id").alias("max_h")
         )
         .selectExpr("explode(sequence(min_h, max_h)) AS hour_id")
     )
-    dense = spine.join(F.broadcast(counts), "hour_id", "left").select(
-        "hour_id", F.coalesce("cnt", F.lit(0)).cast("bigint").alias("cnt")
-    ).localCheckpoint(eager=False)
+    dense = materialize(
+        spine.join(F.broadcast(counts), "hour_id", "left").select(
+            "hour_id", F.coalesce("cnt", F.lit(0)).cast("bigint").alias("cnt")
+        )
+    )
     nrow = dense.agg(F.count(F.lit(1)).cast("bigint").alias("n_hours"))
     lags = counts.sparkSession.createDataFrame(
         [(lag,) for lag in LJUNG_LAGS], "lag_hours bigint"

@@ -5,6 +5,11 @@ than tiles, and explicit partition counts."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
+from conftest import SF_DIR
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -12,6 +17,8 @@ from movie_genre_data_pipeline_spark.operators.ranking import (
     ranged_ntile,
     ranged_row_number,
 )
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _base(spark, n=997):
@@ -78,12 +85,44 @@ def test_ranged_rank_partitioning_is_pinned(spark):
     assert len(re.findall(r"Exchange rangepartitioning", plan)) == 0, plan[:2000]
 
 
-def test_ranged_row_number_reliable_checkpoint(spark, tmp_path):
-    """reliable=True swaps the executor-local pin for a reliable
-    `.checkpoint()` (survives executor loss on long jobs — ADVICE r10);
-    values must be identical to the default path."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    df = _base(spark, 211)
-    got = ranged_row_number(df, ["k", "v"], "rn", reliable=True)
-    exp = df.withColumn("rn", F.row_number().over(Window.orderBy("k", "v")))
-    assert sorted(got.collect()) == sorted(exp.collect())
+# Runs in a child process: a checkpoint directory cannot be unset, so setting
+# one on the shared session would make every later test's barriers reliable.
+RELIABLE_CHILD = """
+import sys
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from movie_genre_data_pipeline_spark.operators.ranking import ranged_row_number
+from movie_genre_data_pipeline_spark.session import build_session
+
+sys.path.insert(0, "tools")
+from verify_local import verify_queries
+
+sf_dir, ckpt = sys.argv[1], sys.argv[2]
+spark = build_session(app_name="mgdp-reliable-barriers", master="local[2]",
+                      shuffle_partitions=2,
+                      extra_conf={"spark.checkpoint.dir": ckpt})
+assert spark.sparkContext.getCheckpointDir() is not None
+df = spark.range(0, 211).selectExpr("id % 13 AS k", "id AS v")
+got = ranged_row_number(df, ["k", "v"], "rn")
+exp = df.withColumn("rn", F.row_number().over(Window.orderBy("k", "v")))
+assert sorted(got.collect()) == sorted(exp.collect())
+assert verify_queries(spark, sf_dir, names={"sim_topk_rerank"}, exact=True) == {}
+"""
+
+
+def test_checkpoint_dir_makes_barriers_reliable(tmp_path):
+    """With `spark.checkpoint.dir` set, `session.materialize` writes every
+    barrier there as a reliable `.checkpoint()` (survives executor loss on
+    long jobs — ADVICE r10): the ranged rank still equals the window form, an
+    ANN query still matches its oracle exactly, and the directory holds the
+    checkpointed RDDs."""
+    ckpt = tmp_path / "ckpt"
+    subprocess.run(
+        [sys.executable, "-c", RELIABLE_CHILD, SF_DIR, str(ckpt)],
+        cwd=REPO,
+        check=True,
+        timeout=600,
+    )
+    assert list(ckpt.glob("*/rdd-*"))

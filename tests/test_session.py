@@ -27,6 +27,12 @@ def test_prefer_smj_accepts_true_false_any_case(monkeypatch, raw, want):
     assert session._env_bool("SPARK_GRAFT_PREFER_SMJ", "false") == want
 
 
+@pytest.mark.parametrize("raw", ["64m", "64MB", "1048576", "2g", "512kb", "1Pb"])
+def test_shj_localmap_accepts_spark_byte_strings(monkeypatch, raw):
+    monkeypatch.setenv("SPARK_GRAFT_SHJ_LOCALMAP", raw)
+    assert session._env_bytes("SPARK_GRAFT_SHJ_LOCALMAP", "64m") == raw
+
+
 @pytest.mark.parametrize(
     "var,raw",
     [
@@ -41,6 +47,8 @@ def test_prefer_smj_accepts_true_false_any_case(monkeypatch, raw, want):
         ("SPARK_GRAFT_PREFER_SMJ", "1"),
         ("SPARK_GRAFT_PREFER_SMJ", ""),
         ("SPARK_GRAFT_PREFER_SMJ", " true"),
+        ("SPARK_GRAFT_SHJ_LOCALMAP", "64x"),
+        ("SPARK_GRAFT_SHJ_LOCALMAP", "64 MB"),
     ],
 )
 def test_malformed_env_raises_naming_the_variable(monkeypatch, var, raw):

@@ -1,8 +1,11 @@
-"""Capture .explain("formatted") for the bench HEADLINE queries.
+"""Capture .explain("formatted") for registered suite queries.
 
-Writes plans/$SPARK_GRAFT_PLANS_ROUND (default r16)/<query>_<tag>.txt (tag = before/after, argv[1]) plus a one-line
-summary per query (Exchange count, python-eval nodes, join strategies) to
-stdout, so plan-shape regressions/improvements are visible at a glance.
+Writes plans/$SPARK_GRAFT_PLANS_ROUND (default r16)/<query>_<tag>.txt (tag =
+before/after, argv[1]) plus a one-line summary per query (Exchange count,
+python-eval nodes, join strategies) to stdout, so plan-shape
+regressions/improvements are visible at a glance. With no query names it
+captures the bench HEADLINE queries; named queries may be any registered
+query, and unknown names raise ValueError (as tools/verify_local.py does).
 
 Usage: python tools/capture_plans.py <tag> [query ...]
 """
@@ -19,19 +22,22 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from bench import HEADLINE
     from movie_genre_data_pipeline_spark.session import build_session
     from movie_genre_data_pipeline_spark.suite import all_queries
 
-    spark = build_session(app_name="mgdp-plan-capture")
     specs = all_queries()
+    unknown = sorted(set(only) - specs.keys())
+    if unknown:
+        raise ValueError(f"unknown query names: {unknown}")
+    names = only or [n for n in HEADLINE if n in specs]
+    spark = build_session(app_name="mgdp-plan-capture")
     out_dir = Path(__file__).resolve().parent.parent / "plans" / os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r16")
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    names = [n for n in HEADLINE if n in specs and (not only or n in only)]
     for name in names:
         df = specs[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
