@@ -9,17 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from movie_genre_data_pipeline_spark.functions.sampling import (
-    assign_split,
-    corpus_shuffle,
-    hex_threshold,
-    pack_token_budget,
-    stratified_sample,
-)
-from movie_genre_data_pipeline_spark.functions.text import token_count
 from movie_genre_data_pipeline_spark.session import materialize
 from movie_genre_data_pipeline_spark.suite import QuerySpec, load
-from movie_genre_data_pipeline_spark.suite.text_queries import _TOKS
 from movie_genre_data_pipeline_spark.suite.sampling_queries import (  # noqa: E501
     DSIR_BUCKETS,
     LOGREG_ITERS,

@@ -12,6 +12,7 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from movie_genre_data_pipeline_spark.config import Clock, PipelineConfig
@@ -251,8 +252,8 @@ def _two_incremental_rounds(spark, tmp_path: Path, first_codec: str | None) -> P
 
 def test_every_lake_table_is_written_zstd(spark, batch_lake, tmp_path: Path):
     """The session default reaches every writer: the rebalanced and plain
-    batch writes, the staged bronze status rewrite, the raw→bronze file sink,
-    the status ledger appends and the gold marts."""
+    batch writes, the staged bronze status rewrite, the incremental bronze
+    append inside the stream, the status ledger appends and the gold marts."""
     inc_cfg = _two_incremental_rounds(spark, tmp_path, first_codec=None)
     assert _codecs_by_table(batch_lake.root) == {t: {"ZSTD"} for t in LAKE_TABLES}
     assert _codecs_by_table(inc_cfg.root) == {
@@ -262,19 +263,59 @@ def test_every_lake_table_is_written_zstd(spark, batch_lake, tmp_path: Path):
 
 def test_snappy_lake_takes_zstd_appends(spark, batch_lake, tmp_path: Path):
     """Parquet records the codec per column chunk: an incremental lake begun
-    with snappy holds both codecs in bronze after a zstd round, since the file
-    sink never rewrites a file, and still equals the batch lake built from the
-    same files. The status ledger and silver movie are zstd only: the zstd
-    round merged their small snappy files into its appends."""
+    with snappy still equals the batch lake built from the same files after a
+    zstd round. Bronze, the status ledger and silver movie are zstd only: the
+    zstd round merged their small snappy files into its appends."""
     inc_cfg = _two_incremental_rounds(spark, tmp_path, first_codec="snappy")
     assert spark.conf.get(CODEC_CONF) == "zstd"
     codecs = _codecs_by_table(inc_cfg.root)
-    assert codecs["bronze/movie_bronze"] == {"SNAPPY", "ZSTD"}
-    for table in ("bronze/status_ledger", "silver/movie_silver"):
+    for table in ("bronze/movie_bronze", "bronze/status_ledger", "silver/movie_silver"):
         assert codecs[table] == {"ZSTD"}, table
     for table in SILVER_GOLD:
         assert _table_rows(spark, str(Path(inc_cfg.root) / table)) == _table_rows(
             spark, str(Path(batch_lake.root) / table)
+        ), table
+
+
+def test_file_sink_bronze_is_rejected(spark, tmp_path: Path):
+    """A bronze directory that a Parquet file sink wrote is listed by Spark
+    through its `_spark_metadata` log, which would hide merged files: the
+    stream refuses it before it starts."""
+    cfg = PipelineConfig(root=str(tmp_path / "lake"))
+    (Path(cfg.bronze_path) / "_spark_metadata").mkdir(parents=True)
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        IncrementalMedallionPipeline(spark, cfg).raw_to_bronze(str(tmp_path / "raw"))
+
+
+class _FailAfterSilver(IncrementalMedallionPipeline):
+    """Every write of a micro-batch lands, then the batch fails, so Spark
+    never commits it and the next round replays it."""
+
+    def bronze_to_silver(self, bronze):
+        super().bronze_to_silver(bronze)
+        raise RuntimeError("fail after the batch's writes")
+
+
+def test_replayed_batch_appends_bronze_once(spark, tmp_path: Path):
+    """A micro-batch that failed after its writes is replayed by the next
+    round: bronze keeps one copy of each raw row, and silver and gold equal
+    those of a lake that never failed."""
+    clock = Clock(fixed_utc="2024-01-01 00:00:00")
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    (raw / "movies.json").write_text(json.dumps(FILE2))
+    replayed = PipelineConfig(root=str(tmp_path / "replayed"), clock=clock)
+    with pytest.raises(StreamingQueryException):
+        _FailAfterSilver(spark, replayed).run(str(raw))
+    assert not (Path(replayed.checkpoint_path("bronze")) / "commits" / "0").exists()
+    IncrementalMedallionPipeline(spark, replayed).run(str(raw))
+    assert read_parquet(spark, replayed.bronze_path).count() == len(FILE2["movie"])
+
+    plain = PipelineConfig(root=str(tmp_path / "plain"), clock=clock)
+    IncrementalMedallionPipeline(spark, plain).run(str(raw))
+    for table in SILVER_GOLD:
+        assert _table_rows(spark, str(Path(replayed.root) / table)) == _table_rows(
+            spark, str(Path(plain.root) / table)
         ), table
 
 
@@ -325,9 +366,14 @@ def _files_per_dir(table_path: str) -> dict[str, int]:
 
 def test_two_rounds_keep_one_file_per_value(dated_lakes):
     """Every append merges into its value's small tail file: after two rounds
-    each silver movie date, the null date included, holds one data file, and
-    genres, language and the status ledger hold one each."""
+    bronze's ingest date and each silver movie date, the null date included,
+    hold one data file, and genres, language and the status ledger hold one
+    each. Both rounds ran one stream, under one checkpoint."""
     inc_cfg, _ = dated_lakes
+    assert _files_per_dir(inc_cfg.bronze_path) == {"p_ingestdate=2024-01-01": 1}
+    assert not (Path(inc_cfg.bronze_path) / "_spark_metadata").exists()
+    checkpoints = Path(inc_cfg.checkpoint_path("bronze")).parent
+    assert [d.name for d in checkpoints.iterdir()] == ["bronze"]
     movie = _files_per_dir(inc_cfg.silver_path("movie"))
     assert movie == {
         "p_CreatedDate=2020-01-15": 1,

@@ -52,18 +52,6 @@ def test_driver_window_all_oracled():
     assert unoracled == []
 
 
-def test_rows_only_queries_sorted_last():
-    q = all_queries()
-    names = list(q)
-    first_rows_only = next(
-        (i for i, n in enumerate(names) if q[n].oracle is None), len(names)
-    )
-    # every entry after the first rows-only query is also rows-only
-    assert all(q[n].oracle is None for n in names[first_rows_only:])
-    # so the 50 driver-sampled entries all carry an oracle
-    assert first_rows_only >= 50
-
-
 def test_query_without_oracle_is_rejected(monkeypatch):
     """A query registered without an oracle fails the registry loudly instead
     of being ordered after the driver-sampled window."""
